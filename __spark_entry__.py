@@ -103,12 +103,7 @@ def _spread_scan(spark: SparkSession, df: DataFrame, path_key: str) -> DataFrame
     natural exchange.  A query whose first operation is a groupBy /
     window / join re-shuffles immediately anyway — there the extra
     round-robin exchange is pure overhead (measured +0.1-0.25 s on the
-    cheap window queries in the r11 A/B).  ``SPARK_GRAFT_SCAN_SPREAD=0``
-    disables the floor globally (controlled A/B knob)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_SCAN_SPREAD", "1") in ("0", "false"):
-        return df
+    cheap window queries in the r11 A/B)."""
     n = spark.sparkContext.defaultParallelism
     parts = _SCAN_SPLITS.get(path_key)
     if parts is None:

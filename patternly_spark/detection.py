@@ -466,6 +466,7 @@ class AnomalyDetection:
                 "quantize_exact": self.quantize_exact,
                 "eps": self.eps,
                 "seed": self.seed,
+                "genesess_mode": self.genesess_mode,
                 **self._extra_user_params(),
             },
             "extra_state": self._extra_state(),

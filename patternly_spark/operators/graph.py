@@ -23,7 +23,7 @@ from patternly_spark.plans import (
     empty_rows,
     local_rows,
     round_partitions,
-    round_partitions_for,
+    round_shuffle,
     tuned_shuffle,
 )
 
@@ -236,9 +236,7 @@ def pagerank(
     d = float(damping)
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
     pending: list[DataFrame] = []
-    # round-heavy: bytes-sized partitions per the measured policy
-    spark = edges.sparkSession
-    with tuned_shuffle(spark, round_partitions_for(spark, e)):
+    with round_shuffle(e):
         for it in range(int(iterations)):
             contribs = (
                 links.join(ranks.withColumnRenamed("node", "src"), "src")
@@ -321,8 +319,7 @@ def label_propagation(
     labels = sym.select(F.col("a").alias("node")).distinct().withColumn(
         "label", F.col("node")
     )
-    spark = edges.sparkSession
-    with tuned_shuffle(spark, round_partitions_for(spark, sym)):
+    with round_shuffle(sym):
         for it in range(int(iterations)):
             neigh = (
                 sym.join(labels.withColumnRenamed("node", "b"), "b")
@@ -487,11 +484,7 @@ def kcore(
     )
     kk = int(k)
     converged = False
-    # round-heavy: bytes-sized shuffle partitions per the measured
-    # sf30/sf100 policy (plans.round_partitions); values are
-    # partition-count invariant, only wall clock changes
-    spark = edges.sparkSession
-    with tuned_shuffle(spark, round_partitions_for(spark, und)):
+    with round_shuffle(und):
         for _ in range(int(max_rounds)):
             # bad is lazily pinned so ONE full count() both materializes
             # it and answers the convergence probe; the two anti-join
@@ -592,16 +585,12 @@ def core_numbers(
         )
     )
 
-    # round-heavy: bytes-sized shuffle partitions per the measured
-    # sf30/sf100 policy (plans.round_partitions); values are
-    # partition-count invariant, only wall clock changes
-    spark = edges.sparkSession
     # h-index as a spill-safe window: rank neighbor labels descending
     # per node, take max(rank where label >= rank) — identical to the
     # sorted-array definition, but the sort is an (external, spilling)
     # window instead of an unspillable collect_list buffer
     w_h = Window.partitionBy("a").orderBy(F.desc("nl"), "b")
-    with tuned_shuffle(spark, round_partitions_for(spark, und)):
+    with round_shuffle(und):
         for _ in range(int(max_rounds)):
             hidx = (
                 both.join(
@@ -641,6 +630,20 @@ def core_numbers(
         f"core_numbers did not converge within {max_rounds} rounds; "
         "labels are an unconverged upper bound — raise max_rounds"
     )
+
+
+#: Driver memory the MSF driver merge may hold.  Above it a round takes
+#: the distributed connected-components merge instead.
+MSF_LOCAL_MERGE_BYTES = 128 * 1024 * 1024
+
+#: Driver bytes per selected-edge row of the MSF driver merge: the
+#: collected five-field Row, its union-find dict entries, its merged_map
+#: pair, its forest tuple and the two one-slice ``local_rows`` relations.
+#: Measured with tracemalloc over exactly that code on synthetic merge
+#: graphs (distinct large ids, every row joining two new components):
+#: 746 B/row at 100k and at 200k rows (CPython 3.11, PySpark 4.1), peak
+#: equal to the live total; rounded up.  So the gate admits ~175k rows.
+MSF_MERGE_ROW_BYTES = 768
 
 
 def minimum_spanning_forest(
@@ -685,9 +688,9 @@ def minimum_spanning_forest(
     against ``crossing`` to recover the component graph.  The
     component-merge graph has at most one edge per component and
     SHRINKS at least geometrically per Boruvka round, so once it is
-    driver-sized (<= SPARK_GRAFT_MSF_LOCAL_MERGE_ROWS selected edges,
-    default 1M ~ tens of MB on the driver) the merge labels are
-    computed as a driver union-find with MIN-ID representatives —
+    driver-sized (selected edges x ``MSF_MERGE_ROW_BYTES`` <=
+    ``MSF_LOCAL_MERGE_BYTES``) the merge labels are computed as a
+    driver union-find with MIN-ID representatives —
     bit-identical to the nested ``connected_components`` fixpoint it
     replaces (both assign every touched component the smallest
     component id in its merged group) — and re-attached as a
@@ -698,7 +701,6 @@ def minimum_spanning_forest(
     threshold (early rounds of a 100 TB run) keep the distributed CC
     path, now over a pinned selected-edge relation.
     """
-    import os as _os
     e = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("u"),
@@ -720,14 +722,8 @@ def minimum_spanning_forest(
         .localCheckpoint(eager=True)
     )
     forest = empty_rows(spark, "u long, v long, w double")
-    local_merge_rows = int(
-        _os.environ.get("SPARK_GRAFT_MSF_LOCAL_MERGE_ROWS", str(1_000_000))
-    )
-    # round-heavy: bytes-sized shuffle partitions per the measured
-    # sf30/sf100 policy (plans.round_partitions); values are
-    # partition-count invariant, only wall clock changes
-    spark = edges.sparkSession
-    with tuned_shuffle(spark, round_partitions_for(spark, e)):
+    local_merge_rows = MSF_LOCAL_MERGE_BYTES // MSF_MERGE_ROW_BYTES
+    with round_shuffle(e):
         for _ in range(int(max_rounds)):
             lab_u = labels.select(F.col("node").alias("u"), F.col("comp").alias("cu"))
             lab_v = labels.select(F.col("node").alias("v"), F.col("comp").alias("cv"))
@@ -887,11 +883,7 @@ def personalized_pagerank_units(
     an, ad = int(alpha_num), int(alpha_den)
     restart = (u * (ad - an)) // ad
     p = sd.select("node", F.lit(u).cast("long").alias("pu"))
-    # round-heavy: bytes-sized shuffle partitions per the measured
-    # sf30/sf100 policy (plans.round_partitions); values are
-    # partition-count invariant, only wall clock changes
-    spark = edges.sparkSession
-    with tuned_shuffle(spark, round_partitions_for(spark, e)):
+    with round_shuffle(e):
         for _ in range(int(iterations)):
             contrib = (
                 p.join(deg, p["node"] == deg["s"])
@@ -966,11 +958,7 @@ def bfs_hops(
         .localCheckpoint(eager=True)
     )
     frontier = settled
-    # round-heavy: bytes-sized shuffle partitions per the measured
-    # sf30/sf100 policy (plans.round_partitions); values are
-    # partition-count invariant, only wall clock changes
-    spark = edges.sparkSession
-    with tuned_shuffle(spark, round_partitions_for(spark, e)):
+    with round_shuffle(e):
         for h in range(1, int(max_hops) + 1):
             # lazy pin + FULL count: one job materializes the frontier
             # and answers the emptiness probe (eager pin + limit(1) paid
@@ -1151,11 +1139,7 @@ def neighborhood_function(
         )
 
     out = [snapshot(0, regs)]
-    # round-heavy: bytes-sized shuffle partitions per the measured
-    # sf30/sf100 policy (plans.round_partitions); values are
-    # partition-count invariant, only wall clock changes
-    spark = edges.sparkSession
-    with tuned_shuffle(spark, round_partitions_for(spark, e)):
+    with round_shuffle(e):
         for r in range(1, int(rounds) + 1):
             pulled = e.join(regs, e["d"] == regs["node"]).select(
                 F.col("s").alias("node"), "reg", "rho"
@@ -1168,7 +1152,7 @@ def neighborhood_function(
             )
             out.append(snapshot(r, regs))
     return local_rows(
-        spark, out, "round int, nodes long, est_pairs double, avg_ball double"
+        edges.sparkSession, out, "round int, nodes long, est_pairs double, avg_ball double"
     )
 
 

@@ -55,21 +55,11 @@ def _pin_corpus(df: DataFrame) -> DataFrame:
     instead of the default deserialized cache, so at 100 TB the per-doc
     bigram table overflows to disk gracefully instead of pressuring
     executor memory the way the round-10 graph pins did before
-    DISK_ONLY.  ``SPARK_GRAFT_LM_PIN=disk`` forces DISK_ONLY (the
-    zero-memory-pressure envelope used by the scale rehearsals);
-    ``=deser`` restores the old default for A/B.  Values are unaffected
-    — storage level changes where cached bytes live, not what they
-    are."""
-    import os
-
+    DISK_ONLY.  Values are unaffected — storage level changes where
+    cached bytes live, not what they are."""
     from pyspark import StorageLevel
 
-    mode = os.environ.get("SPARK_GRAFT_LM_PIN", "ser")
-    level = {
-        "disk": StorageLevel.DISK_ONLY,
-        "deser": StorageLevel.MEMORY_AND_DISK_DESER,
-    }.get(mode, StorageLevel.MEMORY_AND_DISK)
-    return df.persist(level)
+    return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def _doc_bigrams(

@@ -19,16 +19,20 @@ larger shuffle partitions than a storage-heavy single pass — even at
 the cost of graceful disk spill (q189 at sf30: 128 s spilled at 32
 partitions vs 202 s spill-free at 128; see BENCH_scale_sf30_p64.json
 for the 64-partition knee point).  The policy picks min(session
-setting, max(bytes-derived,
-cores)) so it only ever LOWERS a too-high session setting toward the
-measured knee, never raises it, and is disabled entirely with
-SPARK_GRAFT_PARTITION_POLICY=0.
+setting, max(bytes-derived, cores)) so it only ever LOWERS a too-high
+session setting toward the measured knee, never raises it.
+
+The policy has no off switch: its A/B is settled.  In the sf30 table
+(SCALING.md, round 8) the policy under a 128-partition session beat
+every fixed count, 32, 64 and 128, on both round-heavy queries.  To
+run an operator at a fixed count, set the session's
+``spark.sql.shuffle.partitions`` (or wrap the call in
+``tuned_shuffle(spark, n)``): the policy never exceeds that ceiling.
 """
 
 from __future__ import annotations
 
 import math
-import os
 import re
 from contextlib import contextmanager
 
@@ -39,6 +43,7 @@ __all__ = [
     "assert_plan",
     "shuffle_partitions",
     "round_partitions",
+    "round_shuffle",
     "tuned_shuffle",
     "empty_rows",
     "local_rows",
@@ -156,6 +161,10 @@ def assert_plan(
 # linearly with the data (sf100 -> ~3x more partitions than sf30).
 ROUND_TASK_BYTES = 512 * 1024 * 1024
 
+# Policy bytes per row of a round relation: the JVM shuffle-time
+# footprint of the canonical 2-long edge row.
+ROUND_ROW_BYTES = 48
+
 
 def _parse_mem_bytes(s: str) -> int | None:
     """Spark memory-conf string -> bytes (``8g``/``512m``/``1t``/
@@ -228,22 +237,13 @@ def shuffle_partitions(spark, default: int = 200) -> int:
         return int(default)
 
 
-def round_partitions(
-    spark,
-    n_rows: int,
-    *,
-    row_bytes: int = 48,
-    task_bytes: int = ROUND_TASK_BYTES,
-) -> int:
-    """Shuffle-partition count for a ROUND-HEAVY iterative operator
-    whose per-round relation has ``n_rows`` rows (e.g. the canonical
-    edge set of a graph peel).
-
-    Policy (VERDICT r7 item 1 — the measured sf30/sf100 asymmetry as
-    engine policy instead of prose):
+def _round_count(spark, n_bytes: float) -> int:
+    """The one partition-sizing rule behind ``round_partitions``,
+    ``round_partitions_for`` and ``fanout_respread``, for a relation of
+    ``n_bytes`` policy bytes:
 
         n = min(session shuffle partitions,
-                max(ceil(n_rows * row_bytes / task_bytes), cores))
+                max(ceil(n_bytes / task bytes), cores))
 
     - never EXCEEDS the session setting (the user's ceiling stands);
     - never drops below the cluster's core count (parallelism floor),
@@ -254,21 +254,26 @@ def round_partitions(
       where ~30 rounds x scheduling overhead would otherwise dominate
       (q189 at sf30: spilled-at-32 beat clean-at-128 by 1.6x).
 
-    Setting ``SPARK_GRAFT_PARTITION_POLICY=0`` disables the policy
-    (returns the session setting unchanged) — used by the scale bench
-    for controlled partition-count comparisons.
-    """
+    Task bytes are ``ROUND_TASK_BYTES`` capped by what the heap per
+    task slot can sort (``_heap_task_bytes_cap``)."""
     sess = shuffle_partitions(spark)
-    if os.environ.get("SPARK_GRAFT_PARTITION_POLICY", "1") in ("0", "false"):
-        return sess
     cores = max(1, spark.sparkContext.defaultParallelism)
-    eff_task_bytes = min(int(task_bytes), _heap_task_bytes_cap(spark))
-    by_bytes = max(1, math.ceil(int(n_rows) * int(row_bytes) / float(eff_task_bytes)))
+    task_bytes = min(ROUND_TASK_BYTES, _heap_task_bytes_cap(spark))
+    by_bytes = max(1, math.ceil(n_bytes / float(task_bytes)))
     return max(1, min(sess, max(by_bytes, min(cores, sess))))
 
 
+def round_partitions(spark, n_rows: int) -> int:
+    """Shuffle-partition count for a ROUND-HEAVY iterative operator
+    whose per-round relation has ``n_rows`` rows (e.g. the canonical
+    edge set of a graph peel): ``_round_count`` at ``ROUND_ROW_BYTES``
+    per row (VERDICT r7 item 1 — the measured sf30/sf100 asymmetry as
+    engine policy instead of prose)."""
+    return _round_count(spark, int(n_rows) * ROUND_ROW_BYTES)
+
+
 #: plan-stats sizeInBytes (unsafe-row accounting) -> the policy's
-#: row_bytes=48 units, calibrated on the canonical 2-long edge schema
+#: ROUND_ROW_BYTES units, calibrated on the canonical 2-long edge schema
 #: (stats report 12 B/row there; the policy's 48 B/row models the JVM
 #: shuffle-time footprint).  Only the RATIO matters — the policy is an
 #: order-of-magnitude partition sizer, not a byte counter.
@@ -290,41 +295,34 @@ def plan_size_bytes(df) -> int | None:
     return sz
 
 
-def round_partitions_for(
-    spark,
-    df,
-    *,
-    row_bytes: int = 48,
-    task_bytes: int = ROUND_TASK_BYTES,
-) -> int:
+def round_partitions_for(spark, df) -> int:
     """``round_partitions`` for a (pinned) relation WITHOUT a count
     job: the size comes from the optimized plan's statistics (free;
     ~15 ms vs ~0.8 s for a count over a pinned 3M-row relation —
     measured, BENCH_policy_ab_sf01.json context), scaled by the
     documented stats->policy calibration.  Falls back to one count job
-    only when stats are unavailable.  Under
-    SPARK_GRAFT_PARTITION_POLICY=0 returns the session setting without
-    touching the relation at all (the eager ``df.count()`` argument
-    form paid a job even in policy-off mode — round-8 verdict item 5).
+    only when stats are unavailable.
 
     On a NOT-yet-materialized plan (cached-but-cold, or a lazy view)
     the stats are Catalyst's size propagation rather than exact bytes;
     the result is still clamped to [core floor, session ceiling], so a
-    mis-estimate degrades to the pre-policy partition counts — never
-    worse than policy-off.  The graph-peel call sites pass pinned or
-    warmed relations, where the stats are exact."""
-    sess = shuffle_partitions(spark)
-    if os.environ.get("SPARK_GRAFT_PARTITION_POLICY", "1") in ("0", "false"):
-        return sess
+    mis-estimate degrades to the session's partition counts at worst.
+    The graph-peel call sites pass pinned or warmed relations, where
+    the stats are exact."""
     sz = plan_size_bytes(df)
-    if sz is not None:
-        cores = max(1, spark.sparkContext.defaultParallelism)
-        eff_task_bytes = min(int(task_bytes), _heap_task_bytes_cap(spark))
-        by_bytes = max(1, math.ceil(sz * _STATS_INFLATION / float(eff_task_bytes)))
-        return max(1, min(sess, max(by_bytes, min(cores, sess))))
-    return round_partitions(
-        spark, df.count(), row_bytes=row_bytes, task_bytes=task_bytes
-    )
+    if sz is None:
+        return round_partitions(spark, df.count())
+    return _round_count(spark, sz * _STATS_INFLATION)
+
+
+def round_shuffle(df):
+    """``tuned_shuffle`` at ``round_partitions_for(df)``: the scope of
+    a ROUND-HEAVY loop iterating over ``df`` (graph peels, label and
+    register propagation), which wants bytes-sized shuffle partitions,
+    not the session default.  Values are partition-count invariant;
+    only wall clock changes."""
+    spark = df.sparkSession
+    return tuned_shuffle(spark, round_partitions_for(spark, df))
 
 
 def empty_rows(spark, schema) -> DataFrame:
@@ -366,12 +364,7 @@ def local_rows(spark, rows, schema: str) -> DataFrame:
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
 
 
-def fanout_respread(
-    df: DataFrame,
-    fanout: int,
-    *,
-    task_bytes: int = ROUND_TASK_BYTES,
-) -> DataFrame:
+def fanout_respread(df: DataFrame, fanout: int) -> DataFrame:
     """Compute-aware parallelism floor for a relation about to be
     exploded ``fanout``x and probed through a per-row kernel
     (optimization guide §2.5: AQE coalesces a small post-aggregate
@@ -379,10 +372,10 @@ def fanout_respread(
     downstream Generate multiplies per-partition work ``fanout``x — a
     tiny distinct-keys relation then runs its whole explode + verify
     pipeline on 1-2 cores).  One round-robin exchange re-spreads the
-    relation to the round-partition policy sized at
-    ``task_bytes / fanout`` — i.e. the partition count the policy
-    would pick for the post-explode bytes — clamped as always to
-    [core floor, session ceiling].
+    relation to the partition count the round policy would pick for the
+    post-explode bytes (plan-stats size x ``fanout``), clamped as always
+    to [core floor, session ceiling]; without plan stats it lands on
+    the core floor (no job is ever run to size it).
 
     Scale-adaptive, not a local constant: at 100 TB the plan-stats
     size is large, so the policy lands at the session ceiling exactly
@@ -390,24 +383,10 @@ def fanout_respread(
     Values are unaffected (round-robin repartition is deterministic
     under Spark's sort-before-repartition default, and the call sites
     are explode+join+distinct pipelines that are partition-count
-    invariant).  ``SPARK_GRAFT_PARTITION_POLICY=0`` disables it (same
-    A/B knob as the round policy; the relation passes through
-    untouched)."""
-    if os.environ.get("SPARK_GRAFT_PARTITION_POLICY", "1") in ("0", "false"):
-        return df
-    spark = df.sparkSession
-    sess = shuffle_partitions(spark)
-    cores = max(1, spark.sparkContext.defaultParallelism)
-    eff_task_bytes = min(int(task_bytes), _heap_task_bytes_cap(spark))
+    invariant)."""
     sz = plan_size_bytes(df)
-    if sz is None:
-        n = min(cores, sess)
-    else:
-        by_bytes = max(
-            1, math.ceil(sz * _STATS_INFLATION * max(1, int(fanout)) / float(eff_task_bytes))
-        )
-        n = max(1, min(sess, max(by_bytes, min(cores, sess))))
-    return df.repartition(n)
+    n_bytes = 0 if sz is None else sz * _STATS_INFLATION * max(1, int(fanout))
+    return df.repartition(_round_count(df.sparkSession, n_bytes))
 
 
 @contextmanager

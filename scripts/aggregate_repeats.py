@@ -8,12 +8,13 @@ broadcast OOM) are EXCLUDED from the timing/row statistics: their
 missing rows/shuffle metrics must not collapse into "consistent"
 None values (ADVICE r11: the old aggregator laundered 6 failed sf10
 all-pairs reps into a clean-looking distribution).  Each query's
-summary records ``errors`` (count) and ``error_texts``; a loud FAILED
+summary records ``n`` (ok reps), ``n_total`` (all reps), ``errors``
+(count) and ``error_texts``; a loud FAILED
 marker is printed and the process exits nonzero if any rep errored
 (override with --allow-errors).
 
 Usage: python scripts/aggregate_repeats.py <glob> [out.json] [--allow-errors]
-       e.g. python scripts/aggregate_repeats.py '/root/repo/sf100_r12_rep*.json' BENCH_scale_sf100_r12.json
+       e.g. python scripts/aggregate_repeats.py 'sf100_r12_rep*.json' BENCH_scale_sf100_r12.json
 """
 
 from __future__ import annotations
@@ -27,6 +28,9 @@ import sys
 def main() -> None:
     args = [a for a in sys.argv[1:] if a != "--allow-errors"]
     allow_errors = "--allow-errors" in sys.argv[1:]
+    if not args:
+        print("Usage: " + __doc__.split("Usage: ", 1)[1].strip(), file=sys.stderr)
+        sys.exit(2)
     pattern = args[0]
     out = args[1] if len(args) > 1 else None
     per_query: dict[str, list[dict]] = {}
@@ -54,8 +58,8 @@ def main() -> None:
         rows = {r["rows"] for r in ok if r["rows"] is not None}
         n_rows_missing = sum(1 for r in ok if r["rows"] is None)
         summary[q] = {
-            "n": len(reps),
-            "n_ok": len(ok),
+            "n": len(ok),
+            "n_total": len(reps),
             "errors": len(bad),
             "error_texts": [str(r["error"])[:300] for r in bad],
             "min": min(secs) if secs else None,
@@ -83,7 +87,7 @@ def main() -> None:
             )
         if secs:
             print(
-                f"{q}: n_ok={len(secs)}/{len(reps)} min={min(secs):.1f} "
+                f"{q}: n={len(secs)}/{len(reps)} min={min(secs):.1f} "
                 f"med={statistics.median(secs):.1f} max={max(secs):.1f} "
                 f"rows_consistent={summary[q]['rows_consistent']} "
                 f"max_spill_disk={summary[q]['max_spill_disk_mb']:.0f}MB"

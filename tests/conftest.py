@@ -17,6 +17,7 @@ os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8")
 # end-to-end parities, the 35-registry crash-replay sweep, numeric
 # replays).  The full suite remains the end-of-round ritual.
 _FULL_TESTS = os.environ.get("SPARK_GRAFT_FULL_TESTS", "0") in ("1", "true")
+_SLOW_REASON = "slow tier (tests/slow_tier.txt); set SPARK_GRAFT_FULL_TESTS=1"
 
 
 def _slow_tier() -> set[str]:
@@ -38,12 +39,25 @@ def pytest_collection_modifyitems(config, items):
     slow = _slow_tier()
     if not slow:
         return
-    marker = pytest.mark.skip(
-        reason="slow tier (tests/slow_tier.txt); set SPARK_GRAFT_FULL_TESTS=1"
-    )
+    marker = pytest.mark.skip(reason=_SLOW_REASON)
     for item in items:
         if f"{item.fspath.basename}::{item.name}" in slow:
             item.add_marker(marker)
+
+
+def pytest_terminal_summary(terminalreporter):
+    n = sum(
+        1
+        for r in terminalreporter.stats.get("skipped", [])
+        if _SLOW_REASON in str(r.longrepr)
+    )
+    if n:
+        terminalreporter.write_line(
+            f"*** SLOW TIER NOT RUN: {n} tests in tests/slow_tier.txt were skipped; "
+            "run them with SPARK_GRAFT_FULL_TESTS=1 ***",
+            yellow=True,
+            bold=True,
+        )
 
 
 @pytest.fixture(scope="session")

@@ -372,11 +372,13 @@ def test_quantizer_exact_flag_roundtrips_save_load(tmp_path, spark):
     rows = [(i, rng.normal(0, 1, 100).cumsum().tolist()) for i in range(20)]
     df = spark.createDataFrame(rows, "seq_id long, values array<double>")
     m = AnomalyDetection(spark, n_clusters=1, quantize=True, quantize_type="complex",
-                         quantize_exact=False, detrend=True, anomaly_sensitivity=4)
+                         quantize_exact=False, detrend=True, anomaly_sensitivity=4,
+                         genesess_mode="distributed")
     m.fit(df)
     m.save_model(str(tmp_path / "m"))
     loaded = AnomalyDetection.load_model(str(tmp_path / "m"), spark)
     assert loaded.quantize_exact is False and loaded.detrend is True
+    assert loaded.genesess_mode == "distributed"
     assert loaded.quantizer.exact is False and loaded.quantizer.detrend is True
     assert loaded.quantizer.cutpoints == m.quantizer.cutpoints
     a = m.predict(df).orderBy("seq_id").collect()

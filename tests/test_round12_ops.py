@@ -3,8 +3,6 @@ union-find for driver-sized component graphs vs the distributed CC
 path) must be value-identical, and the merge threshold knob must
 select the intended path."""
 
-import os
-
 from pyspark.sql import functions as F
 
 
@@ -24,21 +22,15 @@ def _forest_rows(df):
     return sorted(tuple(r) for r in df.select("u", "v", "weight").collect())
 
 
-def test_msf_local_merge_matches_distributed(spark):
+def test_msf_local_merge_matches_distributed(spark, monkeypatch):
+    from patternly_spark.operators import graph
     from patternly_spark.operators.graph import minimum_spanning_forest
 
     g = _support_graph(spark)
-    prev = os.environ.get("SPARK_GRAFT_MSF_LOCAL_MERGE_ROWS")
-    try:
-        os.environ["SPARK_GRAFT_MSF_LOCAL_MERGE_ROWS"] = "1000000"
-        local_path = _forest_rows(minimum_spanning_forest(g))
-        os.environ["SPARK_GRAFT_MSF_LOCAL_MERGE_ROWS"] = "0"
-        dist_path = _forest_rows(minimum_spanning_forest(g))
-    finally:
-        if prev is None:
-            os.environ.pop("SPARK_GRAFT_MSF_LOCAL_MERGE_ROWS", None)
-        else:
-            os.environ["SPARK_GRAFT_MSF_LOCAL_MERGE_ROWS"] = prev
+    local_path = _forest_rows(minimum_spanning_forest(g))
+    # a zero driver budget forces every round onto the distributed CC merge
+    monkeypatch.setattr(graph, "MSF_LOCAL_MERGE_BYTES", 0)
+    dist_path = _forest_rows(minimum_spanning_forest(g))
     assert local_path == dist_path
     # spanning-forest shape: n - c edges (14 nodes, 4 components:
     # {1..5}, {6,7,8}, {9,10}, {11..14})

@@ -36,10 +36,9 @@ def test_shuffle_partitions_handles_auto(spark):
     assert shuffle_partitions(_AutoSpark(), default=77) == 77
 
 
-def test_round_partitions_policy_shape(spark, monkeypatch):
+def test_round_partitions_policy_shape(spark):
     """min(session, max(bytes-derived, cores)): small relations land on
-    the core floor, huge ones on the session ceiling, and the env kill
-    switch returns the session setting untouched."""
+    the core floor, huge ones on the session ceiling."""
     from patternly_spark.plans import (
         ROUND_TASK_BYTES,
         _heap_task_bytes_cap,
@@ -61,18 +60,13 @@ def test_round_partitions_policy_shape(spark, monkeypatch):
     assert round_partitions(spark, rows_mid) == expect
     # huge relation: capped at the session setting (never exceeds it)
     assert round_partitions(spark, 10**15) == sess
-    monkeypatch.setenv("SPARK_GRAFT_PARTITION_POLICY", "0")
-    assert round_partitions(spark, 1000) == sess
 
 
-def test_round_partitions_for_is_lazy_when_disabled(spark, monkeypatch):
-    """round_partitions_for must NOT run a count job under the kill
-    switch (the eager df.count() argument form paid one job per
-    operator call even in policy-off mode — round-8 verdict item 5),
-    and must delegate to round_partitions when enabled."""
+def test_round_partitions_for_counts_only_without_stats(spark):
+    """With no plan stats, round_partitions_for delegates to the
+    row-count rule through one count job (with stats it runs none:
+    test_round_partitions_for_uses_plan_stats_not_count)."""
     from patternly_spark.plans import round_partitions, round_partitions_for
-
-    sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     class Boom:
         called = False
@@ -81,10 +75,6 @@ def test_round_partitions_for_is_lazy_when_disabled(spark, monkeypatch):
             Boom.called = True
             return 1000
 
-    monkeypatch.setenv("SPARK_GRAFT_PARTITION_POLICY", "0")
-    assert round_partitions_for(spark, Boom()) == sess
-    assert Boom.called is False
-    monkeypatch.delenv("SPARK_GRAFT_PARTITION_POLICY")
     # no plan stats on the fake -> falls back to the one count job
     assert round_partitions_for(spark, Boom()) == round_partitions(spark, 1000)
     assert Boom.called is True
@@ -138,13 +128,11 @@ def test_round_partitions_for_uses_plan_stats_not_count(spark):
     assert round_partitions_for(spark, big) == expect
 
 
-def test_fanout_respread_policy_shape(spark, monkeypatch):
+def test_fanout_respread_policy_shape(spark):
     """r11: fanout_respread spreads a tiny pre-explode relation to the
     core floor (AQE would coalesce it to 1-2 partitions by bytes and
-    serialize the downstream Generate), sizes a huge one into the
-    bytes*fanout-proportional regime capped at the session ceiling, and
-    passes the relation through untouched under the policy kill
-    switch."""
+    serialize the downstream Generate), and sizes a huge one into the
+    bytes*fanout-proportional regime capped at the session ceiling."""
     import math as _math
 
     from pyspark.sql import functions as F
@@ -169,8 +157,6 @@ def test_fanout_respread_policy_shape(spark, monkeypatch):
     expect = max(1, min(sess, max(_math.ceil(sz * _STATS_INFLATION * 200 / float(eff)), floor)))
     outb = fanout_respread(big, 200)
     assert f"RoundRobinPartitioning({expect})" in outb._jdf.queryExecution().toString()
-    monkeypatch.setenv("SPARK_GRAFT_PARTITION_POLICY", "0")
-    assert fanout_respread(small, 200) is small
 
 
 def test_local_rows_single_partition_same_values(spark):
@@ -233,11 +219,12 @@ def test_tuned_shuffle_restores_even_on_error(spark):
 
 def test_graph_ops_unchanged_under_policy(spark):
     """The policy only changes partition counts, never values: CC and
-    core_numbers agree with a run under the env kill switch."""
-    import os
+    core_numbers agree with a run under a one-partition session
+    setting (the policy never exceeds the session setting)."""
     import random
 
     from patternly_spark.operators.graph import connected_components, core_numbers
+    from patternly_spark.plans import tuned_shuffle
 
     random.seed(5)
     edges = [(random.randint(0, 40), random.randint(0, 40)) for _ in range(120)]
@@ -246,12 +233,9 @@ def test_graph_ops_unchanged_under_policy(spark):
     )
     with_policy_cc = sorted(map(tuple, connected_components(df).collect()))
     with_policy_core = sorted(map(tuple, core_numbers(df).collect()))
-    os.environ["SPARK_GRAFT_PARTITION_POLICY"] = "0"
-    try:
+    with tuned_shuffle(spark, 1):
         assert sorted(map(tuple, connected_components(df).collect())) == with_policy_cc
         assert sorted(map(tuple, core_numbers(df).collect())) == with_policy_core
-    finally:
-        del os.environ["SPARK_GRAFT_PARTITION_POLICY"]
 
 
 # ---------------------------------------------------------------------------
