@@ -8,13 +8,17 @@ Mirrors the reference API surface (``patternly/detection.py``):
 
 but the execution is Spark-first (SURVEY §3):
 
-fit:      quantize (codegen column exprs) -> SLD featurization (score vs a
-          tiny broadcast base-model library — O(N*k), replaces the
-          reference's O(N^2) Lsmash distance matrix, justified by the
+fit:      quantize (codegen column exprs; the complex cut-points and the
+          alphabet size come from one aggregate) -> SLD featurization
+          (score vs a tiny broadcast base-model library — O(N*k), replaces
+          the reference's O(N^2) Lsmash distance matrix, justified by the
           paper's own SLD theory, tex/ms.tex:197-200) -> MLlib KMeans
-          (seeded) -> frequency relabel -> per-cluster GenESeSS via
-          applyInPandas -> iterative cluster reduction -> per-cluster
-          llk stats (stddev_samp == ddof=1).
+          (seeded) -> frequency relabel (from KMeans's own cluster sizes)
+          -> per-cluster GenESeSS via applyInPandas -> iterative cluster
+          reduction -> per-cluster llk stats (stddev_samp == ddof=1).
+          A reduction step and the stats read one scoring pass (the
+          cluster label rides through the scoring, one collect), so the
+          final library scores the training set once.
 predict:  one mapInPandas pass scoring every sequence under the broadcast
           library, then a single groupBy(seq_id) for the ALL-above-bound
           anomaly reduction + argmin closest-match.  One shuffle total.
@@ -29,11 +33,13 @@ Preserved quirk: alphabet_size = max(symbol)+1 (detection.py:133-136).
 from __future__ import annotations
 
 import json
+import math
 import os
+from dataclasses import dataclass
 from typing import Callable
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from patternly_spark.functions.quantize import (
@@ -69,13 +75,24 @@ def _base_models(alphabet_size: int) -> list[PFSA]:
     return models
 
 
-def _relabel_by_frequency(labels_df: DataFrame) -> tuple[DataFrame, list[int], int]:
+def _spark_le(a: float, b: float) -> bool:
+    """``a <= b`` in Spark's order of doubles, where NaN is above every
+    number and equal to itself."""
+    return math.isnan(b) or (not math.isnan(a) and a <= b)
+
+
+def _relabel_by_frequency(
+    labels_df: DataFrame, raw: dict[int, int] | None = None
+) -> tuple[DataFrame, list[int], int]:
     """A2: relabel clusters so 0 = most common (reference double-argsort,
-    detection.py:339-347).  Input: (seq_id, cluster).  Returns relabeled
-    df, cluster counts desc, n_clusters.  Noise label -1 (DBSCAN-style) is
-    excluded from the count (detection.py:339 quirk)."""
-    counts_rows = labels_df.filter(F.col("cluster") >= 0).groupBy("cluster").count().collect()
-    raw = {int(r["cluster"]): int(r["count"]) for r in counts_rows}
+    detection.py:339-347).  Input: (seq_id, cluster); ``raw`` = {label:
+    count} when the clustering has already counted its labels, else one
+    groupBy counts them.  Returns relabeled df, cluster counts desc,
+    n_clusters.  Noise label -1 (DBSCAN-style) is excluded from the count
+    (detection.py:339 quirk)."""
+    if raw is None:
+        counts_rows = labels_df.filter(F.col("cluster") >= 0).groupBy("cluster").count().collect()
+        raw = {int(r["cluster"]): int(r["count"]) for r in counts_rows}
     n = len(raw)
     # rank over the labels actually present (a pluggable clustering_alg or an
     # empty KMeans cluster can yield non-contiguous labels); for contiguous
@@ -90,6 +107,62 @@ def _relabel_by_frequency(labels_df: DataFrame) -> tuple[DataFrame, list[int], i
     out = labels_df.withColumn("cluster", map_expr[F.col("cluster")].cast("int"))
     counts_desc = sorted(counts.tolist(), reverse=True)
     return out, counts_desc, n
+
+
+@dataclass(frozen=True)
+class _ClusterScores:
+    """What one scoring pass of a clustered training set under its
+    library gives, indexed by cluster label (== pfsa_id; noise -1 indexes
+    from the end, as numpy does)."""
+
+    confusion: np.ndarray  # (k, k) sequence counts: cluster x best-scoring PFSA
+    sizes: dict[int, int]  # sequences per cluster label, noise -1 included
+    means: np.ndarray  # llk mean under the cluster's own PFSA
+    stds: np.ndarray  # stddev_samp of the same; 0 for a single sequence
+
+
+def _score_clusters(clustered: DataFrame, library: list[PFSA]) -> _ClusterScores:
+    """One pass over (seq_id, symbols, cluster): score every sequence under
+    every PFSA with its cluster label carried along, reduce to one row per
+    sequence (best PFSA = lowest llk, lowest pfsa_id on ties; llk under
+    its own cluster's PFSA), then one rollup gives the confusion counts
+    per (cluster, best PFSA) and, per cluster, the row total and the llk
+    avg/stddev_samp — one collect."""
+    k = len(library)
+    per_seq = (
+        score_sequences(clustered, library, keep=("cluster",))
+        .groupBy("seq_id", "cluster")
+        .agg(
+            F.min_by("pfsa_id", F.struct("llk", "pfsa_id")).alias("best_pfsa"),
+            F.max(F.when(F.col("pfsa_id") == F.col("cluster"), F.col("llk"))).alias("own"),
+        )
+    )
+    # grouping_id: 0 = (cluster, best_pfsa), 1 = cluster, 3 = grand total
+    rows = (
+        per_seq.rollup("cluster", "best_pfsa")
+        .agg(
+            F.grouping_id().alias("level"),
+            F.count(F.lit(1)).alias("n"),
+            F.avg("own").alias("mean"),
+            F.stddev_samp("own").alias("std"),
+        )
+        .collect()
+    )
+    confusion = np.zeros((k, k))
+    sizes: dict[int, int] = {}
+    means = np.zeros(k)
+    stds = np.zeros(k)
+    for r in rows:
+        if r["level"] == 0:
+            confusion[int(r["cluster"]), int(r["best_pfsa"])] = r["n"]
+        elif r["level"] == 1:
+            c = int(r["cluster"])
+            sizes[c] = int(r["n"])
+            # a cluster without a PFSA of its own label has no stats
+            if r["mean"] is not None:
+                means[c] = r["mean"]
+                stds[c] = r["std"] if r["std"] is not None else 0.0
+    return _ClusterScores(confusion, sizes, means, stds)
 
 
 class AnomalyDetection:
@@ -151,7 +224,8 @@ class AnomalyDetection:
     # ------------------------------------------------------------------
     def _quantize(self, df: DataFrame) -> DataFrame:
         """-> (seq_id, symbols array<tinyint>).  Mirrors __quantize
-        (detection.py:272-308)."""
+        (detection.py:272-308).  Fitting the complex cut-points also sets
+        ``alphabet_size``."""
         cols = df.columns
         if not self.quantize or "symbols" in cols:
             src = "symbols" if "symbols" in cols else "values"
@@ -175,14 +249,20 @@ class AnomalyDetection:
         if self.quantizer is None or not self.quantizer.fitted:
             flat = df.select(F.explode(vals).alias("value"))
             probs = [i / self.n_symbols for i in range(1, self.n_symbols)]
-            cuts = flat.select(
-                percentile_expr("value", probs, exact=self.quantize_exact).alias("c")
-            ).first()["c"]
+            row = flat.select(
+                percentile_expr("value", probs, exact=self.quantize_exact).alias("c"),
+                F.max(F.col("value").cast("double")).alias("top"),
+            ).first()
+            cuts = [float(c) for c in row["c"]]
             self.quantizer = Quantizer(
                 quantize_type="complex", n_symbols=self.n_symbols,
                 detrend=self.detrend, exact=self.quantize_exact,
-                cutpoints=[float(c) for c in cuts], fitted=True,
+                cutpoints=cuts, fitted=True,
             )
+            # a value's symbol is the number of cut-points <= it, so the
+            # largest symbol is the largest value's (quirk: alphabet =
+            # max symbol + 1)
+            self.alphabet_size = 1 + sum(_spark_le(c, row["top"]) for c in cuts)
         cutpoints = self.quantizer.cutpoints
         syms = F.transform(vals, lambda x: symbol_from_cutpoints(x, cutpoints))
         return df.select("seq_id", syms.alias("symbols"))
@@ -240,9 +320,10 @@ class AnomalyDetection:
             km = KMeans(k=n_clusters, seed=self.seed, initMode="k-means||", maxIter=50)
             model = km.fit(vec)
             pred = model.transform(vec).select("seq_id", F.col("prediction").cast("int").alias("cluster"))
-        relabeled, counts, n_found = _relabel_by_frequency(pred)
-        self.cluster_counts = counts
-        return relabeled
+            # KMeans.fit has counted its training assignments already
+            sizes = {i: int(c) for i, c in enumerate(model.summary.clusterSizes) if c}
+            return _relabel_by_frequency(pred, sizes)[0]
+        return _relabel_by_frequency(pred)[0]
 
     # ------------------------------------------------------------------
     def _fit_library(self, clustered: DataFrame, n_clusters: int) -> list[PFSA]:
@@ -263,26 +344,20 @@ class AnomalyDetection:
                 )
             return models
         lib_df = fit_cluster_pfsas(clustered, eps=self.eps, alphabet_size=self.alphabet_size)
-        rows = lib_df.orderBy("pfsa_id").collect()
+        # k rows: sorted here, not by a Spark sort (whose range-partition
+        # sample would run the GenESeSS fits a second time)
+        rows = sorted(lib_df.collect(), key=lambda r: r["pfsa_id"])
         return [PFSA.from_row(r) for r in rows]
 
     # ------------------------------------------------------------------
-    def _reduce_step(self, clustered: DataFrame, library: list[PFSA]) -> int:
+    def _reduce_step(self, clustered: DataFrame, library: list[PFSA]) -> tuple[int, _ClusterScores]:
         """One reduction evaluation (X7): confusion fractions -> self-boost
-        -> threshold-0.2 digraph -> SCC count (correct Tarjan)."""
+        -> threshold-0.2 digraph -> SCC count (correct Tarjan).  Returns
+        the count and the scoring pass it read, which also holds the
+        library's thresholds."""
         k = len(library)
-        scored = score_sequences(clustered, library)
-        with_cluster = scored.join(clustered.select("seq_id", "cluster"), "seq_id")
-        w = Window.partitionBy("seq_id").orderBy("llk", "pfsa_id")
-        best = (
-            with_cluster.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("seq_id", "cluster", F.col("pfsa_id").alias("best_pfsa"))
-        )
-        conf_rows = best.groupBy("cluster", "best_pfsa").count().collect()
-        mat = np.zeros((k, k))
-        for r in conf_rows:
-            mat[int(r["cluster"]), int(r["best_pfsa"])] = r["count"]
+        scores = _score_clusters(clustered, library)
+        mat = scores.confusion.copy()
         sums = mat.sum(axis=1, keepdims=True)
         sums[sums == 0] = 1.0
         mat = mat / sums
@@ -298,7 +373,7 @@ class AnomalyDetection:
             for j in range(k):
                 if mat[i][j] >= 0.2:
                     edges[i].add(j)
-        return len(_tarjan_scc(k, edges))
+        return len(_tarjan_scc(k, edges)), scores
 
     # ------------------------------------------------------------------
     def fit(self, df: DataFrame, y=None) -> "AnomalyDetection":
@@ -306,19 +381,21 @@ class AnomalyDetection:
         if self._sld_cache is not None:
             self._sld_cache.unpersist()
             self._sld_cache = None
-        seq_df = self._quantize(df)
-        seq_df = seq_df.persist()
-        self.alphabet_size = int(
-            seq_df.select(F.max(F.array_max("symbols")).alias("m")).first()["m"]
-        ) + 1
+        self.alphabet_size = None
+        seq_df = self._quantize(df).persist()
+        if self.alphabet_size is None:
+            self.alphabet_size = int(
+                seq_df.select(F.max(F.array_max("symbols")).alias("m")).first()["m"]
+            ) + 1
 
         n = self.n_clusters
         clustered = self._cluster_labels(seq_df, n).join(seq_df, "seq_id")
         library = self._fit_library(clustered, n)
 
+        scores = None  # the scoring pass of `library`, once one ran
         if self.reduce_clusters and n > 1:
             for _ in range(10):
-                new_n = self._reduce_step(clustered, library)
+                new_n, scores = self._reduce_step(clustered, library)
                 if new_n >= len(library):
                     break
                 if self.verbose:
@@ -326,29 +403,18 @@ class AnomalyDetection:
                 n = new_n
                 clustered = self._cluster_labels(seq_df, n).join(seq_df, "seq_id")
                 library = self._fit_library(clustered, n)
+                scores = None
                 if n == 1:
                     break
+        if scores is None:
+            scores = _score_clusters(clustered, library)
 
         self.n_clusters = len(library)
         self.library = library
-
         # A1: per-cluster llk mean/std over the cluster's own PFSA
-        scored = score_sequences(clustered, library)
-        own = scored.join(clustered.select("seq_id", "cluster"), "seq_id").filter(
-            F.col("pfsa_id") == F.col("cluster")
-        )
-        stats = (
-            own.groupBy("pfsa_id")
-            .agg(F.avg("llk").alias("mean"), F.stddev_samp("llk").alias("std"))
-            .collect()
-        )
-        means = np.zeros(self.n_clusters)
-        stds = np.zeros(self.n_clusters)
-        for r in stats:
-            means[int(r["pfsa_id"])] = r["mean"]
-            stds[int(r["pfsa_id"])] = r["std"] if r["std"] is not None else 0.0
-        self.pfsa_llk_means = means
-        self.pfsa_llk_stds = stds
+        self.pfsa_llk_means = scores.means
+        self.pfsa_llk_stds = scores.stds
+        self.cluster_counts = sorted((v for c, v in scores.sizes.items() if c >= 0), reverse=True)
         self.quantized_df = clustered.select("seq_id", "symbols", "cluster").persist()
         seq_df.unpersist()
         self.fitted = True

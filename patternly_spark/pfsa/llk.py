@@ -176,18 +176,23 @@ def score_sequences(
     seq_col: str = "symbols",
     id_col: str = "seq_id",
     log_quantize_bits: int | None = None,
+    keep: Sequence[str] = (),
 ) -> DataFrame:
     """Score every sequence under every library PFSA.
 
     Input: DataFrame (seq_id bigint, symbols array<tinyint|int>).
     Output: long table (seq_id, pfsa_id, llk double) — one row per
     (sequence, model) pair; llk = +inf when unscorable (SURVEY J2 + P3).
+    The input columns named in ``keep`` ride along unchanged on every
+    output row of their sequence (e.g. a cluster label), so a caller
+    needs no join back to the input.
 
     Physical plan: no shuffle, no join — the tiny model library rides in
     the task closure and each input partition is scored locally
     (broadcast nested-loop join semantics at zero cost).
     """
     payload = [m.to_dict() for m in models]
+    schema = T.StructType(LLK_SCHEMA.fields + [seq_df.schema[c] for c in keep])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         mdl = [PFSA.from_dict(d) for d in payload]
@@ -205,9 +210,10 @@ def score_sequences(
                             "seq_id": ids,
                             "pfsa_id": np.full(len(ids), m.pfsa_id, dtype=np.int32),
                             "llk": vals,
+                            **{c: pdf[c].to_numpy() for c in keep},
                         }
                     )
                 )
             yield pd.concat(frames, ignore_index=True)
 
-    return seq_df.select(id_col, seq_col).mapInPandas(run, schema=LLK_SCHEMA)
+    return seq_df.select(id_col, seq_col, *keep).mapInPandas(run, schema=schema)

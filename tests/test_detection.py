@@ -38,6 +38,7 @@ def test_single_cluster_detects_injected_anomalies(spark):
     preds = model.predict().toPandas().sort_values("seq_id")
     anomalous = preds[preds.anomaly].seq_id.tolist()
     assert anomalous == [120, 121, 122, 123, 124]
+    assert model.cluster_counts == [125]
 
 
 def test_example0_style_two_clusters(spark):
@@ -94,6 +95,7 @@ def test_cluster_reduction_merges_similar_regimes(spark):
     )
     model.fit(df)
     assert model.n_clusters == 1
+    assert model.cluster_counts == [200]
     preds = model.predict().toPandas()
     # in-sample false positives at 3 sigma over 200 draws: ~Binomial tail
     assert preds.anomaly.sum() <= 2
@@ -347,6 +349,26 @@ def test_complex_detrend_pipeline(spark):
     flagged = set(preds[preds.anomaly].seq_id)
     assert flagged.issuperset({60, 61, 62, 63})
     assert len(flagged) <= 8
+    assert model.alphabet_size == _max_symbol(model) + 1
+
+    # the alphabet comes from the cut-point aggregate: here the largest
+    # detrended value (an integer step of 1) IS the median cut-point, so
+    # it takes the top symbol
+    steps = np.where(rng.random((30, 80)) < 0.7, 1.0, rng.integers(-2, 1, (30, 80)))
+    rows = [(sid, np.cumsum(s).tolist()) for sid, s in enumerate(steps)]
+    ramp = AnomalyDetection(
+        spark, n_clusters=1, quantize=True, quantize_type="complex",
+        detrend=True, n_symbols=2, eps=0.2,
+    )
+    ramp.fit(spark.createDataFrame(rows, "seq_id long, values array<double>"))
+    assert ramp.quantizer.cutpoints == [1.0]
+    assert ramp.alphabet_size == _max_symbol(ramp) + 1 == 2
+
+
+def _max_symbol(model) -> int:
+    from pyspark.sql import functions as F
+
+    return model.quantized_df.select(F.max(F.array_max("symbols"))).first()[0]
 
 
 def test_quantizer_approx_cutpoints_close_to_exact(spark):
@@ -490,3 +512,104 @@ def test_fit_complex_cutpoints_distributed_mode_matches_exact(spark):
     exact = fit_complex_cutpoints(df, "value", n_symbols=4, exact=True)
     dist = fit_complex_cutpoints(df, "value", n_symbols=4, exact="distributed")
     assert dist == exact
+
+
+def _reference_scores(clustered, library):
+    """The reduction step's confusion -> SCC count and the thresholds, as
+    separate passes: score, join the cluster back, first row per seq_id by
+    (llk, pfsa_id), group; own-cluster llk avg/stddev_samp."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from patternly_spark.pfsa.genesess import _tarjan_scc
+    from patternly_spark.pfsa.llk import score_sequences
+
+    k = len(library)
+    scored = score_sequences(clustered, library).join(clustered.select("seq_id", "cluster"), "seq_id")
+    w = Window.partitionBy("seq_id").orderBy("llk", "pfsa_id")
+    best = (
+        scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
+        .select("cluster", F.col("pfsa_id").alias("best_pfsa"))
+    )
+    confusion = np.zeros((k, k))
+    for r in best.groupBy("cluster", "best_pfsa").count().collect():
+        confusion[int(r["cluster"]), int(r["best_pfsa"])] = r["count"]
+    mat = confusion / np.where(confusion.sum(axis=1, keepdims=True) == 0, 1.0, confusion.sum(axis=1, keepdims=True))
+    for i in range(k):
+        bm = int(np.argsort(mat[i])[::-1][0])
+        if bm != i:
+            mat[bm][i] += 1
+    n_scc = len(_tarjan_scc(k, {i: {j for j in range(k) if mat[i][j] >= 0.2} for i in range(k)}))
+    means, stds = np.zeros(k), np.zeros(k)
+    own = scored.filter(F.col("pfsa_id") == F.col("cluster"))
+    for r in own.groupBy("pfsa_id").agg(F.avg("llk").alias("m"), F.stddev_samp("llk").alias("s")).collect():
+        means[int(r["pfsa_id"])] = r["m"]
+        stds[int(r["pfsa_id"])] = r["s"] if r["s"] is not None else 0.0
+    sizes = {int(r["cluster"]): r["count"] for r in clustered.groupBy("cluster").count().collect()}
+    return confusion, n_scc, means, stds, sizes
+
+
+@pytest.mark.parametrize("case", ["two_regime", "partition_3", "noise"])
+def test_fused_scoring_pass_matches_separate_passes(spark, case):
+    """One reduction step's scoring pass == the separate confusion and
+    threshold passes it replaced, on KMeans (two regimes), the arbitrary
+    3-way partitioner, and a pluggable clustering emitting noise -1."""
+    from pyspark.sql import functions as F
+
+    if case == "two_regime":
+        df = _seq_df(spark, [(MACHINE_A, 100, 7), (MACHINE_B, 100, 8)], length=100)
+        k, alg = 2, None
+    elif case == "partition_3":
+        df = _seq_df(spark, [(MACHINE_A, 200, 7)], length=60)
+        k, alg = 3, lambda feats, n: feats.select("seq_id", (F.col("seq_id") % n).cast("int").alias("cluster"))
+    else:
+        df = _seq_df(spark, [(MACHINE_A, 30, 1), (MACHINE_B, 30, 2), (MACHINE_C, 20, 3)], length=150)
+        k, alg = 3, lambda feats, n: feats.select("seq_id", F.when(F.col("seq_id") % 7 == 0, -1).when(
+            F.col("seq_id") < 30, 0).when(F.col("seq_id") < 60, 1).otherwise(2).cast("int").alias("cluster"))
+    model = AnomalyDetection(spark, n_clusters=k, quantize=False, clustering_alg=alg, eps=0.2)
+    seq_df = model._quantize(df)
+    model.alphabet_size = 2
+    clustered = model._cluster_labels(seq_df, k).join(seq_df, "seq_id")
+    library = model._fit_library(clustered, k)
+
+    n_scc, scores = model._reduce_step(clustered, library)
+    confusion, want_scc, means, stds, sizes = _reference_scores(clustered, library)
+    assert n_scc == want_scc
+    assert np.array_equal(scores.confusion, confusion)
+    assert scores.sizes == sizes
+    np.testing.assert_allclose(scores.means, means, rtol=1e-12, atol=0)
+    np.testing.assert_allclose(scores.stds, stds, rtol=1e-12, atol=0)
+    if case == "noise":
+        assert -1 in scores.sizes and len(library) == 4
+
+
+def test_reducing_fit_scores_the_final_library_once(spark, monkeypatch):
+    """A fit whose first reduction step keeps every cluster reuses that
+    step's scoring pass for its thresholds: two scoring calls (SLD
+    features + the step), and a bounded number of Spark jobs."""
+    import uuid
+
+    import patternly_spark.detection as det
+
+    calls = []
+    real = det.score_sequences
+    monkeypatch.setattr(det, "score_sequences", lambda *a, **kw: calls.append(1) or real(*a, **kw))
+    df = _seq_df(spark, [(MACHINE_A, 100, 21), (MACHINE_B, 100, 22)], length=100)
+    model = AnomalyDetection(spark, n_clusters=2, quantize=False, reduce_clusters=True, eps=0.2)
+    sc = spark.sparkContext
+    group = f"fit-{uuid.uuid4().hex}"
+    prev = sc.getLocalProperty("spark.jobGroup.id"), sc.getLocalProperty("spark.job.description")
+    sc.setJobGroup(group, group)
+    try:
+        model.fit(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev[0])
+        sc.setLocalProperty("spark.job.description", prev[1])
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    model._sld_cache.unpersist()
+    model.quantized_df.unpersist()
+    assert model.n_clusters == 2
+    assert len(calls) == 2
+    # measured with the tests' session (4 cores, 8 shuffle partitions); a
+    # Spark sort of the library readout alone adds two jobs
+    assert jobs <= 25, jobs
