@@ -1143,7 +1143,7 @@ def q26_anomaly_flag_shape(spark, sf_dir):
 def q90_pfsa_llk_scores(spark, sf_dir):
     """X2: llk of per-user event symbol sequences under 2 fixed PFSAs.
 
-    Scored with 20-bit log quantization (pfsa/llk.py::llk_batch): each
+    Scored with 20-bit log quantization (pfsa/llk.py::llk_matrix): each
     per-step log-prob floors to the 2^-20 grid, making the accumulation
     EXACT in float64 and therefore order-independent — which is what lets
     the DuckDB oracle replay the score as transition-counts x quantized

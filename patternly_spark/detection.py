@@ -20,8 +20,9 @@ fit:      quantize (codegen column exprs; the complex cut-points and the
           cluster label rides through the scoring, one collect), so the
           final library scores the training set once.
 predict:  one mapInPandas pass scoring every sequence under the broadcast
-          library, then a single groupBy(seq_id) for the ALL-above-bound
-          anomaly reduction + argmin closest-match.  One shuffle total.
+          library and reducing each sequence's scores in the same task to
+          the ALL-above-bound anomaly flag + argmin closest-match.  No
+          shuffle.
 
 Consciously fixed reference bugs (SURVEY §7.4): correct Tarjan SCC count
 (vs _utils.py:157-160 whole-stack pop), per-refit library rebuild (vs
@@ -39,8 +40,10 @@ from dataclasses import dataclass
 from typing import Callable
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from patternly_spark.functions.quantize import (
     Quantizer,
@@ -50,9 +53,18 @@ from patternly_spark.functions.quantize import (
 )
 from patternly_spark.functions.windowing import split_stream, windows_to_sequences
 from patternly_spark.pfsa.genesess import _tarjan_scc, fit_cluster_pfsas, genesess
-from patternly_spark.pfsa.llk import llk_batch, score_sequences
+from patternly_spark.pfsa.llk import llk_batch, map_llk, score_sequences
 from patternly_spark.pfsa.model import PFSA
 from patternly_spark.pfsa.simulate import simulate
+
+
+VERDICT_SCHEMA = T.StructType(
+    [
+        T.StructField("seq_id", T.LongType(), False),
+        T.StructField("anomaly", T.BooleanType(), False),
+        T.StructField("closest_match", T.IntegerType(), False),
+    ]
+)
 
 
 def _base_models(alphabet_size: int) -> list[PFSA]:
@@ -378,9 +390,10 @@ class AnomalyDetection:
     # ------------------------------------------------------------------
     def fit(self, df: DataFrame, y=None) -> "AnomalyDetection":
         self.spark = self.spark or df.sparkSession
-        if self._sld_cache is not None:
-            self._sld_cache.unpersist()
-            self._sld_cache = None
+        for cached in (self.quantized_df, self._sld_cache):  # a refit's stale caches
+            if cached is not None:
+                cached.unpersist()
+        self._sld_cache = None
         self.alphabet_size = None
         seq_df = self._quantize(df).persist()
         if self.alphabet_size is None:
@@ -417,16 +430,24 @@ class AnomalyDetection:
         self.cluster_counts = sorted((v for c, v in scores.sizes.items() if c >= 0), reverse=True)
         self.quantized_df = clustered.select("seq_id", "symbols", "cluster").persist()
         seq_df.unpersist()
+        if self._sld_cache is not None:  # kept, released: only the fit reads it
+            self._sld_cache.unpersist()
         self.fitted = True
         return self
 
     # ------------------------------------------------------------------
     def predict(self, df: DataFrame | None = None) -> DataFrame:
-        """-> (seq_id, anomaly boolean, closest_match int).
+        """-> (seq_id, anomaly boolean, closest_match int), one row per
+        input sequence.
 
-        Plan: mapInPandas llk scoring (library in closure, no shuffle) +
-        one groupBy(seq_id) for the ALL-above-bound reduction (A6) and
-        argmin closest match (A3).
+        anomaly: llk above the bound under every PFSA (A6); closest_match:
+        the PFSA of lowest llk, lowest pfsa_id on ties — also when every
+        llk is inf (A3).  Both come out of the scoring pass itself (one
+        mapInPandas, library in the closure): no shuffle.  An inf or NaN
+        bound flags nothing, as ``x > NaN`` and ``inf > inf`` are false.
+        Sequences are not grouped, so ``seq_id`` must be unique, as it is
+        for every caller: the fit's ``quantized_df``, stream windows, and
+        sequence tables keyed by id.
         """
         if not self.fitted:
             raise ValueError("Model has not been fit yet.")
@@ -437,26 +458,22 @@ class AnomalyDetection:
         else:
             seq_df = self._quantize(df)
 
-        bounds = {
-            int(m.pfsa_id): float(self.pfsa_llk_means[i] + self.pfsa_llk_stds[i] * self.anomaly_sensitivity)
-            for i, m in enumerate(self.library)
-        }
-        scored = score_sequences(seq_df, self.library)
-        bound_expr = F.create_map(*[F.lit(x) for kv in bounds.items() for x in kv])
-        flagged = scored.withColumn("above", F.col("llk") > bound_expr[F.col("pfsa_id")])
-        out = (
-            flagged.groupBy("seq_id")
-            .agg(
-                F.min(F.when(F.col("above"), F.lit(1)).otherwise(F.lit(0))).alias("all_above"),
-                F.min_by("pfsa_id", F.struct("llk", "pfsa_id")).alias("closest_match"),
+        # llk columns in pfsa_id order, so the first minimum is the lowest id
+        order = np.argsort([m.pfsa_id for m in self.library], kind="stable")
+        library = [self.library[i] for i in order]
+        bounds = (self.pfsa_llk_means + self.pfsa_llk_stds * self.anomaly_sensitivity)[order]
+        ids = np.array([m.pfsa_id for m in library], dtype=np.int32)
+
+        def emit(pdf: pd.DataFrame, llk: np.ndarray) -> pd.DataFrame:
+            return pd.DataFrame(
+                {
+                    "seq_id": pdf["seq_id"].to_numpy(),
+                    "anomaly": (llk > bounds).all(axis=1),
+                    "closest_match": ids[llk.argmin(axis=1)],
+                }
             )
-            .select(
-                "seq_id",
-                (F.col("all_above") == 1).alias("anomaly"),
-                F.col("closest_match").cast("int"),
-            )
-        )
-        return out
+
+        return map_llk(seq_df, library, VERDICT_SCHEMA, emit)
 
     def print_PFSAs(self) -> None:
         """Print each cluster PFSA (parity: AnomalyDetection.print_PFSAs,

@@ -1,5 +1,5 @@
 from patternly_spark.pfsa.model import PFSA, PFSA_SCHEMA, library_to_df, library_from_df
-from patternly_spark.pfsa.llk import llk_batch, score_sequences
+from patternly_spark.pfsa.llk import llk_batch, llk_matrix, score_sequences
 from patternly_spark.pfsa.simulate import simulate, simulate_df
 from patternly_spark.pfsa.genesess import genesess, fit_cluster_pfsas
 
@@ -9,6 +9,7 @@ __all__ = [
     "library_to_df",
     "library_from_df",
     "llk_batch",
+    "llk_matrix",
     "score_sequences",
     "simulate",
     "simulate_df",

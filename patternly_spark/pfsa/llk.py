@@ -13,15 +13,24 @@ This is the engine's workhorse kernel (reference operator X2, invoked at
 Spark-side strategy (SURVEY §3.2): the PFSA library is tiny (<= tens of
 models) and the sequence table is huge, so we ship the library to every
 task inside a ``mapInPandas`` closure — a broadcast nested-loop join with
-zero shuffle.  The numpy kernel vectorizes across *sequences* (state
-distribution matrix P of shape (N, |Q|) advanced one time-step for all N
-sequences at once, grouped by emitted symbol), so Python-loop cost is
-O(max_len * |Sigma|), not O(N * len).
+zero shuffle.
+
+Kernel (``llk_matrix``): one pass scores a whole batch under the whole
+library, one time step at a time for all (sequence, model) pairs.  A
+batch is packed once into a narrow int16 matrix.  Most pairs soon hold
+an exact point mass (one state at 1.0): GenESeSS machines synchronize,
+and the SLD base models do after one symbol.  Such a pair advances by
+one lookup in flat tables of log pitilde and connx, indexed over one
+global state space that covers every model.  Any other pair takes the
+full distribution step above, and moves to the lookup once its
+distribution becomes a point mass.  On a point mass the distribution step
+computes exactly the floats the tables hold, so both paths give
+bit-identical scores; ``llk_one`` is the scalar reference.
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator, Sequence
+from typing import Callable, Iterable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
@@ -38,7 +47,7 @@ def llk_one(symbols: Sequence[int], model: PFSA) -> float:
     n = len(syms)
     if n == 0:
         return float("inf")
-    if syms.max() >= model.alphabet_size:
+    if syms.min() < 0 or syms.max() >= model.alphabet_size:
         # alphabet-incompatible sequence: unscorable -> inf
         # (reference realigns and pads with inf, detection.py:142-144)
         return float("inf")
@@ -59,17 +68,60 @@ def llk_one(symbols: Sequence[int], model: PFSA) -> float:
     return float(L / n)
 
 
-def llk_batch(
+def _pack(seqs: list, pad: int) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Pack a batch once into an int16 matrix, ``pad`` past each end.
+
+    Returns (packed (N, T), lengths, max symbol, usable), where a sequence
+    is usable when it is non-empty and every symbol lies in [0, pad); an
+    unusable row is packed as all ``pad``."""
+    n = len(seqs)
+    lens = np.fromiter(map(len, seqs), dtype=np.int64, count=n)
+    width, full = int(lens.max()), lens > 0
+    lo, hi = np.zeros(n, dtype=np.int64), np.zeros(n, dtype=np.int64)
+    if width and lens.min() == width:
+        wide = np.stack(seqs)
+        lo[:], hi[:] = wide.min(axis=1), wide.max(axis=1)
+        packed = wide.astype(np.int16)
+    else:
+        packed = np.full((n, width), pad, dtype=np.int16)
+        if width:
+            flat = np.concatenate(seqs)
+            starts = np.cumsum(lens) - lens
+            lo[full] = np.minimum.reduceat(flat, starts[full])
+            hi[full] = np.maximum.reduceat(flat, starts[full])
+            cols = np.arange(flat.size) - np.repeat(starts, lens)
+            packed[np.repeat(np.arange(n), lens), cols] = flat
+    usable = full & (lo >= 0) & (hi < pad)
+    packed[~usable] = pad
+    return packed, lens, hi, usable
+
+
+def _log_step(pr: np.ndarray, log_quantize_bits: int | None) -> np.ndarray:
+    """log of emission probabilities (> 0), floored to the 2^-bits grid
+    when quantizing."""
+    step = np.log(pr)
+    if log_quantize_bits is not None:
+        scale = float(1 << log_quantize_bits)
+        step = np.floor(step * scale) / scale
+    return step
+
+
+def _is_point_mass(P: np.ndarray) -> np.ndarray:
+    """Rows of P that hold exactly 1.0 in one state and 0 elsewhere."""
+    return (np.count_nonzero(P, axis=-1) == 1) & (P.max(axis=-1) == 1.0)
+
+
+def llk_matrix(
     sequences: Iterable[Sequence[int]],
-    model: PFSA,
+    models: Sequence[PFSA],
     *,
     log_quantize_bits: int | None = None,
 ) -> np.ndarray:
-    """Vectorized negative log-likelihood of many sequences under one model.
+    """Negative log-likelihood of every sequence under every model.
 
-    Sequences may have unequal length; they are packed into a padded
-    int16 matrix with -1 padding.  Returns float64 array of length N
-    (inf for empty / alphabet-incompatible / zero-probability sequences).
+    Returns a float64 (N, M) matrix, column j for ``models[j]``; inf for
+    an empty sequence, a symbol outside [0, alphabet_size) of the model,
+    or a zero-probability step.  Sequences may have unequal length.
 
     ``log_quantize_bits``: floor each per-step log-probability to the
     2^-bits grid before accumulating.  Quantized terms are dyadic
@@ -80,84 +132,96 @@ def llk_batch(
     per step is < 1e-6 — far below the anomaly thresholds — while the
     default (None) keeps full-precision semantics.
     """
-    seq_list = [np.asarray(s, dtype=np.int16) for s in sequences]
-    n_seq = len(seq_list)
-    if n_seq == 0:
-        return np.empty(0)
-    lens = np.array([len(s) for s in seq_list], dtype=np.int64)
-    max_len = int(lens.max()) if n_seq else 0
-    out = np.full(n_seq, np.inf)
-    if max_len == 0:
+    seqs = list(sequences)
+    n, n_models = len(seqs), len(models)
+    out = np.full((n, n_models), np.inf)
+    if n == 0 or n_models == 0:
+        return out
+    ks = np.array([m.alphabet_size for m in models])
+    width = int(ks.max()) + 1  # the last column is padding: a no-op step
+    packed, lens, hi, usable = _pack(seqs, width - 1)
+    valid = usable[:, None] & (hi[:, None] < ks)
+    if not valid.any():
         return out
 
-    k = model.alphabet_size
-    packed = np.full((n_seq, max_len), -1, dtype=np.int16)
-    for i, s in enumerate(seq_list):
-        packed[i, : len(s)] = s
+    # one global state space: model j's state q is row offs[j] + q of the
+    # flat tables, whose entry row * width + symbol holds the step's
+    # log-probability (logp) and the next state's row * width (nxt).  A
+    # pair (i, j) in a point mass sits at base[i, j]; any other pair steps
+    # its distribution dist[j][i].
+    offs = np.cumsum([0] + [m.n_states for m in models])
+    logp = np.zeros((offs[-1], width))
+    nxt = np.repeat(np.arange(offs[-1]) * width, width).reshape(-1, width)
+    base = np.empty((n, n_models), dtype=np.intp)
+    in_dist = np.zeros((n, n_models), dtype=bool)
+    dist: dict[int, np.ndarray] = {}
+    for j, m in enumerate(models):
+        span, pos = slice(offs[j], offs[j + 1]), m.pitilde > 0.0
+        logp[span, : ks[j]] = -np.inf
+        logp[span, : ks[j]][pos] = _log_step(m.pitilde[pos], log_quantize_bits)
+        nxt[span, : ks[j]] = (offs[j] + m.connx) * width
+        p0 = m.stationary()
+        base[:, j] = (offs[j] + int(np.argmax(p0))) * width
+        if not _is_point_mass(p0):
+            in_dist[:, j] = valid[:, j]
+            dist[j] = np.tile(p0, (n, 1))
+    logp, nxt = logp.ravel(), nxt.ravel()
 
-    valid = lens > 0
-    for i, s in enumerate(seq_list):
-        if len(s) and (s.max() >= k or s.min() < 0):
-            valid[i] = False
-    idx = np.nonzero(valid)[0]
-    if idx.size == 0:
-        return out
+    L = np.zeros((n, n_models))
+    for t in range(packed.shape[1]):
+        x = packed[:, t].astype(np.intp)
+        at = base + x[:, None]
+        step = logp[at]
+        base = nxt[at]
+        if in_dist.any():
+            stepping = in_dist & (lens > t)[:, None]
+            for j, P in dist.items():
+                rows = np.nonzero(stepping[:, j])[0]
+                if rows.size == 0:
+                    continue
+                step[rows, j] = _dist_step(models[j], P, rows, x[rows], log_quantize_bits)
+                # a dead pair's llk is inf from here on, whatever it looks up
+                mass = _is_point_mass(P[rows])
+                in_dist[rows[mass | (step[rows, j] == -np.inf)], j] = False
+                base[rows[mass], j] = (offs[j] + P[rows[mass]].argmax(axis=1)) * width
+        L -= step
 
-    pit = model.pitilde  # (Q, k)
-    cnx = model.connx  # (Q, k)
-    nq = model.n_states
-    p0 = model.stationary()
-
-    P = np.tile(p0, (idx.size, 1))  # (N, Q) current state distributions
-    L = np.zeros(idx.size)
-    alive = np.ones(idx.size, dtype=bool)
-    sub = packed[idx]  # (N, max_len)
-    sub_lens = lens[idx]
-
-    # per-symbol transfer operators Gamma_s as (Q,) target index + weight
-    for t in range(max_len):
-        active = alive & (t < sub_lens)
-        if not active.any():
-            break
-        syms_t = sub[:, t]
-        phi = P @ pit  # (N, k)
-        act = np.nonzero(active)[0]
-        pr = phi[act, syms_t[act]]
-        dead = pr <= 0.0
-        if dead.any():
-            alive[act[dead]] = False
-            act = act[~dead]
-            pr = pr[~dead]
-        step = np.log(pr)
-        if log_quantize_bits is not None:
-            scale = float(1 << log_quantize_bits)
-            step = np.floor(step * scale) / scale
-        L[act] -= step
-        # advance state distributions: group rows by emitted symbol
-        P_new = np.zeros_like(P)
-        for s in range(k):
-            rows = act[syms_t[act] == s]
-            if rows.size == 0:
-                continue
-            contrib = P[rows] * pit[:, s]  # (r, Q)
-            tgt = cnx[:, s]  # (Q,)
-            pn = np.zeros((rows.size, nq))
-            np.add.at(pn.T, tgt, contrib.T)
-            norm = pn.sum(axis=1, keepdims=True)
-            zero = (norm[:, 0] <= 0.0)
-            if zero.any():
-                alive[rows[zero]] = False
-                norm[zero] = 1.0
-            P_new[rows] = pn / norm
-        # rows not active this step keep their distribution
-        inactive = np.nonzero(~active)[0]
-        P_new[inactive] = P[inactive]
-        P = P_new
-
-    ok = alive
-    out_idx = idx[ok]
-    out[out_idx] = L[ok] / sub_lens[ok]
+    np.divide(L, lens[:, None], out=out, where=valid)
     return out
+
+
+def _dist_step(model: PFSA, P: np.ndarray, rows: np.ndarray, syms: np.ndarray,
+               log_quantize_bits: int | None) -> np.ndarray:
+    """One Alg. 1 step for the distributions ``P[rows]`` emitting ``syms``:
+    returns their log-probabilities (-inf when zero) and advances those
+    rows of P in place."""
+    pit, cnx = model.pitilde, model.connx
+    pr = (P[rows] @ pit)[np.arange(rows.size), syms]
+    ok = pr > 0.0
+    step = np.full(rows.size, -np.inf)
+    step[ok] = _log_step(pr[ok], log_quantize_bits)
+    for s in np.unique(syms[ok]):
+        sel = np.nonzero(ok & (syms == s))[0]
+        rs = rows[sel]
+        pn = np.zeros((rs.size, model.n_states))
+        np.add.at(pn.T, cnx[:, s], (P[rs] * pit[:, s]).T)
+        norm = pn.sum(axis=1, keepdims=True)
+        zero = norm[:, 0] <= 0.0
+        step[sel[zero]] = -np.inf
+        norm[zero] = 1.0
+        P[rs] = pn / norm
+    return step
+
+
+def llk_batch(
+    sequences: Iterable[Sequence[int]],
+    model: PFSA,
+    *,
+    log_quantize_bits: int | None = None,
+) -> np.ndarray:
+    """Negative log-likelihood of many sequences under one model: column 0
+    of ``llk_matrix``."""
+    return llk_matrix(sequences, [model], log_quantize_bits=log_quantize_bits)[:, 0]
 
 
 LLK_SCHEMA = T.StructType(
@@ -167,6 +231,38 @@ LLK_SCHEMA = T.StructType(
         T.StructField("llk", T.DoubleType(), False),
     ]
 )
+
+
+def map_llk(
+    seq_df: DataFrame,
+    models: list[PFSA],
+    schema: T.StructType,
+    emit: Callable[[pd.DataFrame, np.ndarray], pd.DataFrame],
+    *,
+    seq_col: str = "symbols",
+    id_col: str = "seq_id",
+    log_quantize_bits: int | None = None,
+    keep: Sequence[str] = (),
+) -> DataFrame:
+    """One ``mapInPandas`` pass: each Arrow batch (columns ``id_col``,
+    ``seq_col`` and ``keep``) is scored once by ``llk_matrix`` under the
+    library and ``emit(batch, llk)`` turns it into output rows of
+    ``schema``; llk column j is ``models[j]``.
+
+    Physical plan: no shuffle, no join — the tiny model library rides in
+    the task closure and each input partition is scored locally
+    (broadcast nested-loop join semantics at zero cost).
+    """
+    payload = [m.to_dict() for m in models]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        mdl = [PFSA.from_dict(d) for d in payload]
+        for pdf in batches:
+            if len(pdf):
+                llk = llk_matrix(pdf[seq_col].tolist(), mdl, log_quantize_bits=log_quantize_bits)
+                yield emit(pdf, llk)
+
+    return seq_df.select(id_col, seq_col, *keep).mapInPandas(run, schema=schema)
 
 
 def score_sequences(
@@ -182,38 +278,24 @@ def score_sequences(
 
     Input: DataFrame (seq_id bigint, symbols array<tinyint|int>).
     Output: long table (seq_id, pfsa_id, llk double) — one row per
-    (sequence, model) pair; llk = +inf when unscorable (SURVEY J2 + P3).
-    The input columns named in ``keep`` ride along unchanged on every
-    output row of their sequence (e.g. a cluster label), so a caller
-    needs no join back to the input.
-
-    Physical plan: no shuffle, no join — the tiny model library rides in
-    the task closure and each input partition is scored locally
-    (broadcast nested-loop join semantics at zero cost).
+    (sequence, model) pair, grouped by model within a batch; llk = +inf
+    when unscorable (SURVEY J2 + P3).  The input columns named in
+    ``keep`` ride along unchanged on every output row of their sequence
+    (e.g. a cluster label), so a caller needs no join back to the input.
+    One shuffle-free pass (``map_llk``).
     """
-    payload = [m.to_dict() for m in models]
     schema = T.StructType(LLK_SCHEMA.fields + [seq_df.schema[c] for c in keep])
+    ids = np.array([m.pfsa_id for m in models], dtype=np.int32)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        mdl = [PFSA.from_dict(d) for d in payload]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            seqs = pdf[seq_col].tolist()
-            ids = pdf[id_col].to_numpy()
-            frames = []
-            for m in mdl:
-                vals = llk_batch(seqs, m, log_quantize_bits=log_quantize_bits)
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "seq_id": ids,
-                            "pfsa_id": np.full(len(ids), m.pfsa_id, dtype=np.int32),
-                            "llk": vals,
-                            **{c: pdf[c].to_numpy() for c in keep},
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
+    def emit(pdf: pd.DataFrame, llk: np.ndarray) -> pd.DataFrame:
+        return pd.DataFrame(
+            {
+                "seq_id": np.tile(pdf[id_col].to_numpy(), len(ids)),
+                "pfsa_id": np.repeat(ids, len(pdf)),
+                "llk": llk.T.ravel(),
+                **{c: np.tile(pdf[c].to_numpy(), len(ids)) for c in keep},
+            }
+        )
 
-    return seq_df.select(id_col, seq_col, *keep).mapInPandas(run, schema=schema)
+    return map_llk(seq_df, models, schema, emit, seq_col=seq_col, id_col=id_col,
+                   log_quantize_bits=log_quantize_bits, keep=keep)

@@ -12,6 +12,24 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _env_positive_int(name: str, default: str, *, star: bool = False) -> str:
+    """The setting ``name`` as a positive int (or ``*`` when ``star``);
+    anything else raises ValueError naming the variable."""
+    raw = os.environ.get(name, default)
+    if (star and raw == "*") or (raw.isascii() and raw.isdigit() and int(raw) > 0):
+        return raw
+    allowed = "'*' or a positive integer" if star else "a positive integer"
+    raise ValueError(f"{name}={raw!r}: expected {allowed}")
+
+
+def _env_flag(name: str, default: str) -> bool:
+    """The setting ``name`` as one of 0/1/true/false."""
+    raw = os.environ.get(name, default)
+    if raw not in ("0", "1", "true", "false"):
+        raise ValueError(f"{name}={raw!r}: expected one of 0, 1, true, false")
+    return raw in ("1", "true")
+
+
 def get_spark(app_name: str = "patternly-spark", *, shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) the session.
 
@@ -19,6 +37,13 @@ def get_spark(app_name: str = "patternly-spark", *, shuffle_partitions: int | No
     harness: UTC session timezone, fixed shuffle partition count, Arrow
     enabled for pandas-UDF kernels.
     """
+    # malformed deployment settings fail here, before any session exists
+    cpus = _env_positive_int("SPARK_GRAFT_CPUS", "*", star=True)
+    env_partitions = int(_env_positive_int("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+    ui = _env_flag("SPARK_GRAFT_UI", "0")
+    if shuffle_partitions is None:
+        shuffle_partitions = env_partitions
+
     # make the package importable by spawned Python workers regardless of
     # the consumer's cwd (pandas-UDF kernels unpickle patternly_spark on
     # executors; PYTHONPATH is inherited by worker processes)
@@ -27,7 +52,6 @@ def get_spark(app_name: str = "patternly-spark", *, shuffle_partitions: int | No
     if pkg_root not in existing.split(os.pathsep):
         os.environ["PYTHONPATH"] = pkg_root + (os.pathsep + existing if existing else "")
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     # GC robustness for large shuffle-sort state (guide §5): sort tasks
     # double their record-pointer arrays into 100 MiB+ allocations —
@@ -45,8 +69,6 @@ def get_spark(app_name: str = "patternly-spark", *, shuffle_partitions: int | No
         "-XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=64"
         " -XX:G1HeapRegionSize=32m",
     )
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -68,7 +90,7 @@ def get_spark(app_name: str = "patternly-spark", *, shuffle_partitions: int | No
         .config("spark.executor.extraJavaOptions", gc_opts)
         # UI off by default (test throughput); scripts/bench_scale.py sets
         # SPARK_GRAFT_UI=1 to read shuffle/spill from the REST API
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "0") in ("1", "true") and "true" or "false")
+        .config("spark.ui.enabled", "true" if ui else "false")
     )
     return builder.getOrCreate()
 

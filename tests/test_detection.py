@@ -613,3 +613,83 @@ def test_reducing_fit_scores_the_final_library_once(spark, monkeypatch):
     # measured with the tests' session (4 cores, 8 shuffle partitions); a
     # Spark sort of the library readout alone adds two jobs
     assert jobs <= 25, jobs
+
+
+def _reference_predict(seq_df, library, bounds):
+    """predict's verdicts as the separate pass plus shuffle they replaced:
+    the long llk table, then groupBy(seq_id) with all-above and min_by
+    over (llk, pfsa_id)."""
+    from pyspark.sql import functions as F
+
+    from patternly_spark.pfsa.llk import score_sequences
+
+    bound = F.create_map(*[F.lit(x) for m, b in zip(library, bounds) for x in (m.pfsa_id, float(b))])
+    return (
+        score_sequences(seq_df, library)
+        .withColumn("above", F.col("llk") > bound[F.col("pfsa_id")])
+        .groupBy("seq_id")
+        .agg(
+            F.min(F.when(F.col("above"), 1).otherwise(0)).alias("all_above"),
+            F.min_by("pfsa_id", F.struct("llk", "pfsa_id")).alias("closest_match"),
+        )
+        .select("seq_id", (F.col("all_above") == 1).alias("anomaly"), F.col("closest_match").cast("int"))
+    )
+
+
+@pytest.mark.parametrize("bounds", ["fitted", "inf_nan"])
+def test_predict_matches_shuffle_reduction(spark, bounds):
+    """The single-pass verdicts equal the old score + groupBy reduction,
+    with sequences that are inf under every PFSA (symbol 2 on a binary
+    alphabet, and an empty one), exact llk ties (two copies of one PFSA,
+    listed out of pfsa_id order), and inf / NaN bounds."""
+    df = _seq_df(spark, [(MACHINE_A, 60, 31), (MACHINE_B, 60, 32), (MACHINE_U, 10, 33)], length=80)
+    extra = spark.createDataFrame(
+        [(1000, [0, 2, 1]), (1001, []), (1002, [1, 1, 0])], "seq_id long, symbols array<int>"
+    )
+    df = df.unionByName(extra)
+    model = AnomalyDetection(spark, n_clusters=2, quantize=False, reduce_clusters=False, eps=0.2)
+    model.fit(df.filter("seq_id < 1000"))
+    twin = PFSA.from_dict({**model.library[0].to_dict(), "pfsa_id": 2})
+    model.library = [twin] + model.library
+    model.pfsa_llk_means = np.concatenate([[model.pfsa_llk_means[0]], model.pfsa_llk_means])
+    model.pfsa_llk_stds = np.concatenate([[model.pfsa_llk_stds[0]], model.pfsa_llk_stds])
+    if bounds == "inf_nan":
+        model.pfsa_llk_means[1], model.pfsa_llk_stds[2] = np.inf, np.nan
+    limits = model.pfsa_llk_means + model.pfsa_llk_stds * model.anomaly_sensitivity
+
+    got = model.predict(df).toPandas().sort_values("seq_id").reset_index(drop=True)
+    want = _reference_predict(model._quantize(df), model.library, limits).toPandas()
+    want = want.sort_values("seq_id").reset_index(drop=True)
+    assert len(got) == df.count()
+    assert got["seq_id"].tolist() == want["seq_id"].tolist()
+    assert got["anomaly"].tolist() == want["anomaly"].tolist()
+    assert got["closest_match"].tolist() == want["closest_match"].tolist()
+    inf_rows = got[got.seq_id.isin([1000, 1001])]
+    assert inf_rows["closest_match"].tolist() == [0, 0]
+    if bounds == "inf_nan":
+        assert not got["anomaly"].any()
+    else:
+        assert inf_rows["anomaly"].all()
+    model.quantized_df.unpersist()
+
+
+def test_fit_leaves_one_cached_relation(spark):
+    """A fit keeps only its quantized_df cached (the SLD features are
+    released before it returns), and a refit releases the previous one."""
+    df = _seq_df(spark, [(MACHINE_A, 40, 41), (MACHINE_B, 40, 42)], length=60)
+    jsc = spark.sparkContext._jsc
+
+    def cached() -> int:
+        return jsc.getPersistentRDDs().size()
+
+    model = AnomalyDetection(spark, n_clusters=2, quantize=False, eps=0.2)
+    before = cached()
+    model.fit(df)
+    model.predict().count()  # materializes quantized_df
+    after_fit = cached()
+    model.fit(df)
+    model.predict().count()
+    after_refit = cached()
+    model.quantized_df.unpersist()
+    assert after_fit == before + 1
+    assert after_refit == after_fit

@@ -52,11 +52,14 @@ def test_llk_first_symbol_closed_form():
 
 
 def test_llk_batch_unequal_lengths_and_incompatible():
-    seqs = [[0, 1, 1], [1, 0], [0, 2, 1], []]  # third has symbol 2 > alphabet, fourth empty
+    # third has symbol 2 > alphabet, fourth is empty, fifth has a negative
+    # symbol (which must not index phi from the end)
+    seqs = [[0, 1, 1], [1, 0], [0, 2, 1], [], [0, -1, 1]]
     vals = llk_batch(seqs, M2)
     assert vals[0] == pytest.approx(hand_llk(M2, seqs[0]), rel=1e-12)
     assert vals[1] == pytest.approx(hand_llk(M2, seqs[1]), rel=1e-12)
-    assert math.isinf(vals[2]) and math.isinf(vals[3])
+    assert math.isinf(vals[2]) and math.isinf(vals[3]) and math.isinf(vals[4])
+    assert all(math.isinf(llk_one(s, M2)) for s in seqs[2:])
 
 
 def test_simulator_deterministic_and_statistically_sane():

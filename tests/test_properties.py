@@ -143,6 +143,45 @@ def test_llk_separation_property(seed):
     assert under_g < under_h
 
 
+# Whole-library kernel: llk_matrix equals the scalar llk_one on every
+# (sequence, model) pair — same inf pattern, finite scores within 1e-12
+# (within the 2^-bits grid step per symbol when log-quantized) — on
+# libraries mixing the 2-state machines above with general machines of
+# other alphabet sizes, zero-probability emissions and non-synchronizing
+# transitions, and on ragged sequences that include empty ones and
+# symbols outside a model's alphabet (negative ones too).
+# ---------------------------------------------------------------------------
+
+@st.composite
+def general_pfsa(draw):
+    q, k = draw(st.integers(1, 4)), draw(st.integers(1, 3))
+    weights = st.sampled_from([0.0, 0.0, 0.1, 0.3, 0.5, 1.0])
+    pit = np.array(draw(st.lists(st.lists(weights, min_size=k, max_size=k), min_size=q, max_size=q)))
+    pit[pit.sum(axis=1) == 0, 0] = 1.0
+    connx = draw(st.lists(st.lists(st.integers(0, q - 1), min_size=k, max_size=k), min_size=q, max_size=q))
+    return PFSA(pitilde=pit / pit.sum(axis=1, keepdims=True), connx=connx)
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    st.lists(st.one_of(pfsa_strategy, general_pfsa()), min_size=1, max_size=4),
+    st.lists(st.lists(st.integers(-1, 3), max_size=30), min_size=1, max_size=12),
+    st.sampled_from([None, 8, 20]),
+)
+def test_llk_matrix_matches_scalar_reference(models, seqs, bits):
+    from patternly_spark.pfsa.llk import llk_matrix
+
+    got = llk_matrix(seqs, models, log_quantize_bits=bits)
+    assert got.shape == (len(seqs), len(models))
+    for j, m in enumerate(models):
+        for i, s in enumerate(seqs):
+            want = llk_one(s, m)
+            assert math.isinf(got[i, j]) == math.isinf(want), (i, j)
+            if math.isfinite(want):
+                tol = 1e-12 * abs(want) if bits is None else 2.0**-bits + 1e-12
+                assert abs(got[i, j] - want) <= tol, (i, j, got[i, j], want)
+
+
 # ---------------------------------------------------------------------------
 # Winnowing guarantee (Schleimer et al.): every window of `window`
 # consecutive k-grams contributes its min hash, so any two documents

@@ -111,6 +111,15 @@ def test_llk_scoring_plan_has_no_shuffle(spark):
     plan = _plan(score_sequences(seqs, [M2]))
     assert "Exchange" not in plan  # broadcast-in-closure: zero shuffle
 
+    # predict reduces each sequence's scores inside the same pass
+    from patternly_spark.detection import AnomalyDetection
+
+    model = AnomalyDetection(spark, quantize=False)
+    model.fitted, model.library = True, [M2]
+    model.pfsa_llk_means, model.pfsa_llk_stds = np.array([0.7]), np.array([0.1])
+    plan = _plan(model.predict(seqs))
+    assert "MapInPandas" in plan and "Exchange" not in plan
+
 
 def test_quantize_stays_jvm_side(spark):
     # the whole quantization path must be JVM expressions (scan + window +
@@ -204,6 +213,73 @@ def test_multichannel_detection(spark):
     assert set(preds.channel) == {"ch1", "ch2"}
     assert len(preds) == 20
     assert preds.anomaly.sum() == 0
+
+
+@pytest.mark.parametrize(
+    "name, value",
+    [
+        ("SPARK_GRAFT_SHUFFLE_PARTITIONS", "eight"),
+        ("SPARK_GRAFT_SHUFFLE_PARTITIONS", "0"),
+        ("SPARK_GRAFT_SHUFFLE_PARTITIONS", "-4"),
+        ("SPARK_GRAFT_CPUS", "all"),
+        ("SPARK_GRAFT_CPUS", "0"),
+        ("SPARK_GRAFT_UI", "yes"),
+        ("SPARK_GRAFT_UI", "TRUE"),
+    ],
+)
+def test_session_rejects_malformed_settings(monkeypatch, name, value):
+    """A malformed deployment setting raises before any builder runs,
+    naming the variable, even with a live session to hand back."""
+    from pyspark.sql import SparkSession
+
+    from patternly_spark import session
+
+    monkeypatch.setattr(SparkSession, "builder", None)  # touching it would fail
+    monkeypatch.setenv(name, value)
+    with pytest.raises(ValueError, match=name):
+        session.get_spark()
+
+
+class _RecordingBuilder:
+    """Stands in for SparkSession.builder: records the settings."""
+
+    def __init__(self):
+        self.conf = {}
+
+    def appName(self, name):
+        return self
+
+    def master(self, url):
+        self.conf["master"] = url
+        return self
+
+    def config(self, key, value):
+        self.conf[key] = value
+        return self
+
+    def getOrCreate(self):
+        return self.conf
+
+
+def test_session_applies_wellformed_settings(monkeypatch):
+    from pyspark.sql import SparkSession
+
+    from patternly_spark import session
+
+    monkeypatch.setattr(SparkSession, "builder", _RecordingBuilder())
+    monkeypatch.delenv("SPARK_GRAFT_MASTER", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", "16")
+    monkeypatch.setenv("SPARK_GRAFT_UI", "true")
+    conf = session.get_spark()
+    assert conf["master"] == "local[3]"
+    assert conf["spark.sql.shuffle.partitions"] == "16"
+    assert conf["spark.ui.enabled"] == "true"
+    assert session.get_spark(shuffle_partitions=5)["spark.sql.shuffle.partitions"] == "5"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "*")
+    monkeypatch.setenv("SPARK_GRAFT_UI", "0")
+    conf = session.get_spark()
+    assert conf["master"] == "local[*]" and conf["spark.ui.enabled"] == "false"
 
 
 def test_events_read_on_vanilla_session_conf(spark, sf_dir):
