@@ -13,10 +13,15 @@ only components touched by the batch's nodes are re-solved.  The
 registry rows of touched components re-enter as star edges
 (member -> label), so transitive merges across previously separate
 components collapse in the same alternating-star run as the new edges;
-untouched components pass through byte-identical.  At 100 TB, bucket
-the registry by label (``sources.bucketed``) so the touched-component
-semi-joins prune to matching buckets, and partition the overwrite by
-label range so untouched partitions rewrite nothing.
+untouched components pass through byte-identical.  When a
+microbatch's re-solve (batch edges plus touched members' star edges)
+is under ``connected_components``' one-task gate, it is solved in one
+task instead of star rounds: the trigger pays ~4 Spark jobs for the
+fixpoint, not one to two per round (29 on a 30k-edge graph), so the
+per-microbatch scheduling latency no longer grows with the rounds.
+At 100 TB, bucket the registry by label (``sources.bucketed``) so the
+touched-component semi-joins prune to matching buckets, and partition
+the overwrite by label range so untouched partitions rewrite nothing.
 """
 
 from __future__ import annotations

@@ -71,3 +71,19 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture
+def graph_paths(monkeypatch):
+    """Iterate to run a test body on both paths of ``connected_components``,
+    ``core_numbers`` and ``bfs_hops``: first the one-task solve a small
+    test graph takes, then the distributed round loops (a zero task
+    budget sends every graph there).  Yields the path's name."""
+    from patternly_spark.operators import graph
+
+    def paths():
+        yield "one-task"
+        monkeypatch.setattr(graph, "GRAPH_TASK_SOLVE_BYTES", 0)
+        yield "distributed"
+
+    return paths()

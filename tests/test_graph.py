@@ -34,7 +34,7 @@ def _uf(n_nodes, edges):
 
 
 @pytest.mark.parametrize("seed,n_edges", [(0, 60), (1, 150), (2, 300)])
-def test_connected_components_matches_union_find(spark, seed, n_edges):
+def test_connected_components_matches_union_find(spark, seed, n_edges, graph_paths):
     rng = np.random.default_rng(seed)
     n = 120
     edges = [
@@ -42,43 +42,47 @@ def test_connected_components_matches_union_find(spark, seed, n_edges):
     ]
     edges = [(u, v) for u, v in edges if u != v]
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.node: r.component for r in connected_components(df).collect()}
     want = _uf(n, edges)
     touched = {u for e in edges for u in e}
-    assert got == {k: v for k, v in want.items() if k in touched}
+    for path in graph_paths:
+        got = {r.node: r.component for r in connected_components(df).collect()}
+        assert got == {k: v for k, v in want.items() if k in touched}, path
 
 
-def test_connected_components_chain(spark):
+def test_connected_components_chain(spark, graph_paths):
     # a path graph is the worst case for label propagation (O(n) rounds);
     # the star sequence must still converge in O(log n)
     chain = [(i, i + 1) for i in range(300)]
     df = spark.createDataFrame(chain, "src long, dst long")
-    got = {r.node: r.component for r in connected_components(df).collect()}
-    assert len(got) == 301 and set(got.values()) == {0}
+    for path in graph_paths:
+        got = {r.node: r.component for r in connected_components(df).collect()}
+        assert len(got) == 301 and set(got.values()) == {0}, path
 
 
-def test_dedup_clusters_singletons_and_canonicals(spark):
+def test_dedup_clusters_singletons_and_canonicals(spark, graph_paths):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 5), (7, 8)], "doc_a long, doc_b long"
     )
     docs = spark.createDataFrame([(i,) for i in range(10)], "doc_id long")
-    out = dedup_clusters(pairs, docs=docs).toPandas().sort_values("doc_id")
-    by_id = dict(zip(out.doc_id, out.cluster_id))
-    assert by_id[1] == by_id[2] == by_id[5] == 1
-    assert by_id[7] == by_id[8] == 7
-    for single in (0, 3, 4, 6, 9):
-        assert by_id[single] == single
-    canon = set(out[out.is_canonical].doc_id)
-    assert canon == {0, 1, 3, 4, 6, 7, 9}
+    for path in graph_paths:
+        out = dedup_clusters(pairs, docs=docs).toPandas().sort_values("doc_id")
+        by_id = dict(zip(out.doc_id, out.cluster_id))
+        assert by_id[1] == by_id[2] == by_id[5] == 1, path
+        assert by_id[7] == by_id[8] == 7, path
+        for single in (0, 3, 4, 6, 9):
+            assert by_id[single] == single, path
+        canon = set(out[out.is_canonical].doc_id)
+        assert canon == {0, 1, 3, 4, 6, 7, 9}, path
 
 
-def test_connected_components_empty_edges(spark):
+def test_connected_components_empty_edges(spark, graph_paths):
     df = spark.createDataFrame([], "src long, dst long")
-    assert connected_components(df).count() == 0
     docs = spark.createDataFrame([(i,) for i in range(4)], "doc_id long")
     empty_pairs = spark.createDataFrame([], "doc_a long, doc_b long")
-    out = dedup_clusters(empty_pairs, docs=docs).toPandas()
-    assert (out.doc_id == out.cluster_id).all() and out.is_canonical.all()
+    for path in graph_paths:
+        assert connected_components(df).count() == 0, path
+        out = dedup_clusters(empty_pairs, docs=docs).toPandas()
+        assert (out.doc_id == out.cluster_id).all() and out.is_canonical.all(), path
 
 
 def test_pagerank_cycle_is_uniform(spark):
@@ -339,7 +343,7 @@ def test_graph_census_operators_handle_empty_input(spark):
     assert kcore(edges, 2).count() == 0
 
 
-def test_core_numbers_match_bruteforce_peel(spark):
+def test_core_numbers_match_bruteforce_peel(spark, graph_paths):
     """h-index fixpoint == increasing-k peel core numbers on a random
     graph with a planted 6-clique (core 5) and degree-1 pendants."""
     import collections
@@ -353,7 +357,6 @@ def test_core_numbers_match_bruteforce_peel(spark):
     edges |= set(itertools.combinations(range(6), 2))
     edges |= {(0, 100), (100, 101)}  # pendant chain: cores 1
     df = spark.createDataFrame(sorted(edges), "src long, dst long")
-    got = {r.node: r.core for r in core_numbers(df).collect()}
 
     adj = collections.defaultdict(set)
     for u, v in edges:
@@ -373,12 +376,14 @@ def test_core_numbers_match_bruteforce_peel(spark):
                 for m in a[n]:
                     a[m].discard(n)
                 del a[n]
-    assert got == core
-    assert got[100] == 1 and got[101] == 1
-    assert all(got[n] >= 5 for n in range(6))
+    for path in graph_paths:
+        got = {r.node: r.core for r in core_numbers(df).collect()}
+        assert got == core, path
+        assert got[100] == 1 and got[101] == 1, path
+        assert all(got[n] >= 5 for n in range(6)), path
 
 
-def test_core_numbers_consistent_with_kcore(spark):
+def test_core_numbers_consistent_with_kcore(spark, graph_paths):
     """Membership law: kcore(k) nodes == nodes with core number >= k."""
     import random
 
@@ -387,10 +392,11 @@ def test_core_numbers_consistent_with_kcore(spark):
     random.seed(12)
     edges = {tuple(sorted(random.sample(range(40), 2))) for _ in range(200)}
     df = spark.createDataFrame(sorted(edges), "src long, dst long")
-    cores = {r.node: r.core for r in core_numbers(df).collect()}
-    for k in [1, 2, 3, 4]:
-        in_kcore = {r.node for r in kcore(df, k).collect()}
-        assert in_kcore == {n for n, c in cores.items() if c >= k}, k
+    in_kcore = {k: {r.node for r in kcore(df, k).collect()} for k in [1, 2, 3, 4]}
+    for path in graph_paths:
+        cores = {r.node: r.core for r in core_numbers(df).collect()}
+        for k in [1, 2, 3, 4]:
+            assert in_kcore[k] == {n for n, c in cores.items() if c >= k}, (k, path)
 
 
 def test_msf_matches_kruskal_exactly(spark):
@@ -523,7 +529,7 @@ def test_personalized_pagerank_integer_replay(spark):
     assert got == p
 
 
-def test_bfs_hops_path_graph(spark):
+def test_bfs_hops_path_graph(spark, graph_paths):
     from patternly_spark.operators.graph import bfs_hops
 
     # path 1-2-3-4-5-6; source 1, max_hops 3 -> nodes 1..4
@@ -531,26 +537,28 @@ def test_bfs_hops_path_graph(spark):
         [(i, i + 1) for i in range(1, 6)], "src long, dst long"
     )
     srcs = spark.createDataFrame([(1,)], "node long")
-    out = {r["node"]: r["hops"] for r in bfs_hops(edges, srcs, max_hops=3).collect()}
-    assert out == {1: 0, 2: 1, 3: 2, 4: 3}
+    for path in graph_paths:
+        out = {r["node"]: r["hops"] for r in bfs_hops(edges, srcs, max_hops=3).collect()}
+        assert out == {1: 0, 2: 1, 3: 2, 4: 3}, path
 
 
-def test_bfs_hops_directed_vs_undirected(spark):
+def test_bfs_hops_directed_vs_undirected(spark, graph_paths):
     from patternly_spark.operators.graph import bfs_hops
 
     edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
     srcs = spark.createDataFrame([(3,)], "node long")
-    d = {r["node"]: r["hops"] for r in bfs_hops(
-        edges, srcs, max_hops=5, directed=True
-    ).collect()}
-    assert d == {3: 0}  # nothing downstream of 3
-    u = {r["node"]: r["hops"] for r in bfs_hops(
-        edges, srcs, max_hops=5, directed=False
-    ).collect()}
-    assert u == {3: 0, 2: 1, 1: 2}
+    for path in graph_paths:
+        d = {r["node"]: r["hops"] for r in bfs_hops(
+            edges, srcs, max_hops=5, directed=True
+        ).collect()}
+        assert d == {3: 0}, path  # nothing downstream of 3
+        u = {r["node"]: r["hops"] for r in bfs_hops(
+            edges, srcs, max_hops=5, directed=False
+        ).collect()}
+        assert u == {3: 0, 2: 1, 1: 2}, path
 
 
-def test_bfs_hops_multi_source_min_and_early_exit(spark):
+def test_bfs_hops_multi_source_min_and_early_exit(spark, graph_paths):
     from patternly_spark.operators.graph import bfs_hops
 
     # two sources; node 3 reachable from both -> min hop wins
@@ -558,10 +566,11 @@ def test_bfs_hops_multi_source_min_and_early_exit(spark):
         [(1, 2), (2, 3), (5, 3), (3, 4), (10, 11)], "src long, dst long"
     )
     srcs = spark.createDataFrame([(1,), (5,)], "node long")
-    out = {r["node"]: r["hops"] for r in bfs_hops(
-        edges, srcs, max_hops=50  # frontier drains long before 50 rounds
-    ).collect()}
-    assert out == {1: 0, 5: 0, 2: 1, 3: 1, 4: 2}  # 10-11 unreachable
+    for path in graph_paths:
+        out = {r["node"]: r["hops"] for r in bfs_hops(
+            edges, srcs, max_hops=50  # frontier drains long before 50 rounds
+        ).collect()}
+        assert out == {1: 0, 5: 0, 2: 1, 3: 1, 4: 2}, path  # 10-11 unreachable
 
 
 def test_jaccard_link_prediction_small(spark):
@@ -722,3 +731,137 @@ def test_adamic_adar_hand_computed_and_hub_downweight(spark):
     assert got[(10, 11)] == math.floor(u / math.log(2.0)) / u
     assert got[(20, 21)] == math.floor(u / math.log(5.0)) / u
     assert got[(10, 11)] > got[(20, 21)]
+
+
+# ---------------------------------------------------------------------------
+# one-task solve vs distributed rounds (connected_components, core_numbers,
+# bfs_hops)
+# ---------------------------------------------------------------------------
+
+
+def _rows_and_schema(df):
+    return sorted(map(tuple, df.collect()), key=repr), df.schema
+
+
+def _messy_edges(seed, n_nodes, n_edges):
+    """Random edges plus self-loops, duplicates, reversed duplicates and
+    null ids."""
+    rng = np.random.default_rng(seed)
+    edges = [(int(a), int(b)) for a, b in rng.integers(n_nodes, size=(n_edges, 2))]
+    edges += [(3, 3), (7, 7)] + edges[:10] + [(b, a) for a, b in edges[10:20]]
+    return edges + [(None, 4), (5, None), (None, None)]
+
+
+@pytest.mark.parametrize("seed,id_type", [(0, "long"), (1, "int")])
+def test_graph_solve_paths_agree_on_messy_graphs(spark, graph_paths, seed, id_type):
+    from patternly_spark.operators.graph import bfs_hops, core_numbers
+
+    df = spark.createDataFrame(_messy_edges(seed, 90, 160), f"src {id_type}, dst {id_type}")
+    # sources: duplicates, one outside the edge set, a null
+    srcs = spark.createDataFrame([(1,), (1,), (2,), (10_000,), (None,)], f"node {id_type}")
+
+    def run():
+        return [
+            _rows_and_schema(connected_components(df)),
+            _rows_and_schema(core_numbers(df)),
+            _rows_and_schema(bfs_hops(df, srcs, max_hops=3)),
+            _rows_and_schema(bfs_hops(df, srcs, max_hops=3, directed=True)),
+        ]
+
+    got = {path: run() for path in graph_paths}
+    assert got["one-task"] == got["distributed"]
+    bfs_rows = dict(got["one-task"][2][0])
+    assert bfs_rows[None] == 0 and bfs_rows[10_000] == 0 and bfs_rows[1] == 0
+
+
+def test_graph_solve_paths_agree_on_chain_and_non_null_ids(spark, graph_paths):
+    from patternly_spark.operators.graph import bfs_hops
+
+    # a 300-node chain over non-nullable ids, scrambled so the chain's
+    # order is not the id order
+    df = spark.range(299).select(
+        F.col("id").bitwiseXOR(85).alias("src"), (F.col("id") + 1).bitwiseXOR(85).alias("dst")
+    )
+    srcs = spark.range(1).select(F.lit(1 ^ 85).cast("long").alias("node"))
+
+    def run():
+        return [
+            _rows_and_schema(connected_components(df)),
+            _rows_and_schema(bfs_hops(df, srcs, max_hops=12)),
+            _rows_and_schema(bfs_hops(df, srcs, max_hops=12, directed=True)),
+        ]
+
+    got = {path: run() for path in graph_paths}
+    assert got["one-task"] == got["distributed"]
+    cc, bfs, bfs_directed = got["one-task"]
+    assert len(cc[0]) == 300 and {c for _, c in cc[0]} == {0}
+    assert not bfs[1]["node"].nullable
+    # the source sits second on the chain: 12 hops reach 14 nodes, 13 downstream
+    assert len(bfs[0]) == 14 and len(bfs_directed[0]) == 13
+
+
+def test_core_numbers_max_rounds_bounds_only_distributed_rounds(spark, graph_paths):
+    """A chain's core numbers take ~n/2 h-index rounds.  The one-task
+    solve runs to the fixpoint whatever ``max_rounds`` is; the
+    distributed rounds raise at the cap."""
+    from patternly_spark.operators.graph import core_numbers
+
+    df = spark.createDataFrame([(i, i + 1) for i in range(300)], "src long, dst long")
+    for path in graph_paths:
+        if path == "one-task":
+            got = {r.node: r.core for r in core_numbers(df, max_rounds=3).collect()}
+            assert got == {i: 1 for i in range(301)}
+        else:
+            with pytest.raises(RuntimeError, match="did not converge"):
+                core_numbers(df, max_rounds=3).collect()
+
+
+def test_graph_solve_empty_edges(spark, graph_paths):
+    from patternly_spark.operators.graph import bfs_hops, core_numbers
+
+    edges = spark.createDataFrame([], "src long, dst long")
+    srcs = spark.createDataFrame([(4,), (4,), (9,)], "node long")
+
+    def run():
+        return [
+            _rows_and_schema(connected_components(edges)),
+            _rows_and_schema(core_numbers(edges)),
+            _rows_and_schema(bfs_hops(edges, srcs)),
+        ]
+
+    got = {path: run() for path in graph_paths}
+    assert got["one-task"] == got["distributed"]
+    cc, core, bfs = got["one-task"]
+    assert cc[0] == [] and core[0] == []
+    assert bfs[0] == [(4, 0), (9, 0)]
+
+
+def test_graph_solve_jobs_per_operator_bound(spark):
+    """A driver-sized graph (~2,000 edges) costs each operator at most
+    five Spark jobs, its result collected: the pin and its count, and
+    one task that solves the whole graph."""
+    from patternly_spark.operators.graph import bfs_hops, core_numbers
+
+    rng = np.random.default_rng(4)
+    edges = spark.createDataFrame(
+        [(int(a), int(b)) for a, b in np.floor(np.exp(rng.random((2000, 2)) * np.log(1500)))],
+        "src long, dst long",
+    )
+    srcs = spark.createDataFrame([(1,), (2,)], "node long")
+    sc = spark.sparkContext
+    ops = {
+        "connected_components": lambda: connected_components(edges),
+        "core_numbers": lambda: core_numbers(edges),
+        "bfs_hops": lambda: bfs_hops(edges, srcs, max_hops=6),
+    }
+    jobs = {}
+    for name, op in ops.items():
+        group = f"graph-jobs-bound-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            op().collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert all(n <= 5 for n in jobs.values()), jobs
