@@ -23,6 +23,13 @@ predict:  one mapInPandas pass scoring every sequence under the broadcast
           library and reducing each sequence's scores in the same task to
           the ALL-above-bound anomaly flag + argmin closest-match.  No
           shuffle.
+continuous: one per-window step, ``GrowingLibrary.step``, for both
+          ``ContinuousStreamingDetection.fit_stream`` (driver loop over
+          sorted windows) and ``streaming.StreamingPFSADetector``: score
+          the window, mint a PFSA when it is above the bound under every
+          model.  A window is minted at most once, so the cold-start
+          window is not minted again when it is anomalous under its own
+          fresh PFSA.
 
 Consciously fixed reference bugs (SURVEY §7.4): correct Tarjan SCC count
 (vs _utils.py:157-160 whole-stack pop), per-refit library rebuild (vs
@@ -49,6 +56,7 @@ from patternly_spark.functions.quantize import (
     Quantizer,
     array_diff,
     percentile_expr,
+    quantize_simple_array,
     symbol_from_cutpoints,
 )
 from patternly_spark.functions.windowing import split_stream, windows_to_sequences
@@ -243,18 +251,11 @@ class AnomalyDetection:
             src = "symbols" if "symbols" in cols else "values"
             return df.select("seq_id", F.transform(F.col(src), lambda x: x.cast("tinyint")).alias("symbols"))
 
-        v = F.col("values")
         if self.quantize_type in ("simple", "simple-second"):
-            def diff(col):
-                shifted = F.concat(F.slice(col, 1, 1), F.slice(col, 1, F.greatest(F.size(col) - 1, F.lit(0))))
-                return F.zip_with(col, shifted, lambda a, b: a - b)
+            second = self.quantize_type == "simple-second"
+            return quantize_simple_array(df, second=second).select("seq_id", "symbols")
 
-            d = diff(v)
-            if self.quantize_type == "simple-second":
-                d = diff(d)
-            syms = F.transform(d, lambda x: F.when(x > 0, F.lit(1)).otherwise(F.lit(0)).cast("tinyint"))
-            return df.select("seq_id", syms.alias("symbols"))
-
+        v = F.col("values")
         # complex: entropy-max equi-probable cut-points over ALL values,
         # optionally detrended first (F1 then F4)
         vals = array_diff(v) if self.detrend else v
@@ -718,14 +719,69 @@ class MultiChannelDetection:
         return inst
 
 
+class GrowingLibrary:
+    """The online-discovery state of one stream (ST1-ST3): the PFSAs
+    minted so far and each one's bootstrap llk mean and std.
+
+    ``step`` is the per-window rule of both continuous detectors,
+    ``ContinuousStreamingDetection.fit_stream`` and
+    ``streaming.StreamingPFSADetector``.  The PFSA kernels are looked up
+    as this module's names at call time, so wrapping
+    ``detection.genesess``/``simulate``/``llk_batch`` reaches them.
+    """
+
+    def __init__(self, *, eps: float, sensitivity: float, seed: int, alphabet_size: int | None = None, bootstrap_sims: int = 100, models: list[PFSA] | None = None, means: list[float] | None = None, stds: list[float] | None = None) -> None:
+        self.eps = eps
+        self.sensitivity = sensitivity
+        self.seed = seed
+        self.alphabet_size = alphabet_size
+        self.bootstrap_sims = bootstrap_sims
+        self.models = models or []
+        self.means = means or []
+        self.stds = stds or []
+
+    def mint(self, syms: np.ndarray) -> float:
+        """Append a PFSA inferred from one window, with its ST3 bounds:
+        llk mean/std over the window plus ``bootstrap_sims`` simulated
+        windows of its length (reference detection.py:730-734; seeded,
+        so deterministic).  Returns the window's llk under the new PFSA."""
+        model = genesess([syms], eps=self.eps, alphabet_size=self.alphabet_size, pfsa_id=len(self.models))
+        self.models.append(model)
+        sims = simulate(model, len(syms), self.bootstrap_sims, seed=self.seed + len(self.models))
+        llks = llk_batch([syms] + sims, model)
+        finite = llks[np.isfinite(llks)]
+        self.means.append(float(np.mean(finite)))
+        self.stds.append(float(np.std(finite, ddof=1)) if len(finite) > 1 else 0.0)
+        return float(llks[0])
+
+    def step(self, syms: np.ndarray) -> tuple[bool, int | None, int]:
+        """Score one window against the library; mint when its llk is
+        above the bound under every PFSA.  Returns (anomaly, the minted
+        PFSA's index or None, closest PFSA).  The first window ever seen
+        seeds the library (ST2) and is then scored like any other, but a
+        window is minted at most once."""
+        minted = None
+        if not self.models:
+            self.mint(syms)
+            minted = 0
+        llks = np.array([llk_batch([syms], m)[0] for m in self.models])
+        anomaly = bool(np.all(llks > np.array(self.means) + np.array(self.stds) * self.sensitivity))
+        if anomaly and minted is None:
+            llks = np.append(llks, self.mint(syms))
+            minted = len(self.models) - 1
+        return anomaly, minted, int(np.argmin(llks))
+
+
 class ContinuousStreamingDetection(StreamingDetection):
     """Online library growth over an ordered stream (detection.py:616-734).
 
     The per-window loop has a genuine sequential dependency (window i+1 is
     scored against models minted at <= i), so the driver iterates over
     collected windows — each window is tiny (window_size symbols); the
-    expensive parts (chop + quantize) stay distributed.  The Structured
-    Streaming variant lives in patternly_spark.streaming.
+    expensive parts (chop + quantize) stay distributed.  Each window goes
+    through ``GrowingLibrary.step``, the rule the Structured Streaming
+    variant (patternly_spark.streaming) runs too, so both log the same
+    emergence windows.
 
     Reference-bug fix: per-model llk mean/std lists are appended per mint
     (the reference overwrites the whole array with the newest model's
@@ -750,19 +806,12 @@ class ContinuousStreamingDetection(StreamingDetection):
         self._means = list(state.get("means", []))
         self._stds = list(state.get("stds", []))
 
-    def _mint(self, window_syms: np.ndarray) -> None:
-        model = genesess([window_syms], eps=self.eps, alphabet_size=self.alphabet_size, pfsa_id=len(self.library))
-        self.library.append(model)
-        # ST3 bootstrap: 100 simulated sequences of window length + the
-        # triggering window (detection.py:730-734), seeded => deterministic
-        sims = simulate(model, len(window_syms), 100, seed=self.seed + len(self.library))
-        llks = llk_batch([window_syms] + sims, model)
-        finite = llks[np.isfinite(llks)]
-        self._means.append(float(np.mean(finite)))
-        self._stds.append(float(np.std(finite, ddof=1)))
-
     def fit_stream(self, df: DataFrame) -> "ContinuousStreamingDetection":
-        self.pattern_emergence_times = []
+        # every fit_stream grows a library from empty, as every fit
+        # rebuilds one: nothing of an earlier stream carries over
+        self.fitted = False
+        self.alphabet_size = None
+        self.library, self._means, self._stds, self.pattern_emergence_times = [], [], [], []
         seqs = self._split(df)
         quantized = super()._quantize(seqs)
         if self.alphabet_size is None:
@@ -772,6 +821,10 @@ class ContinuousStreamingDetection(StreamingDetection):
                     "stream shorter than window_size: no complete windows to fit"
                 )
             self.alphabet_size = int(max_sym) + 1
+        lib = GrowingLibrary(
+            eps=self.eps, sensitivity=self.anomaly_sensitivity, seed=self.seed,
+            alphabet_size=self.alphabet_size,
+        )
         # The per-window loop is sequentially dependent by reference
         # semantics (models minted at window <= i score window i+1), so it
         # runs on the driver — but only one sorted partition of tiny
@@ -781,23 +834,16 @@ class ContinuousStreamingDetection(StreamingDetection):
         it = quantized.orderBy("seq_id").toLocalIterator(prefetchPartitions=True)
         i = -1
         for i, r in enumerate(it):
-            syms = np.asarray(r["symbols"], dtype=np.int8)
-            if not self.fitted:
-                # first window ever seen: mint, then score it like any other
-                self.fitted = True
-                self._mint(syms)
-                self.pattern_emergence_times.append(0)
-            llks = np.array([llk_batch([syms], m)[0] for m in self.library])
-            bounds = np.array(self._means) + np.array(self._stds) * self.anomaly_sensitivity
-            if np.all(llks > bounds):
+            if lib.step(np.asarray(r["symbols"], dtype=np.int8))[1] is not None:
                 self.pattern_emergence_times.append(i)
-                self._mint(syms)
         if i < 0:
             raise ValueError(
                 "stream shorter than window_size: no complete windows to fit"
             )
 
+        self.library, self._means, self._stds = lib.models, lib.means, lib.stds
         self.n_clusters = len(self.library)
         self.pfsa_llk_means = np.array(self._means)
         self.pfsa_llk_stds = np.array(self._stds)
+        self.fitted = True
         return self

@@ -767,7 +767,8 @@ def core_numbers(
         eager=False,
     )
     # the count materializes the pin in the same pass (the eager pin's job)
-    if _fits_one_task(und.count(), und.schema["u"]):
+    n_und = und.count()
+    if _fits_one_task(n_und, und.schema["u"]):
         # least/greatest of one pair: u and v share type and nullability
         node = StructField("node", und.schema["u"].dataType, und.schema["u"].nullable)
         return _solve_in_one_task(
@@ -787,7 +788,10 @@ def core_numbers(
     # sorted-array definition, but the sort is an (external, spilling)
     # window instead of an unspillable collect_list buffer
     w_h = Window.partitionBy("a").orderBy(F.desc("nl"), "b")
-    with round_shuffle(und):
+    # sized from the pin's count: round_shuffle would count it again
+    # whenever the plan has no size estimate
+    spark = edges.sparkSession
+    with tuned_shuffle(spark, round_partitions(spark, n_und)):
         for _ in range(int(max_rounds)):
             hidx = (
                 both.join(
@@ -1156,7 +1160,8 @@ def bfs_hops(
     e = e.distinct().localCheckpoint(eager=False)
     # the count materializes the pin in the same pass (the eager pin's job)
     source = F.col(source_col)
-    if _fits_one_task(e.count(), e.schema["u"], e.schema["v"], sources.schema[source_col]):
+    n_e = e.count()
+    if _fits_one_task(n_e, e.schema["u"], e.schema["v"], sources.schema[source_col]):
         # a null source is tagged, not carried: a null in an id column
         # would turn its pandas batch to float64
         tagged = e.select(F.lit(0).alias("t"), "u", "v").unionByName(
@@ -1184,7 +1189,10 @@ def bfs_hops(
         .localCheckpoint(eager=True)
     )
     frontier = settled
-    with round_shuffle(e):
+    # sized from the pin's count: round_shuffle would count it again
+    # whenever the plan has no size estimate
+    spark = edges.sparkSession
+    with tuned_shuffle(spark, round_partitions(spark, n_e)):
         for h in range(1, int(max_hops) + 1):
             # lazy pin + FULL count: one job materializes the frontier
             # and answers the emptiness probe (eager pin + limit(1) paid

@@ -282,10 +282,11 @@ _STATS_INFLATION = 4.0
 
 def plan_size_bytes(df) -> int | None:
     """Catalyst's sizeInBytes estimate for ``df``'s optimized plan —
-    FREE (no job), and exact-row-accounted on a localCheckpoint-pinned
-    relation (the only kind the round policy is asked about).  None
-    when the estimate is the unknown sentinel (defaultSizeInBytes ~
-    2^63) or non-positive."""
+    FREE (no job), but an estimate even on a localCheckpoint-pinned
+    relation: a pinned 948-row ``distinct`` reported the size of its
+    1,000 input rows.  None when the estimate is the unknown sentinel
+    (defaultSizeInBytes ~ 2^63, e.g. any relation built from a Python
+    list) or non-positive."""
     try:
         sz = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:
@@ -303,12 +304,11 @@ def round_partitions_for(spark, df) -> int:
     documented stats->policy calibration.  Falls back to one count job
     only when stats are unavailable.
 
-    On a NOT-yet-materialized plan (cached-but-cold, or a lazy view)
-    the stats are Catalyst's size propagation rather than exact bytes;
-    the result is still clamped to [core floor, session ceiling], so a
-    mis-estimate degrades to the session's partition counts at worst.
-    The graph-peel call sites pass pinned or warmed relations, where
-    the stats are exact."""
+    The stats are Catalyst's size propagation rather than exact bytes,
+    pinned or not; the result is clamped to [core floor, session
+    ceiling], so a mis-estimate degrades to the session's partition
+    counts at worst.  An operator that has just counted its relation
+    sizes from that count instead (``round_partitions``)."""
     sz = plan_size_bytes(df)
     if sz is None:
         return round_partitions(spark, df.count())

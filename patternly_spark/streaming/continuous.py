@@ -2,11 +2,12 @@
 
 The live-stream counterpart of ``ContinuousStreamingDetection``
 (reference ``patternly/detection.py:616-734``): windows arrive as rows of
-a streaming DataFrame; per stream key the processor keeps the PFSA
-library + per-model llk stats in ``applyInPandasWithState`` state, scores
-each window against the current library, and mints a new PFSA (with
-Prun-style bootstrap stats, ST3) when a window is anomalous under every
-model.  Emergence events are emitted inline (A8).
+a streaming DataFrame; per stream key the PFSA library + per-model llk
+stats live in ``applyInPandasWithState`` state, and every window goes
+through ``detection.GrowingLibrary.step``, the per-window rule
+``fit_stream`` runs too: score the window, mint a new PFSA (with
+Prun-style bootstrap stats, ST3) when it is anomalous under every model,
+at most once per window.  Emergence events are emitted inline (A8).
 
 Ordering: the reference is strictly sequential over one stream; a single
 state key per stream preserves that (SURVEY ST1 note) — windows within a
@@ -14,8 +15,9 @@ micro-batch are processed in window_id order, and cross-batch order
 follows micro-batch order.  Multiple independent streams parallelize
 across keys.
 
-State is a JSON blob (library is tiny: tens of models x k^2 doubles);
-payload size is independent of stream length.
+State is a JSON blob ``{"models", "means", "stds"}`` (library is tiny:
+tens of models x k^2 doubles); payload size is independent of stream
+length.
 """
 
 from __future__ import annotations
@@ -28,10 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from patternly_spark.pfsa.genesess import genesess
-from patternly_spark.pfsa.llk import llk_batch
+from patternly_spark.detection import GrowingLibrary
 from patternly_spark.pfsa.model import PFSA
-from patternly_spark.pfsa.simulate import simulate
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -47,101 +47,32 @@ OUTPUT_SCHEMA = T.StructType(
 STATE_SCHEMA = T.StructType([T.StructField("blob", T.StringType(), True)])
 
 
-def _process_factory(eps: float, sensitivity: float, seed: int, bootstrap_sims: int, alphabet_size=None):
-    def process(key, pdfs, state: GroupState):
-        if state.exists:
-            blob = json.loads(state.get[0])
-        else:
-            blob = {"models": [], "means": [], "stds": []}
-        models = [PFSA.from_dict(d) for d in blob["models"]]
-        means: list[float] = blob["means"]
-        stds: list[float] = blob["stds"]
-
-        def mint(syms: np.ndarray) -> None:
-            m = genesess([syms], eps=eps, alphabet_size=alphabet_size, pfsa_id=len(models))
-            models.append(m)
-            sims = simulate(m, len(syms), bootstrap_sims, seed=seed + len(models))
-            llks = llk_batch([syms] + sims, m)
-            finite = llks[np.isfinite(llks)]
-            means.append(float(np.mean(finite)))
-            stds.append(float(np.std(finite, ddof=1)) if len(finite) > 1 else 0.0)
-
-        out_rows = []
-        # Arrow hands the micro-batch over as an iterator of chunks;
-        # sorting per chunk would break window order across chunk
-        # boundaries, so concatenate first (windows per micro-batch are
-        # bounded; state stays tiny either way)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        whole = (
-            pd.concat(chunks, ignore_index=True).sort_values("window_id")
-            if chunks
-            else pd.DataFrame(columns=["window_id", "symbols"])
-        )
-        for pdf in ([whole] if len(whole) else []):
-            for _, row in pdf.iterrows():
-                syms = np.asarray(row["symbols"], dtype=np.int8)
-                minted = None
-                if not models:
-                    mint(syms)  # ST2 cold start
-                    minted = 0
-                llks = np.array([llk_batch([syms], m)[0] for m in models])
-                bounds = np.array(means) + np.array(stds) * sensitivity
-                anomaly = bool(np.all(llks > bounds))
-                if anomaly and minted is None:
-                    mint(syms)
-                    minted = len(models) - 1
-                    llks = np.append(llks, llk_batch([syms], models[-1])[0])
-                closest = int(np.argmin(llks))
-                out_rows.append(
-                    (str(key[0]), int(row["window_id"]), anomaly, minted, closest, len(models))
-                )
-
-        state.update((json.dumps({"models": [m.to_dict() for m in models], "means": means, "stds": stds}),))
-        yield pd.DataFrame(
-            out_rows,
-            columns=["stream_id", "window_id", "anomaly", "minted_pfsa", "closest_match", "n_models"],
-        )
-
-    return process
-
-
-def _tws_runtime_available() -> bool:
-    """Whether the transformWithStateInPandas PYTHON runtime can run
-    here: the TWS state client speaks protobuf to the JVM, so
-    ``google.protobuf`` must be importable (absent in this container —
-    the env-gate ritual re-checks each round)."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
+def _run_windows(lib: GrowingLibrary, key, pdfs) -> pd.DataFrame:
+    """Step every window of one key's batch through ``lib`` in window_id
+    order -> OUTPUT_SCHEMA rows."""
+    # Arrow hands the micro-batch over as an iterator of chunks; sorting
+    # per chunk would break window order across chunk boundaries, so
+    # concatenate first (windows per micro-batch are bounded)
+    chunks = [pdf for pdf in pdfs if len(pdf)]
+    out_rows = []
+    if chunks:
+        for _, row in pd.concat(chunks, ignore_index=True).sort_values("window_id").iterrows():
+            anomaly, minted, closest = lib.step(np.asarray(row["symbols"], dtype=np.int8))
+            out_rows.append((str(key[0]), int(row["window_id"]), anomaly, minted, closest, len(lib.models)))
+    return pd.DataFrame(
+        out_rows,
+        columns=["stream_id", "window_id", "anomaly", "minted_pfsa", "closest_match", "n_models"],
+    )
 
 
 class StreamingPFSADetector:
     """Wire a (stream_id, window_id, symbols) streaming DataFrame through
-    the stateful processor.  Works identically on batch DataFrames (Spark
-    runs the same per-window logic in batch mode too), which is how the
-    batch/stream equivalence test pins the semantics.
+    ``applyInPandasWithState``.  Works identically on batch DataFrames,
+    where each stream's windows are stepped through a fresh library in
+    one ``applyInPandas`` group, which is how the batch/stream
+    equivalence test pins the semantics."""
 
-    ``state_api`` selects the streaming state backend (round-11 —
-    Spark 4.x's current stateful API as the default path):
-
-    - ``"auto"`` (default): ``transformWithStateInPandas`` when its
-      Python runtime is available (google.protobuf importable), else
-      ``applyInPandasWithState`` — same processor logic either way
-      (``_process_factory`` is shared; the TWS wrapper adapts
-      ValueState to the GroupState duck-type).
-    - ``"tws"``: force transformWithStateInPandas (raises at stream
-      wiring if protobuf is absent — a loud env error, not a silent
-      downgrade).
-    - ``"apws"``: force the applyInPandasWithState path (the
-      pre-round-11 behavior, kept as the documented fallback).
-    """
-
-    def __init__(self, *, eps: float = 0.2, anomaly_sensitivity: float = 3.0, seed: int = 42, bootstrap_sims: int = 100, alphabet_size: int | None = None, state_api: str = "auto") -> None:
-        if state_api not in ("auto", "tws", "apws"):
-            raise ValueError(f"state_api must be auto|tws|apws, got {state_api}")
+    def __init__(self, *, eps: float = 0.2, anomaly_sensitivity: float = 3.0, seed: int = 42, bootstrap_sims: int = 100, alphabet_size: int | None = None) -> None:
         self.eps = eps
         self.anomaly_sensitivity = anomaly_sensitivity
         self.seed = seed
@@ -150,121 +81,32 @@ class StreamingPFSADetector:
         # top symbol would otherwise mint an under-sized model that later
         # windows are unscorable under (P3 inf-guard kicks in)
         self.alphabet_size = alphabet_size
-        self.state_api = state_api
 
-    def _use_tws(self) -> bool:
-        if self.state_api == "tws":
-            if not _tws_runtime_available():
-                raise ImportError(
-                    "state_api='tws' needs google.protobuf (the "
-                    "transformWithStateInPandas Python runtime); install "
-                    "protobuf or use state_api='auto'/'apws'"
-                )
-            return True
-        if self.state_api == "apws":
-            return False
-        return _tws_runtime_available()
+    def _library(self, blob: dict | None = None) -> GrowingLibrary:
+        blob = blob or {"models": [], "means": [], "stds": []}
+        return GrowingLibrary(
+            eps=self.eps, sensitivity=self.anomaly_sensitivity, seed=self.seed,
+            alphabet_size=self.alphabet_size, bootstrap_sims=self.bootstrap_sims,
+            models=[PFSA.from_dict(d) for d in blob["models"]], means=blob["means"], stds=blob["stds"],
+        )
+
+    def _process(self, key, pdfs, state: GroupState):
+        lib = self._library(json.loads(state.get[0]) if state.exists else None)
+        out = _run_windows(lib, key, pdfs)
+        state.update((json.dumps({"models": [m.to_dict() for m in lib.models], "means": lib.means, "stds": lib.stds}),))
+        yield out
 
     def apply(self, windows: DataFrame) -> DataFrame:
-        proc = _process_factory(self.eps, self.anomaly_sensitivity, self.seed, self.bootstrap_sims, self.alphabet_size)
         if windows.isStreaming:
-            if self._use_tws():
-                return windows.groupBy("stream_id").transformWithStateInPandas(
-                    PFSAStatefulProcessor.build(
-                        eps=self.eps,
-                        anomaly_sensitivity=self.anomaly_sensitivity,
-                        seed=self.seed,
-                        bootstrap_sims=self.bootstrap_sims,
-                        alphabet_size=self.alphabet_size,
-                    ),
-                    outputStructType=OUTPUT_SCHEMA,
-                    outputMode="Append",
-                    timeMode="None",
-                )
             return windows.groupBy("stream_id").applyInPandasWithState(
-                proc,
+                self._process,
                 outputStructType=OUTPUT_SCHEMA,
                 stateStructType=STATE_SCHEMA,
                 outputMode="append",
                 timeoutConf=GroupStateTimeout.NoTimeout,
             )
-
-        # batch fallback: Spark does not allow applyInPandasWithState on a
-        # batch DataFrame — run the identical processor with an ephemeral
-        # per-group state (the whole history IS the one micro-batch)
-        class _EphemeralState:
-            def __init__(self):
-                self._val = None
-
-            @property
-            def exists(self):
-                return self._val is not None
-
-            @property
-            def get(self):
-                return self._val
-
-            def update(self, v):
-                self._val = v
-
-        def batch_fn(key, pdf):
-            frames = list(proc(key, iter([pdf]), _EphemeralState()))
-            return pd.concat(frames, ignore_index=True)
-
+        # Spark does not allow applyInPandasWithState on a batch
+        # DataFrame; the whole history is one group per stream
         return windows.groupBy("stream_id").applyInPandas(
-            lambda key, pdf: batch_fn(key, pdf), schema=OUTPUT_SCHEMA
+            lambda key, pdf: _run_windows(self._library(), key, [pdf]), schema=OUTPUT_SCHEMA
         )
-
-
-class PFSAStatefulProcessor:
-    """transformWithStateInPandas variant of the detector (Spark 4's
-    successor to applyInPandasWithState): the PFSA library + stats live
-    in a ValueState of one JSON string per stream key.  Same semantics as
-    ``StreamingPFSADetector`` — shared per-window scoring/minting logic —
-    exposed for pipelines standardizing on the new state API.  NOTE:
-    the TWS Python runtime imports google.protobuf; environments without
-    it (like this container) should use StreamingPFSADetector.
-
-    Usage:
-        from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-        windows.groupBy("stream_id").transformWithStateInPandas(
-            PFSAStatefulProcessor.build(eps=0.2, anomaly_sensitivity=3.0),
-            outputStructType=OUTPUT_SCHEMA, outputMode="Append",
-            timeMode="None",
-        )
-    """
-
-    @staticmethod
-    def build(*, eps: float = 0.2, anomaly_sensitivity: float = 3.0, seed: int = 42, bootstrap_sims: int = 100, alphabet_size: int | None = None):
-        from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-        step = _process_factory(eps, anomaly_sensitivity, seed, bootstrap_sims, alphabet_size)
-
-        class _Proc(StatefulProcessor):
-            def init(self, handle) -> None:
-                self._state = handle.getValueState("pfsa_lib", STATE_SCHEMA)
-
-            def handleInputRows(self, key, rows, timerValues):
-                class _Adapter:
-                    """ValueState -> the GroupState duck-type _process_factory uses."""
-
-                    def __init__(self, vs):
-                        self._vs = vs
-
-                    @property
-                    def exists(self):
-                        return self._vs.exists()
-
-                    @property
-                    def get(self):
-                        return self._vs.get()
-
-                    def update(self, v):
-                        self._vs.update(v)
-
-                yield from step(key, rows, _Adapter(self._state))
-
-            def close(self) -> None:
-                pass
-
-        return _Proc()

@@ -433,6 +433,31 @@ def test_continuous_fit_stream_many_windows_bounded_driver(spark):
     assert len(cd.library) == len(cd.pattern_emergence_times) == len(cd._means)
 
 
+def test_continuous_fit_stream_refit_starts_from_empty_library(spark):
+    """A second fit_stream on the same object grows its library from
+    empty, like a fresh detector: cold start at window 0, and library,
+    bounds and emergence log of equal length."""
+    a = simulate(MACHINE_A, 3000, 1, seed=13)[0]
+    c = simulate(MACHINE_C, 2000, 1, seed=14)[0]
+
+    def stream_df(symbols):
+        return spark.createDataFrame([(i, int(s)) for i, s in enumerate(symbols)], "offset long, symbol int")
+
+    def detector():
+        return ContinuousStreamingDetection(
+            spark, window_size=500, window_overlap=0, quantize=False, anomaly_sensitivity=4, eps=0.2,
+        )
+
+    both = stream_df(np.concatenate([a, c]))
+    model = detector().fit_stream(stream_df(c)).fit_stream(both)
+    fresh = detector().fit_stream(both)
+    assert model.pattern_emergence_times == fresh.pattern_emergence_times
+    assert model.pattern_emergence_times[0] == 0
+    assert len(model.library) == len(model._means) == len(model._stds) == len(model.pattern_emergence_times)
+    assert [m.to_dict() for m in model.library] == [m.to_dict() for m in fresh.library]
+    assert model._means == fresh._means and model._stds == fresh._stds
+
+
 def test_multichannel_save_load_path_hostile_channel_names(tmp_path, spark):
     from patternly_spark.detection import MultiChannelDetection
     from patternly_spark.pfsa.simulate import simulate as _sim

@@ -848,15 +848,48 @@ def test_graph_solve_jobs_per_operator_bound(spark):
         "src long, dst long",
     )
     srcs = spark.createDataFrame([(1,), (2,)], "node long")
-    sc = spark.sparkContext
-    ops = {
+    jobs = _jobs_per_operator(spark, {
         "connected_components": lambda: connected_components(edges),
         "core_numbers": lambda: core_numbers(edges),
         "bfs_hops": lambda: bfs_hops(edges, srcs, max_hops=6),
-    }
+    }, "graph-jobs-bound")
+    assert all(n <= 5 for n in jobs.values()), jobs
+
+
+def test_graph_round_loops_size_from_their_pin_count(spark, monkeypatch):
+    """On the distributed path, ``core_numbers`` and ``bfs_hops`` size
+    their rounds from the count of their pinned edges: 7 jobs each here
+    (AQE off, so no query-stage jobs blur the count), where a second
+    count of the pin for the sizing cost 8."""
+    from patternly_spark.operators import graph
+
+    monkeypatch.setattr(graph, "GRAPH_TASK_SOLVE_BYTES", 0)
+    rng = np.random.default_rng(4)
+    edges = spark.createDataFrame(
+        [(int(a), int(b)) for a, b in np.floor(np.exp(rng.random((300, 2)) * np.log(200)))],
+        "src long, dst long",
+    )
+    srcs = spark.createDataFrame([(1,), (2,)], "node long")
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        jobs = _jobs_per_operator(spark, {
+            "core_numbers": lambda: graph.core_numbers(edges),
+            "bfs_hops": lambda: graph.bfs_hops(edges, srcs, max_hops=4),
+        }, "graph-round-jobs")
+    finally:
+        spark.conf.set(key, prev)
+    assert jobs == {"core_numbers": 7, "bfs_hops": 7}, jobs
+
+
+def _jobs_per_operator(spark, ops, tag):
+    """name -> Spark jobs run by ``ops[name]()`` with its result
+    collected (job groups named by ``tag``, unique per caller)."""
+    sc = spark.sparkContext
     jobs = {}
     for name, op in ops.items():
-        group = f"graph-jobs-bound-{name}"
+        group = f"{tag}-{name}"
         sc.setJobGroup(group, group)
         try:
             op().collect()
@@ -864,4 +897,4 @@ def test_graph_solve_jobs_per_operator_bound(spark):
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
         jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert all(n <= 5 for n in jobs.values()), jobs
+    return jobs

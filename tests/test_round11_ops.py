@@ -276,40 +276,6 @@ def test_two_arms_design_validation_and_third_arm_exclusion(spark):
     assert r == r2
 
 
-def test_detector_state_api_selection(spark):
-    """Round-11 ST1 migration knob: state_api validates its values,
-    'tws' raises LOUDLY where the transformWithStateInPandas runtime
-    (google.protobuf) is absent, and 'auto' resolves by runtime
-    availability — same detector semantics either way (the golden and
-    equivalence tests run the auto path; the TWS-vs-APWS parity test in
-    test_streaming.py covers the protobuf-present case)."""
-    from patternly_spark.streaming.continuous import (
-        StreamingPFSADetector,
-        _tws_runtime_available,
-    )
-
-    with pytest.raises(ValueError, match="auto|tws|apws"):
-        StreamingPFSADetector(state_api="bogus")
-    det_auto = StreamingPFSADetector(state_api="auto")
-    assert det_auto._use_tws() == _tws_runtime_available()
-    det_apws = StreamingPFSADetector(state_api="apws")
-    assert det_apws._use_tws() is False
-    det_tws = StreamingPFSADetector(state_api="tws")
-    if _tws_runtime_available():
-        assert det_tws._use_tws() is True
-    else:
-        with pytest.raises(ImportError, match="protobuf"):
-            det_tws._use_tws()
-    # batch path is state-API-independent: identical output regardless
-    rows = [("s", i, [0, 1, 0, 1]) for i in range(3)]
-    df = spark.createDataFrame(
-        rows, "stream_id string, window_id long, symbols array<int>"
-    )
-    a = det_auto.apply(df).toPandas().sort_values("window_id")
-    b = det_apws.apply(df).toPandas().sort_values("window_id")
-    assert a.reset_index(drop=True).equals(b.reset_index(drop=True))
-
-
 def test_neighborhood_function_empty_edges(spark):
     """An edge set that is empty after self-loop filtering must return
     round rows with NULL avg_ball (the lazy-plan contract), not raise

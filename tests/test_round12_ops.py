@@ -66,30 +66,28 @@ def test_empty_rows_is_plan_visible_empty(spark):
 
 
 def test_streaming_seed_registries_are_empty_local_relations(spark):
-    from patternly_spark.streaming.dedup import (
-        empty_band_registry,
-        empty_semantic_registry,
-        empty_similarity_registry,
-    )
-    from patternly_spark.streaming.graph import empty_cc_registry
-    from patternly_spark.streaming.similarity import (
-        empty_cosine_registry,
-        empty_tfidf_registry,
-    )
+    """Every ``empty_*`` constructor of ``patternly_spark.streaming``
+    (found by a module scan, so a new one is covered without listing it)
+    builds plan-visible empty relations."""
+    import importlib
+    import inspect
+    import pkgutil
 
-    regs = [
-        empty_band_registry(spark),
-        empty_semantic_registry(spark),
-        empty_cc_registry(spark),
-        empty_cosine_registry(spark),
-        empty_tfidf_registry(spark),
-        *empty_similarity_registry(spark),
-    ]
-    for r in regs:
-        assert (
-            "LocalRelation <empty>"
-            in r._jdf.queryExecution().optimizedPlan().toString()
-        )
+    import patternly_spark.streaming as streaming
+
+    ctors = {}
+    for info in pkgutil.iter_modules(streaming.__path__):
+        mod = importlib.import_module(f"{streaming.__name__}.{info.name}")
+        for name, fn in inspect.getmembers(mod, inspect.isfunction):
+            if name.startswith("empty_") and fn.__module__ == mod.__name__:
+                ctors[f"{info.name}.{name}"] = fn
+    # the six seed registries of dedup, graph and similarity at least
+    assert len(ctors) >= 6, sorted(ctors)
+    for name, ctor in ctors.items():
+        out = ctor(spark)
+        for r in out if isinstance(out, tuple) else (out,):
+            plan = r._jdf.queryExecution().optimizedPlan().toString()
+            assert "LocalRelation <empty>" in plan, name
 
 
 def test_msf_strict_false_budget_path(spark):

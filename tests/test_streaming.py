@@ -129,45 +129,89 @@ def test_continuous_detector_true_stream(spark, window_rows, tmp_path):
     assert got.reset_index(drop=True).equals(batch.reset_index(drop=True))
 
 
-def test_transform_with_state_processor_matches(spark, window_rows, tmp_path):
-    """The transformWithStateInPandas variant must emit the same verdicts
-    as the applyInPandasWithState detector on the same stream.  The TWS
-    runtime needs google.protobuf in the Python env — skip where absent
-    (this container has no protobuf; the applyInPandasWithState path is
-    the one exercised everywhere else)."""
-    pytest.importorskip("google.protobuf")
-    from patternly_spark.streaming.continuous import OUTPUT_SCHEMA, PFSAStatefulProcessor
+def _emergence_parity(spark, rows, sensitivity):
+    """Run ``fit_stream`` and the streaming detector on the same windows
+    and assert they mint at the same window ids; returns the streaming
+    detector's output."""
+    from patternly_spark.detection import ContinuousStreamingDetection
 
-    win_df = spark.createDataFrame(window_rows, "stream_id string, window_id long, symbols array<int>")
-    path = str(tmp_path / "windows_tws")
-    win_df.coalesce(1).write.mode("overwrite").parquet(path)
-    src = spark.readStream.schema(win_df.schema).parquet(path)
-    result = src.groupBy("stream_id").transformWithStateInPandas(
-        PFSAStatefulProcessor.build(eps=0.2, anomaly_sensitivity=4.0),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Append",
-        timeMode="None",
+    size = len(rows[0][2])
+    stream = [s for _, _, syms in rows for s in syms]
+    model = ContinuousStreamingDetection(
+        spark, window_size=size, window_overlap=0, quantize=False,
+        anomaly_sensitivity=sensitivity, eps=0.2, seed=42,
     )
-    q = (
-        result.writeStream.format("memory")
-        .queryName("tws_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    model.fit_stream(spark.createDataFrame(list(enumerate(stream)), "offset long, symbol int"))
+    detector = StreamingPFSADetector(
+        eps=0.2, anomaly_sensitivity=sensitivity, seed=42, alphabet_size=model.alphabet_size
     )
-    q.awaitTermination()
-    got = spark.sql("SELECT * FROM tws_test").toPandas().sort_values("window_id")
-    batch = StreamingPFSADetector(eps=0.2, anomaly_sensitivity=4.0).apply(win_df).toPandas().sort_values("window_id")
-    assert got.reset_index(drop=True).equals(batch.reset_index(drop=True))
+    win_df = spark.createDataFrame(rows, "stream_id string, window_id long, symbols array<int>")
+    out = detector.apply(win_df).toPandas().sort_values("window_id").reset_index(drop=True)
+    assert model.pattern_emergence_times == list(out.window_id[out.minted_pfsa.notna()])
+    assert len(model.library) == len(model.pattern_emergence_times) == len(model._means)
+    return out
 
 
-def test_stateful_processor_importable_without_protobuf():
-    """The transformWithStateInPandas variant must stay importable even
-    where google.protobuf (its runtime dep) is absent; only invoking it
-    requires the dep. The applyInPandasWithState path is canonical."""
-    from patternly_spark.streaming.continuous import PFSAStatefulProcessor
+def test_continuous_detectors_mint_at_the_same_windows(spark, window_rows):
+    """``fit_stream`` and ``StreamingPFSADetector`` step the same windows
+    through one rule, so they log the same emergence windows: on the
+    regime-change fixture, and on an A->U stream at sensitivity 0 whose
+    cold-start window is anomalous under its own fresh PFSA (a window is
+    minted once, not again)."""
+    _emergence_parity(spark, window_rows, 4.0)
 
-    assert hasattr(PFSAStatefulProcessor, "build")
+    stream = np.concatenate([simulate(MACHINE_A, 3000, 1, seed=3)[0], simulate(MACHINE_U, 2000, 1, seed=103)[0]])
+    rows = [("s1", i, [int(v) for v in stream[i * 500 : (i + 1) * 500]]) for i in range(10)]
+    out = _emergence_parity(spark, rows, 0.0)
+    assert out.anomaly[0] and out.minted_pfsa[0] == 0 and out.n_models[0] == 1
+
+
+class _State:
+    """The GroupState calls the streaming detector makes."""
+
+    def __init__(self, blob=None):
+        self.blob = blob
+
+    @property
+    def exists(self):
+        return self.blob is not None
+
+    @property
+    def get(self):
+        return (self.blob,)
+
+    def update(self, row):
+        (self.blob,) = row
+
+
+def test_continuous_detector_resumes_from_state_blob(window_rows):
+    """A state blob in the checkpoint format ({"models", "means", "stds"}
+    JSON) written after the cold-start window resumes the stream: the
+    remaining windows get the verdicts and mints of an uninterrupted
+    run, and the blob written back is the uninterrupted run's."""
+    import json
+
+    import pandas as pd
+
+    from patternly_spark.pfsa.genesess import genesess
+    from patternly_spark.pfsa.llk import llk_batch
+
+    detector = StreamingPFSADetector(eps=0.2, anomaly_sensitivity=4.0, seed=42, alphabet_size=2)
+    windows = pd.DataFrame({"window_id": [r[1] for r in window_rows], "symbols": [r[2] for r in window_rows]})
+    # the cold-start mint of window 0 by hand: GenESeSS, then the llk of
+    # the window and 100 simulations seeded seed + 1
+    w0 = np.asarray(window_rows[0][2], dtype=np.int8)
+    m = genesess([w0], eps=0.2, alphabet_size=2, pfsa_id=0)
+    llks = llk_batch([w0] + simulate(m, len(w0), 100, seed=43), m)
+    state = _State(json.dumps({"models": [m.to_dict()], "means": [float(np.mean(llks))], "stds": [float(np.std(llks, ddof=1))]}))
+
+    resumed = pd.concat(detector._process(("s1",), iter([windows.iloc[1:]]), state), ignore_index=True)
+    whole_state = _State()
+    whole = pd.concat(detector._process(("s1",), iter([windows]), whole_state), ignore_index=True)
+    assert list(whole.minted_pfsa.notna()).count(True) >= 2
+    assert resumed.equals(whole.iloc[1:].reset_index(drop=True))
+    assert json.loads(state.blob) == json.loads(whole_state.blob)
+    assert set(json.loads(state.blob)) == {"models", "means", "stds"}
 
 
 def test_session_batch_stream_equivalence(spark, events_path):
