@@ -19,6 +19,16 @@ fit:      quantize (codegen column exprs; the complex cut-points and the
           A reduction step and the stats read one scoring pass (the
           cluster label rides through the scoring, one collect), so the
           final library scores the training set once.
+fit, driver-sized: when the rows and symbols that the alphabet
+          aggregate also counts fit ``FIT_LOCAL_BYTES`` (and GenESeSS runs
+          in memory), the quantized set is collected once in seq_id
+          order and every step but the clustering runs on the driver,
+          through the kernels the UDFs call (``llk_matrix`` for the SLD
+          features and the scoring, ``genesess`` per cluster): no Python
+          worker pass, no shuffle.  MLlib KMeans (same k, seed, init and
+          iterations) reads the features as one seq_id-ordered slice, so
+          below the gate labels and library ids no longer depend on the
+          input's partitioning or the shuffle partitions.
 predict:  one mapInPandas pass scoring every sequence under the broadcast
           library and reducing each sequence's scores in the same task to
           the ALL-above-bound anomaly flag + argmin closest-match.  No
@@ -60,6 +70,8 @@ from patternly_spark.functions.quantize import (
     symbol_from_cutpoints,
 )
 from patternly_spark.functions.windowing import split_stream, windows_to_sequences
+from patternly_spark import pfsa
+from patternly_spark.plans import local_frame
 from patternly_spark.pfsa.genesess import _tarjan_scc, fit_cluster_pfsas, genesess
 from patternly_spark.pfsa.llk import llk_batch, map_llk, score_sequences
 from patternly_spark.pfsa.model import PFSA
@@ -73,6 +85,31 @@ VERDICT_SCHEMA = T.StructType(
         T.StructField("closest_match", T.IntegerType(), False),
     ]
 )
+
+
+#: Driver memory one fit may hold to train on the driver.  Above it, or
+#: with ``genesess_mode="distributed"``, the fit runs its Spark path.  The
+#: budget is per fit: ``MultiChannelDetection.fit`` runs up to
+#: ``max_parallel`` channel fits at once, so its thread pool can hold that
+#: many of these.  32 MiB admits ~16,000 series of 200 symbols.  Below it
+#: the driver fit was the faster one in every measurement (3 regimes,
+#: complex quantizer, n_clusters=3, 4 vCPU: 12,000 x 200 symbols in 15.0
+#: vs 18.6 s); at 24,000 x 200 (~51 MB) both took 43-44 s, as the driver
+#: fits the clusters' machines one after another.
+FIT_LOCAL_BYTES = 32 * 1024 * 1024
+
+#: Driver bytes per training sequence and per symbol of a driver-path fit:
+#: the Arrow ``toPandas`` collect, the SLD features and their one-slice
+#: relation, the GenESeSS fits, ``llk_matrix`` over the library and the
+#: one-slice ``quantized_df``.  Measured with tracemalloc over the whole
+#: ``fit`` (peak; 3 regimes, complex quantizer, n_clusters=3; 3,000 and
+#: 6,000 series of 200 and 400 symbols; numpy 1.26, pandas 2.2, pyarrow
+#: 16): 440 B per series + 2.5 B per symbol, least squares, within 3% at
+#: all four sizes.  tracemalloc does not see Arrow's memory pool, which
+#: holds the collected and the uploaded batches (~2 B per symbol, ~16 B
+#: per series), so both are rounded up: 512 and 8.
+FIT_SEQ_BYTES = 512
+FIT_SYMBOL_BYTES = 8
 
 
 def _base_models(alphabet_size: int) -> list[PFSA]:
@@ -101,18 +138,12 @@ def _spark_le(a: float, b: float) -> bool:
     return math.isnan(b) or (not math.isnan(a) and a <= b)
 
 
-def _relabel_by_frequency(
-    labels_df: DataFrame, raw: dict[int, int] | None = None
-) -> tuple[DataFrame, list[int], int]:
-    """A2: relabel clusters so 0 = most common (reference double-argsort,
-    detection.py:339-347).  Input: (seq_id, cluster); ``raw`` = {label:
-    count} when the clustering has already counted its labels, else one
-    groupBy counts them.  Returns relabeled df, cluster counts desc,
-    n_clusters.  Noise label -1 (DBSCAN-style) is excluded from the count
-    (detection.py:339 quirk)."""
-    if raw is None:
-        counts_rows = labels_df.filter(F.col("cluster") >= 0).groupBy("cluster").count().collect()
-        raw = {int(r["cluster"]): int(r["count"]) for r in counts_rows}
+def _frequency_ranks(raw: dict[int, int]) -> tuple[dict[int, int], list[int], int]:
+    """A2: new cluster labels so 0 = most common (reference double-argsort,
+    detection.py:339-347), from ``raw`` = {label: count}.  Returns
+    {label: new label}, the counts descending, and the number of
+    clusters.  Noise label -1 (DBSCAN-style) is not counted and maps to
+    itself (detection.py:339 quirk)."""
     n = len(raw)
     # rank over the labels actually present (a pluggable clustering_alg or an
     # empty KMeans cluster can yield non-contiguous labels); for contiguous
@@ -123,9 +154,22 @@ def _relabel_by_frequency(
     rank = np.full(n, n - 1, dtype=np.int64) - np.argsort(np.argsort(counts))
     mapping = {labels[i]: int(rank[i]) for i in range(n)}
     mapping[-1] = -1  # DBSCAN-style noise passes through
+    return mapping, sorted(counts.tolist(), reverse=True), n
+
+
+def _relabel_by_frequency(
+    labels_df: DataFrame, raw: dict[int, int] | None = None
+) -> tuple[DataFrame, list[int], int]:
+    """``_frequency_ranks`` applied to (seq_id, cluster); ``raw`` = {label:
+    count} when the clustering has already counted its labels, else one
+    groupBy counts them.  Returns relabeled df, cluster counts desc,
+    n_clusters."""
+    if raw is None:
+        counts_rows = labels_df.filter(F.col("cluster") >= 0).groupBy("cluster").count().collect()
+        raw = {int(r["cluster"]): int(r["count"]) for r in counts_rows}
+    mapping, counts_desc, n = _frequency_ranks(raw)
     map_expr = F.create_map(*[F.lit(x) for kv in mapping.items() for x in kv])
     out = labels_df.withColumn("cluster", map_expr[F.col("cluster")].cast("int"))
-    counts_desc = sorted(counts.tolist(), reverse=True)
     return out, counts_desc, n
 
 
@@ -141,13 +185,16 @@ class _ClusterScores:
     stds: np.ndarray  # stddev_samp of the same; 0 for a single sequence
 
 
-def _score_clusters(clustered: DataFrame, library: list[PFSA]) -> _ClusterScores:
+def _score_clusters(clustered: DataFrame | pd.DataFrame, library: list[PFSA]) -> _ClusterScores:
     """One pass over (seq_id, symbols, cluster): score every sequence under
     every PFSA with its cluster label carried along, reduce to one row per
     sequence (best PFSA = lowest llk, lowest pfsa_id on ties; llk under
     its own cluster's PFSA), then one rollup gives the confusion counts
     per (cluster, best PFSA) and, per cluster, the row total and the llk
-    avg/stddev_samp — one collect."""
+    avg/stddev_samp — one collect.  A driver training set (pandas) is
+    scored on the driver instead (``_score_on_driver``)."""
+    if isinstance(clustered, pd.DataFrame):
+        return _score_on_driver(clustered, library)
     k = len(library)
     per_seq = (
         score_sequences(clustered, library, keep=("cluster",))
@@ -182,6 +229,33 @@ def _score_clusters(clustered: DataFrame, library: list[PFSA]) -> _ClusterScores
             if r["mean"] is not None:
                 means[c] = r["mean"]
                 stds[c] = r["std"] if r["std"] is not None else 0.0
+    return _ClusterScores(confusion, sizes, means, stds)
+
+
+def _score_on_driver(clustered: pd.DataFrame, library: list[PFSA]) -> _ClusterScores:
+    """``_score_clusters`` of a driver training set: one ``llk_matrix``
+    call scores it under the whole library, and the same reductions run
+    in numpy (avg -> mean, stddev_samp -> std with ddof=1)."""
+    k = len(library)
+    order = np.argsort([m.pfsa_id for m in library], kind="stable")
+    ids = np.array([library[i].pfsa_id for i in order])
+    llk = pfsa.llk_matrix(clustered["symbols"].tolist(), [library[i] for i in order])
+    cluster = clustered["cluster"].to_numpy()
+    # columns in pfsa_id order, so the first minimum is the lowest id
+    best = ids[llk.argmin(axis=1)]
+    col = {int(p): j for j, p in enumerate(ids)}
+    own = llk[np.arange(len(cluster)), [col[int(c)] for c in cluster]]
+    confusion = np.zeros((k, k))
+    pairs, counts = np.unique(np.stack([cluster, best]), axis=1, return_counts=True)
+    confusion[pairs[0], pairs[1]] = counts
+    sizes: dict[int, int] = {}
+    means = np.zeros(k)
+    stds = np.zeros(k)
+    for c in np.unique(cluster):
+        vals = own[cluster == c]
+        sizes[int(c)] = vals.size
+        means[c] = vals.mean()
+        stds[c] = vals.std(ddof=1) if vals.size > 1 else 0.0
     return _ClusterScores(confusion, sizes, means, stds)
 
 
@@ -240,12 +314,13 @@ class AnomalyDetection:
         self._sld_cache = None
         self.pfsa_llk_stds: np.ndarray | None = None
         self.alphabet_size: int | None = None
+        self._train_size: tuple[int, int] | None = None  # (rows, symbols) of the fit's input
 
     # ------------------------------------------------------------------
     def _quantize(self, df: DataFrame) -> DataFrame:
         """-> (seq_id, symbols array<tinyint>).  Mirrors __quantize
         (detection.py:272-308).  Fitting the complex cut-points also sets
-        ``alphabet_size``."""
+        ``alphabet_size`` and ``_train_size`` (rows, symbols)."""
         cols = df.columns
         if not self.quantize or "symbols" in cols:
             src = "symbols" if "symbols" in cols else "values"
@@ -260,12 +335,17 @@ class AnomalyDetection:
         # optionally detrended first (F1 then F4)
         vals = array_diff(v) if self.detrend else v
         if self.quantizer is None or not self.quantizer.fitted:
-            flat = df.select(F.explode(vals).alias("value"))
+            # outer: a row without values still counts as a row (its null
+            # value is skipped by the percentile and the max)
+            flat = df.select(F.posexplode_outer(vals).alias("pos", "value"))
             probs = [i / self.n_symbols for i in range(1, self.n_symbols)]
             row = flat.select(
                 percentile_expr("value", probs, exact=self.quantize_exact).alias("c"),
                 F.max(F.col("value").cast("double")).alias("top"),
+                F.count(F.when(F.coalesce("pos", F.lit(0)) == 0, 1)).alias("rows"),
+                F.count("pos").alias("symbols"),
             ).first()
+            self._train_size = (int(row["rows"]), int(row["symbols"]))
             cuts = [float(c) for c in row["c"]]
             self.quantizer = Quantizer(
                 quantize_type="complex", n_symbols=self.n_symbols,
@@ -281,48 +361,64 @@ class AnomalyDetection:
         return df.select("seq_id", syms.alias("symbols"))
 
     # ------------------------------------------------------------------
-    def _sld_features(self, seq_df: DataFrame) -> DataFrame:
-        """SLD featurization (llk vector against the fixed base library),
-        persisted: the X7 reduction loop re-clusters with shrinking k but
-        identical sequences, so features are computed exactly once per
-        fit."""
+    def _sld_features(self, train: DataFrame | pd.DataFrame) -> DataFrame:
+        """SLD featurization (llk vector against the fixed base library,
+        ``feat``, and as the ``features`` vector), persisted: the X7
+        reduction loop re-clusters with shrinking k but identical
+        sequences, so features are computed exactly once per fit.  A
+        driver training set is scored on the driver into a one-slice
+        relation in its seq_id order."""
         if self._sld_cache is not None:
             return self._sld_cache
         base = _base_models(self.alphabet_size or 2)
-        scored = score_sequences(seq_df, base)
-        feats = (
-            scored.groupBy("seq_id")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("pfsa_id", "llk"))).alias("pairs")
+        if isinstance(train, pd.DataFrame):
+            feat = pfsa.llk_matrix(train["symbols"].tolist(), base)
+            feat[feat == np.inf] = 1e6
+            pdf = pd.DataFrame({"seq_id": train["seq_id"], "feat": list(feat)})
+            feats = local_frame(self.spark, pdf, "seq_id long, feat array<double>")
+        else:
+            feats = (
+                score_sequences(train, base)
+                .groupBy("seq_id")
+                .agg(
+                    F.array_sort(F.collect_list(F.struct("pfsa_id", "llk"))).alias("pairs")
+                )
+                .select(
+                    "seq_id",
+                    F.transform(
+                        "pairs",
+                        lambda p: F.when(p["llk"] == float("inf"), F.lit(1e6)).otherwise(p["llk"]),
+                    ).alias("feat"),
+                )
             )
-            .select(
-                "seq_id",
-                F.transform(
-                    "pairs",
-                    lambda p: F.when(p["llk"] == float("inf"), F.lit(1e6)).otherwise(p["llk"]),
-                ).alias("feat"),
-            )
-        )
-        self._sld_cache = feats.persist()
-        return self._sld_cache
-
-    def _cluster_labels(self, seq_df: DataFrame, n_clusters: int) -> DataFrame:
-        """-> (seq_id, cluster int), frequency-relabeled.  SLD featurization
-        + seeded MLlib KMeans (SURVEY §4.3.1 replacing X3/X6)."""
-        if n_clusters == 1:
-            return seq_df.select("seq_id", F.lit(0).cast("int").alias("cluster"))
-
-        feats = self._sld_features(seq_df)
-        from pyspark.ml.clustering import KMeans
         from pyspark.ml.functions import array_to_vector
 
-        vec = feats.select("seq_id", array_to_vector("feat").alias("features"))
+        self._sld_cache = feats.withColumn("features", array_to_vector("feat")).persist()
+        return self._sld_cache
+
+    def _cluster_labels(self, train: DataFrame | pd.DataFrame, n_clusters: int) -> DataFrame | pd.DataFrame:
+        """-> (seq_id, cluster int), frequency-relabeled.  SLD featurization
+        + seeded MLlib KMeans (SURVEY §4.3.1 replacing X3/X6).  For a
+        driver training set (pandas, seq_id order) the clustering runs on
+        its one-slice features, the labels come back in one collect, and
+        the result is the training set with its ``cluster`` column."""
+        local = isinstance(train, pd.DataFrame)
+        if n_clusters == 1:
+            if local:
+                return train.assign(cluster=np.int32(0))
+            return train.select("seq_id", F.lit(0).cast("int").alias("cluster"))
+
+        feats = self._sld_features(train)
+        from pyspark.ml.clustering import KMeans
+
+        vec = feats.select("seq_id", "features")
+        sizes = None
         if self.clustering_alg is not None and callable(self.clustering_alg) and not hasattr(self.clustering_alg, "fit"):
             # pluggable clustering, Spark idiom of the reference's any
             # `.fit(X).labels_` duck-typing (detection.py:21,:337-338):
             # a callable (features_df(seq_id, feat), n_clusters) ->
             # DataFrame(seq_id, cluster)
-            pred = self.clustering_alg(feats, n_clusters).select(
+            pred = self.clustering_alg(feats.select("seq_id", "feat"), n_clusters).select(
                 "seq_id", F.col("cluster").cast("int").alias("cluster")
             )
         elif self.clustering_alg is not None:
@@ -335,11 +431,23 @@ class AnomalyDetection:
             pred = model.transform(vec).select("seq_id", F.col("prediction").cast("int").alias("cluster"))
             # KMeans.fit has counted its training assignments already
             sizes = {i: int(c) for i, c in enumerate(model.summary.clusterSizes) if c}
-            return _relabel_by_frequency(pred, sizes)[0]
-        return _relabel_by_frequency(pred)[0]
+        if local:
+            labels = pred.toPandas()
+            found = labels["cluster"][labels["cluster"] >= 0]
+            mapping = _frequency_ranks(found.value_counts().to_dict())[0]
+            labels["cluster"] = labels["cluster"].map(mapping).astype(np.int32)
+            return train.merge(labels, on="seq_id")
+        return _relabel_by_frequency(pred, sizes)[0]
 
     # ------------------------------------------------------------------
-    def _fit_library(self, clustered: DataFrame, n_clusters: int) -> list[PFSA]:
+    def _fit_library(self, clustered: DataFrame | pd.DataFrame, n_clusters: int) -> list[PFSA]:
+        if isinstance(clustered, pd.DataFrame):
+            # the call fit_cluster_pfsas makes in its UDF: each cluster's
+            # sequences in seq_id order, pfsa_id = label, sorted by label
+            return [
+                pfsa.genesess(g["symbols"].tolist(), eps=self.eps, alphabet_size=self.alphabet_size, pfsa_id=int(c))
+                for c, g in clustered.groupby("cluster", sort=True)
+            ]
         if self.genesess_mode == "distributed":
             # SURVEY §4.3.2 fallback: per-cluster distributed n-gram
             # GenESeSS — no cluster's sequences are ever collected to one
@@ -363,7 +471,7 @@ class AnomalyDetection:
         return [PFSA.from_row(r) for r in rows]
 
     # ------------------------------------------------------------------
-    def _reduce_step(self, clustered: DataFrame, library: list[PFSA]) -> tuple[int, _ClusterScores]:
+    def _reduce_step(self, clustered: DataFrame | pd.DataFrame, library: list[PFSA]) -> tuple[int, _ClusterScores]:
         """One reduction evaluation (X7): confusion fractions -> self-boost
         -> threshold-0.2 digraph -> SCC count (correct Tarjan).  Returns
         the count and the scoring pass it read, which also holds the
@@ -398,12 +506,29 @@ class AnomalyDetection:
         self.alphabet_size = None
         seq_df = self._quantize(df).persist()
         if self.alphabet_size is None:
-            self.alphabet_size = int(
-                seq_df.select(F.max(F.array_max("symbols")).alias("m")).first()["m"]
-            ) + 1
+            row = seq_df.select(
+                F.max(F.array_max("symbols")).alias("m"),
+                F.count(F.lit(1)).alias("rows"),
+                F.sum(F.greatest(F.size("symbols"), F.lit(0))).alias("symbols"),
+            ).first()
+            self.alphabet_size = int(row["m"]) + 1
+            self._train_size = (int(row["rows"]), int(row["symbols"]))
+
+        # a driver-sized training set is collected once, in seq_id order;
+        # every step but the clustering then runs on the driver
+        rows, symbols = self._train_size
+        local = (
+            self.genesess_mode == "memory"
+            and rows * FIT_SEQ_BYTES + symbols * FIT_SYMBOL_BYTES < FIT_LOCAL_BYTES
+        )
+        train = seq_df.toPandas().sort_values("seq_id", ignore_index=True) if local else seq_df
+
+        def clustered_at(n: int):
+            labels = self._cluster_labels(train, n)
+            return labels if local else labels.join(seq_df, "seq_id")
 
         n = self.n_clusters
-        clustered = self._cluster_labels(seq_df, n).join(seq_df, "seq_id")
+        clustered = clustered_at(n)
         library = self._fit_library(clustered, n)
 
         scores = None  # the scoring pass of `library`, once one ran
@@ -415,7 +540,7 @@ class AnomalyDetection:
                 if self.verbose:
                     print(f"Reduced clusters from {len(library)} to {new_n}.")
                 n = new_n
-                clustered = self._cluster_labels(seq_df, n).join(seq_df, "seq_id")
+                clustered = clustered_at(n)
                 library = self._fit_library(clustered, n)
                 scores = None
                 if n == 1:
@@ -429,7 +554,11 @@ class AnomalyDetection:
         self.pfsa_llk_means = scores.means
         self.pfsa_llk_stds = scores.stds
         self.cluster_counts = sorted((v for c, v in scores.sizes.items() if c >= 0), reverse=True)
-        self.quantized_df = clustered.select("seq_id", "symbols", "cluster").persist()
+        if local:
+            schema = T.StructType(seq_df.schema.fields + [T.StructField("cluster", T.IntegerType())])
+            self.quantized_df = local_frame(self.spark, clustered[schema.names], schema).persist()
+        else:
+            self.quantized_df = clustered.select("seq_id", "symbols", "cluster").persist()
         seq_df.unpersist()
         if self._sld_cache is not None:  # kept, released: only the fit reads it
             self._sld_cache.unpersist()
@@ -643,8 +772,10 @@ class MultiChannelDetection:
 
     Input layout: (channel string, offset long, value double).  Channels
     are fitted independently — the per-channel pipelines are driver-
-    orchestrated but each one's heavy lifting is distributed, and
-    channels could be dispatched concurrently from multiple threads.
+    orchestrated, and channels are dispatched concurrently from multiple
+    threads.  A channel whose windows are driver-sized trains on the
+    driver (``FIT_LOCAL_BYTES`` is per fit), so the pool can hold
+    ``max_parallel`` such training sets at once.
     """
 
     def __init__(self, spark: SparkSession | None = None, **kwargs) -> None:
@@ -725,9 +856,10 @@ class GrowingLibrary:
 
     ``step`` is the per-window rule of both continuous detectors,
     ``ContinuousStreamingDetection.fit_stream`` and
-    ``streaming.StreamingPFSADetector``.  The PFSA kernels are looked up
+    ``streaming.StreamingPFSADetector``.  ``mint`` looks its kernels up
     as this module's names at call time, so wrapping
-    ``detection.genesess``/``simulate``/``llk_batch`` reaches them.
+    ``detection.genesess``/``simulate``/``llk_batch`` reaches them; ``step``
+    scores a window under the whole library in one ``llk_matrix`` call.
     """
 
     def __init__(self, *, eps: float, sensitivity: float, seed: int, alphabet_size: int | None = None, bootstrap_sims: int = 100, models: list[PFSA] | None = None, means: list[float] | None = None, stds: list[float] | None = None) -> None:
@@ -764,7 +896,7 @@ class GrowingLibrary:
         if not self.models:
             self.mint(syms)
             minted = 0
-        llks = np.array([llk_batch([syms], m)[0] for m in self.models])
+        llks = pfsa.llk_matrix([syms], self.models)[0]
         anomaly = bool(np.all(llks > np.array(self.means) + np.array(self.stds) * self.sensitivity))
         if anomaly and minted is None:
             llks = np.append(llks, self.mint(syms))

@@ -661,11 +661,14 @@ def kcore(
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
+    # the count materializes the pin in the same pass and sizes the rounds
+    n_und = und.count()
     kk = int(k)
     converged = False
-    with round_shuffle(und):
+    spark = edges.sparkSession
+    with tuned_shuffle(spark, round_partitions(spark, n_und)):
         for _ in range(int(max_rounds)):
             # bad is lazily pinned so ONE full count() both materializes
             # it and answers the convergence probe; the two anti-join
@@ -911,8 +914,10 @@ def minimum_spanning_forest(
         .filter(F.col("u") != F.col("v"))
         .groupBy("u", "v")
         .agg(F.min("w").alias("w"))
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
+    # the count materializes the pin in the same pass and sizes the rounds
+    n_e = e.count()
     spark = edges.sparkSession
     # label = component id per node; starts as identity
     labels = (
@@ -924,7 +929,7 @@ def minimum_spanning_forest(
     )
     forest = empty_rows(spark, "u long, v long, w double")
     local_merge_rows = MSF_LOCAL_MERGE_BYTES // MSF_MERGE_ROW_BYTES
-    with round_shuffle(e):
+    with tuned_shuffle(spark, round_partitions(spark, n_e)):
         for _ in range(int(max_rounds)):
             lab_u = labels.select(F.col("node").alias("u"), F.col("comp").alias("cu"))
             lab_v = labels.select(F.col("node").alias("v"), F.col("comp").alias("cv"))
@@ -1076,15 +1081,18 @@ def personalized_pagerank_units(
         edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
         .filter(F.col("s") != F.col("d"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
+    # the count materializes the pin in the same pass and sizes the rounds
+    n_e = e.count()
     deg = e.groupBy("s").agg(F.count(F.lit(1)).cast("long").alias("od"))
     sd = seeds.select(F.col(seed_col).alias("node")).distinct()
     u = int(units)
     an, ad = int(alpha_num), int(alpha_den)
     restart = (u * (ad - an)) // ad
     p = sd.select("node", F.lit(u).cast("long").alias("pu"))
-    with round_shuffle(e):
+    spark = edges.sparkSession
+    with tuned_shuffle(spark, round_partitions(spark, n_e)):
         for _ in range(int(iterations)):
             contrib = (
                 p.join(deg, p["node"] == deg["s"])
@@ -1334,7 +1342,9 @@ def neighborhood_function(
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     if not directed:
         e = e.union(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
-    e = _pin_disk(e.filter(F.col("s") != F.col("d")).distinct())
+    e = _pin_disk(e.filter(F.col("s") != F.col("d")).distinct(), eager=False)
+    # the count materializes the pin in the same pass and sizes the rounds
+    n_e = e.count()
     nodes = e.select(F.col("s").alias("node")).distinct()
     # lazy pin: the round's own EAGER 1-row snapshot collect (below)
     # materializes the register blocks in the same pass, instead of a
@@ -1373,7 +1383,8 @@ def neighborhood_function(
         )
 
     out = [snapshot(0, regs)]
-    with round_shuffle(e):
+    spark = edges.sparkSession
+    with tuned_shuffle(spark, round_partitions(spark, n_e)):
         for r in range(1, int(rounds) + 1):
             pulled = e.join(regs, e["d"] == regs["node"]).select(
                 F.col("s").alias("node"), "reg", "rho"

@@ -87,3 +87,19 @@ def graph_paths(monkeypatch):
         yield "distributed"
 
     return paths()
+
+
+@pytest.fixture
+def fit_paths(monkeypatch):
+    """Iterate to run a test body on both paths of
+    ``AnomalyDetection.fit``: first the driver path a small training set
+    takes, then the Spark path (a zero driver budget sends every fit
+    there).  Yields the path's name."""
+    from patternly_spark import detection
+
+    def paths():
+        yield "driver"
+        monkeypatch.setattr(detection, "FIT_LOCAL_BYTES", 0)
+        yield "spark"
+
+    return paths()

@@ -30,54 +30,57 @@ def _seq_df(spark, groups, length=200):
     return spark.createDataFrame(rows, "seq_id long, symbols array<int>")
 
 
-def test_single_cluster_detects_injected_anomalies(spark):
+def test_single_cluster_detects_injected_anomalies(spark, fit_paths):
     # minimum end-to-end slice (SURVEY §7): k=1, pre-quantized, golden outcome
     df = _seq_df(spark, [(MACHINE_A, 120, 1), (MACHINE_C, 5, 2)])
-    model = AnomalyDetection(spark, n_clusters=1, quantize=False, anomaly_sensitivity=4, eps=0.2)
-    model.fit(df)
-    preds = model.predict().toPandas().sort_values("seq_id")
-    anomalous = preds[preds.anomaly].seq_id.tolist()
-    assert anomalous == [120, 121, 122, 123, 124]
-    assert model.cluster_counts == [125]
+    for _ in fit_paths:
+        model = AnomalyDetection(spark, n_clusters=1, quantize=False, anomaly_sensitivity=4, eps=0.2)
+        model.fit(df)
+        preds = model.predict().toPandas().sort_values("seq_id")
+        anomalous = preds[preds.anomaly].seq_id.tolist()
+        assert anomalous == [120, 121, 122, 123, 124]
+        assert model.cluster_counts == [125]
 
 
-def test_example0_style_two_clusters(spark):
+def test_example0_style_two_clusters(spark, fit_paths):
     # 2 normal regimes fit with k=2; prediction on a batch with 23 anomalous
     # sequences at known tail positions flags exactly those (example0 golden
     # shape: 23 anomalies at rows 2000-2022)
     train = _seq_df(spark, [(MACHINE_A, 200, 3), (MACHINE_B, 200, 4)])
-    model = AnomalyDetection(
-        spark, n_clusters=2, quantize=False, anomaly_sensitivity=4, reduce_clusters=False, eps=0.2
-    )
-    model.fit(train)
-    assert model.n_clusters == 2
-    assert len(model.library) == 2
-    full = _seq_df(spark, [(MACHINE_A, 200, 3), (MACHINE_B, 200, 4), (MACHINE_U, 23, 5)])
-    preds = model.predict(full).toPandas().sort_values("seq_id")
-    anomalous = preds[preds.anomaly].seq_id.tolist()
-    assert anomalous == list(range(400, 423))
-    # closest_match maps normal sequences onto their own regime's PFSA
-    normal = preds[~preds.anomaly]
-    assert normal.closest_match.nunique() == 2
+    for _ in fit_paths:
+        model = AnomalyDetection(
+            spark, n_clusters=2, quantize=False, anomaly_sensitivity=4, reduce_clusters=False, eps=0.2
+        )
+        model.fit(train)
+        assert model.n_clusters == 2
+        assert len(model.library) == 2
+        full = _seq_df(spark, [(MACHINE_A, 200, 3), (MACHINE_B, 200, 4), (MACHINE_U, 23, 5)])
+        preds = model.predict(full).toPandas().sort_values("seq_id")
+        anomalous = preds[preds.anomaly].seq_id.tolist()
+        assert anomalous == list(range(400, 423))
+        # closest_match maps normal sequences onto their own regime's PFSA
+        normal = preds[~preds.anomaly]
+        assert normal.closest_match.nunique() == 2
 
 
-def test_alphabet_incompatible_sequences_flagged(spark):
+def test_alphabet_incompatible_sequences_flagged(spark, fit_paths):
     # P3 -> A6: a sequence using symbols outside the fitted alphabet is
     # unscorable (llk = inf) under every model, hence anomalous — the
     # reference realigns with inf-padding (detection.py:142-144)
     train = _seq_df(spark, [(MACHINE_A, 80, 13)])
-    model = AnomalyDetection(spark, n_clusters=1, quantize=False, anomaly_sensitivity=4, eps=0.2)
-    model.fit(train)
-    typical = [int(v) for v in simulate(MACHINE_A, 200, 1, seed=14)[0]]
-    probe = spark.createDataFrame(
-        [(0, typical), (1, [0, 2, 1, 0])], "seq_id long, symbols array<int>"
-    )
-    preds = {r["seq_id"]: r["anomaly"] for r in model.predict(probe).collect()}
-    assert preds[1] is True, "3-symbol sequence must be anomalous under a binary library"
-    assert preds[0] is False
+    for _ in fit_paths:
+        model = AnomalyDetection(spark, n_clusters=1, quantize=False, anomaly_sensitivity=4, eps=0.2)
+        model.fit(train)
+        typical = [int(v) for v in simulate(MACHINE_A, 200, 1, seed=14)[0]]
+        probe = spark.createDataFrame(
+            [(0, typical), (1, [0, 2, 1, 0])], "seq_id long, symbols array<int>"
+        )
+        preds = {r["seq_id"]: r["anomaly"] for r in model.predict(probe).collect()}
+        assert preds[1] is True, "3-symbol sequence must be anomalous under a binary library"
+        assert preds[0] is False
 
 
-def test_cluster_reduction_merges_similar_regimes(spark):
+def test_cluster_reduction_merges_similar_regimes(spark, fit_paths):
     # clusters over data from ONE machine must merge (example1 pattern:
     # k too high -> reduced).  An arbitrary partitioner (the pluggable
     # clustering_alg surface, reference detection.py:21,:337-338) yields
@@ -89,46 +92,49 @@ def test_cluster_reduction_merges_similar_regimes(spark):
     partitioner = lambda feats, n: feats.select(
         "seq_id", (F.col("seq_id") % n).cast("int").alias("cluster")
     )
-    model = AnomalyDetection(
-        spark, n_clusters=3, quantize=False, anomaly_sensitivity=3,
-        reduce_clusters=True, clustering_alg=partitioner, eps=0.2,
-    )
-    model.fit(df)
-    assert model.n_clusters == 1
-    assert model.cluster_counts == [200]
-    preds = model.predict().toPandas()
-    # in-sample false positives at 3 sigma over 200 draws: ~Binomial tail
-    assert preds.anomaly.sum() <= 2
+    for _ in fit_paths:
+        model = AnomalyDetection(
+            spark, n_clusters=3, quantize=False, anomaly_sensitivity=3,
+            reduce_clusters=True, clustering_alg=partitioner, eps=0.2,
+        )
+        model.fit(df)
+        assert model.n_clusters == 1
+        assert model.cluster_counts == [200]
+        preds = model.predict().toPandas()
+        # in-sample false positives at 3 sigma over 200 draws: ~Binomial tail
+        assert preds.anomaly.sum() <= 2
 
 
-def test_pluggable_mllib_estimator_example3_style(spark):
+def test_pluggable_mllib_estimator_example3_style(spark, fit_paths):
     # example3 golden shape (reference examples/example3.ipynb): a pluggable
     # clustering estimator (FeatureAgglomeration there; any MLlib Estimator
     # with fit/transform here) instead of KMeans, 0 anomalies in-sample
     from pyspark.ml.clustering import BisectingKMeans
 
     df = _seq_df(spark, [(MACHINE_A, 120, 11), (MACHINE_B, 120, 12)], length=120)
-    model = AnomalyDetection(
-        spark, n_clusters=2, quantize=False, anomaly_sensitivity=4,
-        reduce_clusters=False, clustering_alg=BisectingKMeans(k=2, seed=42), eps=0.2,
-    )
-    model.fit(df)
-    assert len(model.library) == 2
-    preds = model.predict().toPandas()
-    assert preds.anomaly.sum() == 0
+    for _ in fit_paths:
+        model = AnomalyDetection(
+            spark, n_clusters=2, quantize=False, anomaly_sensitivity=4,
+            reduce_clusters=False, clustering_alg=BisectingKMeans(k=2, seed=42), eps=0.2,
+        )
+        model.fit(df)
+        assert len(model.library) == 2
+        preds = model.predict().toPandas()
+        assert preds.anomaly.sum() == 0
 
 
-def test_no_reduction_when_regimes_distinct(spark):
+def test_no_reduction_when_regimes_distinct(spark, fit_paths):
     # genuinely distinct regimes must NOT merge
     df = _seq_df(spark, [(MACHINE_A, 100, 7), (MACHINE_B, 100, 8)], length=100)
-    model = AnomalyDetection(
-        spark, n_clusters=2, quantize=False, anomaly_sensitivity=4, reduce_clusters=True, eps=0.2
-    )
-    model.fit(df)
-    assert model.n_clusters == 2
+    for _ in fit_paths:
+        model = AnomalyDetection(
+            spark, n_clusters=2, quantize=False, anomaly_sensitivity=4, reduce_clusters=True, eps=0.2
+        )
+        model.fit(df)
+        assert model.n_clusters == 2
 
 
-def test_quantize_complex_pipeline(spark):
+def test_quantize_complex_pipeline(spark, fit_paths):
     # continuous values: regime A ~ N(0,1) random walk vs anomaly ~ big jumps
     # normal = momentum random walk (sticky diff signs -> structured
     # symbols); anomaly = alternating jumps (anti-sticky diff signs)
@@ -146,64 +152,68 @@ def test_quantize_complex_pipeline(spark):
         steps = 4.0 * ((-1.0) ** np.arange(150)) + rng.normal(0, 0.5, 150)
         rows.append((sid, np.cumsum(steps).tolist()))
     df = spark.createDataFrame(rows, "seq_id long, values array<double>")
-    model = AnomalyDetection(
-        spark, n_clusters=1, quantize=True, quantize_type="simple", anomaly_sensitivity=3, eps=0.2
-    )
-    model.fit(df)
-    preds = model.predict().toPandas()
-    flagged = set(preds[preds.anomaly].seq_id)
-    assert flagged.issuperset({60, 61, 62, 63})
-    assert len(flagged) <= 8
+    for _ in fit_paths:
+        model = AnomalyDetection(
+            spark, n_clusters=1, quantize=True, quantize_type="simple", anomaly_sensitivity=3, eps=0.2
+        )
+        model.fit(df)
+        preds = model.predict().toPandas()
+        flagged = set(preds[preds.anomaly].seq_id)
+        assert flagged.issuperset({60, 61, 62, 63})
+        assert len(flagged) <= 8
 
 
-def test_save_load_roundtrip(tmp_path, spark):
+def test_save_load_roundtrip(tmp_path, spark, fit_paths):
     df = _seq_df(spark, [(MACHINE_A, 50, 9)])
-    model = AnomalyDetection(spark, n_clusters=1, quantize=False, anomaly_sensitivity=4, eps=0.2)
-    model.fit(df)
-    model.save_model(str(tmp_path / "m"))
-    loaded = AnomalyDetection.load_model(str(tmp_path / "m"), spark)
-    assert loaded.fitted and len(loaded.library) == 1
-    np.testing.assert_allclose(loaded.library[0].pitilde, model.library[0].pitilde)
-    preds = loaded.predict(df).toPandas()
-    assert preds.anomaly.sum() == 0
+    for _ in fit_paths:
+        model = AnomalyDetection(spark, n_clusters=1, quantize=False, anomaly_sensitivity=4, eps=0.2)
+        model.fit(df)
+        model.save_model(str(tmp_path / "m"))
+        loaded = AnomalyDetection.load_model(str(tmp_path / "m"), spark)
+        assert loaded.fitted and len(loaded.library) == 1
+        np.testing.assert_allclose(loaded.library[0].pitilde, model.library[0].pitilde)
+        preds = loaded.predict(df).toPandas()
+        assert preds.anomaly.sum() == 0
 
 
-def test_streaming_save_load_preserves_windowing_and_quantizer(tmp_path, spark):
+def test_streaming_save_load_preserves_windowing_and_quantizer(tmp_path, spark, fit_paths):
     # regression: subclass params (window_size/overlap) and fitted
     # quantizer state must survive save/load — a loaded model must emit
     # byte-identical verdicts (caught live: defaults silently re-chopped
     # the stream after load)
     vals = np.cumsum(np.asarray(simulate(MACHINE_A, 3000, 1, seed=21)[0], dtype=float) * 2 - 1)
     df = spark.createDataFrame([(i, float(v)) for i, v in enumerate(vals)], "offset long, value double")
-    m = StreamingDetection(
-        spark, window_size=250, window_overlap=50, n_clusters=1,
-        quantize=True, quantize_type="complex", n_symbols=3, anomaly_sensitivity=3,
-    )
-    m.fit(df)
-    before = m.predict(df).orderBy("seq_id").toPandas()
-    m.save_model(str(tmp_path / "sm"))
-    loaded = StreamingDetection.load_model(str(tmp_path / "sm"), spark)
-    assert loaded.window_size == 250 and loaded.window_overlap == 50
-    assert loaded.quantizer is not None and loaded.quantizer.cutpoints == m.quantizer.cutpoints
-    after = loaded.predict(df).orderBy("seq_id").toPandas()
-    assert before.anomaly.tolist() == after.anomaly.tolist()
-    assert before.closest_match.tolist() == after.closest_match.tolist()
+    for _ in fit_paths:
+        m = StreamingDetection(
+            spark, window_size=250, window_overlap=50, n_clusters=1,
+            quantize=True, quantize_type="complex", n_symbols=3, anomaly_sensitivity=3,
+        )
+        m.fit(df)
+        before = m.predict(df).orderBy("seq_id").toPandas()
+        m.save_model(str(tmp_path / "sm"))
+        loaded = StreamingDetection.load_model(str(tmp_path / "sm"), spark)
+        assert loaded.window_size == 250 and loaded.window_overlap == 50
+        assert loaded.quantizer is not None and loaded.quantizer.cutpoints == m.quantizer.cutpoints
+        after = loaded.predict(df).orderBy("seq_id").toPandas()
+        assert before.anomaly.tolist() == after.anomaly.tolist()
+        assert before.closest_match.tolist() == after.closest_match.tolist()
 
 
-def test_streaming_detection_windows(spark):
+def test_streaming_detection_windows(spark, fit_paths):
     # one long stream from machine A, chopped into tumbling windows
     stream = simulate(MACHINE_A, 20000, 1, seed=11)[0]
     df = spark.createDataFrame(
         [(i, int(s)) for i, s in enumerate(stream)], "offset long, symbol int"
     )
-    model = StreamingDetection(
-        spark, window_size=500, window_overlap=0, n_clusters=1, quantize=False,
-        anomaly_sensitivity=4, eps=0.2,
-    )
-    model.fit(df)
-    preds = model.predict().toPandas()
-    assert len(preds) == 40  # 20000 // 500 complete windows
-    assert preds.anomaly.sum() == 0
+    for _ in fit_paths:
+        model = StreamingDetection(
+            spark, window_size=500, window_overlap=0, n_clusters=1, quantize=False,
+            anomaly_sensitivity=4, eps=0.2,
+        )
+        model.fit(df)
+        preds = model.predict().toPandas()
+        assert len(preds) == 40  # 20000 // 500 complete windows
+        assert preds.anomaly.sum() == 0
 
 
 def test_continuous_streaming_with_quantization(spark):
@@ -260,17 +270,18 @@ def test_x8_embed_library_merges_near_identical_models(spark):
     assert groups[2] != groups[0], f"distinct model must not merge: {out}"
 
 
-def test_fit_with_distributed_genesess_matches_memory_mode(spark):
+def test_fit_with_distributed_genesess_matches_memory_mode(spark, fit_paths):
     df = _seq_df(spark, [(MACHINE_A, 60, 41), (MACHINE_B, 60, 42)], length=150)
     kw = dict(n_clusters=2, quantize=False, anomaly_sensitivity=4, reduce_clusters=False, eps=0.2)
-    m_mem = AnomalyDetection(spark, **kw).fit(df)
-    m_dist = AnomalyDetection(spark, genesess_mode="distributed", **kw).fit(df)
-    for a, b in zip(m_mem.library, m_dist.library):
-        np.testing.assert_array_equal(a.connx, b.connx)
-        np.testing.assert_allclose(a.pitilde, b.pitilde)
-    pm = m_mem.predict(df).orderBy("seq_id").collect()
-    pd_ = m_dist.predict(df).orderBy("seq_id").collect()
-    assert [r["anomaly"] for r in pm] == [r["anomaly"] for r in pd_]
+    for _ in fit_paths:
+        m_mem = AnomalyDetection(spark, **kw).fit(df)
+        m_dist = AnomalyDetection(spark, genesess_mode="distributed", **kw).fit(df)
+        for a, b in zip(m_mem.library, m_dist.library):
+            np.testing.assert_array_equal(a.connx, b.connx)
+            np.testing.assert_allclose(a.pitilde, b.pitilde)
+        pm = m_mem.predict(df).orderBy("seq_id").collect()
+        pd_ = m_dist.predict(df).orderBy("seq_id").collect()
+        assert [r["anomaly"] for r in pm] == [r["anomaly"] for r in pd_]
 
 
 def test_relabel_handles_noncontiguous_labels(spark):
@@ -301,7 +312,7 @@ def test_relabel_tie_break_matches_reference_double_argsort(spark):
     assert got[0] == 1 and got[2] == 0
 
 
-def test_pluggable_clustering_noncontiguous_labels_end_to_end(spark):
+def test_pluggable_clustering_noncontiguous_labels_end_to_end(spark, fit_paths):
     """A pluggable clustering_alg emitting labels {1, 3} must not crash fit
     (previously mapped out-of-range labels to NULL)."""
     from pyspark.sql import functions as F
@@ -313,15 +324,16 @@ def test_pluggable_clustering_noncontiguous_labels_end_to_end(spark):
         )
 
     df = _seq_df(spark, [(MACHINE_A, 10, 1), (MACHINE_B, 10, 2)], length=300)
-    m = AnomalyDetection(spark, n_clusters=2, clustering_alg=alg, quantize=False,
-                         reduce_clusters=False, anomaly_sensitivity=3)
-    m.fit(df)
-    preds = m.predict(df).toPandas()
-    assert len(preds) == 20
-    assert m.cluster_counts == [10, 10]
+    for _ in fit_paths:
+        m = AnomalyDetection(spark, n_clusters=2, clustering_alg=alg, quantize=False,
+                             reduce_clusters=False, anomaly_sensitivity=3)
+        m.fit(df)
+        preds = m.predict(df).toPandas()
+        assert len(preds) == 20
+        assert m.cluster_counts == [10, 10]
 
 
-def test_complex_detrend_pipeline(spark):
+def test_complex_detrend_pipeline(spark, fit_paths):
     """VERDICT #6: quantize_type='complex' + detrend composes F1 (first
     difference) then F4 (equi-probable cut-points). The alternating-jump
     anomalies separate cleanly in diff space."""
@@ -339,30 +351,31 @@ def test_complex_detrend_pipeline(spark):
         steps = 4.0 * ((-1.0) ** np.arange(150)) + rng.normal(0, 0.5, 150)
         rows.append((sid, np.cumsum(steps).tolist()))
     df = spark.createDataFrame(rows, "seq_id long, values array<double>")
-    model = AnomalyDetection(
-        spark, n_clusters=1, quantize=True, quantize_type="complex",
-        detrend=True, anomaly_sensitivity=3, eps=0.2,
-    )
-    model.fit(df)
-    assert model.quantizer.detrend is True
-    preds = model.predict().toPandas()
-    flagged = set(preds[preds.anomaly].seq_id)
-    assert flagged.issuperset({60, 61, 62, 63})
-    assert len(flagged) <= 8
-    assert model.alphabet_size == _max_symbol(model) + 1
+    for _ in fit_paths:
+        model = AnomalyDetection(
+            spark, n_clusters=1, quantize=True, quantize_type="complex",
+            detrend=True, anomaly_sensitivity=3, eps=0.2,
+        )
+        model.fit(df)
+        assert model.quantizer.detrend is True
+        preds = model.predict().toPandas()
+        flagged = set(preds[preds.anomaly].seq_id)
+        assert flagged.issuperset({60, 61, 62, 63})
+        assert len(flagged) <= 8
+        assert model.alphabet_size == _max_symbol(model) + 1
 
-    # the alphabet comes from the cut-point aggregate: here the largest
-    # detrended value (an integer step of 1) IS the median cut-point, so
-    # it takes the top symbol
-    steps = np.where(rng.random((30, 80)) < 0.7, 1.0, rng.integers(-2, 1, (30, 80)))
-    rows = [(sid, np.cumsum(s).tolist()) for sid, s in enumerate(steps)]
-    ramp = AnomalyDetection(
-        spark, n_clusters=1, quantize=True, quantize_type="complex",
-        detrend=True, n_symbols=2, eps=0.2,
-    )
-    ramp.fit(spark.createDataFrame(rows, "seq_id long, values array<double>"))
-    assert ramp.quantizer.cutpoints == [1.0]
-    assert ramp.alphabet_size == _max_symbol(ramp) + 1 == 2
+        # the alphabet comes from the cut-point aggregate: here the largest
+        # detrended value (an integer step of 1) IS the median cut-point, so
+        # it takes the top symbol
+        steps = np.where(rng.random((30, 80)) < 0.7, 1.0, rng.integers(-2, 1, (30, 80)))
+        rows = [(sid, np.cumsum(s).tolist()) for sid, s in enumerate(steps)]
+        ramp = AnomalyDetection(
+            spark, n_clusters=1, quantize=True, quantize_type="complex",
+            detrend=True, n_symbols=2, eps=0.2,
+        )
+        ramp.fit(spark.createDataFrame(rows, "seq_id long, values array<double>"))
+        assert ramp.quantizer.cutpoints == [1.0]
+        assert ramp.alphabet_size == _max_symbol(ramp) + 1 == 2
 
 
 def _max_symbol(model) -> int:
@@ -458,7 +471,7 @@ def test_continuous_fit_stream_refit_starts_from_empty_library(spark):
     assert model._means == fresh._means and model._stds == fresh._stds
 
 
-def test_multichannel_save_load_path_hostile_channel_names(tmp_path, spark):
+def test_multichannel_save_load_path_hostile_channel_names(tmp_path, spark, fit_paths):
     from patternly_spark.detection import MultiChannelDetection
     from patternly_spark.pfsa.simulate import simulate as _sim
 
@@ -466,20 +479,21 @@ def test_multichannel_save_load_path_hostile_channel_names(tmp_path, spark):
     hostile = ["lead/I", "../up", "a b.c"]
     rows = [(ch, i, float(v)) for ch in hostile for i, v in enumerate(a)]
     df = spark.createDataFrame(rows, "channel string, offset long, value double")
-    m = MultiChannelDetection(spark, window_size=500, window_overlap=0, n_clusters=1,
-                              quantize=False, anomaly_sensitivity=3)
-    m.fit(df)
-    m.save_model(str(tmp_path / "mc"))
-    # nothing escaped the save root
-    import os as _os
-    entries = set(_os.listdir(tmp_path / "mc"))
-    assert "channels.json" in entries and len(entries) == 4
-    assert not (tmp_path / "up").exists()
-    loaded = MultiChannelDetection.load_model(str(tmp_path / "mc"), spark)
-    assert set(loaded.models) == set(hostile)
-    before = m.predict(df).orderBy("channel", "seq_id").collect()
-    after = loaded.predict(df).orderBy("channel", "seq_id").collect()
-    assert [tuple(r) for r in before] == [tuple(r) for r in after]
+    for _ in fit_paths:
+        m = MultiChannelDetection(spark, window_size=500, window_overlap=0, n_clusters=1,
+                                  quantize=False, anomaly_sensitivity=3)
+        m.fit(df)
+        m.save_model(str(tmp_path / "mc"))
+        # nothing escaped the save root
+        import os as _os
+        entries = set(_os.listdir(tmp_path / "mc"))
+        assert "channels.json" in entries and len(entries) == 4
+        assert not (tmp_path / "up").exists()
+        loaded = MultiChannelDetection.load_model(str(tmp_path / "mc"), spark)
+        assert set(loaded.models) == set(hostile)
+        before = m.predict(df).orderBy("channel", "seq_id").collect()
+        after = loaded.predict(df).orderBy("channel", "seq_id").collect()
+        assert [tuple(r) for r in before] == [tuple(r) for r in after]
 
 
 def test_exact_percentile_distributed_matches_sql_percentile(spark):
@@ -608,19 +622,10 @@ def test_fused_scoring_pass_matches_separate_passes(spark, case):
         assert -1 in scores.sizes and len(library) == 4
 
 
-def test_reducing_fit_scores_the_final_library_once(spark, monkeypatch):
-    """A fit whose first reduction step keeps every cluster reuses that
-    step's scoring pass for its thresholds: two scoring calls (SLD
-    features + the step), and a bounded number of Spark jobs."""
+def _fit_jobs(spark, model, df) -> int:
+    """Spark jobs one ``model.fit(df)`` runs (its own job group)."""
     import uuid
 
-    import patternly_spark.detection as det
-
-    calls = []
-    real = det.score_sequences
-    monkeypatch.setattr(det, "score_sequences", lambda *a, **kw: calls.append(1) or real(*a, **kw))
-    df = _seq_df(spark, [(MACHINE_A, 100, 21), (MACHINE_B, 100, 22)], length=100)
-    model = AnomalyDetection(spark, n_clusters=2, quantize=False, reduce_clusters=True, eps=0.2)
     sc = spark.sparkContext
     group = f"fit-{uuid.uuid4().hex}"
     prev = sc.getLocalProperty("spark.jobGroup.id"), sc.getLocalProperty("spark.job.description")
@@ -630,7 +635,23 @@ def test_reducing_fit_scores_the_final_library_once(spark, monkeypatch):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", prev[0])
         sc.setLocalProperty("spark.job.description", prev[1])
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_reducing_fit_scores_the_final_library_once(spark, monkeypatch):
+    """On the Spark path, a fit whose first reduction step keeps every
+    cluster reuses that step's scoring pass for its thresholds: two
+    scoring calls (SLD features + the step), and a bounded number of
+    Spark jobs."""
+    import patternly_spark.detection as det
+
+    monkeypatch.setattr(det, "FIT_LOCAL_BYTES", 0)  # the Spark path
+    calls = []
+    real = det.score_sequences
+    monkeypatch.setattr(det, "score_sequences", lambda *a, **kw: calls.append(1) or real(*a, **kw))
+    df = _seq_df(spark, [(MACHINE_A, 100, 21), (MACHINE_B, 100, 22)], length=100)
+    model = AnomalyDetection(spark, n_clusters=2, quantize=False, reduce_clusters=True, eps=0.2)
+    jobs = _fit_jobs(spark, model, df)
     model._sld_cache.unpersist()
     model.quantized_df.unpersist()
     assert model.n_clusters == 2
@@ -662,7 +683,7 @@ def _reference_predict(seq_df, library, bounds):
 
 
 @pytest.mark.parametrize("bounds", ["fitted", "inf_nan"])
-def test_predict_matches_shuffle_reduction(spark, bounds):
+def test_predict_matches_shuffle_reduction(spark, bounds, fit_paths):
     """The single-pass verdicts equal the old score + groupBy reduction,
     with sequences that are inf under every PFSA (symbol 2 on a binary
     alphabet, and an empty one), exact llk ties (two copies of one PFSA,
@@ -672,33 +693,34 @@ def test_predict_matches_shuffle_reduction(spark, bounds):
         [(1000, [0, 2, 1]), (1001, []), (1002, [1, 1, 0])], "seq_id long, symbols array<int>"
     )
     df = df.unionByName(extra)
-    model = AnomalyDetection(spark, n_clusters=2, quantize=False, reduce_clusters=False, eps=0.2)
-    model.fit(df.filter("seq_id < 1000"))
-    twin = PFSA.from_dict({**model.library[0].to_dict(), "pfsa_id": 2})
-    model.library = [twin] + model.library
-    model.pfsa_llk_means = np.concatenate([[model.pfsa_llk_means[0]], model.pfsa_llk_means])
-    model.pfsa_llk_stds = np.concatenate([[model.pfsa_llk_stds[0]], model.pfsa_llk_stds])
-    if bounds == "inf_nan":
-        model.pfsa_llk_means[1], model.pfsa_llk_stds[2] = np.inf, np.nan
-    limits = model.pfsa_llk_means + model.pfsa_llk_stds * model.anomaly_sensitivity
+    for _ in fit_paths:
+        model = AnomalyDetection(spark, n_clusters=2, quantize=False, reduce_clusters=False, eps=0.2)
+        model.fit(df.filter("seq_id < 1000"))
+        twin = PFSA.from_dict({**model.library[0].to_dict(), "pfsa_id": 2})
+        model.library = [twin] + model.library
+        model.pfsa_llk_means = np.concatenate([[model.pfsa_llk_means[0]], model.pfsa_llk_means])
+        model.pfsa_llk_stds = np.concatenate([[model.pfsa_llk_stds[0]], model.pfsa_llk_stds])
+        if bounds == "inf_nan":
+            model.pfsa_llk_means[1], model.pfsa_llk_stds[2] = np.inf, np.nan
+        limits = model.pfsa_llk_means + model.pfsa_llk_stds * model.anomaly_sensitivity
 
-    got = model.predict(df).toPandas().sort_values("seq_id").reset_index(drop=True)
-    want = _reference_predict(model._quantize(df), model.library, limits).toPandas()
-    want = want.sort_values("seq_id").reset_index(drop=True)
-    assert len(got) == df.count()
-    assert got["seq_id"].tolist() == want["seq_id"].tolist()
-    assert got["anomaly"].tolist() == want["anomaly"].tolist()
-    assert got["closest_match"].tolist() == want["closest_match"].tolist()
-    inf_rows = got[got.seq_id.isin([1000, 1001])]
-    assert inf_rows["closest_match"].tolist() == [0, 0]
-    if bounds == "inf_nan":
-        assert not got["anomaly"].any()
-    else:
-        assert inf_rows["anomaly"].all()
-    model.quantized_df.unpersist()
+        got = model.predict(df).toPandas().sort_values("seq_id").reset_index(drop=True)
+        want = _reference_predict(model._quantize(df), model.library, limits).toPandas()
+        want = want.sort_values("seq_id").reset_index(drop=True)
+        assert len(got) == df.count()
+        assert got["seq_id"].tolist() == want["seq_id"].tolist()
+        assert got["anomaly"].tolist() == want["anomaly"].tolist()
+        assert got["closest_match"].tolist() == want["closest_match"].tolist()
+        inf_rows = got[got.seq_id.isin([1000, 1001])]
+        assert inf_rows["closest_match"].tolist() == [0, 0]
+        if bounds == "inf_nan":
+            assert not got["anomaly"].any()
+        else:
+            assert inf_rows["anomaly"].all()
+        model.quantized_df.unpersist()
 
 
-def test_fit_leaves_one_cached_relation(spark):
+def test_fit_leaves_one_cached_relation(spark, fit_paths):
     """A fit keeps only its quantized_df cached (the SLD features are
     released before it returns), and a refit releases the previous one."""
     df = _seq_df(spark, [(MACHINE_A, 40, 41), (MACHINE_B, 40, 42)], length=60)
@@ -707,14 +729,136 @@ def test_fit_leaves_one_cached_relation(spark):
     def cached() -> int:
         return jsc.getPersistentRDDs().size()
 
-    model = AnomalyDetection(spark, n_clusters=2, quantize=False, eps=0.2)
-    before = cached()
-    model.fit(df)
-    model.predict().count()  # materializes quantized_df
-    after_fit = cached()
-    model.fit(df)
-    model.predict().count()
-    after_refit = cached()
+    for _ in fit_paths:
+        model = AnomalyDetection(spark, n_clusters=2, quantize=False, eps=0.2)
+        before = cached()
+        model.fit(df)
+        model.predict().count()  # materializes quantized_df
+        after_fit = cached()
+        model.fit(df)
+        model.predict().count()
+        after_refit = cached()
+        model.quantized_df.unpersist()
+        assert after_fit == before + 1
+        assert after_refit == after_fit
+
+
+def test_driver_fit_jobs_bound(spark, monkeypatch):
+    """A driver-sized KMeans fit collects its training set once and runs
+    no scoring pass and no GenESeSS job: its jobs are the collect, KMeans
+    and the label collect."""
+    import patternly_spark.detection as det
+
+    calls = []
+    real = det.score_sequences
+    monkeypatch.setattr(det, "score_sequences", lambda *a, **kw: calls.append(1) or real(*a, **kw))
+    df = _seq_df(spark, [(MACHINE_A, 100, 21), (MACHINE_B, 100, 22)], length=100)
+    model = AnomalyDetection(spark, n_clusters=2, quantize=False, reduce_clusters=True, eps=0.2)
+    jobs = _fit_jobs(spark, model, df)
+    model._sld_cache.unpersist()
     model.quantized_df.unpersist()
-    assert after_fit == before + 1
-    assert after_refit == after_fit
+    assert model.n_clusters == 2
+    assert calls == []
+    # measured with the tests' session (4 cores, 8 shuffle partitions):
+    # 17 jobs, where the Spark path runs 25
+    assert jobs <= 18, jobs
+
+
+def _regime_values(n_per: int, length: int, seed: int):
+    """Continuous series from three 3-symbol regimes (sticky, forward-
+    and backward-cyclic walks; the state is the last symbol), level =
+    symbol + Gaussian noise, regimes interleaved by seq_id, equal sizes."""
+    connx = np.tile(np.arange(3), (3, 1))
+    regimes = []
+    for step in (0, 1, 2):
+        pit = np.full((3, 3), 0.1)
+        pit[np.arange(3), (np.arange(3) + step) % 3] = 0.8
+        regimes.append(PFSA(pitilde=pit, connx=connx))
+    rng = np.random.default_rng(seed)
+    walks = [simulate(m, length, n_per, seed=seed + i) for i, m in enumerate(regimes)]
+    rows = []
+    for i in range(n_per):
+        for r in range(3):
+            sym = np.asarray(walks[r][i], dtype=float)
+            rows.append((3 * i + r, (sym + rng.normal(0.0, 0.2, length)).tolist()))
+    return rows
+
+
+def test_driver_fit_is_partition_invariant(spark):
+    """Below the gate a KMeans fit reads one seq_id-ordered slice, so its
+    labels, library and thresholds do not depend on the shuffle
+    partitions or on the input's partitioning (equal-size clusters used
+    to swap ids with either)."""
+    from patternly_spark.plans import tuned_shuffle
+
+    df = spark.createDataFrame(_regime_values(100, 200, 1), "seq_id long, values array<double>")
+
+    def fit(frame):
+        m = AnomalyDetection(spark, n_clusters=3, quantize=True, quantize_type="complex", n_symbols=3)
+        m.fit(frame)
+        labels = m.quantized_df.orderBy("seq_id").toPandas()["cluster"].tolist()
+        out = (labels, [x.to_dict() for x in m.library], m.pfsa_llk_means.tolist(), m.pfsa_llk_stds.tolist())
+        m.quantized_df.unpersist()
+        return out
+
+    with tuned_shuffle(spark, 8):
+        first = fit(df)
+    with tuned_shuffle(spark, 32):
+        assert fit(df) == first
+    assert fit(df.repartition(3)) == first
+    assert fit(df.repartition(4)) == first
+    assert sorted(np.bincount(first[0]).tolist()) == [100, 100, 100]
+
+
+@pytest.mark.parametrize("case", ["partition_3", "noise", "single", "complex_detrend"])
+def test_driver_fit_matches_spark_fit(spark, monkeypatch, case):
+    """With a clustering that does not depend on partitioning, the driver
+    path fits what the Spark path fits: the same library, cluster count
+    and sizes, thresholds to rounding, and the same verdicts."""
+    from pyspark.sql import functions as F
+
+    import patternly_spark.detection as det
+
+    kw = dict(quantize=False, anomaly_sensitivity=3, eps=0.2)
+    if case == "partition_3":  # one machine: reduces 3 -> 1
+        df = _seq_df(spark, [(MACHINE_A, 200, 7)], length=60)
+        kw.update(n_clusters=3, clustering_alg=lambda feats, n: feats.select(
+            "seq_id", (F.col("seq_id") % n).cast("int").alias("cluster")))
+    elif case == "noise":
+        df = _seq_df(spark, [(MACHINE_A, 30, 1), (MACHINE_B, 30, 2), (MACHINE_C, 20, 3)], length=150)
+        kw.update(n_clusters=3, clustering_alg=lambda feats, n: feats.select(
+            "seq_id", F.when(F.col("seq_id") % 7 == 0, -1).when(F.col("seq_id") < 30, 0).when(
+                F.col("seq_id") < 60, 1).otherwise(2).cast("int").alias("cluster")))
+    elif case == "single":
+        df = _seq_df(spark, [(MACHINE_A, 120, 1), (MACHINE_C, 5, 2)])
+        kw.update(n_clusters=1, anomaly_sensitivity=4)
+    else:
+        rng = np.random.default_rng(7)
+        rows = [(sid, np.cumsum(rng.normal(0, 1.0, 150)).tolist()) for sid in range(60)]
+        rows += [(sid, np.cumsum(4.0 * (-1.0) ** np.arange(150) + rng.normal(0, 0.5, 150)).tolist())
+                 for sid in range(60, 64)]
+        df = spark.createDataFrame(rows, "seq_id long, values array<double>")
+        kw.update(n_clusters=2, reduce_clusters=False, quantize=True, quantize_type="complex", detrend=True,
+                  clustering_alg=lambda feats, n: feats.select("seq_id", (F.col("seq_id") % n).cast("int").alias("cluster")))
+
+    def fit():
+        m = AnomalyDetection(spark, **kw).fit(df)
+        preds = m.predict().toPandas().sort_values("seq_id", ignore_index=True)
+        m.quantized_df.unpersist()
+        return m, preds
+
+    driver, d_preds = fit()
+    monkeypatch.setattr(det, "FIT_LOCAL_BYTES", 0)
+    spark_fit, s_preds = fit()
+    assert [m.to_dict() for m in driver.library] == [m.to_dict() for m in spark_fit.library]
+    assert driver.n_clusters == spark_fit.n_clusters
+    assert driver.cluster_counts == spark_fit.cluster_counts
+    np.testing.assert_allclose(driver.pfsa_llk_means, spark_fit.pfsa_llk_means, rtol=1e-12, atol=0)
+    np.testing.assert_allclose(driver.pfsa_llk_stds, spark_fit.pfsa_llk_stds, rtol=1e-12, atol=0)
+    assert d_preds["seq_id"].tolist() == s_preds["seq_id"].tolist()
+    assert d_preds["anomaly"].tolist() == s_preds["anomaly"].tolist()
+    assert d_preds["closest_match"].tolist() == s_preds["closest_match"].tolist()
+    if case == "partition_3":
+        assert driver.n_clusters == 1
+    if case == "noise":
+        assert len(driver.library) == 4

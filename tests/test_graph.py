@@ -883,6 +883,39 @@ def test_graph_round_loops_size_from_their_pin_count(spark, monkeypatch):
     assert jobs == {"core_numbers": 7, "bfs_hops": 7}, jobs
 
 
+def test_pinned_round_loops_size_from_their_pin_count(spark):
+    """``kcore``, ``minimum_spanning_forest``,
+    ``personalized_pagerank_units`` and ``neighborhood_function`` count
+    their pinned edges in the pin's own job and size their rounds from
+    that count.  On a list-built input (no plan size estimate) each runs
+    one job fewer than when a second count sized the rounds (7, 14, 5
+    and 6 jobs here, AQE off)."""
+    from patternly_spark.operators import graph
+
+    rng = np.random.default_rng(4)
+    pairs = np.floor(np.exp(rng.random((300, 2)) * np.log(200))).astype(int)
+    edges = spark.createDataFrame([(int(a), int(b)) for a, b in pairs], "src long, dst long")
+    weighted = spark.createDataFrame(
+        [(int(a), int(b), float((7 * a + b) % 11)) for a, b in pairs], "src long, dst long, weight double"
+    )
+    seeds = spark.createDataFrame([(1,), (2,)], "node long")
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        jobs = _jobs_per_operator(spark, {
+            "kcore": lambda: graph.kcore(edges, 2),
+            "minimum_spanning_forest": lambda: graph.minimum_spanning_forest(weighted),
+            "personalized_pagerank_units": lambda: graph.personalized_pagerank_units(edges, seeds, iterations=2),
+            "neighborhood_function": lambda: graph.neighborhood_function(edges, rounds=2),
+        }, "graph-pin-count")
+    finally:
+        spark.conf.set(key, prev)
+    assert jobs == {
+        "kcore": 6, "minimum_spanning_forest": 13, "personalized_pagerank_units": 4, "neighborhood_function": 5,
+    }, jobs
+
+
 def _jobs_per_operator(spark, ops, tag):
     """name -> Spark jobs run by ``ops[name]()`` with its result
     collected (job groups named by ``tag``, unique per caller)."""
