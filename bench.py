@@ -607,6 +607,30 @@ def maybe_strict_exit(regressions: dict) -> None:
         sys.exit(1)
 
 
+def effective_settings(spark) -> dict:
+    """The settings a run actually used, read back from the live session
+    (not from the environment that asked for them), and whether the
+    Python workers import pyspark from a zip archive, asked of a worker
+    with one one-task job."""
+    import platform
+
+    import pyspark
+
+    sc, conf = spark.sparkContext, spark.conf
+    worker_pyspark = sc.parallelize([0], 1).map(lambda _: __import__("pyspark").__file__).first()
+    return {
+        "python": platform.python_version(),
+        "pyspark": pyspark.__version__,
+        "master": sc.master,
+        "cores": sc.defaultParallelism,
+        "shuffle_partitions": int(conf.get("spark.sql.shuffle.partitions")),
+        "driver_memory": sc.getConf().get("spark.driver.memory", "1g"),  # Spark's default
+        "aqe": conf.get("spark.sql.adaptive.enabled") == "true",
+        "arrow_batch_records": int(conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")),
+        "workers_pyspark_zip": ".zip" in worker_pyspark,
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
@@ -681,6 +705,7 @@ def main() -> None:
         regressions = find_regressions(timings, pins, retime=_retime)
         out["host_median_x"] = round(run_median_x(timings, pins), 3)
     out["regressions"] = regressions
+    out["settings"] = effective_settings(spark)
 
     # The driver's harness keeps only the LAST 2000 bytes of stdout and
     # tries to parse the final line as JSON — a 257-entry query map

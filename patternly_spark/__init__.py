@@ -9,7 +9,8 @@ numpy inside Arrow-batched pandas UDFs.
 
 Layout
 ------
-- ``session``    : SparkSession factory with deterministic, scale-aware conf
+- ``session``    : SparkSession factory with deterministic, scale-aware conf;
+                   the worker-side zip-directory guard applied below
 - ``pfsa``       : PFSA model type, text codec, log-likelihood, simulator,
                    GenESeSS structure/parameter inference
 - ``functions``  : quantization, stream windowing, text analytics, vector math
@@ -23,6 +24,8 @@ Layout
 - ``streaming``  : Structured Streaming continuous detector
 """
 
+from pyspark.core.files import SparkFiles
+
 from patternly_spark.pfsa.model import PFSA
 from patternly_spark.analysis import embed_library
 from patternly_spark.plans import assert_plan, plan_audit
@@ -32,6 +35,12 @@ from patternly_spark.detection import (
     ContinuousStreamingDetection,
     MultiChannelDetection,
 )
+from patternly_spark.session import guard_zip_invalidation
+
+# every UDF closure imports the package in its Python worker; the driver
+# keeps the interpreter's own zipimport (see patternly_spark.session)
+if SparkFiles._is_running_on_worker:
+    guard_zip_invalidation()
 
 __version__ = "0.1.0"
 

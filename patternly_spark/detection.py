@@ -591,8 +591,9 @@ class AnomalyDetection:
         # llk columns in pfsa_id order, so the first minimum is the lowest id
         order = np.argsort([m.pfsa_id for m in self.library], kind="stable")
         library = [self.library[i] for i in order]
-        bounds = (self.pfsa_llk_means + self.pfsa_llk_stds * self.anomaly_sensitivity)[order]
         ids = np.array([m.pfsa_id for m in library], dtype=np.int32)
+        # the stats are indexed by cluster label == pfsa_id (noise -1 from the end)
+        bounds = (self.pfsa_llk_means + self.pfsa_llk_stds * self.anomaly_sensitivity)[ids]
 
         def emit(pdf: pd.DataFrame, llk: np.ndarray) -> pd.DataFrame:
             return pd.DataFrame(

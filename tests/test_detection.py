@@ -622,6 +622,39 @@ def test_fused_scoring_pass_matches_separate_passes(spark, case):
         assert -1 in scores.sizes and len(library) == 4
 
 
+def test_predict_bounds_follow_pfsa_id_with_noise_label(spark, fit_paths):
+    """A clustering that emits noise -1 gives a library sorted [-1, 0, 1,
+    2] whose stats are indexed by label (noise last): each PFSA's verdict
+    uses its own bound, as the scalar ``llk_one`` reference does."""
+    from pyspark.sql import functions as F
+
+    from patternly_spark.pfsa.llk import llk_one
+
+    df = _seq_df(spark, [(MACHINE_A, 30, 1), (MACHINE_B, 30, 2), (MACHINE_C, 20, 3)], length=150)
+    for _ in fit_paths:
+        model = AnomalyDetection(
+            spark, n_clusters=3, quantize=False, reduce_clusters=False, anomaly_sensitivity=0, eps=0.2,
+            clustering_alg=lambda feats, n: feats.select("seq_id", F.when(F.col("seq_id") % 7 == 0, -1).when(
+                F.col("seq_id") < 30, 0).when(F.col("seq_id") < 60, 1).otherwise(2).cast("int").alias("cluster")))
+        model.fit(df)
+        assert [m.pfsa_id for m in model.library] == [-1, 0, 1, 2]
+        got = model.predict().toPandas().set_index("seq_id")
+        seqs = model.quantized_df.toPandas()
+        model.quantized_df.unpersist()
+        bound = model.pfsa_llk_means + model.pfsa_llk_stds * model.anomaly_sensitivity
+        own = np.array([bound[m.pfsa_id] for m in model.library])
+        checked = 0
+        for sid, syms in zip(seqs["seq_id"], seqs["symbols"]):
+            llk = np.array([llk_one(np.asarray(syms), m) for m in model.library])
+            if np.any(np.abs(llk - own) < 1e-9):
+                continue
+            checked += 1
+            assert bool(got.loc[sid, "anomaly"]) == bool(np.all(llk > own)), sid
+            assert int(got.loc[sid, "closest_match"]) == model.library[int(np.argmin(llk))].pfsa_id, sid
+        assert checked >= 75
+        assert got["anomaly"].any() and not got["anomaly"].all()
+
+
 def _fit_jobs(spark, model, df) -> int:
     """Spark jobs one ``model.fit(df)`` runs (its own job group)."""
     import uuid
@@ -698,11 +731,13 @@ def test_predict_matches_shuffle_reduction(spark, bounds, fit_paths):
         model.fit(df.filter("seq_id < 1000"))
         twin = PFSA.from_dict({**model.library[0].to_dict(), "pfsa_id": 2})
         model.library = [twin] + model.library
-        model.pfsa_llk_means = np.concatenate([[model.pfsa_llk_means[0]], model.pfsa_llk_means])
-        model.pfsa_llk_stds = np.concatenate([[model.pfsa_llk_stds[0]], model.pfsa_llk_stds])
+        # the stats are indexed by pfsa_id, so the twin's go last
+        model.pfsa_llk_means = np.append(model.pfsa_llk_means, model.pfsa_llk_means[0])
+        model.pfsa_llk_stds = np.append(model.pfsa_llk_stds, model.pfsa_llk_stds[0])
         if bounds == "inf_nan":
-            model.pfsa_llk_means[1], model.pfsa_llk_stds[2] = np.inf, np.nan
+            model.pfsa_llk_means[0], model.pfsa_llk_stds[1] = np.inf, np.nan
         limits = model.pfsa_llk_means + model.pfsa_llk_stds * model.anomaly_sensitivity
+        limits = limits[[m.pfsa_id for m in model.library]]
 
         got = model.predict(df).toPandas().sort_values("seq_id").reset_index(drop=True)
         want = _reference_predict(model._quantize(df), model.library, limits).toPandas()

@@ -624,6 +624,23 @@ def test_bench_compact_line_fits_and_parses():
     json.loads(line2)
 
 
+def test_bench_records_effective_settings_outside_compact_line(spark):
+    """bench.py's full JSON carries the settings read back from the live
+    session; the compact last line leaves them out."""
+    import json
+
+    import bench
+
+    settings = bench.effective_settings(spark)
+    assert settings["shuffle_partitions"] == int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert settings["cores"] == spark.sparkContext.defaultParallelism
+    assert settings["aqe"] is True and settings["arrow_batch_records"] == 10000
+    assert isinstance(settings["workers_pyspark_zip"], bool)
+    out = {"metric": "m", "value": 1.0, "unit": "sec", "sf": 0.1, "queries": {}, "settings": settings}
+    assert "settings" not in json.loads(bench.compact_line(out))
+    json.dumps(out)
+
+
 # ---------------------------------------------------------------------------
 # C110-C112: delta-method ratio CI, post-stratification, mSPRT
 # ---------------------------------------------------------------------------

@@ -2,6 +2,9 @@
 scale mandate is that filters reach the parquet scan, small sides
 broadcast, and hot paths stay inside WholeStageCodegen — assert it."""
 
+import os
+import sys
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -280,6 +283,107 @@ def test_session_applies_wellformed_settings(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_UI", "0")
     conf = session.get_spark()
     assert conf["master"] == "local[*]" and conf["spark.ui.enabled"] == "false"
+
+
+_ZIP_GUARD_PROBE = """
+import importlib, sys, zipfile, zipimport
+
+from patternly_spark.session import guard_zip_invalidation
+
+archive = sys.argv[1]
+
+
+def write(modules):
+    with zipfile.ZipFile(archive, "w") as z:
+        for name, src in modules.items():
+            z.writestr(name + ".py", src)
+
+
+reads = []
+read_directory = zipimport._read_directory
+zipimport._read_directory = lambda path: reads.append(path) or read_directory(path)
+write({"zg_first": "VALUE = 1"})
+sys.path.insert(0, archive)
+guard_zip_invalidation()
+guard_zip_invalidation()
+wrapped = zipimport.zipimporter.invalidate_caches.__wrapped__
+assert not hasattr(wrapped, "__wrapped__"), "applied twice"
+import zg_first
+
+assert zg_first.VALUE == 1
+assert isinstance(sys.path_importer_cache[archive], zipimport.zipimporter)
+importlib.invalidate_caches()  # the first call reads and stamps
+n = len(reads)
+importlib.invalidate_caches()
+importlib.invalidate_caches()
+assert len(reads) == n, (n, reads)
+write({"zg_first": "VALUE = 2", "zg_second": "VALUE = 3"})
+importlib.invalidate_caches()
+assert len(reads) == n + 1, (n, reads)
+import zg_second
+
+assert zg_second.VALUE == 3
+assert importlib.reload(zg_first).VALUE == 2
+"""
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13), reason="3.13+ re-reads lazily; the guard does nothing")
+def test_zip_guard_rereads_only_a_changed_archive(tmp_path):
+    """``guard_zip_invalidation`` in a fresh interpreter: repeated
+    ``importlib.invalidate_caches()`` calls do not re-read an unchanged
+    archive's directory, and a rewritten archive is re-read, so its new
+    module imports and the old module's new source loads."""
+    import subprocess
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", _ZIP_GUARD_PROBE, str(tmp_path / "mods.zip")],
+        cwd=repo, capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+
+
+def test_warm_worker_skips_zip_directory_rereads(spark):
+    """A Python worker that has imported the package re-reads no zip
+    directory when a task starts: ``importlib.invalidate_caches()``, which
+    PySpark calls at the start of every task, costs no ``_read_directory``
+    call once the archive is stamped.  The driver stays unpatched."""
+    import zipimport
+
+    import pandas as pd
+
+    from patternly_spark.pfsa.llk import llk_one
+
+    def warm(batches):
+        llk_one  # unpickling this closure imports patternly_spark
+        yield from batches
+
+    # Spark hands idle workers out first-in first-out, so 32 tasks reach
+    # every idle worker of the session (up to 32) at least once
+    spark.range(0, 32, numPartitions=32).mapInPandas(warm, "id long").collect()
+
+    def count_reads(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        for _ in batches:
+            pass
+        zipped = sum(isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values())
+        reads = []
+        read_directory = zipimport._read_directory
+        zipimport._read_directory = lambda path: reads.append(path) or read_directory(path)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read_directory
+        yield pd.DataFrame({"zipped": [zipped], "reads": [len(reads)]})
+
+    got = spark.range(0, 4, numPartitions=4).mapInPandas(count_reads, "zipped long, reads long").toPandas()
+    assert not hasattr(zipimport.zipimporter.invalidate_caches, "__wrapped__")
+    if not got["zipped"].any():
+        pytest.skip("the workers import pyspark from a directory, not from a zip: nothing to guard")
+    assert got["reads"].tolist() == [0, 0, 0, 0]
 
 
 def test_events_read_on_vanilla_session_conf(spark, sf_dir):
