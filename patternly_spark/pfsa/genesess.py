@@ -15,51 +15,158 @@ reference at ``patternly/detection.py:372-393``) in pure numpy:
           (state, symbol) visits; rows normalized (light Laplace smoothing
           so fitted models assign nonzero mass to every symbol).
 
+Two kernels do all the counting.  The derivative heap is a table of n-gram
+follower counts: ``ngram_counts`` builds one (k**l, k) table per context
+length l <= L, with rolling base-k codes and one ``bincount`` per length.
+Step 3 is ``walk_counts``: every sequence walks the fitted structure, all
+of a block in lockstep.  Both run over blocks of whole sequences, so their
+temporaries stay bounded, and their counts add up across blocks and Spark
+partitions.  Every fit path is the two kernels plus one finish (``_fit``):
+
+  * ``genesess`` runs them in one process: on the driver (the driver-sized
+    fit, the streaming mints) and in ``fit_cluster_pfsas``, which fits one
+    PFSA per cluster with ``applyInPandas`` over ``groupBy('cluster')``
+    (SURVEY §4.3.2);
+  * ``genesess_distributed`` runs each kernel as one ``mapInPandas`` pass
+    whose partitions sum it over their Arrow batches; the driver sums the
+    partitions' arrays.
+
 Validation is by simulation-recovery (SURVEY §5.2 — the M2.cfg pattern),
 not bit-parity with the closed-source zedsuite binary.
-
-Spark surface: ``fit_cluster_pfsas`` fits one PFSA per cluster with
-``applyInPandas`` over ``groupBy('cluster')`` — model fits are per-group
-and each cluster's windowed data fits in executor memory (SURVEY §4.3.2).
 """
 
 from __future__ import annotations
 
 import math
-from typing import Iterable, Sequence
+from itertools import product
+from typing import Callable, Iterable, Iterator, Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
 
+from patternly_spark.pfsa.llk import _pack
 from patternly_spark.pfsa.model import PFSA
 
 _MAX_STATES = 64
 _MIN_COUNT = 5
+_MAX_CONTEXTS = 4096  # bounds the n-gram space: k**L contexts at most
+_MAX_ALPHABET = 256  # patterns are bytes
+_BLOCK_SYMBOLS = 1 << 15  # padded symbols per kernel block
 
 
-def _follower_counts(seqs_b: list[bytes], pattern: bytes, k: int) -> np.ndarray:
-    """Counts of the symbol immediately following each occurrence of
-    ``pattern`` across all sequences (no cross-sequence matches)."""
-    counts = np.zeros(k, dtype=np.int64)
-    plen = len(pattern)
-    for sb in seqs_b:
-        if plen == 0:
-            # empty pattern: every position's symbol counts
-            arr = np.frombuffer(sb, dtype=np.uint8)
-            counts += np.bincount(arr, minlength=k)[:k]
+def _context_length(k: int, eps: float) -> int:
+    """L = ceil(log_k 1/eps) (the ms.tex GenL line), capped at 8 (longer
+    prefixes add nothing at eps >= 1e-5) and at k**L <= _MAX_CONTEXTS."""
+    if k > _MAX_ALPHABET:
+        raise ValueError(f"genesess: at most {_MAX_ALPHABET} symbols, got alphabet_size {k}")
+    L = min(max(1, math.ceil(math.log(1.0 / max(eps, 1e-9), k))), 8)
+    while L > 1 and k**L > _MAX_CONTEXTS:
+        L -= 1
+    return L
+
+
+def _blocks(seqs: list) -> Iterator[list]:
+    """The sequences in ascending length, cut into runs whose padded area
+    (count x longest) stays within _BLOCK_SYMBOLS; a longer sequence is a
+    run of its own.  Counts summed over the runs do not depend on order."""
+    lens = np.fromiter(map(len, seqs), dtype=np.int64, count=len(seqs))
+    block: list = []
+    for i in np.argsort(lens, kind="stable"):
+        if block and (len(block) + 1) * lens[i] > _BLOCK_SYMBOLS:
+            yield block
+            block = []
+        block.append(seqs[i])
+    if block:
+        yield block
+
+
+def ngram_counts(seqs: Sequence[Sequence[int]], k: int, L: int) -> list[np.ndarray]:
+    """Follower counts of every context of length l = 0..L: row code(y),
+    column s of the (k**l, k) int64 table l counts the positions inside one
+    sequence where the l symbols y are followed by s.  code(y) reads y as a
+    base-k number, first symbol most significant.  Raises ValueError for a
+    symbol outside [0, k)."""
+    tables = [np.zeros(k ** (l + 1), dtype=np.int64) for l in range(L + 1)]
+    for block in _blocks(list(seqs)):
+        lens = np.fromiter(map(len, block), dtype=np.int64, count=len(block))
+        x = np.concatenate(block).astype(np.int64)
+        if x.size == 0:
             continue
-        start = 0
-        end = len(sb)
-        while True:
-            i = sb.find(pattern, start)
-            if i < 0:
-                break
-            j = i + plen
-            if j < end:
-                counts[sb[j]] += 1
-            start = i + 1
-    return counts
+        lo, hi = int(x.min()), int(x.max())
+        if lo < 0 or hi >= k:
+            raise ValueError(f"genesess: symbols must be in [0, {k}), got {lo if lo < 0 else hi}")
+        # code = (context of length l, next symbol) as one base-k number;
+        # it is garbage where the context would start before its sequence,
+        # i.e. at a sequence's first l positions, which ``valid`` drops
+        starts = np.cumsum(lens) - lens
+        valid = np.ones(x.size, dtype=bool)
+        code = x.copy()
+        tables[0] += np.bincount(code, minlength=k)
+        for l in range(1, L + 1):
+            code[l:] += x[:-l] * k**l
+            valid[starts[lens >= l] + l - 1] = False
+            tables[l] += np.bincount(code[valid], minlength=k ** (l + 1))
+    return [t.reshape(-1, k) for t in tables]
+
+
+def walk_counts(seqs: Sequence[Sequence[int]], connx: np.ndarray) -> np.ndarray:
+    """Step 3's (m, k) int64 (state, symbol) visit counts: every sequence
+    walks ``connx`` from state 0, all of a block in lockstep.  Symbols must
+    lie in [0, k), as ``ngram_counts`` checks."""
+    m, k = connx.shape
+    # flat (state, symbol) -> next state's row, over k + 1 columns: the pad
+    # past each sequence's end is column k, a self-loop
+    width = k + 1
+    nxt = np.hstack([connx, np.arange(m)[:, None]]).astype(np.int64).ravel() * width
+    counts = np.zeros(m * width, dtype=np.int64)
+    for block in _blocks(list(seqs)):
+        # row t: the block's symbols at time t, turned in place into their
+        # flat (state, symbol) index
+        at = np.ascontiguousarray(_pack(block, k)[0].T, dtype=np.int64)
+        row = np.zeros(len(block), dtype=np.int64)
+        for step in at:
+            step += row
+            row = nxt[step]
+        counts += np.bincount(at.ravel(), minlength=m * width)
+    return counts.reshape(m, width)[:, :k]
+
+
+def _fit(
+    tables: list[np.ndarray],
+    walk: Callable[[np.ndarray], np.ndarray],
+    k: int,
+    eps: float,
+    pfsa_id: int,
+    smoothing: float,
+) -> PFSA:
+    """Steps 1-3 from the ``ngram_counts`` tables; ``walk(connx)`` returns
+    the Step 3 ``walk_counts`` of the data."""
+    t0 = tables[0][0]
+    total_len = int(t0.sum())
+    if total_len == 0:
+        raise ValueError("genesess: no non-empty sequences")
+    sym_frq = t0 / total_len
+
+    def get_counts(pattern: bytes) -> np.ndarray:
+        code = 0
+        for s in pattern:
+            code = code * k + s
+        return tables[len(pattern)][code]
+
+    x0, connx, kept_dists, degenerate = _structure_from_counts(
+        get_counts, k, eps, len(tables) - 1, sym_frq, total_len
+    )
+    if degenerate:
+        pit = ((sym_frq + 1e-12) / (sym_frq + 1e-12).sum()).reshape(1, k)
+        ann_err = 0.0
+    else:
+        counts = walk(connx)
+        pit = (counts + smoothing) / (counts + smoothing).sum(axis=1, keepdims=True)
+        ann_err = float(np.mean([np.max(np.abs(pit[q] - kd)) for q, kd in enumerate(kept_dists)]))
+    return PFSA(
+        pitilde=pit, connx=connx, pfsa_id=pfsa_id, ann_err=ann_err,
+        mrg_eps=eps, syn_str=list(x0), sym_frq=sym_frq,
+    )
 
 
 def _hull_vertices(points: np.ndarray, seed: int = 42) -> np.ndarray:
@@ -146,95 +253,38 @@ def genesess(
     smoothing: float = 0.5,
 ) -> PFSA:
     """Infer a PFSA from symbol sequences.  Deterministic given input order."""
-    seqs = []
-    for s in sequences:
-        if len(s) == 0:
-            continue
-        a = np.asarray(s)
-        # the byte-level n-gram machinery packs symbols into uint8; a larger
-        # alphabet would silently wrap modulo 256 and fit a wrong machine
-        if int(a.max()) > 255 or int(a.min()) < 0:
-            raise ValueError(
-                f"genesess: symbols must be in [0, 255], got range "
-                f"[{int(a.min())}, {int(a.max())}]"
-            )
-        seqs.append(a.astype(np.uint8))
-    if not seqs:
-        raise ValueError("genesess: no non-empty sequences")
-    k = alphabet_size if alphabet_size is not None else int(max(int(s.max()) for s in seqs)) + 1
-    k = max(k, 2)
-    seqs_b = [s.tobytes() for s in seqs]
-    total_len = sum(len(s) for s in seqs)
-
-    # global symbol frequencies (%SYM_FRQ)
-    sym_frq = np.zeros(k)
-    for s in seqs:
-        sym_frq += np.bincount(s, minlength=k)[:k]
-    sym_frq = sym_frq / max(sym_frq.sum(), 1)
-
-    get_counts = lambda p: _follower_counts(seqs_b, p, k)  # noqa: E731
-    x0, connx, kept_dists, degenerate = _structure_from_counts(
-        get_counts, k, eps, sym_frq, total_len
-    )
-    if degenerate:
-        pit = (sym_frq + 1e-12) / (sym_frq + 1e-12).sum()
-        return PFSA(
-            pitilde=pit.reshape(1, k), connx=connx, pfsa_id=pfsa_id,
-            ann_err=0.0, mrg_eps=eps, syn_str=list(x0), sym_frq=sym_frq,
-        )
-    m = connx.shape[0]
-
-    # ---- Step 3: transition probabilities by one counting pass ----------
-    counts = np.zeros((m, k), dtype=np.int64)
-    for s in seqs:
-        q = 0
-        for sigma in s:
-            counts[q, sigma] += 1
-            q = connx[q, sigma]
-    pit = (counts + smoothing) / (counts + smoothing).sum(axis=1, keepdims=True)
-
-    ann_err = float(np.mean([np.max(np.abs(pit[q] - kept_dists[q])) for q in range(m)]))
-    return PFSA(
-        pitilde=pit,
-        connx=connx,
-        pfsa_id=pfsa_id,
-        ann_err=ann_err,
-        mrg_eps=eps,
-        syn_str=list(x0),
-        sym_frq=sym_frq,
-    )
+    seqs = list(sequences)
+    if alphabet_size is None:
+        alphabet_size = max((int(np.max(s)) for s in seqs if len(s)), default=0) + 1
+    k = max(alphabet_size, 2)
+    tables = ngram_counts(seqs, k, _context_length(k, eps))
+    return _fit(tables, lambda connx: walk_counts(seqs, connx), k, eps, pfsa_id, smoothing)
 
 
-def _structure_from_counts(get_counts, k: int, eps: float, sym_frq: np.ndarray, total_len: int):
+def _structure_from_counts(get_counts, k: int, eps: float, L: int, sym_frq: np.ndarray, total_len: int):
     """Steps 1-2 of GenESeSS driven purely by a follower-count oracle
-    ``get_counts(pattern: bytes) -> np.ndarray(k)`` — shared by the
-    in-memory path (scan the sequence list) and the distributed path
-    (one Spark n-gram aggregation).  Returns (sync_string, connx,
-    per-state follower dists, degenerate_flag)."""
-    # ---- Step 1: derivative heap over subsequences of length <= L -------
-    L = max(1, math.ceil(math.log(1.0 / max(eps, 1e-9), k)))
-    L = min(L, 8)  # bound the n-gram space; longer prefixes add nothing at eps >= 1e-5
-    cand_patterns: list[bytes] = [b""]
-    for length in range(1, L + 1):
-        if k ** length > 4096:
-            break
-        from itertools import product
+    ``get_counts(pattern: bytes) -> np.ndarray(k)`` over patterns of
+    length <= L, a lookup in the ``ngram_counts`` tables.  Returns
+    (sync_string, connx, per-state follower dists, degenerate_flag)."""
 
+    def supported(length: int) -> list[tuple[bytes, np.ndarray, int]]:
+        # (pattern, follower dist, support) of each pattern of this length
+        # seen >= _MIN_COUNT times, in lexicographic order
+        out = []
         for tup in product(range(k), repeat=length):
-            cand_patterns.append(bytes(tup))
+            c = get_counts(bytes(tup))
+            tot = int(c.sum())
+            if tot >= _MIN_COUNT:
+                out.append((bytes(tup), c / tot, tot))
+        return out
 
-    pats: list[bytes] = []
-    dists: list[np.ndarray] = []
-    freqs: list[int] = []
-    for p in cand_patterns:
-        c = get_counts(p)
-        tot = int(c.sum())
-        if tot >= _MIN_COUNT:
-            pats.append(p)
-            dists.append(c / tot)
-            freqs.append(tot)
-    if not pats:
-        pats, dists, freqs = [b""], [sym_frq.copy()], [total_len]
+    by_length = [supported(length) for length in range(L + 1)]
+
+    # ---- Step 1: derivative heap over subsequences of length <= L -------
+    heap = [entry for level in by_length for entry in level]
+    if not heap:
+        heap = [(b"", sym_frq.copy(), total_len)]
+    pats, dists, freqs = zip(*heap)
 
     pts = np.vstack(dists)
     verts = _hull_vertices(pts)
@@ -252,33 +302,13 @@ def _structure_from_counts(get_counts, k: int, eps: float, sym_frq: np.ndarray, 
     # majority over context successors.  Unlike a greedy BFS over growing
     # sequence identifiers, this construction is total and keeps the graph
     # recurrent, so the strongly-connected restriction does not degenerate.
-    Lc = L
-    while Lc > 1 and k ** Lc > 4096:
-        Lc -= 1
-
-    def _context_stats(Lc: int):
-        ctxs: list[bytes] = []
-        cdists: list[np.ndarray] = []
-        ccounts: list[int] = []
-        from itertools import product as _product
-
-        for tup in _product(range(k), repeat=Lc):
-            p = bytes(tup)
-            c = get_counts(p)
-            tot = int(c.sum())
-            if tot >= _MIN_COUNT:
-                ctxs.append(p)
-                cdists.append(c / tot)
-                ccounts.append(tot)
-        return ctxs, cdists, ccounts
-
-    ctxs, cdists, ccounts = _context_stats(Lc)
-    while not ctxs and Lc > 1:
-        Lc -= 1
-        ctxs, cdists, ccounts = _context_stats(Lc)
-    if not ctxs:
+    # Without a supported length-L context, fall back to the longest
+    # length that has one.
+    Lc = next((length for length in range(L, 0, -1) if by_length[length]), 0)
+    if not Lc:
         # degenerate input: single uniform-ish state from global frequencies
         return x0, np.zeros((1, k), dtype=np.int32), [sym_frq.copy()], True
+    ctxs, cdists, ccounts = zip(*by_length[Lc])
 
     # greedy eps-clustering of contexts, seeded by the sync context's
     # cluster; order by descending support for determinism
@@ -325,17 +355,11 @@ def _structure_from_counts(get_counts, k: int, eps: float, sym_frq: np.ndarray, 
             else:
                 delta[(q, sigma)] = fallback
 
-    state_ids = [b"" for _ in range(n_states0)]
-    for y, q in ctx_state.items():
-        if not state_ids[q]:
-            state_ids[q] = y
-
     # ---- largest strongly-connected subgraph ----------------------------
-    n = len(state_ids)
-    adj: dict[int, set[int]] = {q: set() for q in range(n)}
+    adj: dict[int, set[int]] = {q: set() for q in range(n_states0)}
     for (q, _s), q2 in delta.items():
         adj[q].add(q2)
-    sccs = _tarjan_scc(n, adj)
+    sccs = _tarjan_scc(n_states0, adj)
     keep = max(sccs, key=len)
     keep_sorted = sorted(keep)
     remap = {old: new for new, old in enumerate(keep_sorted)}
@@ -357,17 +381,9 @@ def _structure_from_counts(get_counts, k: int, eps: float, sym_frq: np.ndarray, 
     return x0, connx, kept_dists, False
 
 
-_FIT_SCHEMA = T.StructType(
-    [
-        T.StructField("cluster", T.IntegerType(), False),
-        T.StructField("pfsa_id", T.IntegerType(), False),
-        T.StructField("ann_err", T.DoubleType(), True),
-        T.StructField("mrg_eps", T.DoubleType(), True),
-        T.StructField("syn_str", T.ArrayType(T.IntegerType()), True),
-        T.StructField("sym_frq", T.ArrayType(T.DoubleType()), True),
-        T.StructField("pitilde", T.ArrayType(T.ArrayType(T.DoubleType())), False),
-        T.StructField("connx", T.ArrayType(T.ArrayType(T.IntegerType())), False),
-    ]
+_FIT_SCHEMA = (
+    "cluster int not null, pfsa_id int not null, ann_err double, mrg_eps double, syn_str array<int>,"
+    " sym_frq array<double>, pitilde array<array<double>> not null, connx array<array<int>> not null"
 )
 
 
@@ -394,22 +410,38 @@ def fit_cluster_pfsas(
         pdf = pdf.sort_values(id_col)
         cluster = int(pdf[cluster_col].iloc[0])
         model = genesess(pdf[seq_col].tolist(), eps=eps, alphabet_size=alphabet_size, pfsa_id=cluster)
-        return pd.DataFrame(
-            [
-                {
-                    "cluster": cluster,
-                    "pfsa_id": cluster,
-                    "ann_err": model.ann_err,
-                    "mrg_eps": model.mrg_eps,
-                    "syn_str": model.syn_str,
-                    "sym_frq": model.sym_frq.tolist(),
-                    "pitilde": model.pitilde.tolist(),
-                    "connx": [[int(v) for v in row] for row in model.connx],
-                }
-            ]
-        )
+        return pd.DataFrame([{"cluster": cluster, **model.to_dict()}])
 
     return seq_df.select(cluster_col, id_col, seq_col).groupBy(cluster_col).applyInPandas(fit, schema=_FIT_SCHEMA)
+
+
+def _partition_sums(
+    seq_df: DataFrame, seq_col: str, size: int, kernel: Callable[[list], np.ndarray]
+) -> np.ndarray:
+    """Sum of ``kernel(sequences)``, a flat int64 array of ``size``, over
+    every Arrow batch of ``seq_df``: one ``mapInPandas`` job whose tasks
+    each sum their partition's batches, then the driver sums the tasks'
+    arrays.  A ValueError the kernel raises in a task is raised again on
+    the driver."""
+    import pandas as pd
+
+    def partition(batches):
+        acc = np.zeros(size, dtype=np.int64)
+        try:
+            for pdf in batches:
+                acc += kernel(pdf[seq_col].tolist())
+        except ValueError as e:
+            yield pd.DataFrame({"flat": [[]], "error": [str(e)]})
+            return
+        yield pd.DataFrame({"flat": [acc.tolist()], "error": [None]})
+
+    total = np.zeros(size, dtype=np.int64)
+    schema = "flat array<bigint>, error string"
+    for r in seq_df.select(seq_col).mapInPandas(partition, schema=schema).collect():
+        if r["error"] is not None:
+            raise ValueError(r["error"])
+        total += np.asarray(r["flat"], dtype=np.int64)
+    return total
 
 
 def genesess_distributed(
@@ -424,115 +456,32 @@ def genesess_distributed(
     sequences (SURVEY §4.3.2 fallback for clusters that exceed one
     executor's memory).
 
-    Two Spark passes, both narrow-then-one-shuffle:
-      1. follower-count aggregation — every (n-gram <= L, next-symbol)
-         pair is pre-aggregated per partition in a mapInPandas kernel
-         (output bounded by the pattern space, <= 4096 x k rows per
-         partition regardless of data size), then summed in one tiny
-         groupBy;
-      2. automaton-walk counting — each sequence walks the (broadcast)
-         fitted structure independently; per-partition (|Q| x k) count
-         matrices are summed on the driver.
-    The structure inference between the passes is the identical
-    ``_structure_from_counts`` code the in-memory path runs, so both
-    paths produce the same machine from the same data.
+    Two Spark passes, each one shuffle-free ``mapInPandas`` job in which
+    every task sums a kernel over its partition's Arrow batches into one
+    flat array, and the driver sums the tasks' arrays:
+      1. ``ngram_counts`` — the context tables, sum of k**(l+1) over
+         l <= L entries (<= 4096 x k per length) regardless of data size;
+      2. ``walk_counts`` — the (|Q| x k) visit counts through the fitted
+         structure, which the task closure carries.
+    Between and after them the driver runs the same finish (``_fit``) as
+    the in-memory path, so both paths produce the same machine from the
+    same data.
     """
-    import pandas as pd
     from pyspark.sql import functions as F
 
-    spark = seq_df.sparkSession
     if alphabet_size is None:
-        alphabet_size = int(
-            seq_df.select(F.max(F.array_max(F.col(seq_col).cast("array<int>")))).first()[0]
-        ) + 1
+        hi = seq_df.select(F.max(F.array_max(F.col(seq_col).cast("array<int>")))).first()[0]
+        alphabet_size = (hi or 0) + 1
     k = max(int(alphabet_size), 2)
-    L = max(1, math.ceil(math.log(1.0 / max(eps, 1e-9), k)))
-    L = min(L, 8)
-    while L > 1 and k ** L > 4096:
-        L -= 1
-
-    count_schema = T.StructType(
-        [
-            T.StructField("pattern", T.BinaryType(), False),
-            T.StructField("next_sym", T.IntegerType(), False),
-            T.StructField("cnt", T.LongType(), False),
-        ]
+    L = _context_length(k, eps)
+    sizes = [k ** (l + 1) for l in range(L + 1)]
+    flat = _partition_sums(
+        seq_df, seq_col, sum(sizes), lambda seqs: np.concatenate(ngram_counts(seqs, k, L), axis=None)
     )
+    tables = [t.reshape(-1, k) for t in np.split(flat, np.cumsum(sizes)[:-1])]
 
-    def count_partition(batches):
-        acc: dict[tuple[bytes, int], int] = {}
-        for pdf in batches:
-            for symbols in pdf[seq_col]:
-                s = np.asarray(symbols, dtype=np.uint8)
-                n = len(s)
-                for t in range(n):
-                    nxt = int(s[t])
-                    for l in range(0, L + 1):
-                        if t - l < 0:
-                            break
-                        key = (s[t - l : t].tobytes(), nxt)
-                        acc[key] = acc.get(key, 0) + 1
-        if acc:
-            yield pd.DataFrame(
-                {
-                    "pattern": [p for p, _ in acc],
-                    "next_sym": [x for _, x in acc],
-                    "cnt": list(acc.values()),
-                }
-            )
+    def walk(connx: np.ndarray) -> np.ndarray:
+        counts = _partition_sums(seq_df, seq_col, connx.size, lambda seqs: walk_counts(seqs, connx).ravel())
+        return counts.reshape(connx.shape)
 
-    agg = (
-        seq_df.select(seq_col)
-        .mapInPandas(count_partition, schema=count_schema)
-        .groupBy("pattern", "next_sym")
-        .agg(F.sum("cnt").alias("cnt"))
-        .collect()
-    )
-    counts: dict[bytes, np.ndarray] = {}
-    for r in agg:
-        p = bytes(r["pattern"])
-        counts.setdefault(p, np.zeros(k))[int(r["next_sym"])] += int(r["cnt"])
-
-    empty = counts.get(b"", np.zeros(k))
-    total_len = int(empty.sum())
-    if total_len == 0:
-        raise ValueError("genesess_distributed: no symbols")
-    sym_frq = empty / max(empty.sum(), 1)
-
-    get_counts = lambda p: counts.get(p, np.zeros(k))  # noqa: E731
-    x0, connx, kept_dists, degenerate = _structure_from_counts(
-        get_counts, k, eps, sym_frq, total_len
-    )
-    if degenerate:
-        pit = (sym_frq + 1e-12) / (sym_frq + 1e-12).sum()
-        return PFSA(
-            pitilde=pit.reshape(1, k), connx=connx, pfsa_id=pfsa_id,
-            ann_err=0.0, mrg_eps=eps, syn_str=list(x0), sym_frq=sym_frq,
-        )
-
-    m = connx.shape[0]
-    connx_b = spark.sparkContext.broadcast(connx)
-
-    walk_schema = T.StructType([T.StructField("flat", T.ArrayType(T.LongType()), False)])
-
-    def walk_partition(batches):
-        cx = connx_b.value
-        mat = np.zeros((m, k), dtype=np.int64)
-        for pdf in batches:
-            for symbols in pdf[seq_col]:
-                q = 0
-                for sigma in np.asarray(symbols, dtype=np.uint8):
-                    mat[q, sigma] += 1
-                    q = cx[q, sigma]
-        yield pd.DataFrame({"flat": [mat.reshape(-1).tolist()]})
-
-    walked = seq_df.select(seq_col).mapInPandas(walk_partition, schema=walk_schema).collect()
-    wcounts = np.zeros((m, k), dtype=np.int64)
-    for r in walked:
-        wcounts += np.asarray(r["flat"], dtype=np.int64).reshape(m, k)
-    pit = (wcounts + smoothing) / (wcounts + smoothing).sum(axis=1, keepdims=True)
-    ann_err = float(np.mean([np.max(np.abs(pit[q] - kept_dists[q])) for q in range(m)]))
-    return PFSA(
-        pitilde=pit, connx=connx, pfsa_id=pfsa_id, ann_err=ann_err,
-        mrg_eps=eps, syn_str=list(x0), sym_frq=sym_frq,
-    )
+    return _fit(tables, walk, k, eps, pfsa_id, smoothing)

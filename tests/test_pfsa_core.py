@@ -107,13 +107,16 @@ def test_text_codec_roundtrip():
     assert m2.syn_str == [0, 1]
 
 
-def test_score_sequences_spark(spark):
-    seqs = simulate(M2, 500, 6, seed=5)
-    df = spark.createDataFrame(
+def _symbols_df(spark, seqs):
+    return spark.createDataFrame(
         [(i, [int(v) for v in s]) for i, s in enumerate(seqs)],
         "seq_id long, symbols array<int>",
     )
-    out = score_sequences(df, [M2, M2B]).toPandas().sort_values(["seq_id", "pfsa_id"])
+
+
+def test_score_sequences_spark(spark):
+    seqs = simulate(M2, 500, 6, seed=5)
+    out = score_sequences(_symbols_df(spark, seqs), [M2, M2B]).toPandas().sort_values(["seq_id", "pfsa_id"])
     assert len(out) == 12
     local0 = llk_batch(seqs, M2)
     got0 = out[out.pfsa_id == 0].sort_values("seq_id")["llk"].to_numpy()
@@ -141,31 +144,36 @@ def test_genesess_recovers_ternary_machine():
 def test_genesess_distributed_matches_in_memory(spark):
     # the distributed n-gram path must produce the IDENTICAL machine the
     # in-memory path does from the same data (same counts -> same
-    # structure -> same walk counts)
+    # structure -> same walk counts), on ragged input with an empty series
     from patternly_spark.pfsa.genesess import genesess_distributed
 
-    seqs = simulate(M2, 3000, 6, seed=23)
-    df = spark.createDataFrame(
-        [(i, [int(v) for v in s]) for i, s in enumerate(seqs)],
-        "seq_id long, symbols array<int>",
-    )
-    dist = genesess_distributed(df, eps=0.2, alphabet_size=2)
-    mem = genesess(seqs, eps=0.2, alphabet_size=2)
-    np.testing.assert_array_equal(dist.connx, mem.connx)
-    np.testing.assert_allclose(dist.pitilde, mem.pitilde, rtol=0, atol=0)
-    np.testing.assert_allclose(dist.sym_frq, mem.sym_frq)
-    assert list(dist.syn_str or []) == list(mem.syn_str or [])
+    for k in (2, 3, 4):
+        w = np.linspace(1.0, 4.0, k) / np.linspace(1.0, 4.0, k).sum()
+        truth = PFSA(pitilde=[w, w[::-1]], connx=[np.arange(k) % 2, np.arange(1, k + 1) % 2])
+        rng = np.random.default_rng(k)
+        seqs = [s[: rng.integers(1, 600)] for s in simulate(truth, 600, 12, seed=23)] + [[]]
+        dist = genesess_distributed(_symbols_df(spark, seqs), eps=0.2, alphabet_size=k)
+        mem = genesess(seqs, eps=0.2, alphabet_size=k)
+        assert dist.to_dict() == mem.to_dict(), k
+        assert mem.connx.shape[0] > 1, k
 
 
-def test_genesess_rejects_oversized_alphabet():
-    import numpy as np
-    import pytest
-    from patternly_spark.pfsa.genesess import genesess
+def test_genesess_rejects_oversized_alphabet(spark):
+    # one symbol-range check for both paths: the same ValueError in memory
+    # and from a Spark task
+    from patternly_spark.pfsa.genesess import genesess_distributed
 
-    with pytest.raises(ValueError, match=r"\[0, 255\]"):
-        genesess([np.array([0, 1, 300, 2])])
-    with pytest.raises(ValueError, match=r"\[0, 255\]"):
-        genesess([np.array([-1, 0, 1])])
+    cases = [
+        ([[0, 1, 300, 2]], None, r"at most 256 symbols"),
+        ([[-1, 0, 1]], None, r"symbols must be in \[0, 2\), got -1$"),
+        ([[0, 1, 0], [1, 2]], 2, r"symbols must be in \[0, 2\), got 2$"),
+        ([[0, 258]], 3, r"symbols must be in \[0, 3\), got 258$"),
+    ]
+    for seqs, k, msg in cases:
+        with pytest.raises(ValueError, match=msg):
+            genesess([np.array(s) for s in seqs], alphabet_size=k)
+        with pytest.raises(ValueError, match=msg):
+            genesess_distributed(_symbols_df(spark, seqs), alphabet_size=k)
 
 
 def test_llk_log_quantization_tight_and_exact():

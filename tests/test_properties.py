@@ -1,5 +1,5 @@
 """Property-based tests (hypothesis) for the deterministic kernels:
-windowing arithmetic, quantization, llk math, winnowing.
+windowing arithmetic, quantization, llk math, GenESeSS counts, winnowing.
 
 These check INVARIANTS rather than fixed examples — the window-chop
 coverage law from the reference's split_streams (detection.py:596-613),
@@ -180,6 +180,47 @@ def test_llk_matrix_matches_scalar_reference(models, seqs, bits):
             if math.isfinite(want):
                 tol = 1e-12 * abs(want) if bits is None else 2.0**-bits + 1e-12
                 assert abs(got[i, j] - want) <= tol, (i, j, got[i, j], want)
+
+
+# ---------------------------------------------------------------------------
+# GenESeSS count kernels vs a naive per-symbol loop: ngram_counts' table l
+# row code(y) counts each symbol that follows the context y inside one
+# sequence, and walk_counts counts (state, symbol) visits of each sequence
+# walking connx from state 0.  The block size is drawn small so that runs
+# of sequences cross block boundaries.
+# ---------------------------------------------------------------------------
+
+@settings(max_examples=200, deadline=None)
+@given(st.data(), st.integers(2, 4), st.integers(1, 4), st.integers(0, 4), st.integers(1, 100), st.booleans())
+def test_genesess_count_kernels_match_naive_loops(data, k, m, L, block, as_arrays):
+    import importlib
+    from unittest import mock
+
+    # the module, not the function patternly_spark.pfsa re-exports
+    g = importlib.import_module("patternly_spark.pfsa.genesess")
+    seqs = data.draw(st.lists(st.lists(st.integers(0, k - 1), max_size=40), max_size=12))
+    seqs = [np.array(s, dtype=np.int8) for s in seqs] if as_arrays else seqs
+    row = st.lists(st.integers(0, m - 1), min_size=k, max_size=k)
+    connx = np.array(data.draw(st.lists(row, min_size=m, max_size=m)), dtype=np.int32)
+    want = [np.zeros((k**l, k), dtype=np.int64) for l in range(L + 1)]
+    visits = np.zeros(connx.shape, dtype=np.int64)
+    for s in seqs:
+        q = 0
+        for t, sym in enumerate(s):
+            for l in range(min(t, L) + 1):
+                code = 0
+                for y in s[t - l : t]:
+                    code = code * k + int(y)
+                want[l][code, sym] += 1
+            visits[q, sym] += 1
+            q = connx[q, sym]
+    with mock.patch.object(g, "_BLOCK_SYMBOLS", block):
+        got = g.ngram_counts(seqs, k, L)
+        walked = g.walk_counts(seqs, connx)
+    assert len(got) == L + 1
+    for l in range(L + 1):
+        assert got[l].dtype == np.int64 and np.array_equal(got[l], want[l]), l
+    assert walked.dtype == np.int64 and np.array_equal(walked, visits)
 
 
 # ---------------------------------------------------------------------------

@@ -589,10 +589,8 @@ def test_ipw_ate_rejects_bad_clip(spark):
 
 def test_bench_compact_line_fits_and_parses():
     import json
-    import sys as _sys
 
-    _sys.path.insert(0, "/root/repo")
-    import bench
+    import bench  # the repo root, which conftest.py puts on sys.path
 
     timings = {n: i * 0.37 for i, n in enumerate(bench.BENCH_QUERIES)}
     timings.update({n: 1.0 for n in bench.BENCH_BUDGETED})
