@@ -22,13 +22,15 @@ fit:      quantize (codegen column exprs; the complex cut-points and the
 fit, driver-sized: when the rows and symbols that the alphabet
           aggregate also counts fit ``FIT_LOCAL_BYTES`` (and GenESeSS runs
           in memory), the quantized set is collected once in seq_id
-          order and every step but the clustering runs on the driver,
-          through the kernels the UDFs call (``llk_matrix`` for the SLD
-          features and the scoring, ``genesess`` per cluster): no Python
-          worker pass, no shuffle.  MLlib KMeans (same k, seed, init and
-          iterations) reads the features as one seq_id-ordered slice, so
-          below the gate labels and library ids no longer depend on the
-          input's partitioning or the shuffle partitions.
+          order, and after that collect the fit runs no Spark job: the
+          kernels the UDFs call (``llk_matrix`` for the SLD features and
+          the scoring, ``genesess`` per cluster) and
+          ``kmeans.kmeans_parallel``, which computes in numpy the labels
+          MLlib KMeans (same k, seed, init and iterations) gives the
+          features read as one seq_id-ordered slice.  So below the gate
+          labels and library ids do not depend on the input's
+          partitioning or the shuffle partitions.  A pluggable
+          ``clustering_alg`` still reads that slice as a relation.
 predict:  one mapInPandas pass scoring every sequence under the broadcast
           library and reducing each sequence's scores in the same task to
           the ALL-above-bound anomaly flag + argmin closest-match.  No
@@ -91,11 +93,12 @@ VERDICT_SCHEMA = T.StructType(
 #: with ``genesess_mode="distributed"``, the fit runs its Spark path.  The
 #: budget is per fit: ``MultiChannelDetection.fit`` runs up to
 #: ``max_parallel`` channel fits at once, so its thread pool can hold that
-#: many of these.  32 MiB admits ~16,000 series of 200 symbols.  Below it
-#: the driver fit was the faster one in every measurement (3 regimes,
-#: complex quantizer, n_clusters=3, 4 vCPU: 12,000 x 200 symbols in 15.0
-#: vs 18.6 s); at 24,000 x 200 (~51 MB) both took 43-44 s, as the driver
-#: fits the clusters' machines one after another.
+#: many of these.  32 MiB admits ~16,000 series of 200 symbols.  Fit wall
+#: times (3 regimes, complex quantizer, n_clusters=3, 4 vCPU; best of 3,
+#: in two passes that ran the paths in either order): 12,000 x 200
+#: symbols in 5.0-5.9 s on the driver and 5.7-6.2 s on the Spark path;
+#: 24,000 x 200 (~51 MB, above the gate) in 10.7-13.6 vs 14.0-15.5 s.
+#: The driver fit was no slower at either size.
 FIT_LOCAL_BYTES = 32 * 1024 * 1024
 
 #: Driver bytes per training sequence and per symbol of a driver-path fit:
@@ -104,7 +107,7 @@ FIT_LOCAL_BYTES = 32 * 1024 * 1024
 #: one-slice ``quantized_df``.  Measured with tracemalloc over the whole
 #: ``fit`` (peak; 3 regimes, complex quantizer, n_clusters=3; 3,000 and
 #: 6,000 series of 200 and 400 symbols; numpy 1.26, pandas 2.2, pyarrow
-#: 16): 440 B per series + 2.5 B per symbol, least squares, within 3% at
+#: 16): 413 B per series + 2.6 B per symbol, least squares, within 3% at
 #: all four sizes.  tracemalloc does not see Arrow's memory pool, which
 #: holds the collected and the uploaded batches (~2 B per symbol, ~16 B
 #: per series), so both are rounded up: 512 and 8.
@@ -312,6 +315,7 @@ class AnomalyDetection:
         self.library: list[PFSA] = []
         self.pfsa_llk_means: np.ndarray | None = None
         self._sld_cache = None
+        self._sld_matrix: np.ndarray | None = None  # driver fit: the features of _sld_cache
         self.pfsa_llk_stds: np.ndarray | None = None
         self.alphabet_size: int | None = None
         self._train_size: tuple[int, int] | None = None  # (rows, symbols) of the fit's input
@@ -366,14 +370,17 @@ class AnomalyDetection:
         ``feat``, and as the ``features`` vector), persisted: the X7
         reduction loop re-clusters with shrinking k but identical
         sequences, so features are computed exactly once per fit.  A
-        driver training set is scored on the driver into a one-slice
-        relation in its seq_id order."""
+        driver training set is scored on the driver: its (n, 4) matrix,
+        rows in seq_id order, is kept in ``_sld_matrix``, and the
+        relation is one slice built from it, read only by a pluggable
+        ``clustering_alg``."""
         if self._sld_cache is not None:
             return self._sld_cache
         base = _base_models(self.alphabet_size or 2)
         if isinstance(train, pd.DataFrame):
             feat = pfsa.llk_matrix(train["symbols"].tolist(), base)
             feat[feat == np.inf] = 1e6
+            self._sld_matrix = feat
             pdf = pd.DataFrame({"seq_id": train["seq_id"], "feat": list(feat)})
             feats = local_frame(self.spark, pdf, "seq_id long, feat array<double>")
         else:
@@ -398,10 +405,12 @@ class AnomalyDetection:
 
     def _cluster_labels(self, train: DataFrame | pd.DataFrame, n_clusters: int) -> DataFrame | pd.DataFrame:
         """-> (seq_id, cluster int), frequency-relabeled.  SLD featurization
-        + seeded MLlib KMeans (SURVEY §4.3.1 replacing X3/X6).  For a
-        driver training set (pandas, seq_id order) the clustering runs on
-        its one-slice features, the labels come back in one collect, and
-        the result is the training set with its ``cluster`` column."""
+        + seeded MLlib KMeans (SURVEY §4.3.1 replacing X3/X6).  A driver
+        training set (pandas, seq_id order) comes back with its
+        ``cluster`` column; its default clustering is
+        ``kmeans.kmeans_parallel`` on ``_sld_matrix``, which computes the
+        labels MLlib's KMeans gives that matrix as one seq_id-ordered
+        slice, with no Spark job."""
         local = isinstance(train, pd.DataFrame)
         if n_clusters == 1:
             if local:
@@ -409,6 +418,13 @@ class AnomalyDetection:
             return train.select("seq_id", F.lit(0).cast("int").alias("cluster"))
 
         feats = self._sld_features(train)
+        if local and self.clustering_alg is None:
+            # imported here: every Python worker imports this module, none clusters
+            from patternly_spark.kmeans import kmeans_parallel
+
+            labels = pd.Series(kmeans_parallel(self._sld_matrix, n_clusters, self.seed)[0])
+            mapping = _frequency_ranks(labels.value_counts().to_dict())[0]
+            return train.assign(cluster=labels.map(mapping).to_numpy(np.int32))
         from pyspark.ml.clustering import KMeans
 
         vec = feats.select("seq_id", "features")
@@ -502,7 +518,7 @@ class AnomalyDetection:
         for cached in (self.quantized_df, self._sld_cache):  # a refit's stale caches
             if cached is not None:
                 cached.unpersist()
-        self._sld_cache = None
+        self._sld_cache = self._sld_matrix = None
         self.alphabet_size = None
         seq_df = self._quantize(df).persist()
         if self.alphabet_size is None:

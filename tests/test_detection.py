@@ -779,14 +779,21 @@ def test_fit_leaves_one_cached_relation(spark, fit_paths):
 
 
 def test_driver_fit_jobs_bound(spark, monkeypatch):
-    """A driver-sized KMeans fit collects its training set once and runs
-    no scoring pass and no GenESeSS job: its jobs are the collect, KMeans
-    and the label collect."""
+    """A driver-sized KMeans fit collects its training set once and then
+    runs no Spark job: no scoring pass, no GenESeSS job and no MLlib
+    KMeans (``kmeans_parallel`` replays it on the driver)."""
+    from pyspark.ml.clustering import KMeans
+
     import patternly_spark.detection as det
 
     calls = []
     real = det.score_sequences
     monkeypatch.setattr(det, "score_sequences", lambda *a, **kw: calls.append(1) or real(*a, **kw))
+
+    def no_mllib(*a, **kw):
+        raise AssertionError("the driver fit ran MLlib KMeans")
+
+    monkeypatch.setattr(KMeans, "fit", no_mllib)
     df = _seq_df(spark, [(MACHINE_A, 100, 21), (MACHINE_B, 100, 22)], length=100)
     model = AnomalyDetection(spark, n_clusters=2, quantize=False, reduce_clusters=True, eps=0.2)
     jobs = _fit_jobs(spark, model, df)
@@ -795,8 +802,103 @@ def test_driver_fit_jobs_bound(spark, monkeypatch):
     assert model.n_clusters == 2
     assert calls == []
     # measured with the tests' session (4 cores, 8 shuffle partitions):
-    # 17 jobs, where the Spark path runs 25
-    assert jobs <= 18, jobs
+    # the alphabet aggregate's `first` (3 jobs under AQE) and the collect;
+    # the Spark path runs 25
+    assert jobs <= 4, jobs
+
+
+def _mllib_kmeans(spark, X, k, seed):
+    """Labels and centers of MLlib's KMeans on X read as one slice, rows
+    in order: the reference ``kmeans_parallel`` replays."""
+    import pandas as pd
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    from patternly_spark.plans import local_frame
+
+    pdf = pd.DataFrame({"seq_id": np.arange(len(X)), "feat": list(X)})
+    feats = local_frame(spark, pdf, "seq_id long, feat array<double>").withColumn(
+        "features", array_to_vector("feat"))
+    model = KMeans(k=k, seed=seed, initMode="k-means||", maxIter=50).fit(feats)
+    labels = model.transform(feats).toPandas()["prediction"].to_numpy()
+    return labels, np.array(model.clusterCenters())
+
+
+def _kmeans_features(case: str, k: int) -> np.ndarray:
+    """(n, 4) features for one ``test_driver_kmeans_matches_mllib`` case."""
+    from patternly_spark import pfsa
+    from patternly_spark.detection import _base_models
+
+    rng = np.random.default_rng(k)
+    if case == "sld":  # the fit's own features: three machines under the base set
+        seqs = [s for m, seed in ((MACHINE_A, 1), (MACHINE_B, 2), (MACHINE_C, 3)) for s in simulate(m, 100, 100, seed=seed)]
+        return pfsa.llk_matrix(seqs, _base_models(2))
+    if case == "few_distinct":  # two distinct rows: distinctCenters <= k
+        return np.array([[0.5, 1.0, 2.0, 2.5], [3.0, 1.5, 0.5, 1.0]])[rng.integers(0, 2, 40)]
+    if case == "three_rows":  # ML's block solver (fewer rows than columns)
+        return rng.random((3, 4)) * 4
+    spread = 2.0 if case == "overlapping" else 0.2
+    group = np.arange(300) % k if case == "equal_blobs" else rng.integers(0, k, 300)
+    X = np.abs((rng.random((k, 4)) * 5)[group] + rng.normal(0, spread, (300, 4)))
+    if case == "capped":  # llk = inf, capped at 1e6
+        X[rng.random(X.shape) < 0.05] = 1e6
+    if case == "zeros":
+        X[rng.random(X.shape) < 0.6] = 0.0
+    return X
+
+
+@pytest.mark.parametrize("seed", [1, 42])
+@pytest.mark.parametrize(
+    "case,k",
+    [("blobs", 2), ("blobs", 3), ("blobs", 4), ("blobs", 5), ("equal_blobs", 3), ("overlapping", 3),
+     ("capped", 3), ("zeros", 3), ("sld", 3), ("few_distinct", 4), ("three_rows", 2)],
+)
+def test_driver_kmeans_matches_mllib(spark, case, k, seed):
+    """``kmeans_parallel`` returns MLlib's labels and centers, bit for
+    bit: k-means|| with its samplers and its k-means++ step, equal-size
+    clusters whose ids follow the center order, overlapping clusters,
+    capped and zero features, fewer distinct rows than k, and three rows
+    (where ML's KMeans takes its block solver)."""
+    from patternly_spark.kmeans import kmeans_parallel
+
+    X = _kmeans_features(case, k)
+    labels, centers = kmeans_parallel(X, k, seed)
+    want_labels, want_centers = _mllib_kmeans(spark, X, k, seed)
+    assert centers.shape == want_centers.shape
+    assert np.array_equal(centers, want_centers)
+    assert np.array_equal(labels, want_labels)
+
+
+@pytest.mark.parametrize("n,k", [(1, 2), (3, 5)])
+def test_driver_kmeans_fewer_rows_than_k(spark, n, k):
+    """On fewer rows than feature columns ML's block solver fails when
+    k-means|| finds fewer distinct candidates than k; the replay
+    clusters around the ones it found: here every row is a center."""
+    from patternly_spark.kmeans import kmeans_parallel
+
+    X = np.random.default_rng(n).random((n, 4))
+    with pytest.raises(Exception, match="ArrayIndexOutOfBounds"):
+        _mllib_kmeans(spark, X, k, 42)
+    labels, centers = kmeans_parallel(X, k, 42)
+    assert sorted(map(tuple, centers)) == sorted(map(tuple, X))
+    assert np.array_equal(centers[labels], X)
+
+
+def test_driver_kmeans_rngs_match_the_jvm(spark):
+    """The replay's RNGs draw what the JVM's classes draw."""
+    from patternly_spark.kmeans import _JavaRandom, _XORShiftRandom
+
+    jvm = spark._jvm
+    for seed in (0, 1, 42, -7, 2**40 + 3, -(2**62), 1234567890123):
+        jx, px = jvm.org.apache.spark.util.random.XORShiftRandom(seed), _XORShiftRandom(seed)
+        jr, pr = jvm.java.util.Random(seed), _JavaRandom(seed)
+        for _ in range(20):
+            assert jx.nextInt() == px.next_int()
+            assert jx.nextDouble() == px.next_double()
+            assert jr.nextLong() == pr.next_long()
+            assert jr.nextDouble() == pr.next_double()
+            for bound in (1, 2, 3, 7, 16, 1000, 2**31 - 1):
+                assert jr.nextInt(bound) == pr.next_int(bound)
 
 
 def _regime_values(n_per: int, length: int, seed: int):
