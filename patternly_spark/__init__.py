@@ -24,17 +24,10 @@ Layout
 - ``streaming``  : Structured Streaming continuous detector
 """
 
+import importlib
+
 from pyspark.core.files import SparkFiles
 
-from patternly_spark.pfsa.model import PFSA
-from patternly_spark.analysis import embed_library
-from patternly_spark.plans import assert_plan, plan_audit
-from patternly_spark.detection import (
-    AnomalyDetection,
-    StreamingDetection,
-    ContinuousStreamingDetection,
-    MultiChannelDetection,
-)
 from patternly_spark.session import guard_zip_invalidation
 
 # every UDF closure imports the package in its Python worker; the driver
@@ -44,13 +37,35 @@ if SparkFiles._is_running_on_worker:
 
 __version__ = "0.1.0"
 
-__all__ = [
-    "assert_plan",
-    "plan_audit",
-    "embed_library",
-    "PFSA",
-    "AnomalyDetection",
-    "StreamingDetection",
-    "ContinuousStreamingDetection",
-    "MultiChannelDetection",
-]
+# public names, imported on first access (PEP 562): a worker that
+# unpickles a graph or llk UDF imports only the modules that UDF uses
+_EXPORTS = {
+    "assert_plan": "patternly_spark.plans",
+    "plan_audit": "patternly_spark.plans",
+    "embed_library": "patternly_spark.analysis",
+    "PFSA": "patternly_spark.pfsa.model",
+    "AnomalyDetection": "patternly_spark.detection",
+    "StreamingDetection": "patternly_spark.detection",
+    "ContinuousStreamingDetection": "patternly_spark.detection",
+    "MultiChannelDetection": "patternly_spark.detection",
+}
+
+__all__ = list(_EXPORTS)
+
+
+def __getattr__(name: str):
+    if name in _EXPORTS:
+        value = getattr(importlib.import_module(_EXPORTS[name]), name)
+    else:
+        try:  # a subpackage, as ``import patternly_spark`` used to bind them
+            value = importlib.import_module(f"{__name__}.{name}")
+        except ModuleNotFoundError as e:
+            if e.name != f"{__name__}.{name}":
+                raise
+            raise AttributeError(f"module {__name__!r} has no attribute {name!r}") from None
+    globals()[name] = value
+    return value
+
+
+def __dir__() -> list[str]:
+    return sorted(set(globals()) | set(_EXPORTS))

@@ -19,22 +19,29 @@ fit:      quantize (codegen column exprs; the complex cut-points and the
           A reduction step and the stats read one scoring pass (the
           cluster label rides through the scoring, one collect), so the
           final library scores the training set once.
-fit, driver-sized: when the rows and symbols that the alphabet
-          aggregate also counts fit ``FIT_LOCAL_BYTES`` (and GenESeSS runs
-          in memory), the quantized set is collected once in seq_id
-          order, and after that collect the fit runs no Spark job: the
-          kernels the UDFs call (``llk_matrix`` for the SLD features and
-          the scoring, ``genesess`` per cluster) and
-          ``kmeans.kmeans_parallel``, which computes in numpy the labels
-          MLlib KMeans (same k, seed, init and iterations) gives the
-          features read as one seq_id-ordered slice.  So below the gate
+fit, driver-sized: one job (``plans.collect_within``) measures the
+          training set and, when its rows and elements fit
+          ``FIT_LOCAL_BYTES`` (and GenESeSS runs in memory), collects it:
+          the raw series for the complex quantizer with exact (or already
+          fitted) cut-points, else the quantized relation.  Then the fit
+          runs no Spark job: numpy quantizes the raw series by the rules
+          of the aggregate and the column expressions
+          (``functions.quantize.fit_cutpoints_local`` and
+          ``symbolize_local``), and the kernels the UDFs call
+          (``llk_matrix`` for the SLD features and the scoring,
+          ``genesess`` per cluster) and ``kmeans.kmeans_parallel``, which
+          computes in numpy the labels MLlib KMeans (same k, seed, init
+          and iterations) gives the features read as one seq_id-ordered
+          slice, train on the seq_id-ordered rows.  So below the gate
           labels and library ids do not depend on the input's
           partitioning or the shuffle partitions.  A pluggable
           ``clustering_alg`` still reads that slice as a relation.
-predict:  one mapInPandas pass scoring every sequence under the broadcast
+predict:  one mapInArrow pass scoring every sequence under the broadcast
           library and reducing each sequence's scores in the same task to
           the ALL-above-bound anomaly flag + argmin closest-match.  No
-          shuffle.
+          shuffle.  With the complex quantizer the task reads the raw
+          series and symbolizes each Arrow batch with ``symbolize_local``
+          before scoring it.  A null sequence scores as an empty one.
 continuous: one per-window step, ``GrowingLibrary.step``, for both
           ``ContinuousStreamingDetection.fit_stream`` (driver loop over
           sorted windows) and ``streaming.StreamingPFSADetector``: score
@@ -53,13 +60,14 @@ Preserved quirk: alphabet_size = max(symbol)+1 (detection.py:133-136).
 from __future__ import annotations
 
 import json
-import math
 import os
 from dataclasses import dataclass
+from functools import partial
 from typing import Callable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -67,13 +75,16 @@ from pyspark.sql import types as T
 from patternly_spark.functions.quantize import (
     Quantizer,
     array_diff,
+    fit_cutpoints_local,
     percentile_expr,
     quantize_simple_array,
+    spark_le,
     symbol_from_cutpoints,
+    symbolize_local,
 )
 from patternly_spark.functions.windowing import split_stream, windows_to_sequences
 from patternly_spark import pfsa
-from patternly_spark.plans import local_frame
+from patternly_spark.plans import collect_within, list_parts, local_frame
 from patternly_spark.pfsa.genesess import _tarjan_scc, fit_cluster_pfsas, genesess
 from patternly_spark.pfsa.llk import llk_batch, map_llk, score_sequences
 from patternly_spark.pfsa.model import PFSA
@@ -93,26 +104,26 @@ VERDICT_SCHEMA = T.StructType(
 #: with ``genesess_mode="distributed"``, the fit runs its Spark path.  The
 #: budget is per fit: ``MultiChannelDetection.fit`` runs up to
 #: ``max_parallel`` channel fits at once, so its thread pool can hold that
-#: many of these.  32 MiB admits ~16,000 series of 200 symbols.  Fit wall
-#: times (3 regimes, complex quantizer, n_clusters=3, 4 vCPU; best of 3,
-#: in two passes that ran the paths in either order): 12,000 x 200
-#: symbols in 5.0-5.9 s on the driver and 5.7-6.2 s on the Spark path;
-#: 24,000 x 200 (~51 MB, above the gate) in 10.7-13.6 vs 14.0-15.5 s.
-#: The driver fit was no slower at either size.
-FIT_LOCAL_BYTES = 32 * 1024 * 1024
+#: many of these.  64 MiB admits 16,000 series of 200 symbols and not
+#: 24,000 (the sizes of the wall-time comparison below the constants).
+FIT_LOCAL_BYTES = 64 * 1024 * 1024
 
-#: Driver bytes per training sequence and per symbol of a driver-path fit:
-#: the Arrow ``toPandas`` collect, the SLD features and their one-slice
-#: relation, the GenESeSS fits, ``llk_matrix`` over the library and the
-#: one-slice ``quantized_df``.  Measured with tracemalloc over the whole
-#: ``fit`` (peak; 3 regimes, complex quantizer, n_clusters=3; 3,000 and
-#: 6,000 series of 200 and 400 symbols; numpy 1.26, pandas 2.2, pyarrow
-#: 16): 413 B per series + 2.6 B per symbol, least squares, within 3% at
-#: all four sizes.  tracemalloc does not see Arrow's memory pool, which
-#: holds the collected and the uploaded batches (~2 B per symbol, ~16 B
-#: per series), so both are rounded up: 512 and 8.
-FIT_SEQ_BYTES = 512
-FIT_SYMBOL_BYTES = 8
+#: Driver bytes per training sequence and per symbol of a driver-path fit.
+#: Its peak is the quantization of the collected raw series: the Arrow
+#: table of float64 values and the copy that ``fit_cutpoints_local``
+#: partitions for the cut-points; the clustering that follows holds the
+#: int8 symbols, the SLD features, the GenESeSS fits, ``llk_matrix`` over
+#: the library and the one-slice ``quantized_df``.  Measured with
+#: tracemalloc over the whole ``fit`` after a warm-up fit (the collected
+#: Arrow buffers are Python bytes, so tracemalloc sees them; Arrow's own
+#: pool peaked at 24 KB) (peak; 3 regimes, complex quantizer,
+#: n_clusters=3; 3,000 and 6,000 series of 200 and 400 symbols; numpy
+#: 1.26, pandas 2.2, pyarrow 16): 36.5 B per series + 18.1 B per symbol,
+#: least squares, within 0.2% at all four sizes; rounded up to 64 and 20.
+#: A relation of symbols (no quantizer, or approximate cut-points) is
+#: gated at the same costs, though it collects int8 symbols.
+FIT_SEQ_BYTES = 64
+FIT_SYMBOL_BYTES = 20
 
 
 def _base_models(alphabet_size: int) -> list[PFSA]:
@@ -133,12 +144,6 @@ def _base_models(alphabet_size: int) -> list[PFSA]:
         pit = w / w.sum(axis=1, keepdims=True)
         models.append(PFSA(pitilde=pit, connx=connx, pfsa_id=i))
     return models
-
-
-def _spark_le(a: float, b: float) -> bool:
-    """``a <= b`` in Spark's order of doubles, where NaN is above every
-    number and equal to itself."""
-    return math.isnan(b) or (not math.isnan(a) and a <= b)
 
 
 def _frequency_ranks(raw: dict[int, int]) -> tuple[dict[int, int], list[int], int]:
@@ -321,10 +326,30 @@ class AnomalyDetection:
         self._train_size: tuple[int, int] | None = None  # (rows, symbols) of the fit's input
 
     # ------------------------------------------------------------------
-    def _quantize(self, df: DataFrame) -> DataFrame:
+    def _quantize(self, df: DataFrame | pa.Table) -> DataFrame | pd.DataFrame | None:
         """-> (seq_id, symbols array<tinyint>).  Mirrors __quantize
         (detection.py:272-308).  Fitting the complex cut-points also sets
-        ``alphabet_size`` and ``_train_size`` (rows, symbols)."""
+        ``alphabet_size`` and ``_train_size`` (rows, symbols).
+
+        A collected training set of raw series (an Arrow table of
+        seq_id and values, see ``_quantizes_locally``) is quantized in
+        numpy by the same rules (``fit_cutpoints_local``,
+        ``symbolize_local``) and comes back as a pandas frame in seq_id
+        order; None when its cut-points need the JVM aggregate."""
+        if isinstance(df, pa.Table):
+            col = df.column("values")
+            if self.quantizer is None or not self.quantizer.fitted:
+                cuts, alphabet_size = fit_cutpoints_local(col, self.n_symbols, self.detrend)
+                if cuts is None:
+                    return None
+                self.quantizer = Quantizer(
+                    quantize_type="complex", n_symbols=self.n_symbols,
+                    detrend=self.detrend, exact=self.quantize_exact,
+                    cutpoints=cuts, fitted=True,
+                )
+                self.alphabet_size = alphabet_size
+            return self._training_frame(df.column("seq_id"), *symbolize_local(col, self.quantizer.cutpoints, self.detrend))
+
         cols = df.columns
         if not self.quantize or "symbols" in cols:
             src = "symbols" if "symbols" in cols else "values"
@@ -359,10 +384,34 @@ class AnomalyDetection:
             # a value's symbol is the number of cut-points <= it, so the
             # largest symbol is the largest value's (quirk: alphabet =
             # max symbol + 1)
-            self.alphabet_size = 1 + sum(_spark_le(c, row["top"]) for c in cuts)
+            self.alphabet_size = 1 + sum(spark_le(c, row["top"]) for c in cuts)
         cutpoints = self.quantizer.cutpoints
         syms = F.transform(vals, lambda x: symbol_from_cutpoints(x, cutpoints))
         return df.select("seq_id", syms.alias("symbols"))
+
+    def _quantizes_locally(self, df: DataFrame) -> bool:
+        """Whether ``df``'s raw values are quantized in numpy where they
+        are (a driver training set, a predict task): the complex quantizer,
+        with cut-points already fitted or fitted exactly.  Approximate
+        cut-points need the JVM sketch."""
+        fitted = self.quantizer is not None and self.quantizer.fitted
+        return (
+            self.quantize and self.quantize_type == "complex" and "symbols" not in df.columns
+            and (self.quantize_exact or fitted)
+        )
+
+    def _training_frame(self, ids: pa.ChunkedArray, symbols: np.ndarray, offsets: np.ndarray) -> pd.DataFrame:
+        """A collected training set as (seq_id, symbols) rows in seq_id
+        order; row i's symbols are ``symbols[offsets[i]:offsets[i + 1]]``
+        (views), a null row is empty.  Sets ``_train_size`` and, when
+        unset, ``alphabet_size`` (largest symbol + 1)."""
+        ids = ids.to_numpy()
+        self._train_size = (ids.size, int(offsets[-1]))
+        if self.alphabet_size is None:
+            self.alphabet_size = int(symbols.max()) + 1
+        order = np.argsort(ids, kind="stable")
+        seqs = np.split(symbols, offsets[1:-1])
+        return pd.DataFrame({"seq_id": ids[order], "symbols": [seqs[i] for i in order]})
 
     # ------------------------------------------------------------------
     def _sld_features(self, train: DataFrame | pd.DataFrame) -> DataFrame:
@@ -520,24 +569,40 @@ class AnomalyDetection:
                 cached.unpersist()
         self._sld_cache = self._sld_matrix = None
         self.alphabet_size = None
-        seq_df = self._quantize(df).persist()
-        if self.alphabet_size is None:
-            row = seq_df.select(
-                F.max(F.array_max("symbols")).alias("m"),
-                F.count(F.lit(1)).alias("rows"),
-                F.sum(F.greatest(F.size("symbols"), F.lit(0))).alias("symbols"),
-            ).first()
-            self.alphabet_size = int(row["m"]) + 1
-            self._train_size = (int(row["rows"]), int(row["symbols"]))
-
-        # a driver-sized training set is collected once, in seq_id order;
-        # every step but the clustering then runs on the driver
-        rows, symbols = self._train_size
-        local = (
-            self.genesess_mode == "memory"
-            and rows * FIT_SEQ_BYTES + symbols * FIT_SYMBOL_BYTES < FIT_LOCAL_BYTES
-        )
-        train = seq_df.toPandas().sort_values("seq_id", ignore_index=True) if local else seq_df
+        # a driver-sized training set is collected in the one job that
+        # measures it (the raw series when numpy quantizes them), and after
+        # that job every step but a pluggable clustering runs on the driver
+        raw = self._quantizes_locally(df)
+        src = df.select("seq_id", "values") if raw else self._quantize(df)
+        table = None
+        if self.genesess_mode == "memory":
+            col = "values" if raw else "symbols"
+            table = collect_within(src, col, FIT_LOCAL_BYTES, FIT_SEQ_BYTES, FIT_SYMBOL_BYTES)[0]
+        local = table is not None
+        if local:
+            if raw:
+                train = self._quantize(table)
+                if train is None:  # a signed-zero cut-point: the aggregate decides its sign
+                    self._quantize(df)
+                    train = self._quantize(table)
+            else:
+                train = self._training_frame(table.column("seq_id"), *list_parts(table.column("symbols"))[:2])
+            symbols_type = T.ArrayType(T.ByteType(), False) if raw else src.schema["symbols"].dataType
+            schema = T.StructType([
+                src.schema["seq_id"], T.StructField("symbols", symbols_type), T.StructField("cluster", T.IntegerType()),
+            ])
+            del table  # the collected buffers, before the clustering
+        else:
+            seq_df = (self._quantize(df) if raw else src).persist()
+            if self.alphabet_size is None:
+                row = seq_df.select(
+                    F.max(F.array_max("symbols")).alias("m"),
+                    F.count(F.lit(1)).alias("rows"),
+                    F.sum(F.greatest(F.size("symbols"), F.lit(0))).alias("symbols"),
+                ).first()
+                self.alphabet_size = int(row["m"]) + 1
+                self._train_size = (int(row["rows"]), int(row["symbols"]))
+            train = seq_df
 
         def clustered_at(n: int):
             labels = self._cluster_labels(train, n)
@@ -571,11 +636,10 @@ class AnomalyDetection:
         self.pfsa_llk_stds = scores.stds
         self.cluster_counts = sorted((v for c, v in scores.sizes.items() if c >= 0), reverse=True)
         if local:
-            schema = T.StructType(seq_df.schema.fields + [T.StructField("cluster", T.IntegerType())])
             self.quantized_df = local_frame(self.spark, clustered[schema.names], schema).persist()
         else:
             self.quantized_df = clustered.select("seq_id", "symbols", "cluster").persist()
-        seq_df.unpersist()
+            seq_df.unpersist()
         if self._sld_cache is not None:  # kept, released: only the fit reads it
             self._sld_cache.unpersist()
         self.fitted = True
@@ -589,7 +653,7 @@ class AnomalyDetection:
         anomaly: llk above the bound under every PFSA (A6); closest_match:
         the PFSA of lowest llk, lowest pfsa_id on ties — also when every
         llk is inf (A3).  Both come out of the scoring pass itself (one
-        mapInPandas, library in the closure): no shuffle.  An inf or NaN
+        mapInArrow, library in the closure): no shuffle.  An inf or NaN
         bound flags nothing, as ``x > NaN`` and ``inf > inf`` are false.
         Sequences are not grouped, so ``seq_id`` must be unique, as it is
         for every caller: the fit's ``quantized_df``, stream windows, and
@@ -597,10 +661,16 @@ class AnomalyDetection:
         """
         if not self.fitted:
             raise ValueError("Model has not been fit yet.")
+        symbolize = None
         if df is None:
             if self.quantized_df is None:
                 raise ValueError("Original data not found. Pass data to predict().")
             seq_df = self.quantized_df.select("seq_id", "symbols")
+        elif self._quantizes_locally(df):
+            # the raw series go into the scoring task, which symbolizes
+            # each batch with the fitted cut-points
+            seq_df = df.select("seq_id", F.col("values").alias("symbols"))
+            symbolize = partial(symbolize_local, cutpoints=self.quantizer.cutpoints, detrend=self.detrend)
         else:
             seq_df = self._quantize(df)
 
@@ -620,7 +690,7 @@ class AnomalyDetection:
                 }
             )
 
-        return map_llk(seq_df, library, VERDICT_SCHEMA, emit)
+        return map_llk(seq_df, library, VERDICT_SCHEMA, emit, symbolize=symbolize)
 
     def print_PFSAs(self) -> None:
         """Print each cluster PFSA (parity: AnomalyDetection.print_PFSAs,

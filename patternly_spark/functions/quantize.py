@@ -10,15 +10,25 @@ Reference semantics (``patternly/detection.py:272-308``):
                       optional detrend first                     (F4)
 - passthrough       : cast to tinyint                            (F5)
 
-All hot-path math is built-in column expressions (JVM-side, whole-stage
-codegen); the only driver action is the tiny exact-percentile fit.
-Cut-point fitting uses Spark SQL ``percentile`` (exact, interpolated) so
-results hash-match a DuckDB ``quantile_cont`` oracle.
+Two equal implementations of the complex quantizer:
+
+- column expressions (JVM-side, whole-stage codegen): the cut-points are
+  one Spark SQL ``percentile`` aggregate (exact, interpolated, so results
+  hash-match a DuckDB ``quantile_cont`` oracle) and the symbols
+  ``symbol_from_cutpoints`` over ``array_diff``.  The Spark fit path uses
+  them.
+- numpy over an Arrow list column: ``fit_cutpoints_local`` and
+  ``symbolize_local`` compute what the aggregate and those expressions
+  compute, bit for bit, where the series already are: on the driver for a
+  driver-sized fit, and inside predict's scoring task.
 """
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass, field
+
+import numpy as np
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -324,3 +334,100 @@ def exact_percentile_distributed(
         frac = rank - k
         out.append(float(ks[0]) + (float(ks[1]) - float(ks[0])) * frac)
     return out
+
+
+def spark_le(a: float, b: float) -> bool:
+    """``a <= b`` in Spark's order of doubles, where NaN is above every
+    number and equal to itself."""
+    return math.isnan(b) or (not math.isnan(a) and a <= b)
+
+
+def _local_values(col, detrend: bool):
+    """(values, offsets, present) of each Arrow chunk of a list column of
+    numbers, as float64 (``plans.list_parts``), first-differenced per row
+    as ``array_diff`` does when ``detrend``: the first element's
+    difference is 0, and a difference with a null operand is null."""
+    from patternly_spark.plans import list_parts
+
+    for chunk in getattr(col, "chunks", [col]):
+        x, offsets, present = list_parts(chunk)
+        x = x.astype(np.float64, copy=False)
+        if detrend:
+            starts = offsets[:-1][np.diff(offsets) > 0]
+            prev = np.empty_like(x)
+            prev[1:] = x[:-1]
+            prev[starts] = x[starts]
+            x = x - prev
+            if present is not None:
+                prev = np.empty_like(present)
+                prev[1:] = present[:-1]
+                prev[starts] = present[starts]
+                present = present & prev
+        yield x, offsets, present
+
+
+def fit_cutpoints_local(col, n_symbols: int, detrend: bool) -> tuple[list[float] | None, int]:
+    """The complex cut-points of an Arrow list column of series, as the
+    ``percentile_expr(exact=True)`` aggregate over all of its elements
+    computes them, and the alphabet size they give (a value's symbol is
+    the number of cut-points ``spark_le`` it, and alphabet = largest
+    symbol + 1).
+
+    Spark's ``percentile`` skips nulls, sorts NaN after every number,
+    takes the order statistics at floor and ceil of (n-1)*p, and returns
+    the lower one when the two are equal, else
+    ``(hi - pos) * lower + (pos - lo) * upper``.  It sorts -0.0 and 0.0
+    as equal keys in its hash map's order, so when both occur and a
+    cut-point is a zero whose sign depends on which sorts first, it is
+    not decidable here: the cut-points are then None."""
+    v = np.concatenate([x if present is None else x[present] for x, _, present in _local_values(col, detrend)])
+    n = v.size
+    if n == 0:
+        raise ValueError("complex quantizer: no values to fit the cut-points on")
+    pos = [float(n - 1) * (i / n_symbols) for i in range(1, n_symbols)]
+    ranks = sorted({r for q in pos for r in (math.floor(q), math.ceil(q))})
+    top = float("nan") if np.isnan(v).any() else float(v.max())
+    zero = v == 0.0
+    zeros, negative = int(np.count_nonzero(zero)), int(np.count_nonzero(np.signbit(v[zero])))
+    below = int(np.count_nonzero(v < 0.0))
+    v.partition(ranks)  # in place; NaN last, as Spark orders it
+
+    def at(r: int, negative_first: bool) -> float:
+        # the zeros sort as equal keys, either sign first
+        if 0 < negative < zeros and below <= r < below + zeros:
+            first, count = (-0.0, negative) if negative_first else (0.0, zeros - negative)
+            return first if r - below < count else -first
+        return float(v[r])
+
+    def cut(q: float, negative_first: bool) -> float:
+        lo, hi = math.floor(q), math.ceil(q)
+        a, b = at(lo, negative_first), at(hi, negative_first)
+        return a if lo == hi or a == b else (hi - q) * a + (q - lo) * b
+
+    cuts = [cut(q, True) for q in pos]
+    if any(repr(c) != repr(cut(q, False)) for c, q in zip(cuts, pos)):
+        return None, 0
+    return cuts, 1 + sum(spark_le(c, top) for c in cuts)
+
+
+def symbolize_local(col, cutpoints: list[float], detrend: bool) -> tuple[np.ndarray, np.ndarray]:
+    """Symbols of an Arrow list column of series, as
+    ``symbol_from_cutpoints`` over ``array_diff`` (when ``detrend``)
+    gives them: the number of cut-points ``c`` with ``value >= c`` in
+    Spark's order (NaN above every number; -0.0 equal to 0.0), and 0 for
+    a null element.  Returns (int8 symbols of every row, concatenated;
+    row offsets): row i is ``symbols[offsets[i]:offsets[i + 1]]``, and a
+    null row is empty."""
+    syms, offsets, base = [], [np.zeros(1, dtype=np.int64)], 0
+    for x, offs, present in _local_values(col, detrend):
+        sym = np.zeros(x.size, dtype=np.int8)
+        for c in cutpoints:
+            if not math.isnan(c):  # x >= NaN holds only for NaN x
+                sym += x >= c
+        sym[np.isnan(x)] = len(cutpoints)
+        if present is not None:
+            sym[~present] = 0
+        syms.append(sym)
+        offsets.append(offs[1:] + base)
+        base += x.size
+    return (syms[0] if len(syms) == 1 else np.concatenate(syms)), np.concatenate(offsets)

@@ -68,7 +68,9 @@ def _context_length(k: int, eps: float) -> int:
 def _blocks(seqs: list) -> Iterator[list]:
     """The sequences in ascending length, cut into runs whose padded area
     (count x longest) stays within _BLOCK_SYMBOLS; a longer sequence is a
-    run of its own.  Counts summed over the runs do not depend on order."""
+    run of its own, and a None one (a null sequence, as good as empty) is
+    left out.  Counts summed over the runs do not depend on order."""
+    seqs = [s for s in seqs if s is not None]
     lens = np.fromiter(map(len, seqs), dtype=np.int64, count=len(seqs))
     block: list = []
     for i in np.argsort(lens, kind="stable"):
@@ -87,7 +89,7 @@ def ngram_counts(seqs: Sequence[Sequence[int]], k: int, L: int) -> list[np.ndarr
     base-k number, first symbol most significant.  Raises ValueError for a
     symbol outside [0, k)."""
     tables = [np.zeros(k ** (l + 1), dtype=np.int64) for l in range(L + 1)]
-    for block in _blocks(list(seqs)):
+    for block in _blocks(seqs):
         lens = np.fromiter(map(len, block), dtype=np.int64, count=len(block))
         x = np.concatenate(block).astype(np.int64)
         if x.size == 0:
@@ -119,7 +121,7 @@ def walk_counts(seqs: Sequence[Sequence[int]], connx: np.ndarray) -> np.ndarray:
     width = k + 1
     nxt = np.hstack([connx, np.arange(m)[:, None]]).astype(np.int64).ravel() * width
     counts = np.zeros(m * width, dtype=np.int64)
-    for block in _blocks(list(seqs)):
+    for block in _blocks(seqs):
         # row t: the block's symbols at time t, turned in place into their
         # flat (state, symbol) index
         at = np.ascontiguousarray(_pack(block, k)[0].T, dtype=np.int64)
@@ -252,10 +254,11 @@ def genesess(
     pfsa_id: int = 0,
     smoothing: float = 0.5,
 ) -> PFSA:
-    """Infer a PFSA from symbol sequences.  Deterministic given input order."""
+    """Infer a PFSA from symbol sequences (a None one counts as empty).
+    Deterministic given input order."""
     seqs = list(sequences)
     if alphabet_size is None:
-        alphabet_size = max((int(np.max(s)) for s in seqs if len(s)), default=0) + 1
+        alphabet_size = max((int(np.max(s)) for s in seqs if s is not None and len(s)), default=0) + 1
     k = max(alphabet_size, 2)
     tables = ngram_counts(seqs, k, _context_length(k, eps))
     return _fit(tables, lambda connx: walk_counts(seqs, connx), k, eps, pfsa_id, smoothing)

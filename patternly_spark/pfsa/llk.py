@@ -30,7 +30,7 @@ bit-identical scores; ``llk_one`` is the scalar reference.
 
 from __future__ import annotations
 
-from typing import Callable, Iterable, Iterator, Sequence
+from typing import Callable, Iterable, Sequence
 
 import numpy as np
 import pandas as pd
@@ -38,6 +38,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from patternly_spark.pfsa.model import PFSA
+
+
+_NO_SYMBOLS = np.empty(0, dtype=np.int8)  # a null sequence scores as an empty one
 
 
 def llk_one(symbols: Sequence[int], model: PFSA) -> float:
@@ -120,8 +123,8 @@ def llk_matrix(
     """Negative log-likelihood of every sequence under every model.
 
     Returns a float64 (N, M) matrix, column j for ``models[j]``; inf for
-    an empty sequence, a symbol outside [0, alphabet_size) of the model,
-    or a zero-probability step.  Sequences may have unequal length.
+    an empty or None sequence, a symbol outside [0, alphabet_size) of the
+    model, or a zero-probability step.  Sequences may have unequal length.
 
     ``log_quantize_bits``: floor each per-step log-probability to the
     2^-bits grid before accumulating.  Quantized terms are dyadic
@@ -132,7 +135,7 @@ def llk_matrix(
     per step is < 1e-6 — far below the anomaly thresholds — while the
     default (None) keeps full-precision semantics.
     """
-    seqs = list(sequences)
+    seqs = [_NO_SYMBOLS if s is None else s for s in sequences]
     n, n_models = len(seqs), len(models)
     out = np.full((n, n_models), np.inf)
     if n == 0 or n_models == 0:
@@ -243,26 +246,41 @@ def map_llk(
     id_col: str = "seq_id",
     log_quantize_bits: int | None = None,
     keep: Sequence[str] = (),
+    symbolize: Callable | None = None,
 ) -> DataFrame:
-    """One ``mapInPandas`` pass: each Arrow batch (columns ``id_col``,
+    """One ``mapInArrow`` pass: each Arrow batch (columns ``id_col``,
     ``seq_col`` and ``keep``) is scored once by ``llk_matrix`` under the
     library and ``emit(batch, llk)`` turns it into output rows of
-    ``schema``; llk column j is ``models[j]``.
+    ``schema``; llk column j is ``models[j]``, and ``batch`` is a pandas
+    frame of ``id_col`` and ``keep``.  The sequences are read from the
+    list column's Arrow buffers (a null one is empty), or, with
+    ``symbolize(list array) -> (symbols, row offsets)``, computed from it
+    (e.g. the complex quantizer over raw values).
 
     Physical plan: no shuffle, no join — the tiny model library rides in
     the task closure and each input partition is scored locally
     (broadcast nested-loop join semantics at zero cost).
     """
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from patternly_spark.plans import list_parts
+
     payload = [m.to_dict() for m in models]
+    out_schema = to_arrow_schema(schema)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
+        import pyarrow as pa
+
         mdl = [PFSA.from_dict(d) for d in payload]
-        for pdf in batches:
-            if len(pdf):
-                llk = llk_matrix(pdf[seq_col].tolist(), mdl, log_quantize_bits=log_quantize_bits)
-                yield emit(pdf, llk)
+        for batch in batches:
+            if batch.num_rows:
+                col = batch.column(seq_col)
+                flat, offsets = symbolize(col) if symbolize else list_parts(col)[:2]
+                llk = llk_matrix(np.split(flat, offsets[1:-1]), mdl, log_quantize_bits=log_quantize_bits)
+                out = emit(batch.select([id_col, *keep]).to_pandas(), llk)
+                yield pa.RecordBatch.from_pandas(out, schema=out_schema, preserve_index=False)
 
-    return seq_df.select(id_col, seq_col, *keep).mapInPandas(run, schema=schema)
+    return seq_df.select(id_col, seq_col, *keep).mapInArrow(run, schema=schema)
 
 
 def score_sequences(

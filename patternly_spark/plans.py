@@ -50,6 +50,8 @@ __all__ = [
     "empty_rows",
     "local_rows",
     "local_frame",
+    "collect_within",
+    "list_parts",
 ]
 
 
@@ -385,6 +387,90 @@ def local_frame(spark, pdf, schema) -> DataFrame:
         else:
             cols[name] = pa.array(col.to_numpy())
     return spark.createDataFrame(pa.table(cols), schema).coalesce(1)
+
+
+def list_parts(col) -> tuple[np.ndarray, np.ndarray, np.ndarray | None]:
+    """An Arrow list column as numpy: (values, offsets, present), where
+    row i holds ``values[offsets[i]:offsets[i + 1]]``, a null list holds
+    nothing, and ``present`` masks the non-null elements (None when every
+    element is present; a null element's slot in ``values`` is
+    undefined).  Views of the Arrow buffers where their types allow."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks() if col.num_chunks != 1 else col.chunk(0)
+    offsets = col.offsets.to_numpy().astype(np.int64)
+    values = col.values.slice(offsets[0], offsets[-1] - offsets[0])
+    present = None
+    if values.null_count:
+        present = values.is_valid().to_numpy(zero_copy_only=False)
+    return values.to_numpy(zero_copy_only=False), offsets - offsets[0], present
+
+
+def collect_within(
+    df: DataFrame, list_col: str, budget: float, row_bytes: float, element_bytes: float
+) -> tuple[pa.Table | None, int, int]:
+    """Measure a relation against a driver budget and, when it fits,
+    collect it: one job.
+
+    A relation costs ``rows * row_bytes + elements * element_bytes``,
+    where elements is the total length of its list column ``list_col``
+    (null elements included, a null list holds none); it fits when that
+    is below ``budget``.  The relation is coalesced to at most
+    ``defaultParallelism`` partitions, and each task keeps its Arrow
+    batches while its partition costs less than ``budget`` over that
+    count, so the driver never receives more than the budget.  A task
+    over its share returns only its (rows, elements).  The driver sums
+    the counts and applies the budget: the relation is collected a
+    second time only when it fits but a skewed partition held its rows
+    back.  A budget of 0 admits nothing and runs no job.
+
+    Returns (the relation as an Arrow table in no fixed row order, or
+    None when it does not fit; rows; elements).  Rows and elements are
+    None when no job ran."""
+    import pyarrow.compute as pc
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if budget <= 0:
+        return None, None, None
+    parts = max(1, df.sparkSession.sparkContext.defaultParallelism)
+    share = budget / parts
+    names = df.columns
+    schema = T.StructType(
+        [T.StructField(f.name, f.dataType, True) for f in df.schema]
+        + [T.StructField("__rows", T.LongType()), T.StructField("__elements", T.LongType())]
+    )
+    arrow_schema = to_arrow_schema(schema)
+
+    def measure(batches):
+        kept, rows, elements = [], 0, 0
+        for batch in batches:
+            offsets = batch.column(list_col).offsets
+            rows += batch.num_rows
+            elements += offsets[-1].as_py() - offsets[0].as_py()
+            if kept is not None and rows * row_bytes + elements * element_bytes < share:
+                kept.append(batch)
+            else:
+                kept = None  # over the share: count the rest only
+        for batch in kept or ():
+            counts = pa.nulls(batch.num_rows, pa.int64())
+            yield pa.RecordBatch.from_arrays(batch.columns + [counts, counts], schema=arrow_schema)
+        summary = [pa.nulls(1, f.type) for f in list(arrow_schema)[:-2]] + [pa.array([rows]), pa.array([elements])]
+        yield pa.RecordBatch.from_arrays(summary, schema=arrow_schema)
+
+    table = df.coalesce(parts).mapInArrow(measure, schema).toArrow()
+    summary = np.flatnonzero(table.column("__rows").is_valid().to_numpy(zero_copy_only=False))
+    rows = int(pc.sum(table.column("__rows")).as_py() or 0)
+    elements = int(pc.sum(table.column("__elements")).as_py() or 0)
+    if rows * row_bytes + elements * element_bytes >= budget:
+        return None, rows, elements
+    if table.num_rows - summary.size < rows:
+        return df.toArrow(), rows, elements
+    # the data rows lie between the tasks' summary rows: zero-copy slices
+    bounds = np.concatenate([[-1], summary, [table.num_rows]])
+    kept = [table.slice(a + 1, b - a - 1) for a, b in zip(bounds[:-1], bounds[1:]) if b - a > 1]
+    if not kept:
+        return table.slice(0, 0).select(names), rows, elements
+    return pa.concat_tables(kept).select(names), rows, elements
 
 
 def fanout_respread(df: DataFrame, fanout: int) -> DataFrame:

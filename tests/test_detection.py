@@ -801,10 +801,21 @@ def test_driver_fit_jobs_bound(spark, monkeypatch):
     model.quantized_df.unpersist()
     assert model.n_clusters == 2
     assert calls == []
-    # measured with the tests' session (4 cores, 8 shuffle partitions):
-    # the alphabet aggregate's `first` (3 jobs under AQE) and the collect;
-    # the Spark path runs 25
-    assert jobs <= 4, jobs
+    # the one job that measures and collects the training set; the Spark
+    # path runs 25
+    assert jobs == 1, jobs
+
+    # shaped like the benchmark: raw series of three regimes, collected as
+    # they are and quantized on the driver
+    df = spark.createDataFrame(_regime_values(100, 200, 3), "seq_id long, values array<double>").persist()
+    df.count()
+    model = AnomalyDetection(spark, n_clusters=3, quantize=True, quantize_type="complex", n_symbols=3)
+    jobs = _fit_jobs(spark, model, df)
+    model._sld_cache.unpersist()
+    model.quantized_df.unpersist()
+    df.unpersist()
+    assert model.n_clusters == 3 and sorted(model.cluster_counts) == [100, 100, 100]
+    assert jobs == 1, jobs
 
 
 def _mllib_kmeans(spark, X, k, seed):
@@ -999,3 +1010,45 @@ def test_driver_fit_matches_spark_fit(spark, monkeypatch, case):
         assert driver.n_clusters == 1
     if case == "noise":
         assert len(driver.library) == 4
+
+
+@pytest.mark.parametrize("n_clusters", [1, 2])
+def test_null_sequence_scores_as_empty(spark, fit_paths, n_clusters):
+    """A null sequence is an empty one: the fit trains with it on either
+    path (a row of 0 symbols in ``_train_size``; the SLD features score it
+    inf) and predict gives it the
+    verdict of ``[]``; under a library fitted without them both are inf
+    under every PFSA, so above every bound and closest to the lowest
+    pfsa_id.  Pre-quantized symbols and the complex quantizer over raw
+    values alike."""
+    symbols = [(sid, [int(v) for v in s]) for sid, s in enumerate(simulate(MACHINE_A, 60, 40, seed=5))]
+    symbols += [(sid, [int(v) for v in s]) for sid, s in enumerate(simulate(MACHINE_B, 60, 40, seed=6), 40)]
+    values = [(sid, [v + 0.01 * (i % 7) for i, v in enumerate(s)]) for sid, s in symbols]
+    extra = [(1000, None), (1001, [])]
+    frames = {
+        "symbols": spark.createDataFrame(symbols + extra, "seq_id long, symbols array<int>"),
+        "values": spark.createDataFrame(values + extra, "seq_id long, values array<double>"),
+    }
+    from pyspark.sql import functions as F
+
+    # KMeans would give the two inf rows (SLD features capped at 1e6) a
+    # cluster of their own, which GenESeSS cannot fit: split by seq_id
+    split = lambda feats, n: feats.select("seq_id", (F.col("seq_id") % n).cast("int").alias("cluster"))  # noqa: E731
+    for _ in fit_paths:
+        for col, df in frames.items():
+            for train in (df, df.filter("seq_id < 1000")):
+                model = AnomalyDetection(spark, n_clusters=n_clusters, quantize=col == "values",
+                                         quantize_type="complex", eps=0.2, reduce_clusters=False,
+                                         clustering_alg=split if n_clusters > 1 else None)
+                model.fit(train)
+                preds = model.predict(df).toPandas().set_index("seq_id")
+                model.quantized_df.unpersist()
+                if model._sld_cache is not None:
+                    model._sld_cache.unpersist()
+                assert len(preds) == 82
+                null, empty = preds.loc[1000], preds.loc[1001]
+                assert (bool(null["anomaly"]), int(null["closest_match"])) == (bool(empty["anomaly"]), int(empty["closest_match"]))
+                if train is df:
+                    assert model._train_size == (82, 80 * 60)
+                else:
+                    assert bool(null["anomaly"]) and int(null["closest_match"]) == min(m.pfsa_id for m in model.library)

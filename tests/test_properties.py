@@ -15,6 +15,7 @@ pinned elsewhere).
 import math
 
 import numpy as np
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from patternly_spark.pfsa.llk import llk_batch, llk_one
@@ -415,3 +416,62 @@ def test_sign_hamming_laws(a, b):
     ham_ac = sum((x >= 0) != (y >= 0) for x, y in zip(a, c))
     ham_cb = sum((x >= 0) != (y >= 0) for x, y in zip(c, b))
     assert ham <= ham_ac + ham_cb
+
+
+# ---------------------------------------------------------------------------
+# Q2 the numpy complex quantizer (functions.quantize.fit_cutpoints_local /
+# symbolize_local) against the Spark expressions it replaces on a driver
+# fit and in predict's task: the exact ``percentile`` aggregate,
+# ``symbol_from_cutpoints`` and ``array_diff``.
+# ---------------------------------------------------------------------------
+
+_Q_ELEMENT = st.one_of(
+    st.sampled_from([0.0, -0.0, 1.0, -1.0, 2.5, math.inf, -math.inf, math.nan, None]),
+    st.floats(allow_nan=True, allow_infinity=True),
+)
+_Q_ROW = st.one_of(st.none(), st.lists(_Q_ELEMENT, max_size=8))
+
+
+def _bits(x: float) -> bytes:
+    import struct
+
+    return struct.pack(">d", float("nan") if math.isnan(x) else x)  # any NaN payload is Spark's NaN
+
+
+@settings(max_examples=60, deadline=None)
+@given(rows=st.lists(_Q_ROW, min_size=1, max_size=12), n_symbols=st.integers(2, 6), detrend=st.booleans())
+def test_local_complex_quantizer_matches_spark(spark, rows, n_symbols, detrend):
+    """Cut-points bit for bit, ``alphabet_size``, ``_train_size`` and every
+    symbol equal Spark's, over NaN, +-inf, +-0.0, heavy duplicates, null
+    elements, and null and empty series.  Where -0.0 and 0.0 both occur
+    at a cut-point, Spark's hash order picks the sign and the local fit
+    declines (None); the symbols then still match under Spark's
+    cut-points.  A fit on no values fails on both sides."""
+    import pyarrow as pa
+
+    from patternly_spark.detection import AnomalyDetection
+    from patternly_spark.functions.quantize import fit_cutpoints_local, symbolize_local
+
+    values = pa.array(rows, type=pa.list_(pa.float64()))
+    df = spark.createDataFrame(list(enumerate(rows)), "seq_id long, values array<double>")
+    model = AnomalyDetection(spark, quantize_type="complex", n_symbols=n_symbols, detrend=detrend)
+    try:
+        cuts, alphabet_size = fit_cutpoints_local(values, n_symbols, detrend)
+    except ValueError:  # no values: Spark's percentile is null
+        with pytest.raises(TypeError):
+            model._quantize(df)
+        return
+    want = model._quantize(df).orderBy("seq_id").toPandas()["symbols"].tolist()
+    spark_cuts = model.quantizer.cutpoints
+    if cuts is None:
+        assert any(c == 0.0 for c in spark_cuts)
+    else:
+        assert [_bits(c) for c in cuts] == [_bits(c) for c in spark_cuts]
+        assert alphabet_size == model.alphabet_size
+    assert model._train_size == (len(rows), sum(len(r) for r in rows if r is not None))
+    symbols, offsets = symbolize_local(values, spark_cuts, detrend)
+    got = np.split(symbols, offsets[1:-1])
+    assert len(got) == len(rows)
+    for r, g, w in zip(rows, got, want):
+        assert g.dtype == np.int8
+        assert (w is None and r is None and g.size == 0) or g.tolist() == list(w)

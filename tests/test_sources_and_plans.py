@@ -121,7 +121,7 @@ def test_llk_scoring_plan_has_no_shuffle(spark):
     model.fitted, model.library = True, [M2]
     model.pfsa_llk_means, model.pfsa_llk_stds = np.array([0.7]), np.array([0.1])
     plan = _plan(model.predict(seqs))
-    assert "MapInPandas" in plan and "Exchange" not in plan
+    assert "MapInArrow" in plan and "Exchange" not in plan
 
 
 def test_quantize_stays_jvm_side(spark):
@@ -776,3 +776,79 @@ def test_bench_strict_mode_exits_on_regression(monkeypatch):
     bench.maybe_strict_exit({})  # no regressions: returns
     monkeypatch.delenv("SPARK_GRAFT_BENCH_STRICT")
     bench.maybe_strict_exit(reg)  # not strict: returns
+
+
+def _jobs_of(spark, fn):
+    """(fn's result, the Spark jobs it ran in its own job group)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    prev = sc.getLocalProperty("spark.jobGroup.id"), sc.getLocalProperty("spark.job.description")
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev[0])
+        sc.setLocalProperty("spark.job.description", prev[1])
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _lists_frame(spark, lengths):
+    """(seq_id, values) with one row per length, split evenly over four
+    partitions in seq_id order; a None length is a null list."""
+    rows = [(i, None if n is None else [float(i)] * n) for i, n in enumerate(lengths)]
+    return spark.createDataFrame(rows, "seq_id long, values array<double>").repartitionByRange(4, "seq_id")
+
+
+@pytest.mark.parametrize("case", ["fits", "skewed", "over"])
+def test_collect_within_one_job(spark, case):
+    """``collect_within`` measures a relation and collects it in one job
+    when every partition fits its share of the budget; a fitting relation
+    whose skewed partition held its rows back is collected a second time;
+    an over-budget one returns no rows.  The counts are exact either way
+    (a null list holds no elements)."""
+    from patternly_spark.plans import collect_within
+
+    assert spark.sparkContext.defaultParallelism == 4  # the tests' session
+    lengths = [3, None, 0, 5] * 10
+    if case == "skewed":  # the last partition holds 600 of the 680 elements
+        lengths[-5:] = [120] * 5
+    df = _lists_frame(spark, lengths).persist()
+    df.count()
+    rows, elements = len(lengths), sum(n or 0 for n in lengths)
+    cost = rows * 10 + elements * 8
+    budget = {"fits": 2 * cost, "skewed": cost + 1, "over": cost}[case]
+    (table, n_rows, n_elements), jobs = _jobs_of(spark, lambda: collect_within(df, "values", budget, 10, 8))
+    df.unpersist()
+    assert (n_rows, n_elements) == (rows, elements)
+    if case == "over":
+        assert table is None and jobs == 1
+        return
+    assert jobs == (2 if case == "skewed" else 1)
+    got = table.to_pandas().sort_values("seq_id")
+    assert got["seq_id"].tolist() == list(range(rows))
+    assert [None if v is None else len(v) for v in got["values"]] == lengths
+    assert collect_within(df, "values", 0, 10, 8) == (None, None, None)  # a zero budget runs no job
+
+
+def test_graph_worker_imports_skip_detection(tmp_path):
+    """The package exposes its public names lazily (PEP 562): importing a
+    graph operator's module, as a worker unpickling its UDF does, does not
+    import detection, analysis or MLlib, and the public names still
+    import."""
+    import subprocess
+
+    probe = (
+        "import sys\n"
+        "import patternly_spark.operators.graph\n"
+        "loaded = [m for m in ('patternly_spark.detection', 'patternly_spark.analysis', 'pyspark.ml') if m in sys.modules]\n"
+        "assert not loaded, loaded\n"
+        "from patternly_spark import AnomalyDetection, PFSA, embed_library\n"
+        "import patternly_spark\n"
+        "assert patternly_spark.detection.AnomalyDetection is AnomalyDetection\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", probe], cwd=str(tmp_path), capture_output=True, text=True,
+                         timeout=120, env={**os.environ, "PYTHONPATH": repo})
+    assert out.returncode == 0, out.stderr
