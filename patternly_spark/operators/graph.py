@@ -14,25 +14,29 @@ filter over the edge DataFrame (no UDFs, no driver-side graph), and the
 edge set is localCheckpoint-ed per round to keep lineage flat.
 
 Driver-sized graphs skip the rounds.  ``connected_components``,
-``core_numbers`` and ``bfs_hops`` first pin their edge relation and
-count it in the pin's own job.  When the rows times
-``GRAPH_TASK_EDGE_BYTES`` stay under ``GRAPH_TASK_SOLVE_BYTES``, the
-exact fixpoint is computed in ONE ``coalesce(1).mapInPandas`` task by
-numpy kernels over the pinned relation (``_solve_in_one_task``): one job
-instead of one to three per round, so the operator costs ~4 jobs
-instead of 29-58 on a 30k-edge graph.  The solve runs in a task, not on
-the driver: nothing is collected, so the driver's memory stays flat
-whatever the graph, and the result stays a DataFrame with the
-distributed path's rows and schema.  Above the gate the distributed
-round loops run unchanged; their ``max_iterations`` / ``max_rounds``
-caps bound only those rounds, since the one-task kernels always run
-to the exact fixpoint.
+``core_numbers`` and ``bfs_hops`` first probe their projected edge
+rows, before any ``distinct``, with ``plans.solve_within``: ONE task
+reads at most cap + 1 of them, where cap is the most rows whose
+``GRAPH_TASK_EDGE_BYTES`` stay under ``GRAPH_TASK_SOLVE_BYTES``.  When
+it sees at most cap rows it computes the exact fixpoint with numpy
+kernels over all of them (dropping self-loops and duplicate pairs, and
+mirroring BFS edges, itself), and the driver serves the node-sized
+result as a one-partition DataFrame with the distributed path's rows
+and schema: 2 jobs per operator with the result collected, instead of
+29-58 on a 30k-edge graph.  The edges are solved in the task, not
+collected to the driver, so the driver holds only the result.  When the
+probe sees cap + 1 rows, the distributed round loops run unchanged,
+over the probe's pin of the edge rows when their plan shuffles (a join
+upstream runs once); their ``max_iterations`` / ``max_rounds`` caps
+bound only those rounds, since the one-task kernels always run to the
+exact fixpoint.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -48,6 +52,7 @@ from patternly_spark.plans import (
     local_rows,
     round_partitions,
     round_shuffle,
+    solve_within,
     tuned_shuffle,
 )
 
@@ -87,37 +92,38 @@ def _canon(edges: DataFrame) -> DataFrame:
 #: operators run their distributed round loops.
 GRAPH_TASK_SOLVE_BYTES = 128 * 1024 * 1024
 
-#: Task bytes per row of the pinned edge relation for the one-task solve:
-#: the Arrow batches as pandas frames, their concatenation, the id
-#: index, the CSR arrays and the output frame.  Measured with
-#: tracemalloc over ``_solve_in_one_task``'s task function, fed
-#: 10,000-row batches, on synthetic log-uniform graphs of ~80k and ~160k
-#: pinned rows (peak, numpy 1.26, pandas 2.2): CC 134, BFS 157, core
-#: numbers 208 B/row at both sizes.  The largest, rounded up to 256, so
-#: the gate admits ~520k rows.
+#: Task bytes per row of the probed edge relation for the one-task solve:
+#: the Arrow batches, their filtered copies, the id index, the CSR arrays
+#: and the output table.  Measured over ``plans.solve_within``'s task
+#: function, fed 10,000-row Arrow IPC batches of raw log-uniform edges
+#: (duplicates and self-loops kept, as the operators receive them) of 80k
+#: and 160k rows (peak numpy bytes by tracemalloc plus peak Arrow pool
+#: bytes, numpy 1.26, pyarrow 16.1): CC 133, BFS 161 directed and 167
+#: undirected (mirrored in the task), core numbers 171 B/row at both
+#: sizes.  The largest, rounded up to 256, so the gate admits ~520k rows.
+#: The rows are counted before any ``distinct``: an edge list with many
+#: duplicate pairs reaches the gate sooner than its distinct edges would.
 GRAPH_TASK_EDGE_BYTES = 256
 
 
-def _fits_one_task(rows: int, *fields: StructField) -> bool:
-    """Whether a pinned edge relation of ``rows`` rows whose id columns
-    are ``fields`` takes the one-task solve: integral ids (the kernels
-    index numpy arrays) and kernel bytes under the budget."""
-    return rows * GRAPH_TASK_EDGE_BYTES < GRAPH_TASK_SOLVE_BYTES and all(
-        isinstance(f.dataType, IntegralType) for f in fields
-    )
+def _solve_small(
+    df: DataFrame, kernel, schema: StructType, *ids: str
+) -> tuple[DataFrame | None, DataFrame]:
+    """``plans.solve_within`` of ``kernel`` over ``df`` at the one-task
+    graph budget: (the served result or None, the relation for the
+    distributed rounds).  A column of ``ids`` that is not integral gets
+    (None, ``df``) without a probe: the kernels index numpy arrays."""
+    if not all(isinstance(df.schema[c].dataType, IntegralType) for c in ids):
+        return None, df
+    return solve_within(df, kernel, schema, GRAPH_TASK_SOLVE_BYTES, GRAPH_TASK_EDGE_BYTES)
 
 
-def _solve_in_one_task(rel: DataFrame, kernel, schema: StructType | str) -> DataFrame:
-    """``kernel`` (pandas frame of all of ``rel`` -> pandas frame in
-    ``schema``) run in a single task over ``rel``.  An empty ``rel``
-    yields no rows: the task sees no batch."""
-
-    def solve(batches):
-        frames = list(batches)
-        if frames:
-            yield kernel(pd.concat(frames, ignore_index=True))
-
-    return rel.coalesce(1).mapInPandas(solve, schema)
+def _edges(table: pa.Table) -> tuple[np.ndarray, np.ndarray]:
+    """The (u, v) ids of an Arrow edge table, without the rows the
+    distributed paths' ``u != v`` filter drops: self-loops and rows with
+    a null id.  Duplicate pairs stay."""
+    table = table.filter(pc.not_equal(table["u"], table["v"]))
+    return table["u"].to_numpy(), table["v"].to_numpy()
 
 
 def _index(*ids: np.ndarray):
@@ -145,13 +151,14 @@ def _csr_rows(start: np.ndarray, deg: np.ndarray, nodes: np.ndarray):
     return row, start[nodes][row] + pos
 
 
-def _cc_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Component = smallest id, for the canonical edges (u, v): min-label
-    hooking of tree roots, then pointer jumping to full compression,
-    until no edge joins two trees.  Every round each tree either hooks
-    onto a smaller neighbouring tree or receives one, so the trees of a
-    component at least halve per round: O(log n) rounds."""
-    ids, (a, b) = _index(pdf["u"].to_numpy(), pdf["v"].to_numpy())
+def _cc_kernel(table: pa.Table) -> pa.Table:
+    """Component = smallest id, for the edges (u, v) in either
+    orientation: min-label hooking of tree roots, then pointer jumping
+    to full compression, until no edge joins two trees.  Every round
+    each tree either hooks onto a smaller neighbouring tree or receives
+    one, so the trees of a component at least halve per round: O(log n)
+    rounds.  Duplicate edges change no minimum."""
+    ids, (a, b) = _index(*_edges(table))
     lab = np.arange(ids.size)
     while True:
         la, lb = lab[a], lab[b]
@@ -167,10 +174,10 @@ def _cc_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         if np.array_equal(nxt, lab):
             break
         lab = nxt
-    return pd.DataFrame({"node": ids, "component": ids[lab]})
+    return pa.table({"node": ids, "component": ids[lab]})
 
 
-def _core_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+def _core_kernel(table: pa.Table) -> pa.Table:
     """Core numbers of the undirected edges (u, v): the Montresor h-index
     iteration of ``core_numbers``' rounds over a CSR.  Labels start at
     the degree; a node whose neighbour moved gets min(label, h-index of
@@ -178,7 +185,9 @@ def _core_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
     node whose neighbours all kept their labels would compute the label
     it has, so a round recomputes only the neighbours of the nodes that
     moved in the last; the fixpoint, the core numbers, is the same."""
-    ids, (u, v) = _index(pdf["u"].to_numpy(), pdf["v"].to_numpy())
+    ids, (u, v) = _index(*_edges(table))
+    # one row per undirected pair, as the distributed path's distinct
+    u, v = np.divmod(np.unique(np.minimum(u, v) * ids.size + np.maximum(u, v)), max(ids.size, 1))
     start, deg, nbr = _csr(np.concatenate([u, v]), np.concatenate([v, u]), ids.size)
     lab = deg.copy()
     active = np.arange(ids.size)
@@ -194,17 +203,20 @@ def _core_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         moved = active[new < lab[active]]
         lab[active] = new
         active = np.unique(nbr[_csr_rows(start, deg, moved)[1]])
-    return pd.DataFrame({"node": ids, "core": lab.astype(np.int64)})
+    return pa.table({"node": ids, "core": lab})
 
 
-def _bfs_kernel(pdf: pd.DataFrame, max_hops: int) -> pd.DataFrame:
+def _bfs_kernel(table: pa.Table, max_hops: int, directed: bool) -> pa.Table:
     """Hop counts from the tagged rows of ``bfs_hops``: ``t`` 0 = an edge
-    u -> v, 1 = source u, 2 = a null source.  Frontier expansion over a
-    CSR: each hop gathers the frontier's adjacency rows and settles the
-    unseen neighbours."""
-    t, u, v = (pdf[c].to_numpy() for c in ("t", "u", "v"))
-    edge = t == 0
-    ids, (a, b, s) = _index(u[edge], v[edge], u[t == 1])
+    u -> v, 1 = a source u (null allowed).  Frontier expansion over a
+    CSR, each edge also mirrored unless ``directed``: each hop gathers
+    the frontier's adjacency rows and settles the unseen neighbours."""
+    is_edge = pc.equal(table["t"], 0)
+    sources = table.filter(pc.invert(is_edge))["u"]
+    ids, (a, b, s) = _index(*_edges(table.filter(is_edge)), sources.drop_null().to_numpy())
+    if not directed:
+        # mirrored after indexing: the index sorts each id once, not twice
+        a, b = np.concatenate([a, b]), np.concatenate([b, a])
     start, deg, nbr = _csr(a, b, ids.size)
     hops = np.full(ids.size, -1, np.int32)
     frontier = np.unique(s)
@@ -216,12 +228,11 @@ def _bfs_kernel(pdf: pd.DataFrame, max_hops: int) -> pd.DataFrame:
         frontier = np.unique(reached[hops[reached] < 0])
         hops[frontier] = h
     seen = hops >= 0
-    out = pd.DataFrame({"node": ids[seen], "hops": hops[seen]})
-    if (t == 2).any():
+    node, hops = pa.array(ids[seen]), hops[seen]
+    if sources.null_count:
         # the distributed path keeps a null source at hop 0
-        null = pd.DataFrame({"node": pd.array([None], "Int64"), "hops": np.zeros(1, np.int32)})
-        out = pd.concat([out.astype({"node": "Int64"}), null], ignore_index=True)
-    return out
+        node, hops = pa.concat_arrays([node, pa.nulls(1, node.type)]), np.append(hops, 0)
+    return pa.table({"node": node, "hops": hops})
 
 
 def _star_round(cur: DataFrame) -> DataFrame:
@@ -276,11 +287,11 @@ def connected_components(
     converged after ``max_iterations`` rounds (needs ~log2(n) in the
     worst case, so 50 covers any realistic graph).
 
-    A driver-sized edge set (the canonical-edge count from the first
-    checksum, times ``GRAPH_TASK_EDGE_BYTES``, under
-    ``GRAPH_TASK_SOLVE_BYTES``) skips the star rounds: one task labels
-    it by min-id hooking with pointer jumping (``_cc_kernel``), in a
-    task rather than on the driver so nothing is collected.  That solve
+    A driver-sized edge set (its projected rows, duplicates and
+    self-loops included, times ``GRAPH_TASK_EDGE_BYTES`` under
+    ``GRAPH_TASK_SOLVE_BYTES``) skips the star rounds: the one task that
+    probes its size labels it by min-id hooking with pointer jumping
+    (``_cc_kernel``), and the driver serves the labels.  That solve
     always reaches the fixpoint; ``max_iterations`` bounds only the
     distributed rounds.
     """
@@ -299,13 +310,14 @@ def connected_components(
         ).first()
         return (row["n"], row["h"])
 
-    cur = _canon(
-        edges.select(F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v"))
-    ).localCheckpoint(eager=False)
+    projected = edges.select(F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v"))
+    # nullable like the star rounds' window minima
+    schema = StructType([StructField("node", LongType()), StructField("component", LongType())])
+    solved, projected = _solve_small(projected, _cc_kernel, schema)
+    if solved is not None:
+        return solved
+    cur = _canon(projected).localCheckpoint(eager=False)
     cur_sum = _checksum(cur)
-    if _fits_one_task(cur_sum[0]):
-        # nullable like the star rounds' window minima
-        return _solve_in_one_task(cur, _cc_kernel, "node long, component long")
 
     # round-heavy: O(log n) star rounds want bytes-sized partitions, not
     # the session default (plans.round_partitions — the measured
@@ -750,33 +762,35 @@ def core_numbers(
     are a valid UPPER bound that has not converged (raise instead of
     returning silently-wrong numbers).
 
-    A driver-sized edge set (the pinned undirected edges, counted in
-    their pin's own job, times ``GRAPH_TASK_EDGE_BYTES`` under
-    ``GRAPH_TASK_SOLVE_BYTES``) skips the rounds: one task runs the same
-    h-index iteration vectorized over a CSR (``_core_kernel``), in a
-    task rather than on the driver so nothing is collected.  That solve
-    always reaches the fixpoint; ``max_rounds`` bounds only the
-    distributed rounds.
+    A driver-sized edge set (its projected rows, duplicates and
+    self-loops included, times ``GRAPH_TASK_EDGE_BYTES`` under
+    ``GRAPH_TASK_SOLVE_BYTES``) skips the rounds: the one task that
+    probes its size runs the same h-index iteration vectorized over a
+    CSR (``_core_kernel``), and the driver serves the core numbers.
+    That solve always reaches the fixpoint; ``max_rounds`` bounds only
+    the distributed rounds.
 
     Output: (node, core) — isolated nodes never appear (no edges).
     """
-    und = _pin_disk(
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
+    def undirected(pairs: DataFrame) -> DataFrame:
+        return (
+            pairs.select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
         )
-        .filter(F.col("u") != F.col("v"))
-        .distinct(),
-        eager=False,
+
+    pairs = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    # least/greatest of one pair: u and v share type and nullability
+    u = undirected(pairs).schema["u"]
+    node = StructField("node", u.dataType, u.nullable)
+    solved, pairs = _solve_small(
+        pairs, _core_kernel, StructType([node, StructField("core", LongType(), False)]), "u", "v"
     )
+    if solved is not None:
+        return solved
+    und = _pin_disk(undirected(pairs), eager=False)
     # the count materializes the pin in the same pass (the eager pin's job)
     n_und = und.count()
-    if _fits_one_task(n_und, und.schema["u"]):
-        # least/greatest of one pair: u and v share type and nullability
-        node = StructField("node", und.schema["u"].dataType, und.schema["u"].nullable)
-        return _solve_in_one_task(
-            und, _core_kernel, StructType([node, StructField("core", LongType(), False)])
-        )
     both = und.select(F.col("u").alias("a"), F.col("v").alias("b")).unionAll(
         und.select(F.col("v").alias("a"), F.col("u").alias("b"))
     )
@@ -1150,45 +1164,46 @@ def bfs_hops(
     result is deterministic integer data — min() over a fixed relation —
     so a bounded recursive-CTE SQL replica matches exactly.
 
-    A driver-sized edge set (the pinned, mirrored edges, counted in
-    their pin's own job, times ``GRAPH_TASK_EDGE_BYTES`` under
-    ``GRAPH_TASK_SOLVE_BYTES``) skips the rounds: one task expands the
-    frontier over a CSR up to ``max_hops`` (``_bfs_kernel``).  The
-    sources reach that task as tagged rows of its input, not through a
-    driver collect, so an empty edge set still returns them at hop 0.
+    A driver-sized edge set (its projected rows plus the source rows,
+    before mirroring or ``distinct``, times ``GRAPH_TASK_EDGE_BYTES``
+    under ``GRAPH_TASK_SOLVE_BYTES``) skips the rounds: the one task that
+    probes its size mirrors the edges unless ``directed``, expands the
+    frontier over a CSR up to ``max_hops`` (``_bfs_kernel``), and the
+    driver serves the hop counts.  The sources reach that task as tagged
+    rows of its input, so an empty edge set still returns them at hop 0.
 
     Output: (node, hops int) for every node within ``max_hops`` of a
     source (sources themselves at hops 0).
     """
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).filter(
-        F.col("u") != F.col("v")
-    )
-    if not directed:
-        e = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    e = e.distinct().localCheckpoint(eager=False)
-    # the count materializes the pin in the same pass (the eager pin's job)
     source = F.col(source_col)
+    tagged = (
+        edges.select(F.lit(0).alias("t"), F.col(src).alias("u"), F.col(dst).alias("v"))
+        .unionByName(sources.select(F.lit(1).alias("t"), source.alias("u"), source.alias("v")))
+    )
+
+    def edge_set(tagged: DataFrame) -> DataFrame:
+        e = tagged.filter(F.col("t") == 0).select("u", "v").filter(F.col("u") != F.col("v"))
+        if not directed:
+            e = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        return e.distinct()
+
+    # the distributed path's node column: sources unioned with reached
+    # edge ends (type widened, nullable if either side is)
+    node = sources.select(source.alias("node")).unionByName(
+        edge_set(tagged).select(F.col("v").alias("node"))
+    ).schema["node"]
+    solved, tagged = _solve_small(
+        tagged,
+        lambda table: _bfs_kernel(table, int(max_hops), directed),
+        StructType([node, StructField("hops", IntegerType(), False)]),
+        "u",
+        "v",
+    )
+    if solved is not None:
+        return solved
+    e = edge_set(tagged).localCheckpoint(eager=False)
+    # the count materializes the pin in the same pass (the eager pin's job)
     n_e = e.count()
-    if _fits_one_task(n_e, e.schema["u"], e.schema["v"], sources.schema[source_col]):
-        # a null source is tagged, not carried: a null in an id column
-        # would turn its pandas batch to float64
-        tagged = e.select(F.lit(0).alias("t"), "u", "v").unionByName(
-            sources.select(
-                F.when(source.isNull(), 2).otherwise(1).alias("t"),
-                F.coalesce(source, F.lit(0)).alias("u"),
-                F.coalesce(source, F.lit(0)).alias("v"),
-            )
-        )
-        # the distributed path's node column: sources unioned with reached
-        # edge ends (type widened, nullable if either side is)
-        node = sources.select(source.alias("node")).unionByName(
-            e.select(F.col("v").alias("node"))
-        ).schema["node"]
-        return _solve_in_one_task(
-            tagged,
-            lambda pdf: _bfs_kernel(pdf, int(max_hops)),
-            StructType([node, StructField("hops", IntegerType(), False)]),
-        )
 
     settled = (
         sources.select(F.col(source_col).alias("node"))

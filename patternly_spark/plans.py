@@ -28,6 +28,19 @@ every fixed count, 32, 64 and 128, on both round-heavy queries.  To
 run an operator at a fixed count, set the session's
 ``spark.sql.shuffle.partitions`` (or wrap the call in
 ``tuned_shuffle(spark, n)``): the policy never exceeds that ceiling.
+
+Driver-sized relations skip distributed work under one of two budgets,
+each with a tracemalloc-measured per-row cost kept next to its
+operator.  A *driver* budget bounds what the driver process holds: the
+relation itself is collected and worked on there, beside the session,
+for as long as the caller keeps the result.  ``collect_within`` applies
+it (the fit's ``detection.FIT_LOCAL_BYTES``), and so does the MSF
+driver merge (``operators.graph.MSF_LOCAL_MERGE_BYTES``).  A *one-task*
+budget bounds one Python worker's peak while a kernel runs over the
+whole relation in a task: ``solve_within`` applies it (the graph
+operators' ``GRAPH_TASK_SOLVE_BYTES``).  That memory is released when
+the task ends, and the driver receives only the kernel's result, so
+the one-task budget can admit relations the driver budget would not.
 """
 
 from __future__ import annotations
@@ -51,6 +64,7 @@ __all__ = [
     "local_rows",
     "local_frame",
     "collect_within",
+    "solve_within",
     "list_parts",
 ]
 
@@ -471,6 +485,73 @@ def collect_within(
     if not kept:
         return table.slice(0, 0).select(names), rows, elements
     return pa.concat_tables(kept).select(names), rows, elements
+
+
+def solve_within(
+    df: DataFrame, kernel, schema, budget: float, row_bytes: float
+) -> tuple[DataFrame | None, DataFrame]:
+    """Run ``kernel`` over the whole of a relation in one task when the
+    relation fits a one-task budget, and serve its result: one job
+    beyond the relation's own shuffle stages, two after a shuffle.
+
+    The relation fits when its rows times ``row_bytes`` are below
+    ``budget``; cap is the largest row count that does.  One task reads
+    ``df.coalesce(1).limit(cap + 1)``: when it sees at most cap rows it
+    yields ``kernel(table)`` (an Arrow table of all of them -> an Arrow
+    table with ``schema``'s column names), else only a flag.  The driver
+    collects that result and serves it as a one-partition frame with
+    ``schema`` (a StructType).  A relation with no rows gives no rows
+    without calling ``kernel``.  A budget that admits no row runs no
+    job.
+
+    When ``df``'s plan has an exchange, its last stage (a join or an
+    aggregate, whose input can be far larger than the relation) would
+    run in that one task under ``coalesce(1)``, and a caller's
+    distributed path would run its shuffles again after a failed probe.
+    Such a relation is pinned lazily (DISK_ONLY) and read as
+    ``pin.limit(cap + 1).coalesce(1)``: its tasks keep their parallelism
+    and each materializes its partition of the pin, passing at most
+    cap + 1 rows to the one exchange that gathers them for the solve, at
+    the cost of one more job.
+
+    Returns (the served result, or None when the relation is over the
+    budget; the relation the caller's distributed path should read:
+    ``df``, or its pin)."""
+    from pyspark import StorageLevel
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    cap = math.ceil(budget / row_bytes) - 1 if budget > 0 else 0
+    if cap < 1:
+        return None, df
+    task_schema = T.StructType(
+        [T.StructField(f.name, f.dataType, True) for f in schema] + [T.StructField("__over", T.BooleanType())]
+    )
+    arrow_schema = to_arrow_schema(task_schema)
+    out_schema = pa.schema(list(arrow_schema)[:-1])
+
+    def solve(batches):
+        batches = list(batches)
+        if sum(b.num_rows for b in batches) > cap:
+            flag = [pa.nulls(1, f.type) for f in out_schema] + [pa.array([True])]
+            yield pa.RecordBatch.from_arrays(flag, schema=arrow_schema)
+        elif batches:
+            out = kernel(pa.Table.from_batches(batches)).select(out_schema.names).cast(out_schema)
+            over = pa.nulls(out.num_rows, pa.bool_())
+            yield from out.append_column(arrow_schema.field("__over"), [over]).to_batches()
+
+    if plan_audit(df)["exchanges"]:
+        df = df.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+        # coalesce(1) keeps the task to one where AQE drops a limit the
+        # gathered rows cannot reach
+        rows = df.limit(cap + 1).coalesce(1)
+    else:
+        rows = df.coalesce(1).limit(cap + 1)
+    table = rows.mapInArrow(solve, task_schema).toArrow()
+    if table.column("__over").null_count < table.num_rows:
+        return None, df
+    result = table.drop_columns(["__over"])
+    return df.sparkSession.createDataFrame(result, schema).coalesce(1), df
 
 
 def fanout_respread(df: DataFrame, fanout: int) -> DataFrame:

@@ -15,10 +15,12 @@ registry rows of touched components re-enter as star edges
 components collapse in the same alternating-star run as the new edges;
 untouched components pass through byte-identical.  When a
 microbatch's re-solve (batch edges plus touched members' star edges)
-is under ``connected_components``' one-task gate, it is solved in one
-task instead of star rounds: the trigger pays ~4 Spark jobs for the
-fixpoint, not one to two per round (29 on a 30k-edge graph), so the
-per-microbatch scheduling latency no longer grows with the rounds.
+is under ``connected_components``' one-task gate, it is solved in the
+one task that probes its size instead of star rounds: the trigger pays
+the re-solve input's own shuffle stages, one or two jobs that gather
+and solve it and the collect of the labels, not one to two jobs per round
+(29 on a 30k-edge graph), so the per-microbatch scheduling latency no
+longer grows with the rounds.
 At 100 TB, bucket the registry by label (``sources.bucketed``) so the
 touched-component semi-joins prune to matching buckets, and partition
 the overwrite by label range so untouched partitions rewrite nothing.

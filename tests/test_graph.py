@@ -753,7 +753,8 @@ def _messy_edges(seed, n_nodes, n_edges):
 
 
 @pytest.mark.parametrize("seed,id_type", [(0, "long"), (1, "int")])
-def test_graph_solve_paths_agree_on_messy_graphs(spark, graph_paths, seed, id_type):
+def test_graph_solve_paths_agree_on_messy_graphs(spark, graph_paths, monkeypatch, seed, id_type):
+    from patternly_spark.operators import graph
     from patternly_spark.operators.graph import bfs_hops, core_numbers
 
     df = spark.createDataFrame(_messy_edges(seed, 90, 160), f"src {id_type}, dst {id_type}")
@@ -769,7 +770,11 @@ def test_graph_solve_paths_agree_on_messy_graphs(spark, graph_paths, seed, id_ty
         ]
 
     got = {path: run() for path in graph_paths}
-    assert got["one-task"] == got["distributed"]
+    # a task budget of ~10 rows: the probe runs, sees too many rows and
+    # hands the graph to the distributed rounds
+    monkeypatch.setattr(graph, "GRAPH_TASK_SOLVE_BYTES", 10.5 * graph.GRAPH_TASK_EDGE_BYTES)
+    got["over-budget probe"] = run()
+    assert got["one-task"] == got["distributed"] == got["over-budget probe"]
     bfs_rows = dict(got["one-task"][2][0])
     assert bfs_rows[None] == 0 and bfs_rows[10_000] == 0 and bfs_rows[1] == 0
 
@@ -838,8 +843,8 @@ def test_graph_solve_empty_edges(spark, graph_paths):
 
 def test_graph_solve_jobs_per_operator_bound(spark):
     """A driver-sized graph (~2,000 edges) costs each operator at most
-    five Spark jobs, its result collected: the pin and its count, and
-    one task that solves the whole graph."""
+    two Spark jobs, its result collected: the one task that probes and
+    solves the whole graph, and the collect of the served result."""
     from patternly_spark.operators.graph import bfs_hops, core_numbers
 
     rng = np.random.default_rng(4)
@@ -853,7 +858,7 @@ def test_graph_solve_jobs_per_operator_bound(spark):
         "core_numbers": lambda: core_numbers(edges),
         "bfs_hops": lambda: bfs_hops(edges, srcs, max_hops=6),
     }, "graph-jobs-bound")
-    assert all(n <= 5 for n in jobs.values()), jobs
+    assert all(n <= 2 for n in jobs.values()), jobs
 
 
 def test_graph_round_loops_size_from_their_pin_count(spark, monkeypatch):

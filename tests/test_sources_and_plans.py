@@ -832,6 +832,51 @@ def test_collect_within_one_job(spark, case):
     assert collect_within(df, "values", 0, 10, 8) == (None, None, None)  # a zero budget runs no job
 
 
+@pytest.mark.parametrize("shuffled", [False, True])
+def test_solve_within_one_task(spark, shuffled):
+    """``solve_within`` runs its kernel once, in one task, over every row
+    of a relation within the cap: in one job for a relation read as it
+    is, and after its own shuffle stage, kept parallel, for a shuffled
+    one.  A relation over the cap gets no result after one probe, and a
+    shuffled one comes back pinned, so reading it again runs no shuffle.
+    A zero budget runs no job."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from patternly_spark.plans import plan_audit, solve_within
+
+    def relation():
+        # 4 partitions in the tests' session; the explode hides the row
+        # count from Catalyst, which drops a limit it can prove the input
+        # never hits.  A new frame per probe: a frame's finished shuffle
+        # stages are not run again.
+        df = spark.range(40).select(F.explode(F.array("id")).alias("id"))
+        return df.repartition(3) if shuffled else df
+
+    df = relation()
+    assert plan_audit(df)["exchanges"] == int(shuffled)
+    schema = StructType([StructField("rows", LongType()), StructField("total", LongType())])
+
+    def kernel(table):
+        return pa.table({"rows": [table.num_rows], "total": [pc.sum(table["id"]).as_py()]})
+
+    (served, rest), jobs = _jobs_of(spark, lambda: solve_within(df, kernel, schema, 41 * 8, 8))
+    assert served.collect() == [(40, 780)] and served.schema == schema
+    assert served.rdd.getNumPartitions() == 1
+    # under AQE the input's shuffle stage, the exchange that gathers the
+    # pin's rows and the solve are a job each
+    assert jobs == (3 if shuffled else 1)
+    assert (rest is df) != shuffled
+    df = relation()
+    (over, rest), jobs = _jobs_of(spark, lambda: solve_within(df, kernel, schema, 20 * 8, 8))
+    assert over is None and jobs == (3 if shuffled else 1)
+    assert (rest is df) != shuffled
+    # the probe materialized every partition of the pin: one job, no shuffle
+    assert _jobs_of(spark, lambda: sorted(r.id for r in rest.collect())) == (list(range(40)), 1)
+    assert _jobs_of(spark, lambda: solve_within(df, kernel, schema, 0, 8)) == ((None, df), 0)
+
+
 def test_graph_worker_imports_skip_detection(tmp_path):
     """The package exposes its public names lazily (PEP 562): importing a
     graph operator's module, as a worker unpickling its UDF does, does not
