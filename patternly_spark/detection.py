@@ -20,8 +20,9 @@ fit:      quantize (codegen column exprs; the complex cut-points and the
           cluster label rides through the scoring, one collect), so the
           final library scores the training set once.
 fit, driver-sized: one job (``plans.collect_within``) measures the
-          training set and, when its rows and elements fit
-          ``FIT_LOCAL_BYTES`` (and GenESeSS runs in memory), collects it:
+          training set and, when its rows and elements at the ``FIT_*``
+          costs fit the driver budget (and GenESeSS runs in memory),
+          collects it:
           the raw series for the complex quantizer with exact (or already
           fitted) cut-points, else the quantized relation.  Then the fit
           runs no Spark job: numpy quantizes the raw series by the rules
@@ -100,16 +101,14 @@ VERDICT_SCHEMA = T.StructType(
 )
 
 
-#: Driver memory one fit may hold to train on the driver.  Above it, or
-#: with ``genesess_mode="distributed"``, the fit runs its Spark path.  The
+#: Driver bytes per training sequence and per symbol of a driver-path fit,
+#: gated at ``plans.DRIVER_BUDGET_BYTES``; above it, or with
+#: ``genesess_mode="distributed"``, the fit runs its Spark path.  The
 #: budget is per fit: ``MultiChannelDetection.fit`` runs up to
 #: ``max_parallel`` channel fits at once, so its thread pool can hold that
-#: many of these.  64 MiB admits 16,000 series of 200 symbols and not
-#: 24,000 (the sizes of the wall-time comparison below the constants).
-FIT_LOCAL_BYTES = 64 * 1024 * 1024
-
-#: Driver bytes per training sequence and per symbol of a driver-path fit.
-#: Its peak is the quantization of the collected raw series: the Arrow
+#: many.  The driver budget admits 16,000 series of 200 symbols and not
+#: 24,000.
+#: A fit's peak is the quantization of the collected raw series: the Arrow
 #: table of float64 values and the copy that ``fit_cutpoints_local``
 #: partitions for the cut-points; the clustering that follows holds the
 #: int8 symbols, the SLD features, the GenESeSS fits, ``llk_matrix`` over
@@ -577,7 +576,7 @@ class AnomalyDetection:
         table = None
         if self.genesess_mode == "memory":
             col = "values" if raw else "symbols"
-            table = collect_within(src, col, FIT_LOCAL_BYTES, FIT_SEQ_BYTES, FIT_SYMBOL_BYTES)[0]
+            table = collect_within(src, FIT_SEQ_BYTES, col, FIT_SYMBOL_BYTES)[0]
         local = table is not None
         if local:
             if raw:
@@ -861,8 +860,8 @@ class MultiChannelDetection:
     are fitted independently — the per-channel pipelines are driver-
     orchestrated, and channels are dispatched concurrently from multiple
     threads.  A channel whose windows are driver-sized trains on the
-    driver (``FIT_LOCAL_BYTES`` is per fit), so the pool can hold
-    ``max_parallel`` such training sets at once.
+    driver, and the driver budget (``plans.DRIVER_BUDGET_BYTES``) is per
+    fit, so the pool can hold ``max_parallel`` such training sets at once.
     """
 
     def __init__(self, spark: SparkSession | None = None, **kwargs) -> None:

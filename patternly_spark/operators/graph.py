@@ -17,7 +17,7 @@ Driver-sized graphs skip the rounds.  ``connected_components``,
 ``core_numbers`` and ``bfs_hops`` first probe their projected edge
 rows, before any ``distinct``, with ``plans.solve_within``: ONE task
 reads at most cap + 1 of them, where cap is the most rows whose
-``GRAPH_TASK_EDGE_BYTES`` stay under ``GRAPH_TASK_SOLVE_BYTES``.  When
+``GRAPH_TASK_EDGE_BYTES`` stay under the one-task budget.  When
 it sees at most cap rows it computes the exact fixpoint with numpy
 kernels over all of them (dropping self-loops and duplicate pairs, and
 mirroring BFS edges, itself), and the driver serves the node-sized
@@ -30,6 +30,11 @@ over the probe's pin of the edge rows when their plan shuffles (a join
 upstream runs once); their ``max_iterations`` / ``max_rounds`` caps
 bound only those rounds, since the one-task kernels always run to the
 exact fixpoint.
+
+``minimum_spanning_forest`` merges each Boruvka round's components on
+the driver once the round's selected edges are driver-sized: one
+``plans.collect_within`` job measures and collects them, and
+``_cc_kernel`` labels the merged components.
 """
 
 from __future__ import annotations
@@ -48,6 +53,7 @@ from pyspark.sql.types import (
 )
 
 from patternly_spark.plans import (
+    collect_within,
     empty_rows,
     local_rows,
     round_partitions,
@@ -88,34 +94,33 @@ def _canon(edges: DataFrame) -> DataFrame:
 # bfs_hops)
 # ---------------------------------------------------------------------------
 
-#: Python-worker memory the one-task graph solve may hold.  Above it the
-#: operators run their distributed round loops.
-GRAPH_TASK_SOLVE_BYTES = 128 * 1024 * 1024
-
-#: Task bytes per row of the probed edge relation for the one-task solve:
-#: the Arrow batches, their filtered copies, the id index, the CSR arrays
-#: and the output table.  Measured over ``plans.solve_within``'s task
-#: function, fed 10,000-row Arrow IPC batches of raw log-uniform edges
-#: (duplicates and self-loops kept, as the operators receive them) of 80k
-#: and 160k rows (peak numpy bytes by tracemalloc plus peak Arrow pool
-#: bytes, numpy 1.26, pyarrow 16.1): CC 133, BFS 161 directed and 167
-#: undirected (mirrored in the task), core numbers 171 B/row at both
-#: sizes.  The largest, rounded up to 256, so the gate admits ~520k rows.
-#: The rows are counted before any ``distinct``: an edge list with many
-#: duplicate pairs reaches the gate sooner than its distinct edges would.
+#: Task bytes per row of the probed edge relation for the one-task solve,
+#: gated at ``plans.TASK_BUDGET_BYTES`` (above it the operators run their
+#: distributed round loops): the Arrow batches, their filtered copies, the
+#: id index, the CSR arrays and the output table.  Measured over
+#: ``plans.solve_within``'s task function, fed 10,000-row Arrow IPC
+#: batches of raw log-uniform edges (duplicates and self-loops kept, as
+#: the operators receive them) of 80k and 160k rows (peak numpy bytes by
+#: tracemalloc plus peak Arrow pool bytes, numpy 1.26, pyarrow 16.1): CC
+#: 133, BFS 161 directed and 167 undirected (mirrored in the task), core
+#: numbers 171 B/row at both sizes.  The largest, rounded up to 256, so
+#: the gate admits ~520k rows.  The rows are counted before any
+#: ``distinct``: an edge list with many duplicate pairs reaches the gate
+#: sooner than its distinct edges would.
 GRAPH_TASK_EDGE_BYTES = 256
 
 
 def _solve_small(
     df: DataFrame, kernel, schema: StructType, *ids: str
 ) -> tuple[DataFrame | None, DataFrame]:
-    """``plans.solve_within`` of ``kernel`` over ``df`` at the one-task
-    graph budget: (the served result or None, the relation for the
-    distributed rounds).  A column of ``ids`` that is not integral gets
-    (None, ``df``) without a probe: the kernels index numpy arrays."""
+    """``plans.solve_within`` of ``kernel`` over ``df`` at
+    ``GRAPH_TASK_EDGE_BYTES`` per row: (the served result or None, the
+    relation for the distributed rounds).  A column of ``ids`` that is
+    not integral gets (None, ``df``) without a probe: the kernels index
+    numpy arrays."""
     if not all(isinstance(df.schema[c].dataType, IntegralType) for c in ids):
         return None, df
-    return solve_within(df, kernel, schema, GRAPH_TASK_SOLVE_BYTES, GRAPH_TASK_EDGE_BYTES)
+    return solve_within(df, kernel, schema, GRAPH_TASK_EDGE_BYTES)
 
 
 def _edges(table: pa.Table) -> tuple[np.ndarray, np.ndarray]:
@@ -288,8 +293,8 @@ def connected_components(
     worst case, so 50 covers any realistic graph).
 
     A driver-sized edge set (its projected rows, duplicates and
-    self-loops included, times ``GRAPH_TASK_EDGE_BYTES`` under
-    ``GRAPH_TASK_SOLVE_BYTES``) skips the star rounds: the one task that
+    self-loops included, times ``GRAPH_TASK_EDGE_BYTES`` under the
+    one-task budget) skips the star rounds: the one task that
     probes its size labels it by min-id hooking with pointer jumping
     (``_cc_kernel``), and the driver serves the labels.  That solve
     always reaches the fixpoint; ``max_iterations`` bounds only the
@@ -763,8 +768,8 @@ def core_numbers(
     returning silently-wrong numbers).
 
     A driver-sized edge set (its projected rows, duplicates and
-    self-loops included, times ``GRAPH_TASK_EDGE_BYTES`` under
-    ``GRAPH_TASK_SOLVE_BYTES``) skips the rounds: the one task that
+    self-loops included, times ``GRAPH_TASK_EDGE_BYTES`` under the
+    one-task budget) skips the rounds: the one task that
     probes its size runs the same h-index iteration vectorized over a
     CSR (``_core_kernel``), and the driver serves the core numbers.
     That solve always reaches the fixpoint; ``max_rounds`` bounds only
@@ -850,18 +855,15 @@ def core_numbers(
     )
 
 
-#: Driver memory the MSF driver merge may hold.  Above it a round takes
-#: the distributed connected-components merge instead.
-MSF_LOCAL_MERGE_BYTES = 128 * 1024 * 1024
-
-#: Driver bytes per selected-edge row of the MSF driver merge: the
-#: collected five-field Row, its union-find dict entries, its merged_map
-#: pair, its forest tuple and the two one-slice ``local_rows`` relations.
-#: Measured with tracemalloc over exactly that code on synthetic merge
+#: Driver bytes per selected-edge row of the MSF driver merge, gated at
+#: ``plans.DRIVER_BUDGET_BYTES``: the collected five-column Arrow table,
+#: ``_cc_kernel`` over its (cu, cv) pairs and the two one-partition frames
+#: served from them.  Measured over exactly that code on synthetic merge
 #: graphs (distinct large ids, every row joining two new components):
-#: 746 B/row at 100k and at 200k rows (CPython 3.11, PySpark 4.1), peak
-#: equal to the live total; rounded up.  So the gate admits ~175k rows.
-MSF_MERGE_ROW_BYTES = 768
+#: tracemalloc peak 184 and 180 B/row at 100k and 200k rows plus 32 B/row
+#: of peak Arrow pool bytes (the table is 40 B/row; numpy 1.26, pyarrow
+#: 16.1); rounded up to 256, so the gate admits ~262k rows.
+MSF_MERGE_ROW_BYTES = 256
 
 
 def minimum_spanning_forest(
@@ -887,10 +889,10 @@ def minimum_spanning_forest(
     MST algorithm.
 
     Each round: two joins to translate endpoints to component labels,
-    one min-by per component, one CC over selected edges (itself
-    O(log) star rounds on a relation with <= #components edges), one
-    localCheckpoint lineage cut.  Nothing corpus-sized ever sits on
-    the driver; the loop's driver action is a 1-row emptiness count.
+    one min-by per component, one CC over selected edges (a numpy pass
+    on the driver once they are driver-sized, else O(log) star rounds
+    on a relation with <= #components edges), one localCheckpoint
+    lineage cut.  Nothing corpus-sized ever sits on the driver.
 
     Output: the forest's edges (u, v, weight) with u < v — n - c rows
     for n nodes in c components.  Raises on non-convergence (the
@@ -899,25 +901,20 @@ def minimum_spanning_forest(
     the bench tracks (every returned edge is still a true MSF edge:
     Boruvka never retracts a selection).
 
-    Round-merge shape (r12, guide §1.2/§2.4/§3.1): the selected-edge
-    relation carries its endpoint COMPONENT labels through the min-by
-    struct (the labels are constant per edge, so the (w, u, v)
-    tie-break is unchanged), which removes the old semi-join back
-    against ``crossing`` to recover the component graph.  The
-    component-merge graph has at most one edge per component and
-    SHRINKS at least geometrically per Boruvka round, so once it is
-    driver-sized (selected edges x ``MSF_MERGE_ROW_BYTES`` <=
-    ``MSF_LOCAL_MERGE_BYTES``) the merge labels are computed as a
-    driver union-find with MIN-ID representatives —
-    bit-identical to the nested ``connected_components`` fixpoint it
-    replaces (both assign every touched component the smallest
-    component id in its merged group) — and re-attached as a
-    broadcast of a one-slice ``local_rows`` relation.  That converts
-    ~6-10 AQE-planned jobs per round (the nested star-CC's checksum/
-    convergence machinery) into ONE collect of a component-sized
-    relation.  Rounds whose component graph is still bigger than the
-    threshold (early rounds of a 100 TB run) keep the distributed CC
-    path, now over a pinned selected-edge relation.
+    Round merge: the selected-edge relation carries its endpoint
+    COMPONENT labels through the min-by struct (the labels are constant
+    per edge, so the (w, u, v) tie-break is unchanged), so its (cu, cv)
+    pairs are the component-merge graph.  That graph has at most one
+    edge per component and SHRINKS at least geometrically per round.
+    It is pinned, and one ``plans.collect_within`` job materializes the
+    pin and, once the selected edges x ``MSF_MERGE_ROW_BYTES`` fit the
+    driver budget, collects it: ``_cc_kernel`` then gives every touched
+    component the smallest component id of its merged group, the map
+    the distributed ``connected_components`` gives, and the forest rows
+    and the labels are served as one-partition frames, the labels
+    broadcast.  A round whose merge graph is over the budget (the early
+    rounds of a 100 TB run) reads the pin with the distributed
+    ``connected_components``.
     """
     e = (
         edges.select(
@@ -942,7 +939,6 @@ def minimum_spanning_forest(
         .localCheckpoint(eager=True)
     )
     forest = empty_rows(spark, "u long, v long, w double")
-    local_merge_rows = MSF_LOCAL_MERGE_BYTES // MSF_MERGE_ROW_BYTES
     with tuned_shuffle(spark, round_partitions(spark, n_e)):
         for _ in range(int(max_rounds)):
             lab_u = labels.select(F.col("node").alias("u"), F.col("comp").alias("cu"))
@@ -956,8 +952,7 @@ def minimum_spanning_forest(
                 .filter(F.col("cu") != F.col("cv"))
                 .localCheckpoint(eager=False)
             )
-            n_crossing = crossing.count()
-            if n_crossing == 0:
+            if crossing.count() == 0:
                 break
             # each component's minimum outgoing edge, totally tie-broken
             # on (w, u, v) exactly as before; cu/cv ride along (constant
@@ -974,67 +969,18 @@ def minimum_spanning_forest(
                 .agg(F.min("p").alias("p"))
                 .select("p.u", "p.v", "p.w", "p.cu", "p.cv")
                 .distinct()
+                .localCheckpoint(eager=False)
             )
-            # selected edges <= #components touched <= 2 * n_crossing,
-            # so n_crossing bounds the collect; when over the bound, pin
-            # per_comp and pay one count to check whether the component
-            # graph itself (not the crossing set) is driver-sized
-            sel_rows = None
-            if n_crossing <= local_merge_rows:
-                sel_rows = per_comp.collect()
-            else:
-                per_comp = per_comp.localCheckpoint(eager=False)
-                if per_comp.count() <= local_merge_rows:
-                    sel_rows = per_comp.collect()
-            if sel_rows is not None:
-                # driver union-find over the component-merge graph with
-                # MIN-ID representatives — the same (comp -> smallest
-                # comp id in merged group) map the nested
-                # connected_components fixpoint produced
-                parent: dict = {}
-
-                def _find(x):
-                    r = x
-                    while parent[r] != r:
-                        r = parent[r]
-                    while parent[x] != r:
-                        parent[x], x = r, parent[x]
-                    return r
-
-                for r_ in sel_rows:
-                    a, b = r_["cu"], r_["cv"]
-                    parent.setdefault(a, a)
-                    parent.setdefault(b, b)
-                    ra, rb = _find(a), _find(b)
-                    if ra != rb:
-                        # union by min id so the root IS the group min
-                        if rb < ra:
-                            ra, rb = rb, ra
-                        parent[rb] = ra
-                merged_map = [(c, _find(c)) for c in parent]
-                forest = forest.unionByName(
-                    local_rows(
-                        spark,
-                        [(r_["u"], r_["v"], r_["w"]) for r_ in sel_rows],
-                        "u long, v long, w double",
-                    )
-                )
-                labels = (
-                    labels.join(
-                        F.broadcast(
-                            local_rows(
-                                spark, merged_map, "comp long, component long"
-                            )
-                        ),
-                        "comp",
-                        "left",
-                    )
-                    .select(
-                        "node",
-                        F.coalesce(F.col("component"), F.col("comp")).alias("comp"),
-                    )
-                    .localCheckpoint(eager=False)
-                )
+            # one job materializes the pin, and collects it when it fits
+            selected = collect_within(per_comp, MSF_MERGE_ROW_BYTES)[0]
+            if selected is not None:
+                rows = spark.createDataFrame(selected.select(["u", "v", "w"]), "u long, v long, w double")
+                forest = forest.unionByName(rows.coalesce(1))
+                # smallest component id per merged group, as the
+                # distributed connected_components labels it
+                merge = _cc_kernel(selected.select(["cu", "cv"]).rename_columns(["u", "v"]))
+                merge = merge.rename_columns(["comp", "component"])
+                merged = F.broadcast(spark.createDataFrame(merge, "comp long, component long").coalesce(1))
             else:
                 forest = forest.unionByName(
                     per_comp.select("u", "v", "w")
@@ -1043,17 +989,15 @@ def minimum_spanning_forest(
                 comp_edges = per_comp.select(
                     F.col("cu").alias("src"), F.col("cv").alias("dst")
                 ).distinct()
-                merged = connected_components(comp_edges)
-                labels = (
-                    labels.join(
-                        merged.withColumnRenamed("node", "comp"), "comp", "left"
-                    )
-                    .select(
-                        "node",
-                        F.coalesce(F.col("component"), F.col("comp")).alias("comp"),
-                    )
-                    .localCheckpoint(eager=False)
+                merged = connected_components(comp_edges).withColumnRenamed("node", "comp")
+            labels = (
+                labels.join(merged, "comp", "left")
+                .select(
+                    "node",
+                    F.coalesce(F.col("component"), F.col("comp")).alias("comp"),
                 )
+                .localCheckpoint(eager=False)
+            )
         else:
             if strict:
                 raise RuntimeError(
@@ -1166,7 +1110,7 @@ def bfs_hops(
 
     A driver-sized edge set (its projected rows plus the source rows,
     before mirroring or ``distinct``, times ``GRAPH_TASK_EDGE_BYTES``
-    under ``GRAPH_TASK_SOLVE_BYTES``) skips the rounds: the one task that
+    under the one-task budget) skips the rounds: the one task that
     probes its size mirrors the edges unless ``directed``, expands the
     frontier over a CSR up to ``max_hops`` (``_bfs_kernel``), and the
     driver serves the hop counts.  The sources reach that task as tagged

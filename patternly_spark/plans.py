@@ -30,17 +30,18 @@ run an operator at a fixed count, set the session's
 ``tuned_shuffle(spark, n)``): the policy never exceeds that ceiling.
 
 Driver-sized relations skip distributed work under one of two budgets,
-each with a tracemalloc-measured per-row cost kept next to its
-operator.  A *driver* budget bounds what the driver process holds: the
-relation itself is collected and worked on there, beside the session,
-for as long as the caller keeps the result.  ``collect_within`` applies
-it (the fit's ``detection.FIT_LOCAL_BYTES``), and so does the MSF
-driver merge (``operators.graph.MSF_LOCAL_MERGE_BYTES``).  A *one-task*
-budget bounds one Python worker's peak while a kernel runs over the
-whole relation in a task: ``solve_within`` applies it (the graph
-operators' ``GRAPH_TASK_SOLVE_BYTES``).  That memory is released when
-the task ends, and the driver receives only the kernel's result, so
-the one-task budget can admit relations the driver budget would not.
+both defined here; each caller passes only its tracemalloc-measured
+per-row cost, kept next to its operator, and each primitive reads its
+budget when it is called (a test zeroes one to force the distributed
+path).  ``DRIVER_BUDGET_BYTES`` (64 MiB) bounds what the driver process
+holds: ``collect_within`` collects the relation and the caller works on
+it there, beside the session, for as long as it keeps the result (the
+driver-sized fit, the MSF component merge).  ``TASK_BUDGET_BYTES``
+(128 MiB) bounds one Python worker's peak while ``solve_within`` runs a
+kernel over the whole relation in one task (the graph solves).  That
+memory is released when the task ends, and the driver receives only the
+kernel's result, so the one-task budget can admit relations the driver
+budget would not.
 """
 
 from __future__ import annotations
@@ -67,6 +68,12 @@ __all__ = [
     "solve_within",
     "list_parts",
 ]
+
+#: Driver memory a driver-sized relation may take (``collect_within``).
+DRIVER_BUDGET_BYTES = 64 * 1024 * 1024
+
+#: Python-worker memory a one-task solve may take (``solve_within``).
+TASK_BUDGET_BYTES = 128 * 1024 * 1024
 
 
 def _plan_string(df: DataFrame) -> str:
@@ -420,22 +427,23 @@ def list_parts(col) -> tuple[np.ndarray, np.ndarray, np.ndarray | None]:
 
 
 def collect_within(
-    df: DataFrame, list_col: str, budget: float, row_bytes: float, element_bytes: float
+    df: DataFrame, row_bytes: float, list_col: str | None = None, element_bytes: float = 0
 ) -> tuple[pa.Table | None, int, int]:
-    """Measure a relation against a driver budget and, when it fits,
+    """Measure a relation against the driver budget and, when it fits,
     collect it: one job.
 
     A relation costs ``rows * row_bytes + elements * element_bytes``,
     where elements is the total length of its list column ``list_col``
-    (null elements included, a null list holds none); it fits when that
-    is below ``budget``.  The relation is coalesced to at most
-    ``defaultParallelism`` partitions, and each task keeps its Arrow
-    batches while its partition costs less than ``budget`` over that
-    count, so the driver never receives more than the budget.  A task
-    over its share returns only its (rows, elements).  The driver sums
-    the counts and applies the budget: the relation is collected a
-    second time only when it fits but a skewed partition held its rows
-    back.  A budget of 0 admits nothing and runs no job.
+    (null elements included, a null list holds none; none without a list
+    column); it fits when that is below ``DRIVER_BUDGET_BYTES``.  The
+    relation is coalesced to at most ``defaultParallelism`` partitions,
+    and each task keeps its Arrow batches while its partition costs less
+    than the budget over that count, so the driver never receives more
+    than the budget.  A task over its share returns only its (rows,
+    elements).  The driver sums the counts and applies the budget: the
+    relation is collected a second time only when it fits but a skewed
+    partition held its rows back.  A budget of 0 admits nothing and runs
+    no job.
 
     Returns (the relation as an Arrow table in no fixed row order, or
     None when it does not fit; rows; elements).  Rows and elements are
@@ -444,6 +452,7 @@ def collect_within(
     from pyspark.sql import types as T
     from pyspark.sql.pandas.types import to_arrow_schema
 
+    budget = DRIVER_BUDGET_BYTES
     if budget <= 0:
         return None, None, None
     parts = max(1, df.sparkSession.sparkContext.defaultParallelism)
@@ -458,9 +467,10 @@ def collect_within(
     def measure(batches):
         kept, rows, elements = [], 0, 0
         for batch in batches:
-            offsets = batch.column(list_col).offsets
             rows += batch.num_rows
-            elements += offsets[-1].as_py() - offsets[0].as_py()
+            if list_col is not None:
+                offsets = batch.column(list_col).offsets
+                elements += offsets[-1].as_py() - offsets[0].as_py()
             if kept is not None and rows * row_bytes + elements * element_bytes < share:
                 kept.append(batch)
             else:
@@ -487,18 +497,16 @@ def collect_within(
     return pa.concat_tables(kept).select(names), rows, elements
 
 
-def solve_within(
-    df: DataFrame, kernel, schema, budget: float, row_bytes: float
-) -> tuple[DataFrame | None, DataFrame]:
+def solve_within(df: DataFrame, kernel, schema, row_bytes: float) -> tuple[DataFrame | None, DataFrame]:
     """Run ``kernel`` over the whole of a relation in one task when the
-    relation fits a one-task budget, and serve its result: one job
+    relation fits the one-task budget, and serve its result: one job
     beyond the relation's own shuffle stages, two after a shuffle.
 
     The relation fits when its rows times ``row_bytes`` are below
-    ``budget``; cap is the largest row count that does.  One task reads
-    ``df.coalesce(1).limit(cap + 1)``: when it sees at most cap rows it
-    yields ``kernel(table)`` (an Arrow table of all of them -> an Arrow
-    table with ``schema``'s column names), else only a flag.  The driver
+    ``TASK_BUDGET_BYTES``; cap is the largest row count that does.  One
+    task reads ``df.coalesce(1).limit(cap + 1)``: when it sees at most
+    cap rows it yields ``kernel(table)`` (an Arrow table of all of them
+    -> an Arrow table with ``schema``'s column names), else only a flag.  The driver
     collects that result and serves it as a one-partition frame with
     ``schema`` (a StructType).  A relation with no rows gives no rows
     without calling ``kernel``.  A budget that admits no row runs no
@@ -521,7 +529,7 @@ def solve_within(
     from pyspark.sql import types as T
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    cap = math.ceil(budget / row_bytes) - 1 if budget > 0 else 0
+    cap = math.ceil(TASK_BUDGET_BYTES / row_bytes) - 1
     if cap < 1:
         return None, df
     task_schema = T.StructType(

@@ -74,32 +74,18 @@ def sf_dir():
 
 
 @pytest.fixture
-def graph_paths(monkeypatch):
-    """Iterate to run a test body on both paths of ``connected_components``,
-    ``core_numbers`` and ``bfs_hops``: first the one-task solve a small
-    test graph takes, then the distributed round loops (a zero task
-    budget sends every graph there).  Yields the path's name."""
-    from patternly_spark.operators import graph
+def both_paths(monkeypatch):
+    """Call with the name of a ``plans`` budget, ``"DRIVER_BUDGET_BYTES"``
+    (the driver-sized fit, the MSF merge) or ``"TASK_BUDGET_BYTES"`` (the
+    one-task graph solves), and iterate to run a test body on both paths
+    it gates: first the in-budget path a small test input takes, then the
+    distributed path (a zero budget sends every input there).  Yields the
+    path's name."""
+    from patternly_spark import plans
 
-    def paths():
-        yield "one-task"
-        monkeypatch.setattr(graph, "GRAPH_TASK_SOLVE_BYTES", 0)
+    def paths(budget):
+        yield "in-budget"
+        monkeypatch.setattr(plans, budget, 0)
         yield "distributed"
 
-    return paths()
-
-
-@pytest.fixture
-def fit_paths(monkeypatch):
-    """Iterate to run a test body on both paths of
-    ``AnomalyDetection.fit``: first the driver path a small training set
-    takes, then the Spark path (a zero driver budget sends every fit
-    there).  Yields the path's name."""
-    from patternly_spark import detection
-
-    def paths():
-        yield "driver"
-        monkeypatch.setattr(detection, "FIT_LOCAL_BYTES", 0)
-        yield "spark"
-
-    return paths()
+    return paths

@@ -6,6 +6,7 @@ new PFSA at a regime boundary."""
 import numpy as np
 import pytest
 
+from patternly_spark import plans
 from patternly_spark.detection import AnomalyDetection, StreamingDetection, ContinuousStreamingDetection
 from patternly_spark.pfsa.model import PFSA
 from patternly_spark.pfsa.simulate import simulate
@@ -30,10 +31,10 @@ def _seq_df(spark, groups, length=200):
     return spark.createDataFrame(rows, "seq_id long, symbols array<int>")
 
 
-def test_single_cluster_detects_injected_anomalies(spark, fit_paths):
+def test_single_cluster_detects_injected_anomalies(spark, both_paths):
     # minimum end-to-end slice (SURVEY §7): k=1, pre-quantized, golden outcome
     df = _seq_df(spark, [(MACHINE_A, 120, 1), (MACHINE_C, 5, 2)])
-    for _ in fit_paths:
+    for _ in both_paths("DRIVER_BUDGET_BYTES"):
         model = AnomalyDetection(spark, n_clusters=1, quantize=False, anomaly_sensitivity=4, eps=0.2)
         model.fit(df)
         preds = model.predict().toPandas().sort_values("seq_id")
@@ -42,12 +43,12 @@ def test_single_cluster_detects_injected_anomalies(spark, fit_paths):
         assert model.cluster_counts == [125]
 
 
-def test_example0_style_two_clusters(spark, fit_paths):
+def test_example0_style_two_clusters(spark, both_paths):
     # 2 normal regimes fit with k=2; prediction on a batch with 23 anomalous
     # sequences at known tail positions flags exactly those (example0 golden
     # shape: 23 anomalies at rows 2000-2022)
     train = _seq_df(spark, [(MACHINE_A, 200, 3), (MACHINE_B, 200, 4)])
-    for _ in fit_paths:
+    for _ in both_paths("DRIVER_BUDGET_BYTES"):
         model = AnomalyDetection(
             spark, n_clusters=2, quantize=False, anomaly_sensitivity=4, reduce_clusters=False, eps=0.2
         )
@@ -63,12 +64,12 @@ def test_example0_style_two_clusters(spark, fit_paths):
         assert normal.closest_match.nunique() == 2
 
 
-def test_alphabet_incompatible_sequences_flagged(spark, fit_paths):
+def test_alphabet_incompatible_sequences_flagged(spark, both_paths):
     # P3 -> A6: a sequence using symbols outside the fitted alphabet is
     # unscorable (llk = inf) under every model, hence anomalous — the
     # reference realigns with inf-padding (detection.py:142-144)
     train = _seq_df(spark, [(MACHINE_A, 80, 13)])
-    for _ in fit_paths:
+    for _ in both_paths("DRIVER_BUDGET_BYTES"):
         model = AnomalyDetection(spark, n_clusters=1, quantize=False, anomaly_sensitivity=4, eps=0.2)
         model.fit(train)
         typical = [int(v) for v in simulate(MACHINE_A, 200, 1, seed=14)[0]]
@@ -80,7 +81,7 @@ def test_alphabet_incompatible_sequences_flagged(spark, fit_paths):
         assert preds[0] is False
 
 
-def test_cluster_reduction_merges_similar_regimes(spark, fit_paths):
+def test_cluster_reduction_merges_similar_regimes(spark, both_paths):
     # clusters over data from ONE machine must merge (example1 pattern:
     # k too high -> reduced).  An arbitrary partitioner (the pluggable
     # clustering_alg surface, reference detection.py:21,:337-338) yields
@@ -92,7 +93,7 @@ def test_cluster_reduction_merges_similar_regimes(spark, fit_paths):
     partitioner = lambda feats, n: feats.select(
         "seq_id", (F.col("seq_id") % n).cast("int").alias("cluster")
     )
-    for _ in fit_paths:
+    for _ in both_paths("DRIVER_BUDGET_BYTES"):
         model = AnomalyDetection(
             spark, n_clusters=3, quantize=False, anomaly_sensitivity=3,
             reduce_clusters=True, clustering_alg=partitioner, eps=0.2,
@@ -105,14 +106,14 @@ def test_cluster_reduction_merges_similar_regimes(spark, fit_paths):
         assert preds.anomaly.sum() <= 2
 
 
-def test_pluggable_mllib_estimator_example3_style(spark, fit_paths):
+def test_pluggable_mllib_estimator_example3_style(spark, both_paths):
     # example3 golden shape (reference examples/example3.ipynb): a pluggable
     # clustering estimator (FeatureAgglomeration there; any MLlib Estimator
     # with fit/transform here) instead of KMeans, 0 anomalies in-sample
     from pyspark.ml.clustering import BisectingKMeans
 
     df = _seq_df(spark, [(MACHINE_A, 120, 11), (MACHINE_B, 120, 12)], length=120)
-    for _ in fit_paths:
+    for _ in both_paths("DRIVER_BUDGET_BYTES"):
         model = AnomalyDetection(
             spark, n_clusters=2, quantize=False, anomaly_sensitivity=4,
             reduce_clusters=False, clustering_alg=BisectingKMeans(k=2, seed=42), eps=0.2,
@@ -123,10 +124,10 @@ def test_pluggable_mllib_estimator_example3_style(spark, fit_paths):
         assert preds.anomaly.sum() == 0
 
 
-def test_no_reduction_when_regimes_distinct(spark, fit_paths):
+def test_no_reduction_when_regimes_distinct(spark, both_paths):
     # genuinely distinct regimes must NOT merge
     df = _seq_df(spark, [(MACHINE_A, 100, 7), (MACHINE_B, 100, 8)], length=100)
-    for _ in fit_paths:
+    for _ in both_paths("DRIVER_BUDGET_BYTES"):
         model = AnomalyDetection(
             spark, n_clusters=2, quantize=False, anomaly_sensitivity=4, reduce_clusters=True, eps=0.2
         )
@@ -134,7 +135,7 @@ def test_no_reduction_when_regimes_distinct(spark, fit_paths):
         assert model.n_clusters == 2
 
 
-def test_quantize_complex_pipeline(spark, fit_paths):
+def test_quantize_complex_pipeline(spark, both_paths):
     # continuous values: regime A ~ N(0,1) random walk vs anomaly ~ big jumps
     # normal = momentum random walk (sticky diff signs -> structured
     # symbols); anomaly = alternating jumps (anti-sticky diff signs)
@@ -152,7 +153,7 @@ def test_quantize_complex_pipeline(spark, fit_paths):
         steps = 4.0 * ((-1.0) ** np.arange(150)) + rng.normal(0, 0.5, 150)
         rows.append((sid, np.cumsum(steps).tolist()))
     df = spark.createDataFrame(rows, "seq_id long, values array<double>")
-    for _ in fit_paths:
+    for _ in both_paths("DRIVER_BUDGET_BYTES"):
         model = AnomalyDetection(
             spark, n_clusters=1, quantize=True, quantize_type="simple", anomaly_sensitivity=3, eps=0.2
         )
@@ -163,9 +164,9 @@ def test_quantize_complex_pipeline(spark, fit_paths):
         assert len(flagged) <= 8
 
 
-def test_save_load_roundtrip(tmp_path, spark, fit_paths):
+def test_save_load_roundtrip(tmp_path, spark, both_paths):
     df = _seq_df(spark, [(MACHINE_A, 50, 9)])
-    for _ in fit_paths:
+    for _ in both_paths("DRIVER_BUDGET_BYTES"):
         model = AnomalyDetection(spark, n_clusters=1, quantize=False, anomaly_sensitivity=4, eps=0.2)
         model.fit(df)
         model.save_model(str(tmp_path / "m"))
@@ -176,14 +177,14 @@ def test_save_load_roundtrip(tmp_path, spark, fit_paths):
         assert preds.anomaly.sum() == 0
 
 
-def test_streaming_save_load_preserves_windowing_and_quantizer(tmp_path, spark, fit_paths):
+def test_streaming_save_load_preserves_windowing_and_quantizer(tmp_path, spark, both_paths):
     # regression: subclass params (window_size/overlap) and fitted
     # quantizer state must survive save/load — a loaded model must emit
     # byte-identical verdicts (caught live: defaults silently re-chopped
     # the stream after load)
     vals = np.cumsum(np.asarray(simulate(MACHINE_A, 3000, 1, seed=21)[0], dtype=float) * 2 - 1)
     df = spark.createDataFrame([(i, float(v)) for i, v in enumerate(vals)], "offset long, value double")
-    for _ in fit_paths:
+    for _ in both_paths("DRIVER_BUDGET_BYTES"):
         m = StreamingDetection(
             spark, window_size=250, window_overlap=50, n_clusters=1,
             quantize=True, quantize_type="complex", n_symbols=3, anomaly_sensitivity=3,
@@ -199,13 +200,13 @@ def test_streaming_save_load_preserves_windowing_and_quantizer(tmp_path, spark, 
         assert before.closest_match.tolist() == after.closest_match.tolist()
 
 
-def test_streaming_detection_windows(spark, fit_paths):
+def test_streaming_detection_windows(spark, both_paths):
     # one long stream from machine A, chopped into tumbling windows
     stream = simulate(MACHINE_A, 20000, 1, seed=11)[0]
     df = spark.createDataFrame(
         [(i, int(s)) for i, s in enumerate(stream)], "offset long, symbol int"
     )
-    for _ in fit_paths:
+    for _ in both_paths("DRIVER_BUDGET_BYTES"):
         model = StreamingDetection(
             spark, window_size=500, window_overlap=0, n_clusters=1, quantize=False,
             anomaly_sensitivity=4, eps=0.2,
@@ -270,10 +271,10 @@ def test_x8_embed_library_merges_near_identical_models(spark):
     assert groups[2] != groups[0], f"distinct model must not merge: {out}"
 
 
-def test_fit_with_distributed_genesess_matches_memory_mode(spark, fit_paths):
+def test_fit_with_distributed_genesess_matches_memory_mode(spark, both_paths):
     df = _seq_df(spark, [(MACHINE_A, 60, 41), (MACHINE_B, 60, 42)], length=150)
     kw = dict(n_clusters=2, quantize=False, anomaly_sensitivity=4, reduce_clusters=False, eps=0.2)
-    for _ in fit_paths:
+    for _ in both_paths("DRIVER_BUDGET_BYTES"):
         m_mem = AnomalyDetection(spark, **kw).fit(df)
         m_dist = AnomalyDetection(spark, genesess_mode="distributed", **kw).fit(df)
         for a, b in zip(m_mem.library, m_dist.library):
@@ -312,7 +313,7 @@ def test_relabel_tie_break_matches_reference_double_argsort(spark):
     assert got[0] == 1 and got[2] == 0
 
 
-def test_pluggable_clustering_noncontiguous_labels_end_to_end(spark, fit_paths):
+def test_pluggable_clustering_noncontiguous_labels_end_to_end(spark, both_paths):
     """A pluggable clustering_alg emitting labels {1, 3} must not crash fit
     (previously mapped out-of-range labels to NULL)."""
     from pyspark.sql import functions as F
@@ -324,7 +325,7 @@ def test_pluggable_clustering_noncontiguous_labels_end_to_end(spark, fit_paths):
         )
 
     df = _seq_df(spark, [(MACHINE_A, 10, 1), (MACHINE_B, 10, 2)], length=300)
-    for _ in fit_paths:
+    for _ in both_paths("DRIVER_BUDGET_BYTES"):
         m = AnomalyDetection(spark, n_clusters=2, clustering_alg=alg, quantize=False,
                              reduce_clusters=False, anomaly_sensitivity=3)
         m.fit(df)
@@ -333,7 +334,7 @@ def test_pluggable_clustering_noncontiguous_labels_end_to_end(spark, fit_paths):
         assert m.cluster_counts == [10, 10]
 
 
-def test_complex_detrend_pipeline(spark, fit_paths):
+def test_complex_detrend_pipeline(spark, both_paths):
     """VERDICT #6: quantize_type='complex' + detrend composes F1 (first
     difference) then F4 (equi-probable cut-points). The alternating-jump
     anomalies separate cleanly in diff space."""
@@ -351,7 +352,7 @@ def test_complex_detrend_pipeline(spark, fit_paths):
         steps = 4.0 * ((-1.0) ** np.arange(150)) + rng.normal(0, 0.5, 150)
         rows.append((sid, np.cumsum(steps).tolist()))
     df = spark.createDataFrame(rows, "seq_id long, values array<double>")
-    for _ in fit_paths:
+    for _ in both_paths("DRIVER_BUDGET_BYTES"):
         model = AnomalyDetection(
             spark, n_clusters=1, quantize=True, quantize_type="complex",
             detrend=True, anomaly_sensitivity=3, eps=0.2,
@@ -471,7 +472,7 @@ def test_continuous_fit_stream_refit_starts_from_empty_library(spark):
     assert model._means == fresh._means and model._stds == fresh._stds
 
 
-def test_multichannel_save_load_path_hostile_channel_names(tmp_path, spark, fit_paths):
+def test_multichannel_save_load_path_hostile_channel_names(tmp_path, spark, both_paths):
     from patternly_spark.detection import MultiChannelDetection
     from patternly_spark.pfsa.simulate import simulate as _sim
 
@@ -479,7 +480,7 @@ def test_multichannel_save_load_path_hostile_channel_names(tmp_path, spark, fit_
     hostile = ["lead/I", "../up", "a b.c"]
     rows = [(ch, i, float(v)) for ch in hostile for i, v in enumerate(a)]
     df = spark.createDataFrame(rows, "channel string, offset long, value double")
-    for _ in fit_paths:
+    for _ in both_paths("DRIVER_BUDGET_BYTES"):
         m = MultiChannelDetection(spark, window_size=500, window_overlap=0, n_clusters=1,
                                   quantize=False, anomaly_sensitivity=3)
         m.fit(df)
@@ -622,7 +623,7 @@ def test_fused_scoring_pass_matches_separate_passes(spark, case):
         assert -1 in scores.sizes and len(library) == 4
 
 
-def test_predict_bounds_follow_pfsa_id_with_noise_label(spark, fit_paths):
+def test_predict_bounds_follow_pfsa_id_with_noise_label(spark, both_paths):
     """A clustering that emits noise -1 gives a library sorted [-1, 0, 1,
     2] whose stats are indexed by label (noise last): each PFSA's verdict
     uses its own bound, as the scalar ``llk_one`` reference does."""
@@ -631,7 +632,7 @@ def test_predict_bounds_follow_pfsa_id_with_noise_label(spark, fit_paths):
     from patternly_spark.pfsa.llk import llk_one
 
     df = _seq_df(spark, [(MACHINE_A, 30, 1), (MACHINE_B, 30, 2), (MACHINE_C, 20, 3)], length=150)
-    for _ in fit_paths:
+    for _ in both_paths("DRIVER_BUDGET_BYTES"):
         model = AnomalyDetection(
             spark, n_clusters=3, quantize=False, reduce_clusters=False, anomaly_sensitivity=0, eps=0.2,
             clustering_alg=lambda feats, n: feats.select("seq_id", F.when(F.col("seq_id") % 7 == 0, -1).when(
@@ -678,7 +679,7 @@ def test_reducing_fit_scores_the_final_library_once(spark, monkeypatch):
     Spark jobs."""
     import patternly_spark.detection as det
 
-    monkeypatch.setattr(det, "FIT_LOCAL_BYTES", 0)  # the Spark path
+    monkeypatch.setattr(plans, "DRIVER_BUDGET_BYTES", 0)  # the Spark path
     calls = []
     real = det.score_sequences
     monkeypatch.setattr(det, "score_sequences", lambda *a, **kw: calls.append(1) or real(*a, **kw))
@@ -716,7 +717,7 @@ def _reference_predict(seq_df, library, bounds):
 
 
 @pytest.mark.parametrize("bounds", ["fitted", "inf_nan"])
-def test_predict_matches_shuffle_reduction(spark, bounds, fit_paths):
+def test_predict_matches_shuffle_reduction(spark, bounds, both_paths):
     """The single-pass verdicts equal the old score + groupBy reduction,
     with sequences that are inf under every PFSA (symbol 2 on a binary
     alphabet, and an empty one), exact llk ties (two copies of one PFSA,
@@ -726,7 +727,7 @@ def test_predict_matches_shuffle_reduction(spark, bounds, fit_paths):
         [(1000, [0, 2, 1]), (1001, []), (1002, [1, 1, 0])], "seq_id long, symbols array<int>"
     )
     df = df.unionByName(extra)
-    for _ in fit_paths:
+    for _ in both_paths("DRIVER_BUDGET_BYTES"):
         model = AnomalyDetection(spark, n_clusters=2, quantize=False, reduce_clusters=False, eps=0.2)
         model.fit(df.filter("seq_id < 1000"))
         twin = PFSA.from_dict({**model.library[0].to_dict(), "pfsa_id": 2})
@@ -755,7 +756,7 @@ def test_predict_matches_shuffle_reduction(spark, bounds, fit_paths):
         model.quantized_df.unpersist()
 
 
-def test_fit_leaves_one_cached_relation(spark, fit_paths):
+def test_fit_leaves_one_cached_relation(spark, both_paths):
     """A fit keeps only its quantized_df cached (the SLD features are
     released before it returns), and a refit releases the previous one."""
     df = _seq_df(spark, [(MACHINE_A, 40, 41), (MACHINE_B, 40, 42)], length=60)
@@ -764,7 +765,7 @@ def test_fit_leaves_one_cached_relation(spark, fit_paths):
     def cached() -> int:
         return jsc.getPersistentRDDs().size()
 
-    for _ in fit_paths:
+    for _ in both_paths("DRIVER_BUDGET_BYTES"):
         model = AnomalyDetection(spark, n_clusters=2, quantize=False, eps=0.2)
         before = cached()
         model.fit(df)
@@ -965,8 +966,6 @@ def test_driver_fit_matches_spark_fit(spark, monkeypatch, case):
     and sizes, thresholds to rounding, and the same verdicts."""
     from pyspark.sql import functions as F
 
-    import patternly_spark.detection as det
-
     kw = dict(quantize=False, anomaly_sensitivity=3, eps=0.2)
     if case == "partition_3":  # one machine: reduces 3 -> 1
         df = _seq_df(spark, [(MACHINE_A, 200, 7)], length=60)
@@ -996,7 +995,7 @@ def test_driver_fit_matches_spark_fit(spark, monkeypatch, case):
         return m, preds
 
     driver, d_preds = fit()
-    monkeypatch.setattr(det, "FIT_LOCAL_BYTES", 0)
+    monkeypatch.setattr(plans, "DRIVER_BUDGET_BYTES", 0)
     spark_fit, s_preds = fit()
     assert [m.to_dict() for m in driver.library] == [m.to_dict() for m in spark_fit.library]
     assert driver.n_clusters == spark_fit.n_clusters
@@ -1013,7 +1012,7 @@ def test_driver_fit_matches_spark_fit(spark, monkeypatch, case):
 
 
 @pytest.mark.parametrize("n_clusters", [1, 2])
-def test_null_sequence_scores_as_empty(spark, fit_paths, n_clusters):
+def test_null_sequence_scores_as_empty(spark, both_paths, n_clusters):
     """A null sequence is an empty one: the fit trains with it on either
     path (a row of 0 symbols in ``_train_size``; the SLD features score it
     inf) and predict gives it the
@@ -1034,7 +1033,7 @@ def test_null_sequence_scores_as_empty(spark, fit_paths, n_clusters):
     # KMeans would give the two inf rows (SLD features capped at 1e6) a
     # cluster of their own, which GenESeSS cannot fit: split by seq_id
     split = lambda feats, n: feats.select("seq_id", (F.col("seq_id") % n).cast("int").alias("cluster"))  # noqa: E731
-    for _ in fit_paths:
+    for _ in both_paths("DRIVER_BUDGET_BYTES"):
         for col, df in frames.items():
             for train in (df, df.filter("seq_id < 1000")):
                 model = AnomalyDetection(spark, n_clusters=n_clusters, quantize=col == "values",

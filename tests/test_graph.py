@@ -6,6 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from patternly_spark import plans
 from patternly_spark.operators.graph import connected_components, dedup_clusters
 
 
@@ -34,7 +35,7 @@ def _uf(n_nodes, edges):
 
 
 @pytest.mark.parametrize("seed,n_edges", [(0, 60), (1, 150), (2, 300)])
-def test_connected_components_matches_union_find(spark, seed, n_edges, graph_paths):
+def test_connected_components_matches_union_find(spark, seed, n_edges, both_paths):
     rng = np.random.default_rng(seed)
     n = 120
     edges = [
@@ -44,27 +45,27 @@ def test_connected_components_matches_union_find(spark, seed, n_edges, graph_pat
     df = spark.createDataFrame(edges, "src long, dst long")
     want = _uf(n, edges)
     touched = {u for e in edges for u in e}
-    for path in graph_paths:
+    for path in both_paths("TASK_BUDGET_BYTES"):
         got = {r.node: r.component for r in connected_components(df).collect()}
         assert got == {k: v for k, v in want.items() if k in touched}, path
 
 
-def test_connected_components_chain(spark, graph_paths):
+def test_connected_components_chain(spark, both_paths):
     # a path graph is the worst case for label propagation (O(n) rounds);
     # the star sequence must still converge in O(log n)
     chain = [(i, i + 1) for i in range(300)]
     df = spark.createDataFrame(chain, "src long, dst long")
-    for path in graph_paths:
+    for path in both_paths("TASK_BUDGET_BYTES"):
         got = {r.node: r.component for r in connected_components(df).collect()}
         assert len(got) == 301 and set(got.values()) == {0}, path
 
 
-def test_dedup_clusters_singletons_and_canonicals(spark, graph_paths):
+def test_dedup_clusters_singletons_and_canonicals(spark, both_paths):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 5), (7, 8)], "doc_a long, doc_b long"
     )
     docs = spark.createDataFrame([(i,) for i in range(10)], "doc_id long")
-    for path in graph_paths:
+    for path in both_paths("TASK_BUDGET_BYTES"):
         out = dedup_clusters(pairs, docs=docs).toPandas().sort_values("doc_id")
         by_id = dict(zip(out.doc_id, out.cluster_id))
         assert by_id[1] == by_id[2] == by_id[5] == 1, path
@@ -75,11 +76,11 @@ def test_dedup_clusters_singletons_and_canonicals(spark, graph_paths):
         assert canon == {0, 1, 3, 4, 6, 7, 9}, path
 
 
-def test_connected_components_empty_edges(spark, graph_paths):
+def test_connected_components_empty_edges(spark, both_paths):
     df = spark.createDataFrame([], "src long, dst long")
     docs = spark.createDataFrame([(i,) for i in range(4)], "doc_id long")
     empty_pairs = spark.createDataFrame([], "doc_a long, doc_b long")
-    for path in graph_paths:
+    for path in both_paths("TASK_BUDGET_BYTES"):
         assert connected_components(df).count() == 0, path
         out = dedup_clusters(empty_pairs, docs=docs).toPandas()
         assert (out.doc_id == out.cluster_id).all() and out.is_canonical.all(), path
@@ -343,7 +344,7 @@ def test_graph_census_operators_handle_empty_input(spark):
     assert kcore(edges, 2).count() == 0
 
 
-def test_core_numbers_match_bruteforce_peel(spark, graph_paths):
+def test_core_numbers_match_bruteforce_peel(spark, both_paths):
     """h-index fixpoint == increasing-k peel core numbers on a random
     graph with a planted 6-clique (core 5) and degree-1 pendants."""
     import collections
@@ -376,14 +377,14 @@ def test_core_numbers_match_bruteforce_peel(spark, graph_paths):
                 for m in a[n]:
                     a[m].discard(n)
                 del a[n]
-    for path in graph_paths:
+    for path in both_paths("TASK_BUDGET_BYTES"):
         got = {r.node: r.core for r in core_numbers(df).collect()}
         assert got == core, path
         assert got[100] == 1 and got[101] == 1, path
         assert all(got[n] >= 5 for n in range(6)), path
 
 
-def test_core_numbers_consistent_with_kcore(spark, graph_paths):
+def test_core_numbers_consistent_with_kcore(spark, both_paths):
     """Membership law: kcore(k) nodes == nodes with core number >= k."""
     import random
 
@@ -393,7 +394,7 @@ def test_core_numbers_consistent_with_kcore(spark, graph_paths):
     edges = {tuple(sorted(random.sample(range(40), 2))) for _ in range(200)}
     df = spark.createDataFrame(sorted(edges), "src long, dst long")
     in_kcore = {k: {r.node for r in kcore(df, k).collect()} for k in [1, 2, 3, 4]}
-    for path in graph_paths:
+    for path in both_paths("TASK_BUDGET_BYTES"):
         cores = {r.node: r.core for r in core_numbers(df).collect()}
         for k in [1, 2, 3, 4]:
             assert in_kcore[k] == {n for n, c in cores.items() if c >= k}, (k, path)
@@ -495,6 +496,53 @@ def test_msf_single_linkage_threshold_cut(spark):
     assert comps[1] != comps[10]
 
 
+def _support_graph(spark):
+    # a weighted graph with ties, multi-edges, and several components:
+    # exercises the (w, u, v) tie-break and the min-id merge labels
+    rows = [
+        (1, 2, 1.0), (2, 3, 1.0), (1, 3, 2.0), (3, 4, 0.5), (4, 5, 0.5),
+        (5, 1, 3.0), (6, 7, 1.5), (7, 8, 1.5), (6, 8, 1.5), (9, 10, 0.1),
+        (2, 1, 9.0),  # reversed duplicate, heavier — must lose to min(w)
+        (11, 12, 4.0), (12, 13, 4.0), (13, 11, 4.0), (13, 14, 4.0),
+    ]
+    return spark.createDataFrame(rows, "src long, dst long, weight double")
+
+
+def _forest_rows(df):
+    return sorted(tuple(r) for r in df.select("u", "v", "weight").collect())
+
+
+def test_msf_local_merge_matches_distributed(spark, both_paths, monkeypatch):
+    """The driver merge (``collect_within`` + ``_cc_kernel``) and the
+    distributed CC merge give the same forest."""
+    from patternly_spark.operators import graph
+    from patternly_spark.operators.graph import minimum_spanning_forest
+
+    g = _support_graph(spark)
+    got = {path: _forest_rows(minimum_spanning_forest(g)) for path in both_paths("DRIVER_BUDGET_BYTES")}
+    # a driver budget of ~10 merge rows: round 1 collects its 9 selected
+    # edges, where its 14 crossing edges would not have fit
+    monkeypatch.setattr(plans, "DRIVER_BUDGET_BYTES", 10.5 * graph.MSF_MERGE_ROW_BYTES)
+    got["selected edges only"] = _forest_rows(minimum_spanning_forest(g))
+    assert got["in-budget"] == got["distributed"] == got["selected edges only"]
+    # spanning-forest shape: n - c edges (14 nodes, 4 components:
+    # {1..5}, {6,7,8}, {9,10}, {11..14})
+    assert len(got["in-budget"]) == 14 - 4
+
+
+def test_msf_strict_false_budget_path(spark):
+    from patternly_spark.operators.graph import minimum_spanning_forest
+
+    g = _support_graph(spark)
+    partial = minimum_spanning_forest(g, max_rounds=1, strict=False)
+    full = minimum_spanning_forest(g)
+    # Boruvka never retracts: the 1-round partial forest is a subset
+    got = set(_forest_rows(partial))
+    want = set(_forest_rows(full))
+    assert got <= want
+    assert len(got) >= 1
+
+
 def test_personalized_pagerank_integer_replay(spark):
     """The unit fixpoint equals a plain-Python integer replay exactly
     (integral div, restart at every seed each round, dangling seeds
@@ -529,7 +577,7 @@ def test_personalized_pagerank_integer_replay(spark):
     assert got == p
 
 
-def test_bfs_hops_path_graph(spark, graph_paths):
+def test_bfs_hops_path_graph(spark, both_paths):
     from patternly_spark.operators.graph import bfs_hops
 
     # path 1-2-3-4-5-6; source 1, max_hops 3 -> nodes 1..4
@@ -537,17 +585,17 @@ def test_bfs_hops_path_graph(spark, graph_paths):
         [(i, i + 1) for i in range(1, 6)], "src long, dst long"
     )
     srcs = spark.createDataFrame([(1,)], "node long")
-    for path in graph_paths:
+    for path in both_paths("TASK_BUDGET_BYTES"):
         out = {r["node"]: r["hops"] for r in bfs_hops(edges, srcs, max_hops=3).collect()}
         assert out == {1: 0, 2: 1, 3: 2, 4: 3}, path
 
 
-def test_bfs_hops_directed_vs_undirected(spark, graph_paths):
+def test_bfs_hops_directed_vs_undirected(spark, both_paths):
     from patternly_spark.operators.graph import bfs_hops
 
     edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
     srcs = spark.createDataFrame([(3,)], "node long")
-    for path in graph_paths:
+    for path in both_paths("TASK_BUDGET_BYTES"):
         d = {r["node"]: r["hops"] for r in bfs_hops(
             edges, srcs, max_hops=5, directed=True
         ).collect()}
@@ -558,7 +606,7 @@ def test_bfs_hops_directed_vs_undirected(spark, graph_paths):
         assert u == {3: 0, 2: 1, 1: 2}, path
 
 
-def test_bfs_hops_multi_source_min_and_early_exit(spark, graph_paths):
+def test_bfs_hops_multi_source_min_and_early_exit(spark, both_paths):
     from patternly_spark.operators.graph import bfs_hops
 
     # two sources; node 3 reachable from both -> min hop wins
@@ -566,7 +614,7 @@ def test_bfs_hops_multi_source_min_and_early_exit(spark, graph_paths):
         [(1, 2), (2, 3), (5, 3), (3, 4), (10, 11)], "src long, dst long"
     )
     srcs = spark.createDataFrame([(1,), (5,)], "node long")
-    for path in graph_paths:
+    for path in both_paths("TASK_BUDGET_BYTES"):
         out = {r["node"]: r["hops"] for r in bfs_hops(
             edges, srcs, max_hops=50  # frontier drains long before 50 rounds
         ).collect()}
@@ -753,7 +801,7 @@ def _messy_edges(seed, n_nodes, n_edges):
 
 
 @pytest.mark.parametrize("seed,id_type", [(0, "long"), (1, "int")])
-def test_graph_solve_paths_agree_on_messy_graphs(spark, graph_paths, monkeypatch, seed, id_type):
+def test_graph_solve_paths_agree_on_messy_graphs(spark, both_paths, monkeypatch, seed, id_type):
     from patternly_spark.operators import graph
     from patternly_spark.operators.graph import bfs_hops, core_numbers
 
@@ -769,17 +817,17 @@ def test_graph_solve_paths_agree_on_messy_graphs(spark, graph_paths, monkeypatch
             _rows_and_schema(bfs_hops(df, srcs, max_hops=3, directed=True)),
         ]
 
-    got = {path: run() for path in graph_paths}
+    got = {path: run() for path in both_paths("TASK_BUDGET_BYTES")}
     # a task budget of ~10 rows: the probe runs, sees too many rows and
     # hands the graph to the distributed rounds
-    monkeypatch.setattr(graph, "GRAPH_TASK_SOLVE_BYTES", 10.5 * graph.GRAPH_TASK_EDGE_BYTES)
+    monkeypatch.setattr(plans, "TASK_BUDGET_BYTES", 10.5 * graph.GRAPH_TASK_EDGE_BYTES)
     got["over-budget probe"] = run()
-    assert got["one-task"] == got["distributed"] == got["over-budget probe"]
-    bfs_rows = dict(got["one-task"][2][0])
+    assert got["in-budget"] == got["distributed"] == got["over-budget probe"]
+    bfs_rows = dict(got["in-budget"][2][0])
     assert bfs_rows[None] == 0 and bfs_rows[10_000] == 0 and bfs_rows[1] == 0
 
 
-def test_graph_solve_paths_agree_on_chain_and_non_null_ids(spark, graph_paths):
+def test_graph_solve_paths_agree_on_chain_and_non_null_ids(spark, both_paths):
     from patternly_spark.operators.graph import bfs_hops
 
     # a 300-node chain over non-nullable ids, scrambled so the chain's
@@ -796,24 +844,24 @@ def test_graph_solve_paths_agree_on_chain_and_non_null_ids(spark, graph_paths):
             _rows_and_schema(bfs_hops(df, srcs, max_hops=12, directed=True)),
         ]
 
-    got = {path: run() for path in graph_paths}
-    assert got["one-task"] == got["distributed"]
-    cc, bfs, bfs_directed = got["one-task"]
+    got = {path: run() for path in both_paths("TASK_BUDGET_BYTES")}
+    assert got["in-budget"] == got["distributed"]
+    cc, bfs, bfs_directed = got["in-budget"]
     assert len(cc[0]) == 300 and {c for _, c in cc[0]} == {0}
     assert not bfs[1]["node"].nullable
     # the source sits second on the chain: 12 hops reach 14 nodes, 13 downstream
     assert len(bfs[0]) == 14 and len(bfs_directed[0]) == 13
 
 
-def test_core_numbers_max_rounds_bounds_only_distributed_rounds(spark, graph_paths):
+def test_core_numbers_max_rounds_bounds_only_distributed_rounds(spark, both_paths):
     """A chain's core numbers take ~n/2 h-index rounds.  The one-task
     solve runs to the fixpoint whatever ``max_rounds`` is; the
     distributed rounds raise at the cap."""
     from patternly_spark.operators.graph import core_numbers
 
     df = spark.createDataFrame([(i, i + 1) for i in range(300)], "src long, dst long")
-    for path in graph_paths:
-        if path == "one-task":
+    for path in both_paths("TASK_BUDGET_BYTES"):
+        if path == "in-budget":
             got = {r.node: r.core for r in core_numbers(df, max_rounds=3).collect()}
             assert got == {i: 1 for i in range(301)}
         else:
@@ -821,7 +869,7 @@ def test_core_numbers_max_rounds_bounds_only_distributed_rounds(spark, graph_pat
                 core_numbers(df, max_rounds=3).collect()
 
 
-def test_graph_solve_empty_edges(spark, graph_paths):
+def test_graph_solve_empty_edges(spark, both_paths):
     from patternly_spark.operators.graph import bfs_hops, core_numbers
 
     edges = spark.createDataFrame([], "src long, dst long")
@@ -834,9 +882,9 @@ def test_graph_solve_empty_edges(spark, graph_paths):
             _rows_and_schema(bfs_hops(edges, srcs)),
         ]
 
-    got = {path: run() for path in graph_paths}
-    assert got["one-task"] == got["distributed"]
-    cc, core, bfs = got["one-task"]
+    got = {path: run() for path in both_paths("TASK_BUDGET_BYTES")}
+    assert got["in-budget"] == got["distributed"]
+    cc, core, bfs = got["in-budget"]
     assert cc[0] == [] and core[0] == []
     assert bfs[0] == [(4, 0), (9, 0)]
 
@@ -868,7 +916,7 @@ def test_graph_round_loops_size_from_their_pin_count(spark, monkeypatch):
     count of the pin for the sizing cost 8."""
     from patternly_spark.operators import graph
 
-    monkeypatch.setattr(graph, "GRAPH_TASK_SOLVE_BYTES", 0)
+    monkeypatch.setattr(plans, "TASK_BUDGET_BYTES", 0)
     rng = np.random.default_rng(4)
     edges = spark.createDataFrame(
         [(int(a), int(b)) for a, b in np.floor(np.exp(rng.random((300, 2)) * np.log(200)))],

@@ -217,7 +217,7 @@ def test_tuned_shuffle_restores_even_on_error(spark):
     assert spark.conf.get(key) == prev
 
 
-def test_graph_ops_unchanged_under_policy(spark, graph_paths):
+def test_graph_ops_unchanged_under_policy(spark, both_paths):
     """The policy only changes partition counts, never values: CC and
     core_numbers agree with a run under a one-partition session
     setting (the policy never exceeds the session setting)."""
@@ -231,7 +231,7 @@ def test_graph_ops_unchanged_under_policy(spark, graph_paths):
     df = spark.createDataFrame(
         [e for e in edges if e[0] != e[1]], "src long, dst long"
     )
-    for path in graph_paths:
+    for path in both_paths("TASK_BUDGET_BYTES"):
         with_policy_cc = sorted(map(tuple, connected_components(df).collect()))
         with_policy_core = sorted(map(tuple, core_numbers(df).collect()))
         with tuned_shuffle(spark, 1):

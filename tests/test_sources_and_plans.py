@@ -778,6 +778,59 @@ def test_bench_strict_mode_exits_on_regression(monkeypatch):
     bench.maybe_strict_exit(reg)  # not strict: returns
 
 
+def test_empty_rows_is_plan_visible_empty(spark):
+    """empty_rows must (a) match createDataFrame([], schema) on schema,
+    (b) optimize to an empty LocalRelation so unions/joins against it
+    are pruned at plan time (the streaming seed-registry fast path)."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from patternly_spark.plans import empty_rows, local_rows
+
+    schema = StructType(
+        [StructField("a", LongType()), StructField("b", StringType())]
+    )
+    e = empty_rows(spark, schema)
+    assert e.schema == spark.createDataFrame([], schema).schema
+    assert e.count() == 0
+    assert "LocalRelation <empty>" in e._jdf.queryExecution().optimizedPlan().toString()
+    # union against the empty seed prunes to the other side
+    big = spark.createDataFrame([(1, "x"), (2, "y")], schema)
+    u = big.unionByName(e)
+    assert "Union" not in u._jdf.queryExecution().optimizedPlan().toString()
+    assert sorted(tuple(r) for r in u.collect()) == [(1, "x"), (2, "y")]
+    # local_rows([]) routes through the same fast path
+    e2 = local_rows(spark, [], "a long, b string")
+    assert (
+        "LocalRelation <empty>"
+        in e2._jdf.queryExecution().optimizedPlan().toString()
+    )
+
+
+def test_streaming_seed_registries_are_empty_local_relations(spark):
+    """Every ``empty_*`` constructor of ``patternly_spark.streaming``
+    (found by a module scan, so a new one is covered without listing it)
+    builds plan-visible empty relations."""
+    import importlib
+    import inspect
+    import pkgutil
+
+    import patternly_spark.streaming as streaming
+
+    ctors = {}
+    for info in pkgutil.iter_modules(streaming.__path__):
+        mod = importlib.import_module(f"{streaming.__name__}.{info.name}")
+        for name, fn in inspect.getmembers(mod, inspect.isfunction):
+            if name.startswith("empty_") and fn.__module__ == mod.__name__:
+                ctors[f"{info.name}.{name}"] = fn
+    # the six seed registries of dedup, graph and similarity at least
+    assert len(ctors) >= 6, sorted(ctors)
+    for name, ctor in ctors.items():
+        out = ctor(spark)
+        for r in out if isinstance(out, tuple) else (out,):
+            plan = r._jdf.queryExecution().optimizedPlan().toString()
+            assert "LocalRelation <empty>" in plan, name
+
+
 def _jobs_of(spark, fn):
     """(fn's result, the Spark jobs it ran in its own job group)."""
     import uuid
@@ -801,16 +854,28 @@ def _lists_frame(spark, lengths):
     return spark.createDataFrame(rows, "seq_id long, values array<double>").repartitionByRange(4, "seq_id")
 
 
-@pytest.mark.parametrize("case", ["fits", "skewed", "over"])
-def test_collect_within_one_job(spark, case):
+@pytest.mark.parametrize("case", ["fits", "skewed", "over", "scalar"])
+def test_collect_within_one_job(spark, monkeypatch, case):
     """``collect_within`` measures a relation and collects it in one job
     when every partition fits its share of the budget; a fitting relation
     whose skewed partition held its rows back is collected a second time;
     an over-budget one returns no rows.  The counts are exact either way
-    (a null list holds no elements)."""
+    (a null list holds no elements).  A relation without a list column
+    is measured by its rows alone."""
+    from patternly_spark import plans
     from patternly_spark.plans import collect_within
 
     assert spark.sparkContext.defaultParallelism == 4  # the tests' session
+    if case == "scalar":
+        df = spark.range(40).select("id", (F.col("id") * 0.5).alias("half")).persist()
+        df.count()
+        monkeypatch.setattr(plans, "DRIVER_BUDGET_BYTES", 2 * 40 * 10)
+        (table, n_rows, n_elements), jobs = _jobs_of(spark, lambda: collect_within(df, 10))
+        df.unpersist()
+        assert (n_rows, n_elements, jobs) == (40, 0, 1)
+        got = sorted(zip(table.column("id").to_pylist(), table.column("half").to_pylist()))
+        assert got == [(i, i * 0.5) for i in range(40)]
+        return
     lengths = [3, None, 0, 5] * 10
     if case == "skewed":  # the last partition holds 600 of the 680 elements
         lengths[-5:] = [120] * 5
@@ -819,7 +884,8 @@ def test_collect_within_one_job(spark, case):
     rows, elements = len(lengths), sum(n or 0 for n in lengths)
     cost = rows * 10 + elements * 8
     budget = {"fits": 2 * cost, "skewed": cost + 1, "over": cost}[case]
-    (table, n_rows, n_elements), jobs = _jobs_of(spark, lambda: collect_within(df, "values", budget, 10, 8))
+    monkeypatch.setattr(plans, "DRIVER_BUDGET_BYTES", budget)
+    (table, n_rows, n_elements), jobs = _jobs_of(spark, lambda: collect_within(df, 10, "values", 8))
     df.unpersist()
     assert (n_rows, n_elements) == (rows, elements)
     if case == "over":
@@ -829,11 +895,12 @@ def test_collect_within_one_job(spark, case):
     got = table.to_pandas().sort_values("seq_id")
     assert got["seq_id"].tolist() == list(range(rows))
     assert [None if v is None else len(v) for v in got["values"]] == lengths
-    assert collect_within(df, "values", 0, 10, 8) == (None, None, None)  # a zero budget runs no job
+    monkeypatch.setattr(plans, "DRIVER_BUDGET_BYTES", 0)
+    assert collect_within(df, 10, "values", 8) == (None, None, None)  # a zero budget runs no job
 
 
 @pytest.mark.parametrize("shuffled", [False, True])
-def test_solve_within_one_task(spark, shuffled):
+def test_solve_within_one_task(spark, monkeypatch, shuffled):
     """``solve_within`` runs its kernel once, in one task, over every row
     of a relation within the cap: in one job for a relation read as it
     is, and after its own shuffle stage, kept parallel, for a shuffled
@@ -844,6 +911,7 @@ def test_solve_within_one_task(spark, shuffled):
     import pyarrow.compute as pc
     from pyspark.sql.types import LongType, StructField, StructType
 
+    from patternly_spark import plans
     from patternly_spark.plans import plan_audit, solve_within
 
     def relation():
@@ -861,7 +929,8 @@ def test_solve_within_one_task(spark, shuffled):
     def kernel(table):
         return pa.table({"rows": [table.num_rows], "total": [pc.sum(table["id"]).as_py()]})
 
-    (served, rest), jobs = _jobs_of(spark, lambda: solve_within(df, kernel, schema, 41 * 8, 8))
+    monkeypatch.setattr(plans, "TASK_BUDGET_BYTES", 41 * 8)
+    (served, rest), jobs = _jobs_of(spark, lambda: solve_within(df, kernel, schema, 8))
     assert served.collect() == [(40, 780)] and served.schema == schema
     assert served.rdd.getNumPartitions() == 1
     # under AQE the input's shuffle stage, the exchange that gathers the
@@ -869,12 +938,14 @@ def test_solve_within_one_task(spark, shuffled):
     assert jobs == (3 if shuffled else 1)
     assert (rest is df) != shuffled
     df = relation()
-    (over, rest), jobs = _jobs_of(spark, lambda: solve_within(df, kernel, schema, 20 * 8, 8))
+    monkeypatch.setattr(plans, "TASK_BUDGET_BYTES", 20 * 8)
+    (over, rest), jobs = _jobs_of(spark, lambda: solve_within(df, kernel, schema, 8))
     assert over is None and jobs == (3 if shuffled else 1)
     assert (rest is df) != shuffled
     # the probe materialized every partition of the pin: one job, no shuffle
     assert _jobs_of(spark, lambda: sorted(r.id for r in rest.collect())) == (list(range(40)), 1)
-    assert _jobs_of(spark, lambda: solve_within(df, kernel, schema, 0, 8)) == ((None, df), 0)
+    monkeypatch.setattr(plans, "TASK_BUDGET_BYTES", 0)
+    assert _jobs_of(spark, lambda: solve_within(df, kernel, schema, 8)) == ((None, df), 0)
 
 
 def test_graph_worker_imports_skip_detection(tmp_path):
